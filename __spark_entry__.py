@@ -710,7 +710,8 @@ def q_ann_ivf_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH banding generates candidates; the exact char-5-shingle Jaccard
     verify makes the emitted pair set equal to the all-pairs oracle (a pair at
-    the 0.8 threshold escapes the 32x2 banding with probability ~1e-14)."""
+    the 0.8 threshold escapes the 32x3 banding and its band-match cut with
+    probability <= 1e-7)."""
     d = _t(spark, sf_dir, "documents")
     return DD.minhash_lsh_dup_pairs(d, threshold=0.8, verify="exact").select(
         "id_a", "id_b"

@@ -13,3 +13,6 @@ ray-casting predicates); shapely is used opportunistically when importable.
 __version__ = "0.1.0"
 
 from incubator_sedona_spark.cells import Grid  # noqa: F401
+from incubator_sedona_spark import _worker
+
+_worker.install()

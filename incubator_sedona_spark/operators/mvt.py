@@ -29,13 +29,13 @@ keyed by the same tile ids the raster path uses.
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 
 MOVE_TO, LINE_TO, CLOSE_PATH = 1, 2, 7
 GEOM_POINT, GEOM_LINESTRING, GEOM_POLYGON = 1, 2, 3
+_INTEGRAL_TYPES = {"tinyint", "smallint", "int", "bigint"}
 
 
 # -- protobuf wire primitives --------------------------------------------------
@@ -281,33 +281,38 @@ def mvt_tiles_df(
     """
     tx, ty = tile_cols
     props = property_cols or []
-
-    def _coerce_prop(v):
-        # itertuples yields numpy scalars (np.int64, np.bool_) which
-        # _encode_value's isinstance(int)/isinstance(bool) checks reject;
-        # unwrap them, and drop null properties (MVT has no null value type).
-        if isinstance(v, np.generic):
-            v = v.item()
-        if v is None or (isinstance(v, float) and v != v):
-            return None
-        return v
+    types = dict(df.dtypes)
+    cols = [F.col(px_cols[0]).alias("_px"), F.col(px_cols[1]).alias("_py")]
+    if id_col is not None:
+        cols.append(F.col(id_col).alias("_id"))
+    # Arrow hands an integral column holding nulls to pandas as float64
+    # (exact only to 2^53), so integral properties travel as decimal strings
+    # and are parsed back: they keep their sint value type at any long.
+    as_int = [types[c] in _INTEGRAL_TYPES for c in props]
+    for i, c in enumerate(props):
+        cols.append((F.col(c).cast("string") if as_int[i] else F.col(c)).alias(f"_p{i}"))
 
     def _build(pdf: pd.DataFrame) -> pd.DataFrame:
+        # tolist() yields Python scalars, which _encode_value dispatches on
+        px, py = pdf["_px"].tolist(), pdf["_py"].tolist()
+        ids = pdf["_id"].tolist() if id_col is not None else None
+        pvals = [pdf[f"_p{i}"].tolist() for i in range(len(props))]
         feats = []
-        for row in pdf.itertuples(index=False):
+        for r in range(len(pdf)):
             properties = {}
-            for c in props:
-                v = _coerce_prop(getattr(row, c))
-                if v is not None:
-                    properties[c] = v
+            for c, vals, is_int in zip(props, pvals, as_int):
+                v = vals[r]
+                # MVT has no null value type: drop null (and NaN) properties
+                if v is None or v != v:
+                    continue
+                properties[c] = int(v) if is_int else v
             f = {
                 "type": GEOM_POINT,
-                "parts": [[(int(getattr(row, px_cols[0])),
-                            int(getattr(row, px_cols[1])))]],
+                "parts": [[(int(px[r]), int(py[r]))]],
                 "properties": properties,
             }
-            if id_col is not None:
-                f["id"] = int(getattr(row, id_col))
+            if ids is not None:
+                f["id"] = int(ids[r])
             feats.append(f)
         blob = encode_mvt_layer(layer_name, feats, extent=extent)
         return pd.DataFrame({
@@ -315,7 +320,7 @@ def mvt_tiles_df(
             "mvt": [blob], "n_features": [len(feats)],
         })
 
-    return df.groupBy(tx, ty).applyInPandas(
+    return df.select(tx, ty, *cols).groupBy(tx, ty).applyInPandas(
         _build, schema=f"{tx} int, {ty} int, mvt binary, n_features int"
     )
 

@@ -76,8 +76,9 @@ def _driver_union_find(
 ) -> DataFrame:
     """Bounded small-graph path: union-find over a collected edge list (the
     caller has already counted it against the cap), then one broadcast join
-    labeling the universe.  Labels are identical to the iterative loop's
-    fixed point: min node id per component."""
+    labeling the universe.  Output is the iterative loop's fixed point: each
+    component is labeled by its min universe id, and edge endpoints outside
+    ``nodes`` are emitted only when their component holds a universe node."""
     spark = e.sparkSession
     parent: dict = {}
 
@@ -89,32 +90,36 @@ def _driver_union_find(
             parent[x], x = root, parent[x]
         return root
 
-    for row in e.collect():
-        u, v = row[0], row[1]
-        if u not in parent:
-            parent[u] = u
-        if v not in parent:
-            parent[v] = v
+    for u, v in e.collect():
+        parent.setdefault(u, u)
+        parent.setdefault(v, v)
         ru, rv = find(u), find(v)
         if ru != rv:
             parent[ru] = rv
+    if nodes is None:
+        members = parent  # every endpoint is a node
+    else:
+        universe = nodes.select(F.col(node_col).cast("long").alias(node_col)).distinct()
+        ends = e.select(F.col("u").alias(node_col)).union(e.select(F.col("v").alias(node_col)))
+        members = {r[0] for r in universe.join(ends, node_col, "left_semi").collect()}
     label: dict = {}
-    for x in parent:
+    for x in members:
         r = find(x)
         if r not in label or x < label[r]:
             label[r] = x
-    mapping = [(x, label[find(x)]) for x in parent]
-    mapped = spark.createDataFrame(
-        mapping, f"{node_col} long, {out_col} long"
-    )
+    mapping = [(x, label[r]) for x in parent if (r := find(x)) in label]
+    schema = f"{node_col} long, {out_col} long"
+    mapped = spark.createDataFrame(mapping, schema)
     if nodes is None:
-        # every node appears in some edge, so the mapping IS the labeling
         return mapped
-    universe = nodes.select(F.col(node_col).cast("long").alias(node_col)).distinct()
-    return universe.join(F.broadcast(mapped), node_col, "left").select(
+    out = universe.join(F.broadcast(mapped), node_col, "left").select(
         F.col(node_col),
         F.coalesce(F.col(out_col), F.col(node_col)).alias(out_col),
     )
+    outside = [m for m in mapping if m[0] not in members]
+    if outside:
+        out = out.unionByName(spark.createDataFrame(outside, schema))
+    return out
 
 
 def connected_components(
@@ -134,6 +139,10 @@ def connected_components(
     internally).  ``nodes``: optional universe DataFrame (one column
     ``node_col``); nodes absent from any edge become singleton components of
     themselves — exactly what dedup grouping needs (every doc gets a label).
+    Edge endpoints outside ``nodes`` still connect components; they are
+    emitted, labeled, when their component holds a universe node, and
+    dropped otherwise.  A component's label is its min universe id.  A NULL
+    endpoint links nothing: the edge keeps only its other endpoint.
 
     Small graphs (at most ``driver_edge_cap`` edges after the one
     materializing count below — dedup pair graphs are tiny relative to the
@@ -147,9 +156,12 @@ def connected_components(
     _check_id_types(edges, (src, dst))
     if nodes is not None:
         _check_id_types(nodes, (node_col,))
-    e = edges.select(
-        F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
-    ).persist()
+    u, v = F.col(src).cast("long"), F.col(dst).cast("long")
+    e = (
+        edges.select(F.coalesce(u, v).alias("u"), F.coalesce(v, u).alias("v"))
+        .where(F.col("u").isNotNull())
+        .persist()
+    )
     n_edges = e.count()  # materialize ONCE: read again below, and edge
     # generation (e.g. a PPJoin) is usually the most expensive input here
 
@@ -211,9 +223,11 @@ def connected_components(
         if (it + 1) % checkpoint_every == 0:
             new_labels = new_labels.localCheckpoint(eager=False)
         new_labels = new_labels.persist()
+        # an endpoint outside `nodes` enters new_labels without an old label;
+        # it counts as changed, or its first label would never travel on
         changed = (
-            new_labels.join(labels.withColumnRenamed("label", "old"), "u")
-            .where(F.col("label") != F.col("old"))
+            new_labels.join(labels.withColumnRenamed("label", "old"), "u", "left")
+            .where(~F.col("label").eqNullSafe(F.col("old")))
             .count()
         )
         labels.unpersist()

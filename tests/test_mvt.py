@@ -113,26 +113,32 @@ def test_mvt_tiles_df(spark):
 
 
 def test_mvt_tiles_df_numeric_and_null_properties(spark):
-    # int/bool/double property columns reach _encode_value as numpy scalars
-    # via itertuples; nulls must be skipped, not raise (MVT has no null type).
+    # Nullable int/bool columns reach pandas as float64/object; each value
+    # must keep its MVT value type (sint/bool/double), and nulls must be
+    # skipped, not raise (MVT has no null type).  The decoder returns int,
+    # bool or float by wire field, so the decoded type is the encoded tag type.
+    big = 2**63 - 1  # not representable in float64
     rows = [
-        (0, 0, 1, 2, 7, True, 1.5),
-        (0, 0, 3, 4, None, False, None),
+        (0, 0, 1, 2, 7, True, 1.5, big),
+        (0, 0, 3, 4, None, False, None, None),
+        (0, 0, 5, 6, None, None, None, -big),
     ]
     df = spark.createDataFrame(
         rows, "tile_x int, tile_y int, px int, py int,"
-              " rank int, flag boolean, score double"
+              " rank int, flag boolean, score double, fid long"
     )
     out = mvt_tiles_df(df, layer_name="pts",
-                       property_cols=["rank", "flag", "score"]).collect()
+                       property_cols=["rank", "flag", "score", "fid"]).collect()
     assert len(out) == 1
     dec = decode_mvt(bytes(out[0]["mvt"]))["pts"]
-    assert set(dec["keys"]) == {"rank", "flag", "score"}
-    assert set(dec["values"]) == {7, True, False, 1.5}
+    assert set(dec["keys"]) == {"rank", "flag", "score", "fid"}
+    assert sorted((type(v).__name__, v) for v in dec["values"]) == [
+        ("bool", False), ("bool", True), ("float", 1.5),
+        ("int", -big), ("int", 7), ("int", big),
+    ]
     tags = sorted(tuple(f["tags"]) for f in dec["features"])
-    # row 2 keeps only the non-null flag property (1 tag pair = 2 ints)
-    assert min(len(t) for t in tags) == 2
-    assert max(len(t) for t in tags) == 6
+    # rows 2 and 3 keep only their one non-null property (1 tag pair = 2 ints)
+    assert sorted(len(t) for t in tags) == [2, 2, 8]
 
 
 def test_write_tile_pyramid(spark, tmp_path):

@@ -274,7 +274,8 @@ def test_no_row_data_collect_in_package():
     offenders = []
     for p in root.rglob("*.py"):
         rel = str(p.relative_to(root))
-        if ".collect()" in p.read_text() and rel not in allowed:
+        # gc.collect() (the worker shim) is not a Spark action
+        if ".collect()" in p.read_text().replace("gc.collect()", "") and rel not in allowed:
             offenders.append(rel)
     assert offenders == [], offenders
 
@@ -396,6 +397,30 @@ def test_connected_components_chain_and_maxiter(spark):
     # the default small-graph path must produce the identical labeling
     fast = {r.id: r.component for r in connected_components(e, node_col="id").collect()}
     assert fast == got
+
+
+def test_connected_components_paths_agree_on_outside_and_null_endpoints(spark):
+    """Edge endpoints outside ``nodes`` still connect components (1-100-2),
+    never label them (0 < 3, yet 3 labels its component), and drop with an
+    outside-only component (200-201); a NULL endpoint links nothing.  The
+    union-find fast path and the distributed loop must agree exactly."""
+    from incubator_sedona_spark.pipeline.components import connected_components
+
+    edges = spark.createDataFrame(
+        [(1, 100), (100, 2), (0, 3), (200, 201), (None, 7), (None, None), (300, None)],
+        "id_a long, id_b long",
+    )
+    nodes = spark.createDataFrame([(n,) for n in [1, 2, 3, 7, 50, None]], "id long")
+
+    def run(**kw):
+        return {r.id: r.component for r in connected_components(edges, **kw).collect()}
+
+    expected = {1: 1, 100: 1, 2: 1, 0: 3, 3: 3, 7: 7, 50: 50, None: None}
+    assert run(nodes=nodes) == expected
+    assert run(nodes=nodes, driver_edge_cap=0) == expected
+    expected = {1: 1, 100: 1, 2: 1, 0: 0, 3: 0, 200: 200, 201: 200, 7: 7, 300: 300}
+    assert run() == expected
+    assert run(driver_edge_cap=0) == expected
 
 
 def test_connected_components_vs_union_find_on_dup_pairs(spark, docs):

@@ -47,6 +47,16 @@ j = spatial_join(zones, pts, "contains", grid=Grid(0.0, 0.0, 10.01, 10.01, 2),
                  right_point_cols=("x", "y"))
 n = j.count()
 assert n > 0, "empty join"
+
+# the worker shim installs from the shipped zip too
+from pyspark.sql.functions import udf
+
+@udf("boolean")
+def shim_installed(_):
+    from incubator_sedona_spark import _worker
+    return _worker._installed
+
+assert all(r[0] for r in spark.range(8).select(shim_installed("id")).collect())
 print("PYFILES_OK", n)
 spark.stop()
 """
