@@ -226,7 +226,6 @@ def q_pip_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
         right_point_cols=("x", "y"),
         salt=True,
         salt_min_rows=1_000,
-        salt_factor=8,
         left_rect=True,  # envelope rectangles: skip the auto-probe jobs
     )
     return j.select("n_nationkey", "pt_id")

@@ -32,6 +32,11 @@ from pyspark.sql import functions as F
 # max-edge geometries stay inside the grid).
 BOUNDARY_PAD = 0.01
 
+# cell id bit layout (see module docstring); only this module knows it
+_LEVEL_SHIFT = 58
+_IX_SHIFT = 29
+_IXY_MASK = (1 << _IX_SHIFT) - 1
+
 
 @dataclass(frozen=True)
 class Grid:
@@ -55,31 +60,36 @@ class Grid:
 
     # -- python/numpy side ---------------------------------------------------
     def pack(self, ix, iy):
-        return (np.int64(self.level) << 58) | (np.asarray(ix, dtype=np.int64) << 29) | np.asarray(
-            iy, dtype=np.int64
+        return (
+            (np.int64(self.level) << _LEVEL_SHIFT)
+            | (np.asarray(ix, dtype=np.int64) << _IX_SHIFT)
+            | np.asarray(iy, dtype=np.int64)
         )
 
     @staticmethod
     def unpack(cell: int):
         cell = int(cell)
-        return (cell >> 58) & 0x3F, (cell >> 29) & ((1 << 29) - 1), cell & ((1 << 29) - 1)
+        return (cell >> _LEVEL_SHIFT) & 0x3F, (cell >> _IX_SHIFT) & _IXY_MASK, cell & _IXY_MASK
+
+    def cell_index(self, x, y):
+        """Clamped half-open (ix, iy) cell indices of coordinates (vectorized)."""
+        ix = np.clip(np.floor((np.asarray(x) - self.minx) / self.cw), 0, self.n - 1)
+        iy = np.clip(np.floor((np.asarray(y) - self.miny) / self.ch), 0, self.n - 1)
+        return ix.astype(np.int64), iy.astype(np.int64)
+
+    def _bbox_index_grid(self, xmin, ymin, xmax, ymax):
+        """Flat (ix, iy) arrays of every cell index in the clamped bbox range."""
+        (ix0, ix1), (iy0, iy1) = self.cell_index([xmin, xmax], [ymin, ymax])
+        gx, gy = np.meshgrid(np.arange(ix0, ix1 + 1), np.arange(iy0, iy1 + 1), indexing="ij")
+        return gx.ravel(), gy.ravel()
 
     def point_cells(self, x, y) -> np.ndarray:
         """Single half-open cell assignment per point (vectorized)."""
-        ix = np.clip(np.floor((np.asarray(x) - self.minx) / self.cw), 0, self.n - 1).astype(np.int64)
-        iy = np.clip(np.floor((np.asarray(y) - self.miny) / self.ch), 0, self.n - 1).astype(np.int64)
-        return self.pack(ix, iy)
+        return self.pack(*self.cell_index(x, y))
 
     def cover_bbox(self, xmin, ymin, xmax, ymax) -> np.ndarray:
         """All cells whose extent intersects the (closed) bbox."""
-        ix0 = int(np.clip(np.floor((xmin - self.minx) / self.cw), 0, self.n - 1))
-        iy0 = int(np.clip(np.floor((ymin - self.miny) / self.ch), 0, self.n - 1))
-        ix1 = int(np.clip(np.floor((xmax - self.minx) / self.cw), 0, self.n - 1))
-        iy1 = int(np.clip(np.floor((ymax - self.miny) / self.ch), 0, self.n - 1))
-        ixs = np.arange(ix0, ix1 + 1, dtype=np.int64)
-        iys = np.arange(iy0, iy1 + 1, dtype=np.int64)
-        gx, gy = np.meshgrid(ixs, iys, indexing="ij")
-        return self.pack(gx.ravel(), gy.ravel())
+        return self.pack(*self._bbox_index_grid(xmin, ymin, xmax, ymax))
 
     def cover_bbox_batch(self, bounds: np.ndarray) -> list:
         """Covering cell-id arrays for an (n, 4) bbox batch (pandas-UDF body)."""
@@ -100,11 +110,9 @@ class Grid:
         out = []
         for dx in range(-k, k + 1):
             for dy in range(-k, k + 1):
-                if max(abs(dx), abs(dy)) != k:
-                    continue
                 jx, jy = ix + dx, iy + dy
-                if 0 <= jx < self.n and 0 <= jy < self.n:
-                    out.append((np.int64(self.level) << 58) | (np.int64(jx) << 29) | np.int64(jy))
+                if max(abs(dx), abs(dy)) == k and 0 <= jx < self.n and 0 <= jy < self.n:
+                    out.append(self.pack(jx, jy))
         return np.array(out, dtype=np.int64)
 
     def _edge_cells(self, x1: float, y1: float, x2: float, y2: float) -> set:
@@ -160,30 +168,22 @@ class Grid:
         from incubator_sedona_spark.geom import kernel as K
         from incubator_sedona_spark.geom import wkb as W
 
-        mask = (1 << 29) - 1
         cells: set = set()
         polygonal = False
         for leaf in g.leaves():
             if leaf.kind == W.POINT:
-                c = int(self.point_cells(leaf.parts[0, 0], leaf.parts[0, 1]))
-                cells.add(((c >> 29) & mask, c & mask))
+                ix, iy = self.cell_index(leaf.parts[0, 0], leaf.parts[0, 1])
+                cells.add((int(ix), int(iy)))
             elif leaf.kind == W.POLYGON:
                 polygonal = True
         for e in g.edges():
             cells |= self._edge_cells(e[0], e[1], e[2], e[3])
         if polygonal:
-            xmin, ymin, xmax, ymax = g.bounds
-            ix0 = int(np.clip(np.floor((xmin - self.minx) / self.cw), 0, self.n - 1))
-            iy0 = int(np.clip(np.floor((ymin - self.miny) / self.ch), 0, self.n - 1))
-            ix1 = int(np.clip(np.floor((xmax - self.minx) / self.cw), 0, self.n - 1))
-            iy1 = int(np.clip(np.floor((ymax - self.miny) / self.ch), 0, self.n - 1))
-            gx, gy = np.meshgrid(
-                np.arange(ix0, ix1 + 1), np.arange(iy0, iy1 + 1), indexing="ij"
-            )
-            cx = self.minx + (gx.ravel() + 0.5) * self.cw
-            cy = self.miny + (gy.ravel() + 0.5) * self.ch
+            gx, gy = self._bbox_index_grid(*g.bounds)
+            cx = self.minx + (gx + 0.5) * self.cw
+            cy = self.miny + (gy + 0.5) * self.ch
             inside, bnd = K.point_in_polygon(g, np.column_stack([cx, cy]))
-            for a, b in zip(gx.ravel()[inside | bnd], gy.ravel()[inside | bnd]):
+            for a, b in zip(gx[inside | bnd], gy[inside | bnd]):
                 cells.add((int(a), int(b)))
         if not cells:
             # degenerate/outside-grid geometry: fall back to clamped bbox cover
@@ -200,21 +200,33 @@ class Grid:
         return "".join(digits)
 
     # -- Spark-native (codegen'd, no UDF) expressions -------------------------
-    def point_cell_col(self, x: Column, y: Column) -> Column:
-        """Half-open single-cell id for point columns, pure Catalyst exprs."""
-        ix = F.least(
-            F.lit(self.n - 1),
-            F.greatest(F.lit(0), F.floor((x - F.lit(self.minx)) / F.lit(self.cw))),
-        ).cast("long")
-        iy = F.least(
-            F.lit(self.n - 1),
-            F.greatest(F.lit(0), F.floor((y - F.lit(self.miny)) / F.lit(self.ch))),
-        ).cast("long")
+    def cell_index_col(self, x: Column, y: Column) -> tuple[Column, Column]:
+        """Clamped half-open (ix, iy) cell-index columns, pure Catalyst exprs."""
+
+        def idx(c: Column, lo: float, w: float) -> Column:
+            return F.least(
+                F.lit(self.n - 1), F.greatest(F.lit(0), F.floor((c - F.lit(lo)) / F.lit(w)))
+            ).cast("long")
+
+        return idx(x, self.minx, self.cw), idx(y, self.miny, self.ch)
+
+    def pack_col(self, ix: Column, iy: Column) -> Column:
+        """Cell id column from long (ix, iy) index columns."""
         return (
-            F.shiftleft(F.lit(self.level).cast("long"), 58)
-            .bitwiseOR(F.shiftleft(ix, 29))
+            F.shiftleft(F.lit(self.level).cast("long"), _LEVEL_SHIFT)
+            .bitwiseOR(F.shiftleft(ix, _IX_SHIFT))
             .bitwiseOR(iy)
         )
+
+    @staticmethod
+    def unpack_col(cell: Column) -> tuple[Column, Column]:
+        """(ix, iy) index columns of a cell id column."""
+        mask = F.lit(_IXY_MASK)
+        return F.shiftright(cell, _IX_SHIFT).bitwiseAND(mask), cell.bitwiseAND(mask)
+
+    def point_cell_col(self, x: Column, y: Column) -> Column:
+        """Half-open single-cell id for point columns, pure Catalyst exprs."""
+        return self.pack_col(*self.cell_index_col(x, y))
 
     def cover_bbox_col(self, xmin: Column, ymin: Column, xmax: Column, ymax: Column) -> Column:
         """array<long> of covering cells for bbox columns — pure Catalyst.
@@ -222,20 +234,13 @@ class Grid:
         Built from ``sequence`` x ``transform``/``flatten``: stays JVM-side, so
         polygon cell covering costs no Python round trip.
         """
-        def idx(c: Column, lo: float, w: float) -> Column:
-            return F.least(
-                F.lit(self.n - 1), F.greatest(F.lit(0), F.floor((c - F.lit(lo)) / F.lit(w)))
-            ).cast("long")
-
-        ix0, ix1 = idx(xmin, self.minx, self.cw), idx(xmax, self.minx, self.cw)
-        iy0, iy1 = idx(ymin, self.miny, self.ch), idx(ymax, self.miny, self.ch)
-        lvl = F.shiftleft(F.lit(self.level).cast("long"), 58)
+        ix0, iy0 = self.cell_index_col(xmin, ymin)
+        ix1, iy1 = self.cell_index_col(xmax, ymax)
         return F.flatten(
             F.transform(
                 F.sequence(ix0, ix1),
                 lambda ix: F.transform(
-                    F.sequence(iy0, iy1),
-                    lambda iy: lvl.bitwiseOR(F.shiftleft(ix, 29)).bitwiseOR(iy),
+                    F.sequence(iy0, iy1), lambda iy: self.pack_col(ix, iy)
                 ),
             )
         )

@@ -722,7 +722,7 @@ def st_simplify_preserve_topology(wkb_col: Column, tolerance: float) -> Column:
 # The serde carries a nonzero SRID through the EWKB header flag (wkb.Geometry
 # .srid; GeometrySerializer hasSrid preamble parity).  Convention for
 # DataFrame-level CRS tracking: a sidecar ``srid`` int column — see
-# operators.joins.spatial_join's mismatch guard.
+# the mismatch guard spatial_join and distance_join share (operators.joins).
 
 
 def st_srid(wkb_col: Column) -> Column:

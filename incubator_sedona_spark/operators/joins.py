@@ -20,6 +20,7 @@ duplicate-free with no dedup pass (GeomUtils.java:330-332).
 
 from __future__ import annotations
 
+import math
 from typing import Iterable
 
 import numpy as np
@@ -108,10 +109,6 @@ def infer_grid(
 
 # -- internals ---------------------------------------------------------------
 
-def _prefixed(df: DataFrame, prefix: str) -> DataFrame:
-    return df.select([F.col(c).alias(prefix + c) for c in df.columns])
-
-
 def _explode_cells(df: DataFrame, grid: Grid, prefix: str) -> DataFrame:
     """Explode each row into its covering cells — the spatial shuffle key.
 
@@ -145,23 +142,25 @@ def _explode_cells_shape(df: DataFrame, grid: Grid, geom_col: str) -> DataFrame:
     return df.withColumn(_CELL, F.explode(_cover(F.col(geom_col))))
 
 
-def _bbox_prefilter(predicate: str, lp: str, rp: str) -> Column:
-    l = {c: F.col(lp + c) for c in BBOX_COLS}
-    r = {c: F.col(rp + c) for c in BBOX_COLS}
-    if predicate in _BBOX_L_CONTAINS_R:
-        return (
-            (l["xmin"] <= r["xmin"]) & (l["xmax"] >= r["xmax"])
-            & (l["ymin"] <= r["ymin"]) & (l["ymax"] >= r["ymax"])
-        )
-    if predicate in _BBOX_R_CONTAINS_L:
-        return (
-            (r["xmin"] <= l["xmin"]) & (r["xmax"] >= l["xmax"])
-            & (r["ymin"] <= l["ymin"]) & (r["ymax"] >= l["ymax"])
-        )
-    return (
-        (l["xmin"] <= r["xmax"]) & (r["xmin"] <= l["xmax"])
-        & (l["ymin"] <= r["ymax"]) & (r["ymin"] <= l["ymax"])
+def _bbox(prefix: str) -> list[Column]:
+    return [F.col(prefix + c) for c in BBOX_COLS]
+
+
+def _is_point(prefix: str) -> Column:
+    return (F.col(prefix + "xmin") == F.col(prefix + "xmax")) & (
+        F.col(prefix + "ymin") == F.col(prefix + "ymax")
     )
+
+
+def _bbox_prefilter(predicate: str, l: list, r: list) -> Column:
+    """Bbox test implied by ``predicate(l, r)``; each side is an (xmin, ymin,
+    xmax, ymax) list of Columns or plain numbers (range_query's window)."""
+    (lx0, ly0, lx1, ly1), (rx0, ry0, rx1, ry1) = l, r
+    if predicate in _BBOX_L_CONTAINS_R:
+        return (lx0 <= rx0) & (lx1 >= rx1) & (ly0 <= ry0) & (ly1 >= ry1)
+    if predicate in _BBOX_R_CONTAINS_L:
+        return (rx0 <= lx0) & (rx1 >= lx1) & (ry0 <= ly0) & (ry1 >= ly1)
+    return (lx0 <= rx1) & (rx0 <= lx1) & (ly0 <= ry1) & (ry0 <= ly1)
 
 
 def _predicate_refine_udf(predicate: str):
@@ -300,23 +299,16 @@ def _dedup_filter(grid: Grid, lp: str, rp: str) -> Column:
     (points are single-assigned).  Pure Catalyst arithmetic — the dedup costs
     no shuffle, unlike a GROUP BY pair-id dedup.
     """
-    l_point = (F.col(lp + "xmin") == F.col(lp + "xmax")) & (
-        F.col(lp + "ymin") == F.col(lp + "ymax")
-    )
-    r_point = (F.col(rp + "xmin") == F.col(rp + "xmax")) & (
-        F.col(rp + "ymin") == F.col(rp + "ymax")
-    )
     ref_x = F.greatest(F.col(lp + "xmin"), F.col(rp + "xmin"))
     ref_y = F.greatest(F.col(lp + "ymin"), F.col(rp + "ymin"))
-    return l_point | r_point | (F.col(_CELL) == grid.point_cell_col(ref_x, ref_y))
+    return _is_point(lp) | _is_point(rp) | (F.col(_CELL) == grid.point_cell_col(ref_x, ref_y))
 
 
 _LEFT_ID_HOWS = ("left_semi", "left_anti", "left_outer", "existence")
+_ROW_ID = "__iss_lid"
 
 
-def _finish_how(
-    left: DataFrame, inner: DataFrame, how: str, row_id: str, left_cols: list[str]
-) -> DataFrame:
+def _finish_how(left: DataFrame, inner: DataFrame, how: str, left_cols: list[str]) -> DataFrame:
     """Turn inner pair results into semi/anti/outer/existence forms.
 
     Mirrors BroadcastIndexJoinExec's join-type coverage
@@ -324,32 +316,23 @@ def _finish_how(
     Catalyst plans left_semi/left_anti natively.  ``existence`` returns every
     left row plus a boolean ``exists`` column (the ExistenceJoin output shape).
     """
-    if how == "inner":
-        return inner.drop(row_id)
-    matched = inner.select(row_id).distinct()
-    if how == "left_semi":
-        return left.join(matched, row_id, "left_semi").drop(row_id)
-    if how == "left_anti":
-        return left.join(matched, row_id, "left_anti").drop(row_id)
+    matched = inner.select(_ROW_ID).distinct()
+    if how in ("left_semi", "left_anti"):
+        return left.join(matched, _ROW_ID, how).drop(_ROW_ID)
     if how == "left_outer":
-        right_cols = [c for c in inner.columns if c not in left_cols and c != row_id]
+        right_cols = [c for c in inner.columns if c not in left_cols and c != _ROW_ID]
         return left.join(
-            inner.select(row_id, *right_cols), row_id, "left_outer"
-        ).drop(row_id)
-    if how == "existence":
-        return (
-            left.join(
-                matched.withColumn("__iss_ex", F.lit(True)), row_id, "left_outer"
-            )
-            .withColumn("exists", F.coalesce(F.col("__iss_ex"), F.lit(False)))
-            .drop(row_id, "__iss_ex")
-        )
-    raise ValueError(f"unsupported how={how!r}")
+            inner.select(_ROW_ID, *right_cols), _ROW_ID, "left_outer"
+        ).drop(_ROW_ID)
+    return (  # existence
+        left.join(matched.withColumn("__iss_ex", F.lit(True)), _ROW_ID, "left_outer")
+        .withColumn("exists", F.coalesce(F.col("__iss_ex"), F.lit(False)))
+        .drop(_ROW_ID, "__iss_ex")
+    )
 
 
 def _finish_right_outer(
-    rgt: DataFrame, inner: DataFrame, row_id: str, rp: str,
-    left_cols: list[str], right_cols: list[str],
+    rgt: DataFrame, inner: DataFrame, rp: str, left_cols: list[str], right_cols: list[str]
 ) -> DataFrame:
     """right_outer: every right row, left columns null where unmatched.
 
@@ -360,7 +343,7 @@ def _finish_right_outer(
     out_right = [c if c not in lnames else c + "_r" for c in right_cols]
     right_plain = rgt.select(
         *[F.col(rp + c).alias(o) for c, o in zip(right_cols, out_right)],
-        F.col(row_id),
+        F.col(_ROW_ID),
     )
     # extras = computed pair columns (e.g. distance_join's emit_distance):
     # carried through like left columns (null on unmatched right rows), so
@@ -368,23 +351,24 @@ def _finish_right_outer(
     extras = [
         c
         for c in inner.columns
-        if c != row_id and c not in lnames and c not in set(out_right)
+        if c != _ROW_ID and c not in lnames and c not in set(out_right)
     ]
-    pairs_left = inner.select(row_id, *left_cols, *extras)
-    res = right_plain.join(pairs_left, row_id, "left_outer")
+    pairs_left = inner.select(_ROW_ID, *left_cols, *extras)
+    res = right_plain.join(pairs_left, _ROW_ID, "left_outer")
     return res.select(*left_cols, *out_right, *extras)
 
 
-# -- public operators ---------------------------------------------------------
+# -- the shared candidate-join pipeline ----------------------------------------
 
 def _check_srid_columns(left: DataFrame, right: DataFrame, assume_same_crs: bool) -> None:
     """CRS-mismatch guard (the engine's WKB columns are CRS-less by
     convention; a documented ``srid`` sidecar column opts a DataFrame into
     tracking).  When BOTH sides carry the column, joining sources in
     different CRSs is silent-wrong — so mixed SRIDs raise unless the caller
-    passes ``assume_same_crs=True``.  Cost: one min/max aggregate per side,
-    only ever paid when both sides opted in (ref: Constructors.java SRID
-    plumbing; the reference carries SRID in its serde instead)."""
+    passes ``assume_same_crs=True`` (spatial_join only).  Cost: one min/max
+    aggregate per side, only ever paid when both sides opted in (ref:
+    Constructors.java SRID plumbing; the reference carries SRID in its serde
+    instead)."""
     if assume_same_crs or "srid" not in left.columns or "srid" not in right.columns:
         return
     ls = left.agg(F.min("srid").alias("lo"), F.max("srid").alias("hi")).first()
@@ -393,10 +377,145 @@ def _check_srid_columns(left: DataFrame, right: DataFrame, assume_same_crs: bool
     if len(vals) > 1:
         raise ValueError(
             f"spatial join across mixed SRIDs {sorted(vals)}: transform one side "
-            "with functions.crs.st_transform, or pass assume_same_crs=True to "
-            "override"
+            "with functions.crs.st_transform; if both sides already share one "
+            "CRS, set their srid columns to the same value or drop one of them "
+            "(spatial_join also takes assume_same_crs=True)"
         )
 
+
+def _side(df: DataFrame, geom: str, point_cols, prefix: str) -> DataFrame:
+    """Prefixed join side with bbox columns: derived from WKB, or — for a
+    point side with raw coordinate columns — (x, y, x, y), fully native, so
+    no pandas UDF ever touches the (big) point side."""
+    if point_cols is None:
+        df = with_bbox(df, geom)
+    else:
+        x, y = point_cols
+        for c, src in zip(BBOX_COLS, (x, y, x, y)):
+            if c not in df.columns:
+                df = df.withColumn(c, F.col(src))
+    return df.select([F.col(c).alias(prefix + c) for c in df.columns])
+
+
+def _cell_join(
+    left: DataFrame,
+    right: DataFrame,
+    lft: DataFrame,
+    rgt: DataFrame,
+    box: str,
+    predicate: str,
+    grid: Grid | None,
+    level: int | None,
+    how: str,
+    broadcast: str | None,
+    salt: bool | dict | None,
+    salt_min_rows: int,
+    assume_same_crs: bool = False,
+    shape_geom: str | None = None,
+    pair_cols: dict | None = None,
+    refine: Column | None = None,
+    extras: list[Column] | None = None,
+    keep_bbox: bool = False,
+) -> DataFrame:
+    """The candidate-join pipeline behind spatial_join and distance_join
+    (TraitJoinQueryExec.scala:45-143, shared the same way by RangeJoinExec
+    and DistanceJoinExec).
+
+    ``lft``/``rgt`` are the ``l_``/``r_``-prefixed sides from :func:`_side`;
+    ``box`` prefixes the left bbox that is cell-covered and prefiltered —
+    ``l_`` itself, or distance_join's radius-expanded envelope.  In order:
+    CRS guard, grid inference, row-id persist, cell explode (``shape_geom``:
+    shape-following left cover), salting, broadcast hint, cell equi-join +
+    bbox prefilter + reference-point dedup, ``pair_cols`` added to the
+    candidates, the ``refine`` filter, bbox drop and caller-facing names
+    (``extras`` appended), ``how`` finish.
+    """
+    _check_srid_columns(left, right, assume_same_crs)
+    lp, rp = "l_", "r_"
+    if grid is None:
+        grid = infer_grid(
+            [
+                lft.select(*[F.col(box + c).alias(c) for c in BBOX_COLS]),
+                rgt.select(*[F.col(rp + c).alias(c) for c in BBOX_COLS]),
+            ],
+            level=level,
+        )
+
+    # lazy import (pipeline imports are heavy); the pin registry lets a
+    # long-lived session free these persists: pipeline.dedup.release_cached()
+    from incubator_sedona_spark.pipeline.dedup import _pin
+
+    # persist: the id column must be identical in the pair plan and the
+    # back-join plan (monotonically_increasing_id is plan-nondeterministic)
+    if how in _LEFT_ID_HOWS:
+        lft = _pin(lft.withColumn(_ROW_ID, F.monotonically_increasing_id()))
+    elif how == "right_outer":
+        rgt = _pin(rgt.withColumn(_ROW_ID, F.monotonically_increasing_id()))
+    elif how != "inner":
+        raise ValueError(f"unsupported how={how!r}")
+
+    if shape_geom is not None:
+        le = _explode_cells_shape(lft, grid, lp + shape_geom)
+    else:
+        le = _explode_cells(lft, grid, box)
+    re = _explode_cells(rgt, grid, rp)
+    join_keys: list[str] = [_CELL]
+    if salt:
+        # lazy import: partitioning imports this module at load time
+        from incubator_sedona_spark.partitioning import find_hot_cells, salt_cells
+
+        if isinstance(salt, dict):
+            hot = {int(k): int(v) for k, v in salt.items()}
+        elif right.isStreaming or left.isStreaming:
+            raise ValueError(
+                "salt=True detects hot cells with a count pre-aggregate, "
+                "which cannot run on a streaming side; pass a dict of hot "
+                "cells instead (e.g. from partitioning.find_hot_cells over "
+                "the metrics ledger of previous batches)"
+            )
+        else:
+            hot = find_hot_cells(re, cell_col=_CELL, top_k=64, min_rows=salt_min_rows)
+        if hot:
+            salt_col = "__iss_salt"
+            re = salt_cells(re, hot, cell_col=_CELL, salt_col=salt_col)
+            le = salt_cells(le, hot, cell_col=_CELL, explode_side=True, salt_col=salt_col)
+            join_keys.append(salt_col)
+
+    if broadcast == "left":
+        le = F.broadcast(le)
+    elif broadcast == "right":
+        re = F.broadcast(re)
+
+    cand = le.join(re, join_keys).where(_bbox_prefilter(predicate, _bbox(box), _bbox(rp)))
+    cand = cand.where(_dedup_filter(grid, box, rp))
+    for name, expr in (pair_cols or {}).items():
+        cand = cand.withColumn(name, expr)
+    if refine is not None:
+        cand = cand.where(refine)
+
+    # bbox drop + caller-facing names: left columns, then right ones (suffix
+    # ``_r`` on collision), extras, and the row id the ``how`` finish needs
+    drop = set() if keep_bbox else {
+        p + c for p, src in ((lp, left), (rp, right)) for c in BBOX_COLS if c not in src.columns
+    }
+    lcols = [c for c in cand.columns if c.startswith(lp) and c not in drop]
+    lnames = {c[len(lp):] for c in lcols}
+    out = [F.col(c).alias(c[len(lp):]) for c in lcols]
+    for c in cand.columns:
+        if c.startswith(rp) and c not in drop:
+            base = c[len(rp):]
+            out.append(F.col(c).alias(base + "_r" if base in lnames else base))
+    out += extras or []
+    if how == "inner":
+        return cand.select(out)
+    inner = cand.select(*out, F.col(_ROW_ID))
+    if how == "right_outer":
+        return _finish_right_outer(rgt, inner, rp, list(left.columns), list(right.columns))
+    left_plain = lft.select(*[F.col(lp + c).alias(c) for c in left.columns], F.col(_ROW_ID))
+    return _finish_how(left_plain, inner, how, list(left.columns))
+
+
+# -- public operators ---------------------------------------------------------
 
 def spatial_join(
     left: DataFrame,
@@ -415,7 +534,6 @@ def spatial_join(
     assume_same_crs: bool = False,
     left_rect: bool | str = "auto",
     salt: bool | dict | None = None,
-    salt_factor: int = 8,
     salt_min_rows: int = 100_000,
 ) -> DataFrame:
     """Join two geometry DataFrames on a spatial predicate.
@@ -439,12 +557,14 @@ def spatial_join(
     reference's balanced-KDB default partitioner, KDB.java:90-235 /
     SedonaConf.java:75).  ``True``: one cheap count-by-cell pre-aggregate
     over the exploded RIGHT side finds cells above ``salt_min_rows``; those
-    cells' right rows get a deterministic sub-key in [0, salt_factor) and
-    the left rows covering them replicate into all sub-keys, so the
-    equi-join on (cell, salt) is output-identical to the cell join while
-    the hot cell's candidate work spreads over ``salt_factor`` reducers.  A
-    dict {cell_id: rows} (e.g. from partitioning.find_hot_cells on the
-    metrics ledger) skips the pre-aggregate.  Default off: AQE's skew-join
+    cells' right rows get a deterministic sub-key in [0, 8) and the left
+    rows covering them replicate into all 8 sub-keys, so the equi-join on
+    (cell, salt) is output-identical to the cell join while the hot cell's
+    candidate work spreads over 8 reducers.  The factor is fixed: 8 splits
+    a hot cell across a typical executor set while the left side's hot-cell
+    rows replicate only 8x, and the output never depends on it.  A dict
+    {cell_id: rows} (e.g. from partitioning.find_hot_cells on the metrics
+    ledger) skips the pre-aggregate.  Default off: AQE's skew-join
     splitting already re-plans runtime skew for the sort-merge case, and
     broadcast joins (small polygon side — the common shape) never shuffle
     the probe side at all; salting is for the big x big join whose skew is
@@ -457,8 +577,8 @@ def spatial_join(
         )
     if predicate not in K.PREDICATES:
         raise ValueError(f"unknown predicate {predicate!r}")
-    _check_srid_columns(left, right, assume_same_crs)
-
+    if left_cover == "shape" and right_point_cols is None:
+        raise ValueError("left_cover='shape' requires right_point_cols")
     if (
         broadcast is None
         and right_point_cols is not None
@@ -496,155 +616,26 @@ def spatial_join(
                 )
 
     lp, rp = "l_", "r_"
-    lft = _prefixed(with_bbox(left, left_geom), lp)
-    if right_point_cols is not None:
-        # point side with raw coordinate columns: bbox = (x, y, x, y), fully
-        # native — no pandas UDF ever touches the (big) point side
-        rx, ry = right_point_cols
-        rgt = right
-        for c, src in zip(BBOX_COLS, (rx, ry, rx, ry)):
-            if c not in rgt.columns:
-                rgt = rgt.withColumn(c, F.col(src))
-        rgt = _prefixed(rgt, rp)
-    else:
-        rgt = _prefixed(with_bbox(right, right_geom), rp)
-    if grid is None:
-        grid = infer_grid(
-            [
-                lft.select(*[F.col(lp + c).alias(c) for c in BBOX_COLS]),
-                rgt.select(*[F.col(rp + c).alias(c) for c in BBOX_COLS]),
-            ],
-            level=level,
-        )
-
-    row_id = "__iss_lid"
-    if how in _LEFT_ID_HOWS:
-        # persist: the id column must be identical in the pair plan and the
-        # back-join plan (monotonically_increasing_id is plan-nondeterministic)
-        lft = lft.withColumn(row_id, F.monotonically_increasing_id()).persist()
-    elif how == "right_outer":
-        rgt = rgt.withColumn(row_id, F.monotonically_increasing_id()).persist()
-    elif how != "inner":
-        raise ValueError(f"unsupported how={how!r}")
-
-    if left_cover == "shape":
-        if right_point_cols is None:
-            raise ValueError("left_cover='shape' requires right_point_cols")
-        le = _explode_cells_shape(lft, grid, lp + left_geom)
-    else:
-        le = _explode_cells(lft, grid, lp)
-    re = _explode_cells(rgt, grid, rp)
-    join_keys: list[str] = [_CELL]
-    salt_col = "__iss_salt"
-    if salt:
-        # lazy import: partitioning imports this module at load time
-        from incubator_sedona_spark.partitioning import find_hot_cells, salt_cells
-
-        if isinstance(salt, dict):
-            hot = {int(k): int(v) for k, v in salt.items()}
-        elif right.isStreaming or left.isStreaming:
-            raise ValueError(
-                "salt=True detects hot cells with a count pre-aggregate, "
-                "which cannot run on a streaming side; pass a dict of hot "
-                "cells instead (e.g. from partitioning.find_hot_cells over "
-                "the metrics ledger of previous batches)"
-            )
+    lft = _side(left, left_geom, None, lp)
+    rgt = _side(right, right_geom, right_point_cols, rp)
+    cond = None
+    if refine and right_point_cols is None:
+        cond = _predicate_refine_udf(predicate)(F.col(lp + left_geom), F.col(rp + right_geom))
+    elif refine:
+        # rectangle-window fast path (RectangleRDD analog): when every left
+        # geometry is its own bbox, the kernel's polygon-vs-point answer is
+        # a pure comparison — zero Python in the whole join
+        rx, ry = (F.col(rp + c) for c in right_point_cols)
+        if left_rect if isinstance(left_rect, bool) else _left_all_rectangles(left, left_geom):
+            cond = _rect_refine_xy(predicate, lp, rx, ry)
         else:
-            hot = find_hot_cells(
-                re, cell_col=_CELL, top_k=64, min_rows=salt_min_rows
-            )
-        if hot:
-            re = salt_cells(
-                re, hot, factor=salt_factor, cell_col=_CELL, salt_col=salt_col
-            )
-            le = salt_cells(
-                le, hot, factor=salt_factor, cell_col=_CELL,
-                explode_side=True, salt_col=salt_col,
-            )
-            join_keys.append(salt_col)
-
-    if broadcast == "left":
-        le = F.broadcast(le)
-    elif broadcast == "right":
-        re = F.broadcast(re)
-
-    cand = le.join(re, join_keys).where(_bbox_prefilter(predicate, lp, rp))
-    cand = cand.where(_dedup_filter(grid, lp, rp))
-    if refine:
-        if right_point_cols is not None:
-            # rectangle-window fast path (RectangleRDD analog): when every
-            # left geometry is its own bbox, the kernel's polygon-vs-point
-            # answer is a pure comparison — zero Python in the whole join
-            use_rect = (
-                left_rect
-                if isinstance(left_rect, bool)
-                else (
-                    predicate in (
-                        "contains", "covers", "intersects", "touches",
-                        "within", "coveredby", "equals", "crosses", "overlaps",
-                    )
-                    and _left_all_rectangles(left, left_geom)
-                )
-            )
-            if use_rect:
-                cand = cand.where(
-                    _rect_refine_xy(
-                        predicate,
-                        lp,
-                        F.col(rp + right_point_cols[0]),
-                        F.col(rp + right_point_cols[1]),
-                    )
-                )
-            else:
-                cand = cand.where(
-                    _predicate_refine_xy_udf(predicate)(
-                        F.col(lp + left_geom),
-                        F.col(rp + right_point_cols[0]),
-                        F.col(rp + right_point_cols[1]),
-                    )
-                )
-        else:
-            cand = cand.where(
-                _predicate_refine_udf(predicate)(
-                    F.col(lp + left_geom), F.col(rp + right_geom)
-                )
-            )
-
-    drop = list(join_keys)
-    if not keep_bbox:
-        for c in BBOX_COLS:
-            if c not in left.columns:
-                drop.append(lp + c)
-            if c not in right.columns:
-                drop.append(rp + c)
-    inner = cand.drop(*drop)
-
-    # restore caller-facing names (suffix right side on collision)
-    out_cols = []
-    lcols = [c for c in inner.columns if c.startswith(lp)]
-    rcols = [c for c in inner.columns if c.startswith(rp)]
-    lnames = {c: c[len(lp):] for c in lcols if c != lp.rstrip("_")}
-    for c in lcols:
-        if c == row_id:
-            continue
-        out_cols.append(F.col(c).alias(lnames[c]))
-    for c in rcols:
-        base = c[len(rp):]
-        out_cols.append(F.col(c).alias(base if base not in lnames.values() else base + "_r"))
-    if row_id in inner.columns:
-        out_cols.append(F.col(row_id))
-    inner = inner.select(out_cols)
-
-    if how == "inner":
-        return inner
-    if how == "right_outer":
-        return _finish_right_outer(
-            rgt, inner, row_id, rp, list(left.columns), list(right.columns)
-        )
-    left_plain = lft.select(
-        *[F.col(lp + c).alias(c) for c in left.columns], F.col(row_id)
+            cond = _predicate_refine_xy_udf(predicate)(F.col(lp + left_geom), rx, ry)
+    return _cell_join(
+        left, right, lft, rgt, lp, predicate, grid, level, how, broadcast, salt,
+        salt_min_rows, assume_same_crs=assume_same_crs,
+        shape_geom=left_geom if left_cover == "shape" else None,
+        refine=cond, keep_bbox=keep_bbox,
     )
-    return _finish_how(left_plain, inner, how, row_id, list(left.columns))
 
 
 def distance_join(
@@ -664,17 +655,17 @@ def distance_join(
     right_point_cols: tuple[str, str] | None = None,
     geography: bool = False,
     salt: bool | dict | None = None,
-    salt_factor: int = 8,
     salt_min_rows: int = 100_000,
 ) -> DataFrame:
     """Join pairs with ST_Distance(left, right) <= radius (or < if not include_boundary).
 
-    ``salt``/``salt_factor``/``salt_min_rows``: hot-cell skew handling,
-    identical semantics to :func:`spatial_join`.
-
     DistanceJoinExec analog (DistanceJoinExec.scala:50-84): the LEFT side's
-    envelope is expanded by the radius (TraitJoinQueryBase.scala:51-66) before
-    cell covering; the predicate refine is a vectorized distance computation.
+    envelope is expanded by the radius (TraitJoinQueryBase.scala:51-66) and
+    fed to the same candidate-join pipeline as :func:`spatial_join` (an
+    ``intersects`` cell join); the refine is a vectorized distance
+    computation.  ``how``, ``broadcast``, ``salt``/``salt_min_rows`` (fixed
+    salt factor 8) and the ``srid`` mismatch guard behave as in
+    :func:`spatial_join`.
 
     ``mode="circle"`` reproduces the reference's CircleRDD semantics exactly
     (Circle.java:76-81): distance measured from the bbox *center* of the left
@@ -683,22 +674,14 @@ def distance_join(
     ST_Distance-based SQL computes.  For point-point inputs the two coincide
     and the refine is pure Catalyst arithmetic (no UDF at all).
     """
-    def _side(df: DataFrame, geom: str, pt_cols, prefix: str) -> DataFrame:
-        if pt_cols is None:
-            return _prefixed(with_bbox(df, geom), prefix)
-        x, y = pt_cols
-        out = df
-        for c, src in zip(BBOX_COLS, (x, y, x, y)):
-            if c not in out.columns:
-                out = out.withColumn(c, F.col(src))
-        return _prefixed(out, prefix)
-
     lp, rp = "l_", "r_"
     lft = _side(left, left_geom, left_point_cols, lp)
     rgt = _side(right, right_geom, right_point_cols, rp)
+    lb, rb = dict(zip(BBOX_COLS, _bbox(lp))), dict(zip(BBOX_COLS, _bbox(rp)))
     rad = F.lit(float(radius)) if isinstance(radius, (int, float)) else (
         F.col(lp + radius) if isinstance(radius, str) else radius
     )
+    meter_rad = rad
     lon_scale = F.lit(1.0)
     if geography:
         # geography mode: radius given in METERS; the envelope expansion
@@ -709,175 +692,56 @@ def distance_join(
         # cos(lat) fewer meters away from the equator, so above ~25 deg the
         # flat 1.1 fudge alone under-expands the bbox and drops true pairs.
         # The refine below then computes haversine distance in meters.
-        import math as _math
-
-        meter_rad = rad
-        rad = rad / F.lit(6357000.0) * F.lit(180.0 / _math.pi) * F.lit(1.1)
-        worst_abs_lat = F.greatest(
-            F.abs(F.col(lp + "ymin") - rad), F.abs(F.col(lp + "ymax") + rad)
-        )
+        rad = rad / F.lit(6357000.0) * F.lit(180.0 / math.pi) * F.lit(1.1)
+        worst_abs_lat = F.greatest(F.abs(lb["ymin"] - rad), F.abs(lb["ymax"] + rad))
         lon_scale = F.lit(1.0) / F.cos(F.radians(F.least(worst_abs_lat, F.lit(89.9))))
 
+    cx = (lb["xmin"] + lb["xmax"]) / 2.0
+    cy = (lb["ymin"] + lb["ymax"]) / 2.0
     if mode == "circle":
-        half_diag = (
-            F.sqrt(
-                F.pow(F.col(lp + "xmax") - F.col(lp + "xmin"), 2)
-                + F.pow(F.col(lp + "ymax") - F.col(lp + "ymin"), 2)
-            )
-            / 2.0
-        )
+        half_diag = F.sqrt(
+            F.pow(lb["xmax"] - lb["xmin"], 2) + F.pow(lb["ymax"] - lb["ymin"], 2)
+        ) / 2.0
         rad = F.greatest(rad, half_diag)
-        cx = (F.col(lp + "xmin") + F.col(lp + "xmax")) / 2.0
-        cy = (F.col(lp + "ymin") + F.col(lp + "ymax")) / 2.0
-        exp = {
-            "xmin": cx - rad * lon_scale,
-            "ymin": cy - rad,
-            "xmax": cx + rad * lon_scale,
-            "ymax": cy + rad,
-        }
+        lo_x, lo_y, hi_x, hi_y = cx, cy, cx, cy
     else:
-        exp = {
-            "xmin": F.col(lp + "xmin") - rad * lon_scale,
-            "ymin": F.col(lp + "ymin") - rad,
-            "xmax": F.col(lp + "xmax") + rad * lon_scale,
-            "ymax": F.col(lp + "ymax") + rad,
-        }
+        lo_x, lo_y, hi_x, hi_y = lb["xmin"], lb["ymin"], lb["xmax"], lb["ymax"]
     lft = lft.withColumn("__iss_rad", rad)
-    for c, e in exp.items():
+    expanded = (lo_x - rad * lon_scale, lo_y - rad, hi_x + rad * lon_scale, hi_y + rad)
+    for c, e in zip(BBOX_COLS, expanded):
         lft = lft.withColumn("e_" + c, e)
 
-    if grid is None:
-        grid = infer_grid(
-            [
-                lft.select(*[F.col("e_" + c).alias(c) for c in BBOX_COLS]),
-                rgt.select(*[F.col(rp + c).alias(c) for c in BBOX_COLS]),
-            ],
-            level=level,
-        )
-
-    row_id = "__iss_lid"
-    if how in _LEFT_ID_HOWS:
-        lft = lft.withColumn(row_id, F.monotonically_increasing_id()).persist()
-    elif how == "right_outer":
-        rgt = rgt.withColumn(row_id, F.monotonically_increasing_id()).persist()
-    elif how != "inner":
-        raise ValueError(f"unsupported how={how!r}")
-
-    le = _explode_cells(lft, grid, "e_")
-    re = _explode_cells(rgt, grid, rp)
-
-    join_keys: list[str] = [_CELL]
-    salt_col = "__iss_salt"
-    if salt:
-        from incubator_sedona_spark.partitioning import find_hot_cells, salt_cells
-
-        if isinstance(salt, dict):
-            hot = {int(k): int(v) for k, v in salt.items()}
-        elif right.isStreaming or left.isStreaming:
-            raise ValueError(
-                "salt=True needs a count pre-aggregate, impossible on a "
-                "streaming side; pass a dict of hot cells instead"
-            )
-        else:
-            hot = find_hot_cells(re, cell_col=_CELL, top_k=64, min_rows=salt_min_rows)
-        if hot:
-            re = salt_cells(re, hot, factor=salt_factor, cell_col=_CELL, salt_col=salt_col)
-            le = salt_cells(
-                le, hot, factor=salt_factor, cell_col=_CELL,
-                explode_side=True, salt_col=salt_col,
-            )
-            join_keys.append(salt_col)
-
-    if broadcast == "left":
-        le = F.broadcast(le)
-    elif broadcast == "right":
-        re = F.broadcast(re)
-
-    cand = le.join(re, join_keys).where(_bbox_prefilter("intersects", "e_", rp))
-    cand = cand.where(_dedup_filter(grid, "e_", rp))
-
-    l_is_pt = (F.col(lp + "xmin") == F.col(lp + "xmax")) & (
-        F.col(lp + "ymin") == F.col(lp + "ymax")
-    )
-    r_is_pt = (F.col(rp + "xmin") == F.col(rp + "xmax")) & (
-        F.col(rp + "ymin") == F.col(rp + "ymax")
-    )
     if mode == "circle":
         # distance from left bbox center; exact & native when right is a point
-        cx = (F.col(lp + "xmin") + F.col(lp + "xmax")) / 2.0
-        cy = (F.col(lp + "ymin") + F.col(lp + "ymax")) / 2.0
-        native_dist = F.sqrt(
-            F.pow(cx - F.col(rp + "xmin"), 2) + F.pow(cy - F.col(rp + "ymin"), 2)
-        )
-        dist = F.when(r_is_pt, native_dist).otherwise(
+        native_dist = F.sqrt(F.pow(cx - rb["xmin"], 2) + F.pow(cy - rb["ymin"], 2))
+        dist = F.when(_is_point(rp), native_dist).otherwise(
             _distance_udf()(
                 F.array(cx, cy).cast(ArrayType(DoubleType())), F.col(rp + right_geom)
             )
         )
+    elif geography:
+        # haversine meters, pure Catalyst (Haversine.java analog, R=6371008)
+        rl1, rl2 = F.radians(lb["ymin"]), F.radians(rb["ymin"])
+        dlat = rl2 - rl1
+        dlon = F.radians(rb["xmin"]) - F.radians(lb["xmin"])
+        hav = F.pow(F.sin(dlat / 2), 2) + F.cos(rl1) * F.cos(rl2) * F.pow(F.sin(dlon / 2), 2)
+        dist = F.lit(2.0 * 6371008.0) * F.asin(F.sqrt(hav))
     else:
-        native_dist = F.sqrt(
-            F.pow(F.col(lp + "xmin") - F.col(rp + "xmin"), 2)
-            + F.pow(F.col(lp + "ymin") - F.col(rp + "ymin"), 2)
-        )
-        if geography:
-            # haversine meters, pure Catalyst (Haversine.java analog, R=6371008)
-            rl1 = F.radians(F.col(lp + "ymin"))
-            rl2 = F.radians(F.col(rp + "ymin"))
-            dlat = rl2 - rl1
-            dlon = F.radians(F.col(rp + "xmin")) - F.radians(F.col(lp + "xmin"))
-            hav = F.pow(F.sin(dlat / 2), 2) + F.cos(rl1) * F.cos(rl2) * F.pow(F.sin(dlon / 2), 2)
-            native_dist = F.lit(2.0 * 6371008.0) * F.asin(F.sqrt(hav))
-            dist = native_dist
-        elif left_point_cols is not None and right_point_cols is not None:
-            dist = native_dist  # both sides are coordinate points: zero-UDF plan
-        else:
-            dist = F.when(l_is_pt & r_is_pt, native_dist).otherwise(
+        dist = F.sqrt(F.pow(lb["xmin"] - rb["xmin"], 2) + F.pow(lb["ymin"] - rb["ymin"], 2))
+        if left_point_cols is None or right_point_cols is None:
+            # coordinate points on both sides keep the zero-UDF plan
+            dist = F.when(_is_point(lp) & _is_point(rp), dist).otherwise(
                 _distance_pair_udf()(F.col(lp + left_geom), F.col(rp + right_geom))
             )
-    cand = cand.withColumn("__iss_dist", dist)
+    pair_cols = {"__iss_dist": dist}
     if geography:
-        cand = cand.withColumn("__iss_rad", meter_rad)
-    cond = (
-        F.col("__iss_dist") <= F.col("__iss_rad")
-        if include_boundary
-        else F.col("__iss_dist") < F.col("__iss_rad")
+        pair_cols["__iss_rad"] = meter_rad
+    d, r = F.col("__iss_dist"), F.col("__iss_rad")
+    return _cell_join(
+        left, right, lft, rgt, "e_", "intersects", grid, level, how, broadcast, salt,
+        salt_min_rows, pair_cols=pair_cols, refine=d <= r if include_boundary else d < r,
+        extras=[d.alias(emit_distance)] if emit_distance else None,
     )
-    cand = cand.where(cond)
-
-    drop = list(join_keys) + ["__iss_rad"] + ["e_" + c for c in BBOX_COLS]
-    for c in BBOX_COLS:
-        if c not in left.columns:
-            drop.append(lp + c)
-        if c not in right.columns:
-            drop.append(rp + c)
-    inner = cand.drop(*drop)
-
-    out_cols = []
-    lnames = set()
-    for c in inner.columns:
-        if c == row_id or c == "__iss_dist":
-            continue
-        if c.startswith(lp):
-            out_cols.append(F.col(c).alias(c[len(lp):]))
-            lnames.add(c[len(lp):])
-    for c in inner.columns:
-        if c.startswith(rp):
-            base = c[len(rp):]
-            out_cols.append(F.col(c).alias(base if base not in lnames else base + "_r"))
-    if emit_distance:
-        out_cols.append(F.col("__iss_dist").alias(emit_distance))
-    if row_id in inner.columns:
-        out_cols.append(F.col(row_id))
-    inner = inner.select(out_cols)
-
-    if how == "inner":
-        return inner
-    if how == "right_outer":
-        return _finish_right_outer(
-            rgt, inner, row_id, rp, list(left.columns), list(right.columns)
-        )
-    left_plain = lft.select(*[F.col(lp + c).alias(c) for c in left.columns], F.col(row_id))
-    return _finish_how(left_plain, inner, how, row_id, list(left.columns))
 
 
 def _distance_pair_udf():
@@ -918,27 +782,10 @@ def range_query(
     vectorized refine against the constant window.  ``predicate(geom, window)``
     unless ``invert_args``.
     """
-    g = W.loads(window_wkb)
-    wxmin, wymin, wxmax, wymax = g.bounds
-    out = with_bbox(df, geom_col)
     pred = K.INVERSE[predicate] if invert_args else predicate
-    # bbox prefilter in the window's frame: window as "right" argument
-    if pred in _BBOX_L_CONTAINS_R:  # geom contains window
-        pre = (
-            (F.col("xmin") <= wxmin) & (F.col("xmax") >= wxmax)
-            & (F.col("ymin") <= wymin) & (F.col("ymax") >= wymax)
-        )
-    elif pred in _BBOX_R_CONTAINS_L:  # geom within window
-        pre = (
-            (F.col("xmin") >= wxmin) & (F.col("xmax") <= wxmax)
-            & (F.col("ymin") >= wymin) & (F.col("ymax") <= wymax)
-        )
-    else:
-        pre = (
-            (F.col("xmin") <= wxmax) & (F.col("xmax") >= wxmin)
-            & (F.col("ymin") <= wymax) & (F.col("ymax") >= wymin)
-        )
-    out = out.where(pre)
+    # bbox prefilter: the window's bounds are the (literal) right argument
+    window = [float(v) for v in W.loads(window_wkb).bounds]
+    out = with_bbox(df, geom_col).where(_bbox_prefilter(pred, _bbox(""), window))
 
     @F.pandas_udf(BooleanType())
     def _refine(wkb_s: pd.Series) -> pd.Series:

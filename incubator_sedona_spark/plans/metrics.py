@@ -33,8 +33,7 @@ def cell_metrics(
         aggs.append(expr.alias(name))
     out = df.groupBy(cell).agg(*aggs)
     # lineage quadkey: base-4 digits from the packed (ix, iy), pure Catalyst
-    ix = F.shiftrightunsigned(F.col("cell"), 29).bitwiseAND(F.lit((1 << 29) - 1))
-    iy = F.col("cell").bitwiseAND(F.lit((1 << 29) - 1))
+    ix, iy = grid.unpack_col(F.col("cell"))
     digits = [
         (
             F.shiftrightunsigned(ix, b).bitwiseAND(F.lit(1))

@@ -8,6 +8,8 @@
   /root/reference/sql/common/src/test/scala/org/apache/sedona/sql/SpatialJoinSuite.scala:203-246
 """
 
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -206,6 +208,23 @@ def test_oracle_distance_join(spark):
         for r_ in distance_join(left, right, r, grid=grid).select("lid", "rid").collect()
     }
     assert got == expected
+    # the other join types, through the same back-join finish as spatial_join
+    matched = set(np.nonzero((d <= r).any(axis=1))[0].tolist())
+    unmatched = set(range(len(lx))) - matched
+    for how in ("left_semi", "left_anti", "left_outer", "existence"):
+        rows = distance_join(left, right, r, grid=grid, how=how).collect()
+        if how == "left_semi":
+            assert sorted(x.lid for x in rows) == sorted(matched)
+        elif how == "left_anti":
+            assert sorted(x.lid for x in rows) == sorted(unmatched)
+        elif how == "left_outer":
+            assert {(x.lid, x.rid) for x in rows if x.rid is not None} == expected
+            assert sorted(x.lid for x in rows if x.rid is None) == sorted(unmatched)
+            assert len(rows) == len(expected) + len(unmatched)
+        else:
+            assert sorted((x.lid, x.exists) for x in rows) == [
+                (i, i in matched) for i in range(len(lx))
+            ]
 
 
 def test_circle_mode_clamps_radius(spark):
@@ -345,3 +364,60 @@ def test_rectangle_fast_path_matches_kernel_refine(spark):
     # geometry bytes are never touched, so pruning yields a Python-free plan
     plan = j.select("zid", "pid")._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+
+
+# -- plan shape: Python nodes and exchanges per join form --------------------------
+
+def _xy_df(spark, seed, id_name):
+    xy = np.random.default_rng(seed).uniform(0, 100, (200, 2))
+    return spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(xy)],
+        f"{id_name} long, x double, y double",
+    )
+
+
+def _plan_shape_join(spark, form):
+    pts = _xy_df(spark, 1, "pid")
+    if form == "rect_window_points":
+        return spatial_join(
+            _zones_df(spark), pts, "contains", grid=GRID, right_point_cols=("x", "y"),
+            left_rect=True,
+        )
+    if form == "point_distance":
+        return distance_join(
+            pts, _xy_df(spark, 2, "qid"), 2.0, grid=GRID,
+            left_point_cols=("x", "y"), right_point_cols=("x", "y"),
+        )
+    if form == "wkb_polygons":
+        return spatial_join(
+            _squares_df(spark, 0, 0, 5), _squares_df(spark, 3, 3, 5), "intersects", grid=GRID
+        )
+    # concave (L-shaped) zones: the kernel refine runs, not the rectangle path
+    ells = [
+        (i, bytearray(W.dumps(W.polygon(
+            [(x, y), (x + 8, y), (x + 8, y + 3), (x + 3, y + 3), (x + 3, y + 8), (x, y + 8)]
+        ))))
+        for i, (x, y) in enumerate((x, y) for x in range(0, 90, 10) for y in range(0, 90, 10))
+    ]
+    zones = spark.createDataFrame(ells, "zid long, wkb binary")
+    return spatial_join(
+        zones, pts, "contains", grid=GRID, right_point_cols=("x", "y"), left_rect=False
+    )
+
+
+@pytest.mark.parametrize(
+    "form, python_nodes, exchanges",
+    [
+        ("rect_window_points", 1, 1),  # zones' bbox UDF; broadcast build
+        ("point_distance", 0, 2),  # zero-UDF; shuffled both sides
+        ("wkb_polygons", 3, 2),  # bbox UDF per side + refine UDF
+        ("concave_pip", 2, 1),  # zones' bbox UDF + point refine UDF
+    ],
+)
+def test_join_plan_shape(spark, form, python_nodes, exchanges):
+    """Pins how many Python-UDF nodes and exchanges each join form plans, so
+    a refactor cannot silently clone a UDF or add a shuffle."""
+    plan = _plan_shape_join(spark, form)._jdf.queryExecution().executedPlan().toString()
+    nodes = [re.match(r"[\s:|+-]*(\w+)", ln).group(1) for ln in plan.splitlines() if ln.strip()]
+    assert sum(n in ("ArrowEvalPython", "BatchEvalPython") for n in nodes) == python_nodes, plan
+    assert sum(n.endswith("Exchange") for n in nodes) == exchanges, plan

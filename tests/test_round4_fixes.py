@@ -108,7 +108,7 @@ class TestSaltedJoin:
         ).select("zid", "k").toPandas()
         salted = spatial_join(
             zones, pts, "contains", grid=grid, right_point_cols=("x", "y"),
-            salt=True, salt_min_rows=50, salt_factor=4,
+            salt=True, salt_min_rows=50,
         ).select("zid", "k").toPandas()
         key = lambda df: sorted(map(tuple, df.itertuples(index=False)))
         assert key(salted) == key(base)
@@ -132,7 +132,7 @@ class TestSaltedJoin:
         ).select("zid", "k").toPandas()
         salted = spatial_join(
             zones, pts, "contains", grid=grid, right_point_cols=("x", "y"),
-            salt=hot, salt_factor=4,
+            salt=hot,
         ).select("zid", "k").toPandas()
         key = lambda df: sorted(map(tuple, df.itertuples(index=False)))
         assert key(salted) == key(base)
@@ -150,7 +150,7 @@ class TestSaltedJoin:
             ).select(*cols).toPandas()
             salted = spatial_join(
                 zones, pts, "contains", grid=grid, right_point_cols=("x", "y"),
-                how=how, salt=True, salt_min_rows=50, salt_factor=4,
+                how=how, salt=True, salt_min_rows=50,
             ).select(*cols).toPandas()
             key = lambda df: sorted(map(tuple, df.itertuples(index=False)))
             assert key(salted) == key(base), how
@@ -175,7 +175,7 @@ class TestSaltedJoin:
         )
         base = distance_join(a, b, 2.0, **kwargs).select("ka", "kb").toPandas()
         salted = distance_join(
-            a, b, 2.0, salt=True, salt_min_rows=50, salt_factor=4, **kwargs
+            a, b, 2.0, salt=True, salt_min_rows=50, **kwargs
         ).select("ka", "kb").toPandas()
         key = lambda df: sorted(map(tuple, df.itertuples(index=False)))
         assert key(salted) == key(base)
@@ -196,7 +196,7 @@ class TestSaltedJoin:
         ).select("zid", "k").toPandas()
         salted = spatial_join(
             zones, pts, "contains", grid=grid, right_point_cols=("x", "y"),
-            salt={hot_cell: 999}, salt_factor=4,
+            salt={hot_cell: 999},
         ).select("zid", "k").toPandas()
         key = lambda df: sorted(map(tuple, df.itertuples(index=False)))
         assert key(salted) == key(base)
@@ -550,5 +550,25 @@ class TestDedupReleaseHook:
             )
         )
         DD.minhash_lsh_dup_pairs(docs, threshold=0.5).count()
+        assert DD.release_cached() >= 1
+        assert DD.release_cached() == 0
+
+    def test_release_cached_frees_join_row_ids(self, spark):
+        """The row-id frame a left_anti spatial_join persists is pinned in
+        the same registry, so release_cached() frees it."""
+        from incubator_sedona_spark.pipeline import dedup as DD
+
+        DD.release_cached()
+        zones = spark.createDataFrame(
+            pd.DataFrame({"zid": [0, 1], "wkb": [_polygon_wkb(RECT), _polygon_wkb(
+                [(10.0, 10.0), (12.0, 10.0), (12.0, 12.0), (10.0, 12.0), (10.0, 10.0)]
+            )]})
+        )
+        pts = spark.createDataFrame(pd.DataFrame({"k": [0, 1], "x": [1.0, 2.0], "y": [1.0, 3.0]}))
+        got = spatial_join(
+            zones, pts, "contains", grid=Grid(0.0, 0.0, 16.01, 16.01, 2),
+            right_point_cols=("x", "y"), how="left_anti",
+        ).collect()
+        assert [r.zid for r in got] == [1]
         assert DD.release_cached() >= 1
         assert DD.release_cached() == 0

@@ -272,7 +272,7 @@ def test_spatial_join_srid_mismatch_guard(spark):
     import pytest as _pt
 
     from incubator_sedona_spark.cells import Grid
-    from incubator_sedona_spark.operators.joins import spatial_join
+    from incubator_sedona_spark.operators.joins import distance_join, spatial_join
 
     grid = Grid(0.0, 0.0, 100.01, 100.01, 3)
     za = spark.createDataFrame(
@@ -293,6 +293,12 @@ def test_spatial_join_srid_mismatch_guard(spark):
     assert (
         spatial_join(za.drop("srid"), zb_mixed, "intersects", grid=grid).count() == 1
     )
+    # distance_join runs the same guard; it has no override flag, so the way
+    # out is aligning (or dropping) the srid columns
+    with _pt.raises(ValueError, match="mixed SRIDs"):
+        distance_join(za, zb_mixed, 1.0, grid=grid)
+    assert distance_join(za, zb_same, 1.0, grid=grid).count() == 1
+    assert distance_join(za, zb_mixed.drop("srid"), 1.0, grid=grid).count() == 1
 
 
 # -- small accessors / EWKT / BuildArea / topology-safe simplify --------------------

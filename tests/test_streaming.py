@@ -244,7 +244,7 @@ def test_streaming_spatial_join_dict_salt(spark, tmp_path):
         )
     joined = spatial_join(
         zones, stream_pts, "contains", grid=grid, right_point_cols=("x", "y"),
-        salt={hot_cell: 200}, salt_factor=4,
+        salt={hot_cell: 200},
     )
     q = (
         joined.select("zone_id", "pid")
