@@ -177,8 +177,14 @@ def _cap_buckets(
 # |A ∩ B| <= sum_i min(a_i, b_i) (shared elements land in the same bucket on
 # both sides), so ``sum-min >= minoverlap`` is a NECESSARY condition that can
 # run map-side inside the candidate join, BEFORE any pair-keyed exchange.
-# Admit-only: a 16-bit lane cannot overflow below 65536 elements per bucket —
-# callers must admit (not drop) pairs whose set size exceeds 65535.
+#
+# Admit-only.  Lane 3 holds count * 2^48, so a bucket of 32,768 elements would
+# overflow the long (an ARITHMETIC_OVERFLOW error under ANSI mode), and lanes
+# 0-2 spill into their neighbour at 65,536.  Each long is therefore a
+# try_sum: on overflow it is NULL, not an error.  A set of at most 32,767
+# elements can neither overflow nor spill, so callers must admit (not drop)
+# pairs where either set is larger: NULL OR TRUE is TRUE, and the exact
+# verify decides those pairs.
 #
 # The lane count is a JIT cliff, not a tunable: the sum-min lives in a join
 # condition, whose generated bytecode HotSpot refuses to compile above ~8 kB
@@ -204,7 +210,7 @@ def _cv_aggs(elem_col: str = "__sh"):
         .otherwise(F.lit(1 << 48).cast("long"))
     )
     return [
-        F.sum(
+        F.try_sum(
             F.when(F.shiftright(bkt, 2) == j, lane_one).otherwise(F.lit(0).cast("long"))
         ).alias(f"__cv{j}")
         for j in range(_CV_LONGS)

@@ -159,11 +159,12 @@ def exact_jaccard_self_join(
         & (F.col("na") * F.lit(t) <= F.col("nb"))
         # count-vector bound, evaluated in the join stage: a qualifying pair
         # needs overlap >= alpha, and sum-min >= overlap always; oversized
-        # sets (16-bit lane overflow possible) are admitted, not dropped.
+        # sets (a lane may overflow or spill, see _cv_aggs) are admitted,
+        # not dropped.
         & (
             (_cv_min_sum("__ca", "__cb") >= alpha_join)
-            | (F.col("na") > 65535)
-            | (F.col("nb") > 65535)
+            | (F.col("na") > 32767)
+            | (F.col("nb") > 32767)
         )
     ).select("id_a", "id_b", "na", "nb", "__ia", "__ib")
     # PPJoin positional filter (Xiao et al. 2008), batch form — provably
