@@ -94,7 +94,6 @@ def knn_join(
     left_y: str = "y",
     right_x: str = "x",
     right_y: str = "y",
-    max_rounds: int = 6,
     dist_col: str = "knn_dist",
     rank_col: str = "knn_rank",
     tiebreak: str | None = None,
@@ -102,8 +101,9 @@ def knn_join(
 ) -> DataFrame:
     """For every left point, its k nearest right rows.
 
-    Iterative cell-ring expansion: round r searches the (2R+1)^2 cell square,
-    R doubling per round; a left point finishes when its k-th candidate
+    Iterative cell-ring expansion over a fixed schedule: the (2R+1)^2 cell
+    square for R = R0, then 8*R0, then a cross join of the remaining points
+    (see the schedule below); a left point finishes when its k-th candidate
     distance <= its distance to the searched-region border (provably no closer
     point outside).  Each round is one native equi-join + window top-k; at
     cluster scale the expensive first ring resolves the dense majority and the

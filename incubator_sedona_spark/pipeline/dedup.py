@@ -2,21 +2,26 @@
 
 Not present in the reference (which is a spatial engine); included because the
 north-star workload is a 10^12-row image+caption corpus where dedup is a core
-pipeline stage.  Everything is expressed shuffle-consciously:
+pipeline stage.  Exact dedup is one hash-aggregate (map-side partial combine).
+Every near-duplicate operator is one candidate-pair pipeline, the dedup
+family's counterpart of the spatial joins' shared cell join:
 
-- exact dedup: one hash-aggregate (map-side partial combine).
-- MinHash LSH: banding generates candidate pairs via an equi-join on the band
-  bucket (never all-pairs); ONLY (id, band, bucket) rides the candidate
-  shuffle — signatures/texts are joined back by id for the verify stage.
-- SimHash: 64-bit signature computed natively from md5(token) bits (no UDF),
-  pigeonhole-blocked with wide (3-block-combination) keys.
-- embedding cosine near-dup: banded multi-table hyperplane LSH with an exact
-  cosine verify inside candidates.
+    keys -> cap -> self-pairs -> verify
 
-Every candidate generator takes ``max_bucket_size``: a bucket holding more
-rows than the cap (an empty-document bucket, a boilerplate shingle) is
-dropped from candidate generation instead of going quadratic.  The cap trades
-recall for a hard bound on work; it is OFF by default.
+- keys: (id, key) rows, plus any small per-id value the verify needs.  Band
+  keys come from ``_band_keys`` (minhash band hashes, simhash 3-of-6 block
+  combinations, phash strided bands); substring uses winnowed fingerprints,
+  ngram its word n-gram hashes, embedding the hyperplane sign patterns of
+  each LSH table, and pipeline.setjoin's PPJoin the prefix elements.
+- cap: ``max_bucket_size`` drops the rows of a bucket holding more than the
+  cap (an empty-document bucket, a boilerplate shingle) instead of going
+  quadratic.  It trades recall for a hard bound on work; it is OFF by default.
+- self-pairs: ``_self_pairs``, the one aliased self equi-join with
+  ``id_a < id_b``; ONLY ids, keys and the carried values ride its shuffle.
+- verify: ``_jaccard_verify`` (minhash exact, PPJoin), ``_hamming_pairs``
+  (simhash, phash: the bit_count runs inside the join), the per-pair count
+  (substring, ngram), or a value joined back by id with ``_join_back``
+  (minhash estimate, embedding cosine).
 
 Exactness contract, stated precisely: with the defaults, minhash
 ``verify="exact"`` is exact up to a QUANTIFIED banding-miss probability of
@@ -42,8 +47,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import ArrayType, LongType
-
-_PRIME = (1 << 61) - 1
 
 # DataFrames persist()ed by dedup operators in this session (see module
 # docstring).  release_cached() unpins them once outputs are materialized.
@@ -119,11 +122,7 @@ def minhash_signatures(
     verify's substr semantics.
     """
     rows = _shingle_hash_rows(df, text_col, shingle_k, id_col)
-    aggs = [
-        F.min(F.xxhash64(F.lit(j), F.col("__sh"))).alias(f"__m{j}")
-        for j in range(num_hashes)
-    ]
-    sig = rows.groupBy(id_col).agg(*aggs)
+    sig = rows.groupBy(id_col).agg(*_minhash_aggs(num_hashes))
     return sig.select(
         F.col(id_col),
         F.array(*[F.col(f"__m{j}") for j in range(num_hashes)]).alias("minhash"),
@@ -150,28 +149,103 @@ def _shingle_hash_rows(
     )
 
 
-def _cap_buckets(
-    banded: DataFrame, keys: list[str], max_bucket_size: int | None
-) -> DataFrame:
-    """Drop rows of over-full buckets before the candidate self-join.
+# -- the shared candidate-pair pipeline (see the module docstring) -------------
 
-    One extra aggregation on the SAME keys as the join (Catalyst reuses the
-    exchange), so the cost is a map-side-combined count — the quadratic
-    in-bucket blowup a hot key would cause costs far more at scale.
+
+def _minhash_aggs(num_hashes: int) -> list:
+    """Per-document min of xxhash64(j, shingle hash) for j < num_hashes."""
+    return [
+        F.min(F.xxhash64(F.lit(j), F.col("__sh"))).alias(f"__m{j}")
+        for j in range(num_hashes)
+    ]
+
+
+def _band_keys(df: DataFrame, id_col: str, keys: list, carry=()) -> DataFrame:
+    """(id, *carry, band, key): one row per key expression, ``band`` its
+    index.  A static array of structs, so the explode stays in codegen."""
+    rows = df.select(
+        F.col(id_col),
+        *carry,
+        F.explode(
+            F.array(
+                *[F.struct(F.lit(i).alias("band"), k.alias("key")) for i, k in enumerate(keys)]
+            )
+        ).alias("__bk"),
+    )
+    return rows.select(*rows.columns[:-1], "__bk.band", "__bk.key")
+
+
+def _self_pairs(
+    keyed: DataFrame, id_col: str, keys: list[str], carry=(), max_bucket_size=None
+) -> DataFrame:
+    """Every pair of ``keyed`` rows that share all ``keys``, as (id_a, id_b)
+    with id_a < id_b; each ``carry`` column comes out as ``<c>_a``/``<c>_b``.
+
+    ``max_bucket_size`` first drops the rows of over-full buckets: one extra
+    count aggregate on the SAME keys as the join (Catalyst reuses the
+    exchange), far cheaper at scale than a hot key's quadratic blowup.
     """
-    if max_bucket_size is None:
-        return banded
-    sizes = banded.groupBy(*keys).agg(F.count("*").alias("__bsz"))
+    if max_bucket_size is not None:
+        sizes = keyed.groupBy(*keys).agg(F.count("*").alias("__bsz"))
+        keyed = keyed.join(sizes, keys).where(F.col("__bsz") <= max_bucket_size).drop("__bsz")
+
+    def side(s):
+        return keyed.select(
+            F.col(id_col).alias(f"id_{s}"), *[F.col(c).alias(f"{c}_{s}") for c in carry], *keys
+        )
+
+    return side("a").join(side("b"), keys).where(F.col("id_a") < F.col("id_b"))
+
+
+def _join_back(pairs: DataFrame, payload: DataFrame, id_col: str, col: str) -> DataFrame:
+    """``pairs`` with ``payload``'s ``col`` of id_a as ``<col>_a`` and of id_b
+    as ``<col>_b`` — the payload never rides the candidate shuffle."""
+    for s in ("a", "b"):
+        pairs = pairs.join(
+            payload.select(F.col(id_col).alias(f"id_{s}"), F.col(col).alias(f"{col}_{s}")),
+            f"id_{s}",
+        )
+    return pairs
+
+
+def _jaccard_verify(
+    cand: DataFrame, sets: DataFrame, id_col: str, set_col: str, threshold: float
+) -> DataFrame:
+    """(id_a, id_b, jaccard >= threshold) over the candidate pairs, exact:
+    native array_intersect of the per-doc distinct element arrays."""
+    sa, sb = F.col(f"{set_col}_a"), F.col(f"{set_col}_b")
+    inter = F.size(F.array_intersect(sa, sb))
+    jac = inter / (F.size(sa) + F.size(sb) - inter).cast("double")
     return (
-        banded.join(sizes, keys)
-        .where(F.col("__bsz") <= max_bucket_size)
-        .drop("__bsz")
+        _join_back(cand, sets, id_col, set_col)
+        .withColumn("jaccard", jac)
+        .where(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
+
+
+def _hamming_pairs(
+    keyed: DataFrame, id_col: str, max_hamming: int, max_bucket_size: int | None
+) -> DataFrame:
+    """(id_a, id_b, hamming <= max_hamming) over pairs sharing a (band, key).
+
+    The 64-bit ``__sig`` rides the keyed rows (8 bytes on ids-only rows), so
+    the bit_count verify runs INSIDE the self-join: the flood of
+    non-qualifying band matches dies map-side, before the pair dedup
+    exchange, and no signature lookup join is needed."""
+    ham = F.bit_count(F.col("__sig_a").bitwiseXOR(F.col("__sig_b")))
+    return (
+        _self_pairs(keyed, id_col, ["band", "key"], ["__sig"], max_bucket_size)
+        .withColumn("hamming", ham.cast("int"))
+        .where(F.col("hamming") <= max_hamming)
+        .select("id_a", "id_b", "hamming")
+        .dropDuplicates(["id_a", "id_b"])
     )
 
 
 # -- lane-packed count-vector overlap bound ------------------------------------
 #
-# For exact set-similarity joins (setjoin's PPJoin, the ngram jaccard join):
+# For setjoin's PPJoin (ngram_jaccard_pairs measured it and left it out):
 # hash each element into one of _CV_BUCKETS buckets and keep per-doc bucket
 # counts a_i packed four 16-bit lanes to a long.  For any pair,
 # |A ∩ B| <= sum_i min(a_i, b_i) (shared elements land in the same bucket on
@@ -217,14 +291,15 @@ def _cv_aggs(elem_col: str = "__sh"):
     ]
 
 
-def _cv_min_sum(prefix_a: str, prefix_b: str):
-    """sum_i min(a_i, b_i) over the lane-packed bucket counts — an upper
-    bound on |A ∩ B| (each term bounds the bucket's shared-element count).
-    Pure shift/mask/least scalar ops so the join-condition codegen stays
-    under the JIT method limit (see the geometry note above)."""
+def _cv_min_sum(suffix_a: str, suffix_b: str):
+    """sum_i min(a_i, b_i) over the lane-packed bucket counts ``__cv<j>`` +
+    suffix — an upper bound on |A ∩ B| (each term bounds the bucket's
+    shared-element count).  Pure shift/mask/least scalar ops so the
+    join-condition codegen stays under the JIT method limit (see the
+    geometry note above)."""
     terms = []
     for j in range(_CV_LONGS):
-        x, y = F.col(f"{prefix_a}{j}"), F.col(f"{prefix_b}{j}")
+        x, y = F.col(f"__cv{j}{suffix_a}"), F.col(f"__cv{j}{suffix_b}")
         for lane in range(4):
             terms.append(
                 F.least(
@@ -307,11 +382,11 @@ def minhash_lsh_dup_pairs(
         # also measured slower than this split (the same buffer-width
         # pathology seen on ppjoin's ordered build).
         rows = _pin(_shingle_hash_rows(df, text_col, shingle_k, id_col))
-        min_aggs = [
-            F.min(F.xxhash64(F.lit(j), F.col("__sh"))).alias(f"__m{j}")
-            for j in range(num_hashes)
-        ]
-        sig = _pin(rows.groupBy(id_col).agg(*min_aggs))
+        sig = _pin(rows.groupBy(id_col).agg(*_minhash_aggs(num_hashes)))
+        # per-doc DISTINCT shingle-hash sets for the verify: jaccard over
+        # xxhash64 values equals jaccard over shingles up to a ~n^2/2^64
+        # collision probability, which the oracle's string-side computation
+        # would catch
         exact_sets = _pin(
             rows.groupBy(id_col).agg(F.collect_set("__sh").alias("__s"))
         )
@@ -320,91 +395,47 @@ def minhash_lsh_dup_pairs(
         sig = minhash_signatures(df, text_col, num_hashes, shingle_k, id_col=id_col)
         arr = F.col("minhash")
         mh = lambda j: arr[j]
-    # static band-key expressions (getItem + xxhash64 of the band's r
-    # signature slots) — no HOF lambdas, stays inside whole-stage codegen
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(
-                    *[mh(b * rows_per_band + i) for i in range(rows_per_band)]
-                ).alias("bucket"),
-            )
+    # band key = xxhash64 of the band's r signature slots (static getItem
+    # expressions, no HOF lambdas)
+    banded = _band_keys(
+        sig,
+        id_col,
+        [
+            F.xxhash64(*[mh(b * rows_per_band + i) for i in range(rows_per_band)])
             for b in range(bands)
-        ]
+        ],
     )
-    banded = sig.select(id_col, F.explode(band_structs).alias("bb")).select(
-        id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-    )
-    # The bucket self-join consumes banded twice and Catalyst does not CSE
-    # across join sides — in the exact path the recompute reads the pinned
-    # per_doc relation (cheap), in the estimate path the whole signature
-    # pipeline would run twice, so pin the (id, band, bucket) rows: n*bands
-    # rows of ~20 bytes, orders of magnitude smaller than the corpus.
+    # pinned: in the estimate path the self-join would otherwise run the
+    # whole signature pipeline on both sides.  n*bands rows of ~20 bytes,
+    # orders of magnitude smaller than the corpus.
     banded = _pin(banded)
-    banded = _cap_buckets(banded, ["band", "bucket"], max_bucket_size)
-
-    a = banded.select(F.col(id_col).alias("id_a"), "band", "bucket")
-    b = banded.select(F.col(id_col).alias("id_b"), "band", "bucket")
-    raw = a.join(b, ["band", "bucket"]).where(F.col("id_a") < F.col("id_b")).select(
-        "id_a", "id_b"
-    )
-
     # One all-native groupBy deduplicates the candidate pairs and counts how
     # many of the bands matched; the min_band_matches cut (see docstring)
     # runs on that count, so the prune costs nothing extra.
     cand = (
-        raw.groupBy("id_a", "id_b")
+        _self_pairs(banded, id_col, ["band", "key"], max_bucket_size=max_bucket_size)
+        .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("__nb"))
         .where(F.col("__nb") >= max(1, min_band_matches))
         .select("id_a", "id_b")
     )
-
     if verify == "exact":
-        # Exact verify, fully native: per-doc DISTINCT shingle-hash arrays
-        # (xxhash64 of each substr — jaccard over hashes equals jaccard over
-        # shingles up to a ~n^2/2^64 collision probability, and the oracle's
-        # string-side computation would catch one) come straight off the
-        # pinned collect_set aggregate, joined onto the candidate pairs and
-        # intersected JVM-side with array_intersect.  This replaces the
-        # round-2 per-pair Python jaccard UDF.
-        sets = exact_sets
-        withsets = cand.join(
-            sets.select(F.col(id_col).alias("id_a"), F.col("__s").alias("__sa")), "id_a"
-        ).join(
-            sets.select(F.col(id_col).alias("id_b"), F.col("__s").alias("__sb")), "id_b"
-        )
-        inter = F.size(F.array_intersect(F.col("__sa"), F.col("__sb")))
-        jac = inter / (F.size("__sa") + F.size("__sb") - inter).cast("double")
-        return (
-            withsets.withColumn("jaccard", jac)
-            .where(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
-        )
-
-    # estimate mode: join signatures to the (small) surviving candidate set
-    # by id — signatures never ride the banding shuffle
+        return _jaccard_verify(cand, exact_sets, id_col, "__s", threshold)
+    # estimate mode: the fraction of agreeing signature slots
     agree = F.aggregate(
-        F.zip_with("mh_a", "mh_b", lambda x, y: F.when(x == y, 1).otherwise(0)),
+        F.zip_with("minhash_a", "minhash_b", lambda x, y: F.when(x == y, 1).otherwise(0)),
         F.lit(0),
         lambda acc, v: acc + v,
     )
-    withsig = cand.join(
-        sig.select(F.col(id_col).alias("id_a"), F.col("minhash").alias("mh_a")), "id_a"
-    ).join(
-        sig.select(F.col(id_col).alias("id_b"), F.col("minhash").alias("mh_b")), "id_b"
-    )
     return (
-        withsig.withColumn("est_jaccard", agree / F.lit(float(num_hashes)))
+        _join_back(cand, sig, id_col, "minhash")
+        .withColumn("est_jaccard", agree / F.lit(float(num_hashes)))
         .where(F.col("est_jaccard") >= threshold)
         .select("id_a", "id_b", "est_jaccard")
     )
 
 
 # -- SimHash (md5-token bits, fully native: no Python in the plan) -------------
-
-_HEX = "0123456789abcdef"
-
 
 def _md5_chunk(col, start: int):
     """First/second 32 bits of md5 hex as a non-negative long (conv base 16)."""
@@ -468,65 +499,30 @@ def simhash_dup_pairs(
     """Near-dup pairs with Hamming distance <= max_hamming on SimHash.
 
     Pigeonhole blocking over 3-of-6 block combinations (exact for
-    max_hamming <= 3); candidates carry only (id, combo, key), the signature
-    is joined back by id for the exact bit_count verify.
+    max_hamming <= 3); candidates carry only (id, combo, key) and the
+    signature, verified by bit_count inside the self-join.
     """
     if max_hamming > 3:
         raise ValueError("3-of-6 block keys are exact only for max_hamming <= 3")
-    # pinned: sig feeds the block-key explode AND both sides of the verify
-    # join — without the pin the explode + 64-column vote aggregate runs
-    # three times per query (measured ~2x the query's wall at the 50k-doc
-    # corpus).  (id, long) rows only.
+    # pinned: (id, long) rows of the 64-column vote aggregate.  It feeds only
+    # the keyed rows, which are pinned too; whether this pin still pays is
+    # unmeasured.
     sig = _pin(simhash64(df, id_col, text_col))
     blocks = [
         _sim_block(F.col("simhash"), off, w).alias(f"__b{i}")
         for i, (off, w) in enumerate(_SIM_BLOCKS)
     ]
     withb = sig.select(F.col(id_col), F.col("simhash"), *blocks)
-    # the signature rides the keyed rows (8 bytes on ids-only rows), so the
-    # bit_count verify runs INSIDE the self-join — the flood of non-qualifying
-    # combo matches dies map-side before the pair dedup exchange, and the two
-    # signature lookup joins the round-5 plan needed are gone (same shape as
-    # phash_dup_pairs below)
-    keyed = withb.select(
-        id_col,
-        F.col("simhash").alias("__sim"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(t).alias("combo"),
-                        (
-                            F.col(f"__b{i}")
-                            .bitwiseOR(F.shiftleft(F.col(f"__b{j}"), 11))
-                            .bitwiseOR(F.shiftleft(F.col(f"__b{k}"), 22))
-                        ).alias("key"),
-                    )
-                    for t, (i, j, k) in enumerate(_SIM_TRIPLES)
-                ]
-            )
-        ).alias("ck"),
-    ).select(
-        id_col, "__sim", F.col("ck.combo").alias("combo"), F.col("ck.key").alias("key")
-    )
-    # persisted for the same reason as minhash's banded rel: the self-join
+    keys = [
+        F.col(f"__b{i}")
+        .bitwiseOR(F.shiftleft(F.col(f"__b{j}"), 11))
+        .bitwiseOR(F.shiftleft(F.col(f"__b{k}"), 22))
+        for i, j, k in _SIM_TRIPLES
+    ]
+    # persisted for the same reason as minhash's band rows: the self-join
     # consumes it twice and would recompute the signature aggregate both times
-    keyed = _pin(keyed)
-    keyed = _cap_buckets(keyed, ["combo", "key"], max_bucket_size)
-
-    a = keyed.select(F.col(id_col).alias("id_a"), F.col("__sim").alias("sh_a"),
-                     "combo", "key")
-    b = keyed.select(F.col(id_col).alias("id_b"), F.col("__sim").alias("sh_b"),
-                     "combo", "key")
-    ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return (
-        a.join(b, ["combo", "key"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .withColumn("hamming", ham.cast("int"))
-        .where(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    keyed = _pin(_band_keys(withb, id_col, keys, [F.col("simhash").alias("__sig")]))
+    return _hamming_pairs(keyed, id_col, max_hamming, max_bucket_size)
 
 
 def phash_dup_pairs(
@@ -582,33 +578,10 @@ def phash_dup_pairs(
             key = term if key is None else key.bitwiseOR(term)
         return key
 
-    keyed = df.select(
-        F.col(id_col),
-        F.col(phash_col).alias("__ph"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        _strided_key(i).alias("key"),
-                    )
-                    for i in range(n_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select(id_col, "__ph", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    keyed = _cap_buckets(keyed, ["band", "key"], max_bucket_size)
-    a = keyed.select(F.col(id_col).alias("id_a"), F.col("__ph").alias("ph_a"), "band", "key")
-    b = keyed.select(F.col(id_col).alias("id_b"), F.col("__ph").alias("ph_b"), "band", "key")
-    ham = F.bit_count(F.col("ph_a").bitwiseXOR(F.col("ph_b")))
-    return (
-        a.join(b, ["band", "key"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .withColumn("hamming", ham.cast("int"))
-        .where(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-        .dropDuplicates(["id_a", "id_b"])
+    keyed = _band_keys(
+        df, id_col, [_strided_key(i) for i in range(n_bands)], [F.col(phash_col).alias("__sig")]
     )
+    return _hamming_pairs(keyed, id_col, max_hamming, max_bucket_size)
 
 
 def winnow_fingerprints(
@@ -697,12 +670,8 @@ def substring_dup_pairs(
         F.col(id_col),
         F.explode(winnow_fingerprints(F.col(text_col), k=k, window=window)).alias("__fp"),
     )
-    fp = _cap_buckets(fp, ["__fp"], max_bucket_size)
-    a = fp.select(F.col(id_col).alias("id_a"), "__fp")
-    b = fp.select(F.col(id_col).alias("id_b"), "__fp")
     return (
-        a.join(b, "__fp")
-        .where(F.col("id_a") < F.col("id_b"))
+        _self_pairs(fp, id_col, ["__fp"], max_bucket_size=max_bucket_size)
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("n_shared_fp"))
     )
@@ -754,8 +723,6 @@ def ngram_jaccard_pairs(
         e = e0.join(dfreq.where(F.col("__df") <= max_df).drop("__df"), "gram")
         sizes = e.groupBy(id_col).agg(F.count("*").alias("n_grams"))
         e = e.join(sizes, id_col)
-    a = e.select(F.col(id_col).alias("id_a"), F.col("n_grams").alias("na"), "gram")
-    b = e.select(F.col(id_col).alias("id_b"), F.col("n_grams").alias("nb"), "gram")
     # size-ratio prune: jaccard >= t implies min(na,nb)/max(na,nb) >= t, so
     # the filter is implied by the final threshold and cannot change the
     # result set — it only keeps size-incompatible pairs out of the count agg.
@@ -764,17 +731,14 @@ def ngram_jaccard_pairs(
     # — 3.18 -> 3.34 s — because after the df cap the pair-keyed exchange is
     # no longer the wall while the extra per-doc count aggregates are pure
     # cost; reverted, the capped plan keeps the round-5 shape.)
+    na, nb = F.col("n_grams_a"), F.col("n_grams_b")
     shared = (
-        a.join(b, "gram")
-        .where(
-            (F.col("id_a") < F.col("id_b"))
-            & (F.col("nb") >= F.col("na") * threshold)
-            & (F.col("nb") * threshold <= F.col("na"))
-        )
-        .groupBy("id_a", "id_b", "na", "nb")
+        _self_pairs(e, id_col, ["gram"], ["n_grams"])
+        .where((nb >= na * threshold) & (nb * threshold <= na))
+        .groupBy("id_a", "id_b", "n_grams_a", "n_grams_b")
         .agg(F.count("*").alias("shared"))
     )
-    jac = F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared"))
+    jac = F.col("shared") / (na + nb - F.col("shared"))
     return shared.withColumn("jaccard", jac).where(F.col("jaccard") >= threshold).select(
         "id_a", "id_b", "jaccard"
     )
@@ -1010,23 +974,14 @@ def embedding_cosine_dup_pairs(
     # persisted: consumed twice by the self-join (avoids rerunning the
     # pandas-UDF bucketing pass on both sides)
     keyed = _pin(keyed)
-    keyed = _cap_buckets(keyed, ["table", "bucket"], max_bucket_size)
-
-    a = keyed.select(F.col(id_col).alias("id_a"), "table", "bucket")
-    b = keyed.select(F.col(id_col).alias("id_b"), "table", "bucket")
     cand = (
-        a.join(b, ["table", "bucket"])
-        .where(F.col("id_a") < F.col("id_b"))
+        _self_pairs(keyed, id_col, ["table", "bucket"], max_bucket_size=max_bucket_size)
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-    withv = cand.join(
-        ids.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("v_a")), "id_a"
-    ).join(
-        ids.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("v_b")), "id_b"
-    )
+    withv = _join_back(cand, ids, id_col, vec_col)
     dot = F.aggregate(
-        F.zip_with("v_a", "v_b", lambda x, y: (x * y).cast("double")),
+        F.zip_with(f"{vec_col}_a", f"{vec_col}_b", lambda x, y: (x * y).cast("double")),
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
@@ -1035,7 +990,7 @@ def embedding_cosine_dup_pairs(
             F.transform(c, lambda x: (x * x).cast("double")), F.lit(0.0), lambda acc, v: acc + v
         )
     )
-    cos = dot / (norm(F.col("v_a")) * norm(F.col("v_b")))
+    cos = dot / (norm(F.col(f"{vec_col}_a")) * norm(F.col(f"{vec_col}_b")))
     return (
         withv.withColumn("cosine", cos)
         .where(F.col("cosine") >= threshold)

@@ -29,14 +29,16 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-# count-vector bound machinery (_cv_aggs/_cv_min_sum, 32-bucket lane-packed
-# longs, JIT-cliff geometry notes) is shared with the ngram jaccard join and
-# lives next to the pin registry in pipeline.dedup
+# the dedup family's shared candidate-pair pipeline (_self_pairs,
+# _jaccard_verify), its pin registry, and the lane-packed count-vector bound
+# (_cv_aggs/_cv_min_sum, with its overflow and JIT-cliff notes)
 from incubator_sedona_spark.pipeline.dedup import (
     _CV_LONGS,
     _cv_aggs,
     _cv_min_sum,
+    _jaccard_verify,
     _pin,
+    _self_pairs,
     _shingle_hash_rows,
 )
 
@@ -87,6 +89,7 @@ def exact_jaccard_self_join(
     ex = sets0.select(id_col, F.explode("__shs").alias("__sh"))
     # global ascending-df order over shingles; (df, hash) is a total order
     dfreq = ex.groupBy("__sh").agg(F.count("*").alias("__df"))
+    cv_cols = [f"__cv{j}" for j in range(_CV_LONGS)]
     ordered = (
         ex.join(dfreq, "__sh")
         .groupBy(id_col)
@@ -100,7 +103,7 @@ def exact_jaccard_self_join(
             id_col,
             F.transform(F.col("__ord"), lambda s: s["__sh"]).alias("__set"),
             F.size("__ord").alias("__n"),
-            *[f"__cv{j}" for j in range(_CV_LONGS)],
+            *cv_cols,
         )
     )
     # consumed by THREE downstream plans (prefix sides a/b + the verify set
@@ -130,77 +133,37 @@ def exact_jaccard_self_join(
     plen = (
         F.col("__n") - F.ceil(F.col("__n") * F.lit(t) - F.lit(1e-9)) + 1
     ).cast("int")
-    cv_cols = [f"__cv{j}" for j in range(_CV_LONGS)]
     prefixes = ordered.select(
         F.col(id_col),
         F.col("__n"),
         *cv_cols,
         F.posexplode(F.slice(F.col("__set"), 1, plen)).alias("__i", "__p"),
     )
-    a = prefixes.select(
-        F.col(id_col).alias("id_a"), F.col("__n").alias("na"),
-        F.col("__i").alias("__ia"),
-        *[F.col(c).alias(f"__ca{j}") for j, c in enumerate(cv_cols)],
-        F.col("__p"),
-    )
-    b = prefixes.select(
-        F.col(id_col).alias("id_b"), F.col("__n").alias("nb"),
-        F.col("__i").alias("__ib"),
-        *[F.col(c).alias(f"__cb{j}") for j, c in enumerate(cv_cols)],
-        F.col("__p"),
-    )
-    alpha_join = F.ceil(
-        F.lit(t / (1.0 + t)) * (F.col("na") + F.col("nb")) - F.lit(1e-9)
-    )
-    matched = a.join(b, "__p").where(
-        (F.col("id_a") < F.col("id_b"))
+    na, nb = F.col("__n_a"), F.col("__n_b")
+    # a qualifying pair needs overlap >= alpha
+    alpha = F.ceil(F.lit(t / (1.0 + t)) * (na + nb) - F.lit(1e-9))
+    matched = _self_pairs(prefixes, id_col, ["__p"], ["__n", "__i", *cv_cols]).where(
         # size-ratio prune, implied by jaccard >= t — result-preserving
-        & (F.col("nb") * F.lit(t) <= F.col("na"))
-        & (F.col("na") * F.lit(t) <= F.col("nb"))
-        # count-vector bound, evaluated in the join stage: a qualifying pair
-        # needs overlap >= alpha, and sum-min >= overlap always; oversized
-        # sets (a lane may overflow or spill, see _cv_aggs) are admitted,
-        # not dropped.
-        & (
-            (_cv_min_sum("__ca", "__cb") >= alpha_join)
-            | (F.col("na") > 32767)
-            | (F.col("nb") > 32767)
-        )
-    ).select("id_a", "id_b", "na", "nb", "__ia", "__ib")
+        (nb * F.lit(t) <= na)
+        & (na * F.lit(t) <= nb)
+        # count-vector bound, evaluated in the join stage: sum-min >= overlap
+        # always; oversized sets (a lane may overflow or spill, see _cv_aggs)
+        # are admitted, not dropped.
+        & ((_cv_min_sum("_a", "_b") >= alpha) | (na > 32767) | (nb > 32767))
+    )
     # PPJoin positional filter (Xiao et al. 2008), batch form — provably
     # result-preserving: both arrays are sorted by the SAME global order, so
     # every shared element outside the c prefix matches is globally larger
     # than the largest match, hence at position > imax in A and > jmax in B;
-    # overlap <= c + min(na-imax-1, nb-jmax-1).  Jaccard >= t requires
-    # overlap >= ceil(t/(1+t) * (na+nb)).  With the count-vector bound
+    # overlap <= c + min(na-imax-1, nb-jmax-1).  With the count-vector bound
     # upstream this aggregate sees only the flood survivors (sf1 corpus:
     # ~1.4M rows instead of 108.6M), and prunes them a further 7x before
     # the set-array verify (374k -> 53k pairs).
-    grp = matched.groupBy("id_a", "id_b", "na", "nb").agg(
+    grp = matched.groupBy("id_a", "id_b", "__n_a", "__n_b").agg(
         F.count("*").alias("__c"),
-        F.max("__ia").alias("__imax"),
-        F.max("__ib").alias("__jmax"),
+        F.max("__i_a").alias("__imax"),
+        F.max("__i_b").alias("__jmax"),
     )
-    alpha = F.ceil(
-        F.lit(float(threshold) / (1.0 + float(threshold)))
-        * (F.col("na") + F.col("nb"))
-        - F.lit(1e-9)
-    )
-    ubound = F.col("__c") + F.least(
-        F.col("na") - F.col("__imax") - 1, F.col("nb") - F.col("__jmax") - 1
-    )
-    # pairs already carry id_a < id_b (the symmetric-prefix join condition)
+    ubound = F.col("__c") + F.least(na - F.col("__imax") - 1, nb - F.col("__jmax") - 1)
     cand = grp.where(ubound >= alpha).select("id_a", "id_b")
-    sets = ordered.select(id_col, "__set")
-    withsets = cand.join(
-        sets.select(F.col(id_col).alias("id_a"), F.col("__set").alias("__sa")), "id_a"
-    ).join(
-        sets.select(F.col(id_col).alias("id_b"), F.col("__set").alias("__sb")), "id_b"
-    )
-    inter = F.size(F.array_intersect(F.col("__sa"), F.col("__sb")))
-    jac = inter / (F.size("__sa") + F.size("__sb") - inter).cast("double")
-    return (
-        withsets.withColumn("jaccard", jac)
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _jaccard_verify(cand, ordered, id_col, "__set", threshold)
