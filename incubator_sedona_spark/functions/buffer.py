@@ -15,10 +15,10 @@ Negative (erosion) buffers raise — documented gap, not silent wrongness.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column, functions as F
+from pyspark.sql import Column
 from pyspark.sql.types import BinaryType
 
+from incubator_sedona_spark.functions._udf import geom_udf
 from incubator_sedona_spark.geom import clip as CL
 from incubator_sedona_spark.geom import wkb as W
 
@@ -75,10 +75,4 @@ def buffer_geometry(g: W.Geometry, dist: float, quadrant_segments: int = 8) -> W
 
 
 def st_buffer(wkb_col: Column, dist: float, quadrant_segments: int = 8) -> Column:
-    @F.pandas_udf(BinaryType())
-    def _f(s: pd.Series) -> pd.Series:
-        return pd.Series(
-            [W.dumps(buffer_geometry(W.loads(b), dist, quadrant_segments)) for b in s]
-        )
-
-    return _f(wkb_col)
+    return geom_udf(BinaryType(), lambda g: buffer_geometry(g, dist, quadrant_segments))(wkb_col)

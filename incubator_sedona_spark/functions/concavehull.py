@@ -14,10 +14,10 @@ sizes this serves); deterministic.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column, functions as F
+from pyspark.sql import Column
 from pyspark.sql.types import BinaryType
 
+from incubator_sedona_spark.functions._udf import geom_udf
 from incubator_sedona_spark.geom import wkb as W
 
 
@@ -167,8 +167,4 @@ def concave_hull(g: W.Geometry, ratio: float, allow_holes: bool = False) -> W.Ge
 
 
 def st_concave_hull(wkb_col: Column, pct_convex: float, allow_holes: bool = False) -> Column:
-    @F.pandas_udf(BinaryType())
-    def _f(s: pd.Series) -> pd.Series:
-        return pd.Series([W.dumps(concave_hull(W.loads(b), pct_convex, allow_holes)) for b in s])
-
-    return _f(wkb_col)
+    return geom_udf(BinaryType(), lambda g: concave_hull(g, pct_convex, allow_holes))(wkb_col)

@@ -43,10 +43,10 @@ ValueError — loud, not silently wrong.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column, functions as F
+from pyspark.sql import Column
 from pyspark.sql.types import BinaryType
 
+from incubator_sedona_spark.functions._udf import geom_udf
 from incubator_sedona_spark.geom import wkb as W
 
 # WGS84
@@ -966,12 +966,7 @@ def st_transform(wkb_col: Column, src: str, dst: str) -> Column:
 
     One Arrow-batched pandas UDF; all coordinate math is vectorized numpy."""
     _parse(src), _parse(dst)  # validate eagerly on the driver
-
-    @F.pandas_udf(BinaryType())
-    def _f(s: pd.Series) -> pd.Series:
-        return pd.Series([W.dumps(_transform_geometry(W.loads(b), src, dst)) for b in s])
-
-    return _f(wkb_col)
+    return geom_udf(BinaryType(), lambda g: _transform_geometry(g, src, dst))(wkb_col)
 
 
 # -- bulk EPSG batches (published parameter sets; see crs_tables.py) -----------

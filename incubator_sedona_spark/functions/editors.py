@@ -13,10 +13,10 @@ geom.wkb); ST_Force_2D strips them, functions.zm adds the 3-D accessors.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, functions as F
-from pyspark.sql.types import BinaryType
+from pyspark.sql.types import ArrayType, BinaryType
 
+from incubator_sedona_spark.functions._udf import geom_udf
 from incubator_sedona_spark.geom import wkb as W
 
 
@@ -38,14 +38,6 @@ def _map_coords(g: W.Geometry, fn) -> W.Geometry:
     return W.Geometry(g.kind, [_map_coords(c, fn) for c in g.parts], g.has_z, g.has_m)
 
 
-def _unary_udf(fn):
-    @F.pandas_udf(BinaryType())
-    def _f(s: pd.Series) -> pd.Series:
-        return pd.Series([W.dumps(fn(W.loads(b))) for b in s])
-
-    return _f
-
-
 def st_affine(
     wkb_col: Column, a: float, b: float, d: float, e: float, xoff: float, yoff: float
 ) -> Column:
@@ -53,16 +45,16 @@ def st_affine(
     y' = d*x + e*y + yOff (the 2-D form of the reference's affine)."""
     M = np.array([[a, b], [d, e]])
     off = np.array([xoff, yoff])
-    return _unary_udf(lambda g: _map_coords(g, lambda c: c @ M.T + off))(wkb_col)
+    return geom_udf(BinaryType(), lambda g: _map_coords(g, lambda c: c @ M.T + off))(wkb_col)
 
 
 def st_reverse(wkb_col: Column) -> Column:
-    return _unary_udf(lambda g: _map_coords(g, lambda c: c[::-1].copy()))(wkb_col)
+    return geom_udf(BinaryType(), lambda g: _map_coords(g, lambda c: c[::-1].copy()))(wkb_col)
 
 
 def st_precision_reduce(wkb_col: Column, digits: int) -> Column:
     """Round every coordinate to ``digits`` decimal places (ST_PrecisionReduce)."""
-    return _unary_udf(lambda g: _map_coords(g, lambda c: np.round(c, digits)))(wkb_col)
+    return geom_udf(BinaryType(), lambda g: _map_coords(g, lambda c: np.round(c, digits)))(wkb_col)
 
 
 def normalize_geometry(g: W.Geometry) -> W.Geometry:
@@ -97,7 +89,7 @@ def normalize_geometry(g: W.Geometry) -> W.Geometry:
 
 
 def st_normalize(wkb_col: Column) -> Column:
-    return _unary_udf(normalize_geometry)(wkb_col)
+    return geom_udf(BinaryType(), normalize_geometry)(wkb_col)
 
 
 def force_2d_geometry(g: W.Geometry) -> W.Geometry:
@@ -112,7 +104,7 @@ def force_2d_geometry(g: W.Geometry) -> W.Geometry:
 
 def st_force_2d(wkb_col: Column) -> Column:
     """Strip Z/M columns (ST_Force_2D); identity on already-2D geometry."""
-    return _unary_udf(force_2d_geometry)(wkb_col)
+    return geom_udf(BinaryType(), force_2d_geometry)(wkb_col)
 
 
 def st_multi(wkb_col: Column) -> Column:
@@ -124,7 +116,7 @@ def st_multi(wkb_col: Column) -> Column:
             return W.multi(promote[g.kind], [g])
         return g
 
-    return _unary_udf(_m)(wkb_col)
+    return geom_udf(BinaryType(), _m)(wkb_col)
 
 
 def st_collection_extract(wkb_col: Column, dim: int) -> Column:
@@ -137,7 +129,7 @@ def st_collection_extract(wkb_col: Column, dim: int) -> Column:
         leaves = [l for l in g.leaves() if l.kind == kind]
         return W.multi(multi_kind, leaves)
 
-    return _unary_udf(_x)(wkb_col)
+    return geom_udf(BinaryType(), _x)(wkb_col)
 
 
 def point_on_surface(g: W.Geometry) -> W.Geometry:
@@ -167,7 +159,7 @@ def point_on_surface(g: W.Geometry) -> W.Geometry:
 
 
 def st_point_on_surface(wkb_col: Column) -> Column:
-    return _unary_udf(point_on_surface)(wkb_col)
+    return geom_udf(BinaryType(), point_on_surface)(wkb_col)
 
 
 def _line_coords(g: W.Geometry) -> np.ndarray:
@@ -219,11 +211,11 @@ def line_substring(g: W.Geometry, f0: float, f1: float) -> W.Geometry:
 
 
 def st_line_interpolate_point(wkb_col: Column, frac: float) -> Column:
-    return _unary_udf(lambda g: line_interpolate_point(g, frac))(wkb_col)
+    return geom_udf(BinaryType(), lambda g: line_interpolate_point(g, frac))(wkb_col)
 
 
 def st_line_substring(wkb_col: Column, f0: float, f1: float) -> Column:
-    return _unary_udf(lambda g: line_substring(g, f0, f1))(wkb_col)
+    return geom_udf(BinaryType(), lambda g: line_substring(g, f0, f1))(wkb_col)
 
 
 def st_add_point(wkb_col: Column, x: float, y: float, index: int = -1) -> Column:
@@ -232,7 +224,7 @@ def st_add_point(wkb_col: Column, x: float, y: float, index: int = -1) -> Column
         i = len(c) if index == -1 else index
         return W.Geometry(W.LINESTRING, np.insert(c, i, [x, y], axis=0))
 
-    return _unary_udf(_a)(wkb_col)
+    return geom_udf(BinaryType(), _a)(wkb_col)
 
 
 def st_remove_point(wkb_col: Column, index: int) -> Column:
@@ -240,7 +232,7 @@ def st_remove_point(wkb_col: Column, index: int) -> Column:
         c = _line_coords(g)
         return W.Geometry(W.LINESTRING, np.delete(c, index, axis=0))
 
-    return _unary_udf(_r)(wkb_col)
+    return geom_udf(BinaryType(), _r)(wkb_col)
 
 
 def st_set_point(wkb_col: Column, index: int, x: float, y: float) -> Column:
@@ -249,7 +241,7 @@ def st_set_point(wkb_col: Column, index: int, x: float, y: float) -> Column:
         c[index] = (x, y)
         return W.Geometry(W.LINESTRING, c)
 
-    return _unary_udf(_s)(wkb_col)
+    return geom_udf(BinaryType(), _s)(wkb_col)
 
 
 def line_merge(g: W.Geometry) -> W.Geometry:
@@ -298,7 +290,7 @@ def line_merge(g: W.Geometry) -> W.Geometry:
 
 
 def st_line_merge(wkb_col: Column) -> Column:
-    return _unary_udf(line_merge)(wkb_col)
+    return geom_udf(BinaryType(), line_merge)(wkb_col)
 
 
 # -- indexed accessors / constructors (Catalog.scala:58-161 long tail) ---------
@@ -313,7 +305,7 @@ def st_geometry_n(wkb_col: Column, n: int) -> Column:
             return g
         raise IndexError(f"geometry has no child {n}")
 
-    return _unary_udf(_g)(wkb_col)
+    return geom_udf(BinaryType(), _g)(wkb_col)
 
 
 def st_point_n(wkb_col: Column, n: int) -> Column:
@@ -324,15 +316,15 @@ def st_point_n(wkb_col: Column, n: int) -> Column:
         i = n - 1 if n > 0 else len(c) + n
         return W.point(float(c[i, 0]), float(c[i, 1]))
 
-    return _unary_udf(_p)(wkb_col)
+    return geom_udf(BinaryType(), _p)(wkb_col)
 
 
 def st_start_point(wkb_col: Column) -> Column:
-    return _unary_udf(lambda g: W.point(*map(float, _line_coords(g)[0])))(wkb_col)
+    return geom_udf(BinaryType(), lambda g: W.point(*map(float, _line_coords(g)[0])))(wkb_col)
 
 
 def st_end_point(wkb_col: Column) -> Column:
-    return _unary_udf(lambda g: W.point(*map(float, _line_coords(g)[-1])))(wkb_col)
+    return geom_udf(BinaryType(), lambda g: W.point(*map(float, _line_coords(g)[-1])))(wkb_col)
 
 
 def st_interior_ring_n(wkb_col: Column, n: int) -> Column:
@@ -343,34 +335,20 @@ def st_interior_ring_n(wkb_col: Column, n: int) -> Column:
             raise ValueError("expected a Polygon")
         return W.Geometry(W.LINESTRING, g.parts[n + 1].copy())
 
-    return _unary_udf(_r)(wkb_col)
+    return geom_udf(BinaryType(), _r)(wkb_col)
 
 
 def st_make_polygon(shell_col: Column, holes_col: Column | None = None) -> Column:
-    """Closed LineString (+ optional array of closed LineStrings) -> Polygon."""
+    """Closed LineString (+ optional array of closed LineStrings) -> Polygon;
+    a NULL holes array means no holes."""
+
+    def _polygon(shell: bytes, holes=()) -> W.Geometry:
+        return W.Geometry(W.POLYGON, [_line_coords(W.loads(b)) for b in (shell, *holes)])
+
     if holes_col is None:
-
-        @F.pandas_udf(BinaryType())
-        def _mk(shells: pd.Series) -> pd.Series:
-            out = []
-            for b in shells:
-                g = W.loads(b)
-                out.append(W.dumps(W.Geometry(W.POLYGON, [_line_coords(g)])))
-            return pd.Series(out)
-
-        return _mk(shell_col)
-
-    @F.pandas_udf(BinaryType())
-    def _mkh(shells: pd.Series, holes: pd.Series) -> pd.Series:
-        out = []
-        for b, hs in zip(shells, holes):
-            rings = [_line_coords(W.loads(b))]
-            for hb in hs or []:
-                rings.append(_line_coords(W.loads(hb)))
-            out.append(W.dumps(W.Geometry(W.POLYGON, rings)))
-        return pd.Series(out)
-
-    return _mkh(shell_col, holes_col)
+        return geom_udf(BinaryType(), _polygon, decode=None)(shell_col)
+    holes = F.coalesce(holes_col, F.array().cast(ArrayType(BinaryType())))
+    return geom_udf(BinaryType(), _polygon, decode=None)(shell_col, holes)
 
 
 def st_line_from_multipoint(wkb_col: Column) -> Column:
@@ -382,4 +360,4 @@ def st_line_from_multipoint(wkb_col: Column) -> Column:
             raise ValueError("need at least 2 points")
         return W.Geometry(W.LINESTRING, np.asarray(pts, dtype=np.float64))
 
-    return _unary_udf(_l)(wkb_col)
+    return geom_udf(BinaryType(), _l)(wkb_col)

@@ -12,10 +12,10 @@ from __future__ import annotations
 import json
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column, functions as F
+from pyspark.sql import Column
 from pyspark.sql.types import BinaryType, StringType
 
+from incubator_sedona_spark.functions._udf import geom_udf
 from incubator_sedona_spark.geom import wkb as W
 
 _KIND_NAME = {
@@ -150,32 +150,23 @@ def geometry_to_kml(g: W.Geometry) -> str:
     raise ValueError(f"unsupported kind {g.kind}")
 
 
-def _str_udf(fn):
-    @F.pandas_udf(StringType())
-    def _f(s: pd.Series) -> pd.Series:
-        return pd.Series([fn(W.loads(b)) for b in s])
-
-    return _f
-
-
 def st_as_geojson(wkb_col: Column) -> Column:
-    return _str_udf(lambda g: json.dumps(geometry_to_geojson(g), separators=(",", ":")))(wkb_col)
+    def _geojson(g: W.Geometry) -> str:
+        return json.dumps(geometry_to_geojson(g), separators=(",", ":"))
+
+    return geom_udf(StringType(), _geojson)(wkb_col)
 
 
 def st_as_gml(wkb_col: Column) -> Column:
-    return _str_udf(geometry_to_gml)(wkb_col)
+    return geom_udf(StringType(), geometry_to_gml)(wkb_col)
 
 
 def st_as_kml(wkb_col: Column) -> Column:
-    return _str_udf(geometry_to_kml)(wkb_col)
+    return geom_udf(StringType(), geometry_to_kml)(wkb_col)
 
 
 def st_geom_from_geojson(json_col: Column) -> Column:
-    @F.pandas_udf(BinaryType())
-    def _f(s: pd.Series) -> pd.Series:
-        return pd.Series([W.dumps(geojson_to_geometry(t)) for t in s])
-
-    return _f(json_col)
+    return geom_udf(BinaryType(), geojson_to_geometry, decode=None)(json_col)
 
 
 # -- GML / KML input (ST_GeomFromGML / ST_GeomFromKML) --------------------------
@@ -270,16 +261,8 @@ def xml_text_to_geometry(text: str) -> W.Geometry:
 
 
 def st_geom_from_gml(gml_col: Column) -> Column:
-    return _bin_udf(xml_text_to_geometry)(gml_col)
+    return geom_udf(BinaryType(), xml_text_to_geometry, decode=None)(gml_col)
 
 
 def st_geom_from_kml(kml_col: Column) -> Column:
-    return _bin_udf(xml_text_to_geometry)(kml_col)
-
-
-def _bin_udf(fn):
-    @F.pandas_udf(BinaryType())
-    def _f(s: pd.Series) -> pd.Series:
-        return pd.Series([W.dumps(fn(t)) for t in s])
-
-    return _f
+    return geom_udf(BinaryType(), xml_text_to_geometry, decode=None)(kml_col)

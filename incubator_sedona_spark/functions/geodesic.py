@@ -47,10 +47,10 @@ one Arrow-batched pandas UDF.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column, functions as F
+from pyspark.sql import Column
 from pyspark.sql.types import DoubleType
 
+from incubator_sedona_spark.functions._udf import geom_udf
 from incubator_sedona_spark.geom import wkb as W
 
 _A = 6378137.0
@@ -382,8 +382,4 @@ def st_area_geodesic(wkb_col: Column) -> Column:
                 total -= geodesic_ring_area(hole)
         return total
 
-    @F.pandas_udf(DoubleType())
-    def _f(s: pd.Series) -> pd.Series:
-        return pd.Series([_area(W.loads(b)) for b in s])
-
-    return _f(wkb_col)
+    return geom_udf(DoubleType(), _area)(wkb_col)

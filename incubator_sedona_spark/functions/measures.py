@@ -10,10 +10,10 @@ All implemented as seeded/deterministic numpy, wrapped in Arrow-batched UDFs.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column, functions as F
+from pyspark.sql import Column
 from pyspark.sql.types import ArrayType, BinaryType, DoubleType
 
+from incubator_sedona_spark.functions._udf import geom_udf
 from incubator_sedona_spark.geom import wkb as W
 
 
@@ -73,15 +73,11 @@ def min_bounding_circle(pts: np.ndarray):
 def st_minimum_bounding_radius(wkb_col: Column) -> Column:
     """array<double>(cx, cy, radius) — ST_MinimumBoundingRadius analog."""
 
-    @F.pandas_udf(ArrayType(DoubleType()))
-    def _f(s: pd.Series) -> pd.Series:
-        out = []
-        for b in s:
-            c, r = min_bounding_circle(W.loads(b).vertices())
-            out.append(np.array([c[0], c[1], r]))
-        return pd.Series(out)
+    def _radius(g: W.Geometry) -> np.ndarray:
+        c, r = min_bounding_circle(g.vertices())
+        return np.array([c[0], c[1], r])
 
-    return _f(wkb_col)
+    return geom_udf(ArrayType(DoubleType()), _radius)(wkb_col)
 
 
 def st_minimum_bounding_circle(wkb_col: Column, quadrant_segments: int = 8) -> Column:
@@ -89,20 +85,14 @@ def st_minimum_bounding_circle(wkb_col: Column, quadrant_segments: int = 8) -> C
     quadrantSegments=8 -> 32-gon)."""
     nseg = 4 * quadrant_segments
 
-    @F.pandas_udf(BinaryType())
-    def _f(s: pd.Series) -> pd.Series:
-        out = []
-        for b in s:
-            c, r = min_bounding_circle(W.loads(b).vertices())
-            if r == 0:
-                out.append(W.dumps(W.point(c[0], c[1])))
-                continue
-            ang = np.linspace(0.0, 2 * np.pi, nseg, endpoint=False)
-            ring = np.column_stack([c[0] + r * np.cos(ang), c[1] + r * np.sin(ang)])
-            out.append(W.dumps(W.polygon(ring)))
-        return pd.Series(out)
+    def _circle(g: W.Geometry) -> W.Geometry:
+        c, r = min_bounding_circle(g.vertices())
+        if r == 0:
+            return W.point(c[0], c[1])
+        ang = np.linspace(0.0, 2 * np.pi, nseg, endpoint=False)
+        return W.polygon(np.column_stack([c[0] + r * np.cos(ang), c[1] + r * np.sin(ang)]))
 
-    return _f(wkb_col)
+    return geom_udf(BinaryType(), _circle)(wkb_col)
 
 
 # -- Hausdorff / Frechet -------------------------------------------------------
@@ -149,17 +139,9 @@ def frechet(a: W.Geometry, b: W.Geometry) -> float:
     return float(ca[n - 1, m - 1])
 
 
-def _pair_udf(fn):
-    @F.pandas_udf(DoubleType())
-    def _f(l: pd.Series, r: pd.Series) -> pd.Series:
-        return pd.Series([fn(W.loads(x), W.loads(y)) for x, y in zip(l, r)])
-
-    return _f
-
-
 def st_hausdorff_distance(a: Column, b: Column, densify_frac: float | None = None) -> Column:
-    return _pair_udf(lambda x, y: hausdorff(x, y, densify_frac))(a, b)
+    return geom_udf(DoubleType(), lambda x, y: hausdorff(x, y, densify_frac))(a, b)
 
 
 def st_frechet_distance(a: Column, b: Column) -> Column:
-    return _pair_udf(frechet)(a, b)
+    return geom_udf(DoubleType(), frechet)(a, b)

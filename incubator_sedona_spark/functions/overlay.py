@@ -19,6 +19,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import BinaryType
 
+from incubator_sedona_spark.functions._udf import geom_udf
+from incubator_sedona_spark.functions.st import st_polygon_from_envelope
 from incubator_sedona_spark.geom import clip as CL
 from incubator_sedona_spark.geom import kernel as K
 from incubator_sedona_spark.geom import wkb as W
@@ -132,13 +134,7 @@ def overlay_pair(a: W.Geometry, b: W.Geometry, op: str) -> W.Geometry:
 
 
 def _overlay_udf(op: str):
-    @F.pandas_udf(BinaryType())
-    def _f(l: pd.Series, r: pd.Series) -> pd.Series:
-        return pd.Series(
-            [W.dumps(overlay_pair(W.loads(x), W.loads(y), op)) for x, y in zip(l, r)]
-        )
-
-    return _f
+    return geom_udf(BinaryType(), lambda a, b: overlay_pair(a, b, op))
 
 
 def st_intersection(a: Column, b: Column) -> Column:
@@ -207,22 +203,16 @@ def st_union_collect(a: Column, b: Column) -> Column:
     """Union as a (Multi-)collection WITHOUT dissolving overlaps — exact for
     disjoint inputs; documented approximation otherwise."""
 
-    @F.pandas_udf(BinaryType())
-    def _f(l: pd.Series, r: pd.Series) -> pd.Series:
-        out = []
-        for x, y in zip(l, r):
-            ga, gb = W.loads(x), W.loads(y)
-            leaves = list(ga.leaves()) + list(gb.leaves())
-            kinds = {g.kind for g in leaves}
-            if kinds == {W.POLYGON}:
-                out.append(W.dumps(W.multi(W.MULTIPOLYGON, leaves)))
-            elif kinds == {W.POINT}:
-                out.append(W.dumps(W.multi(W.MULTIPOINT, leaves)))
-            else:
-                out.append(W.dumps(W.multi(W.GEOMETRYCOLLECTION, leaves)))
-        return pd.Series(out)
+    def _collect(ga: W.Geometry, gb: W.Geometry) -> W.Geometry:
+        leaves = list(ga.leaves()) + list(gb.leaves())
+        kinds = {g.kind for g in leaves}
+        if kinds == {W.POLYGON}:
+            return W.multi(W.MULTIPOLYGON, leaves)
+        if kinds == {W.POINT}:
+            return W.multi(W.MULTIPOINT, leaves)
+        return W.multi(W.GEOMETRYCOLLECTION, leaves)
 
-    return _f(a, b)
+    return geom_udf(BinaryType(), _collect)(a, b)
 
 
 def st_intersection_aggr(df: DataFrame, geom_col: str = "wkb", group_by: list | None = None) -> DataFrame:
@@ -272,15 +262,8 @@ def st_envelope_aggr(df: DataFrame, geom_col: str = "wkb", group_by: list | None
         F.max("ymax").alias("env_ymax"),
     ]
     out = src.groupBy(*(group_by or [])).agg(*aggs) if group_by else src.agg(*aggs)
-
-    @F.pandas_udf(BinaryType())
-    def _box(x0: pd.Series, y0: pd.Series, x1: pd.Series, y1: pd.Series) -> pd.Series:
-        return pd.Series([W.dumps(W.box(*t)) for t in zip(x0, y0, x1, y1)])
-
-    return out.withColumn(
-        "env_wkb",
-        _box(F.col("env_xmin"), F.col("env_ymin"), F.col("env_xmax"), F.col("env_ymax")),
-    )
+    box = st_polygon_from_envelope(*(F.col("env_" + c) for c in ("xmin", "ymin", "xmax", "ymax")))
+    return out.withColumn("env_wkb", box)
 
 
 def st_collect_aggr(df: DataFrame, geom_col: str = "wkb", group_by: list | None = None) -> DataFrame:

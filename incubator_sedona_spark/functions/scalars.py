@@ -33,10 +33,17 @@ Reference surface and semantics:
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, functions as F
-from pyspark.sql.types import BinaryType, BooleanType, DoubleType, IntegerType
+from pyspark.sql.types import (
+    ArrayType,
+    BinaryType,
+    BooleanType,
+    DoubleType,
+    IntegerType,
+    StringType,
+)
 
+from incubator_sedona_spark.functions._udf import geom_udf
 from incubator_sedona_spark.geom import wkb as W
 
 # -- predicates ----------------------------------------------------------------
@@ -164,27 +171,18 @@ def geometry_is_closed(g: W.Geometry) -> bool:
 
 
 def st_is_simple(wkb_col: Column) -> Column:
-    return _bool_udf(geometry_is_simple)(wkb_col)
+    return geom_udf(BooleanType(), geometry_is_simple)(wkb_col)
 
 
 def st_is_closed(wkb_col: Column) -> Column:
-    return _bool_udf(geometry_is_closed)(wkb_col)
+    return geom_udf(BooleanType(), geometry_is_closed)(wkb_col)
 
 
 def st_is_ring(wkb_col: Column) -> Column:
-    return _bool_udf(
-        lambda g: g.kind == W.LINESTRING
-        and geometry_is_closed(g)
-        and geometry_is_simple(g)
-    )(wkb_col)
+    def _ring(g: W.Geometry) -> bool:
+        return g.kind == W.LINESTRING and geometry_is_closed(g) and geometry_is_simple(g)
 
-
-def _bool_udf(fn):
-    @F.pandas_udf(BooleanType())
-    def _f(s: pd.Series) -> pd.Series:
-        return pd.Series([bool(fn(W.loads(b))) for b in s])
-
-    return _f
+    return geom_udf(BooleanType(), _ring)(wkb_col)
 
 
 # -- angle / diagonal / rings ----------------------------------------------------
@@ -207,52 +205,29 @@ def st_angle(p1: Column, p2: Column, p3: Column, p4: Column | None = None) -> Co
     3 points = angle at p2 from p1 to p3 (Functions.java:1001-1013).
     Radians in [0, 2pi); combine with F.degrees for ST_Degrees."""
 
-    @F.pandas_udf(DoubleType())
-    def _f4(a: pd.Series, b: pd.Series, c: pd.Series, d: pd.Series) -> pd.Series:
-        out = []
-        for wa, wb, wc, wd in zip(a, b, c, d):
-            pa, pb = W.loads(wa).parts[0], W.loads(wb).parts[0]
-            pc, pd_ = W.loads(wc).parts[0], W.loads(wd).parts[0]
-            out.append(calc_angle(pa, pb, pc, pd_))
-        return pd.Series(out)
+    def _angle(*pts: W.Geometry) -> float:
+        c = [g.parts[0] for g in pts]
+        return calc_angle(c[1], c[0], c[1], c[2]) if len(c) == 3 else calc_angle(*c)
 
-    @F.pandas_udf(DoubleType())
-    def _f3(a: pd.Series, b: pd.Series, c: pd.Series) -> pd.Series:
-        out = []
-        for wa, wb, wc in zip(a, b, c):
-            pa, pb, pc = W.loads(wa).parts[0], W.loads(wb).parts[0], W.loads(wc).parts[0]
-            out.append(calc_angle(pb, pa, pb, pc))
-        return pd.Series(out)
+    cols = (p1, p2, p3) if p4 is None else (p1, p2, p3, p4)
+    return geom_udf(DoubleType(), _angle)(*cols)
 
-    if p4 is None:
-        return _f3(p1, p2, p3)
-    return _f4(p1, p2, p3, p4)
+
+def _bounding_diagonal(g: W.Geometry) -> W.Geometry:
+    if g.has_z:
+        arrs = []
+        for leaf in g.leaves():
+            rings = leaf.parts if leaf.kind == W.POLYGON else [leaf.parts]
+            arrs.extend(r[:, :3] for r in rings)
+        v = np.concatenate(arrs, axis=0)
+        return W.Geometry(W.LINESTRING, np.array([v.min(axis=0), v.max(axis=0)]), True, False)
+    v = g.vertices()
+    return W.Geometry(W.LINESTRING, np.array([v.min(axis=0), v.max(axis=0)]))
 
 
 def st_bounding_diagonal(wkb_col: Column) -> Column:
     """LineString from the min corner to the max corner (Z-aware)."""
-
-    @F.pandas_udf(BinaryType())
-    def _f(s: pd.Series) -> pd.Series:
-        out = []
-        for b in s:
-            g = W.loads(b)
-            if g.has_z:
-                arrs = []
-                for leaf in g.leaves():
-                    rings = leaf.parts if leaf.kind == W.POLYGON else [leaf.parts]
-                    arrs.extend(r[:, :3] for r in rings)
-                v = np.concatenate(arrs, axis=0)
-                lo, hi = v.min(axis=0), v.max(axis=0)
-                ls = W.Geometry(W.LINESTRING, np.array([lo, hi]), True, False)
-            else:
-                v = g.vertices()
-                lo, hi = v.min(axis=0), v.max(axis=0)
-                ls = W.Geometry(W.LINESTRING, np.array([lo, hi]))
-            out.append(W.dumps(ls))
-        return pd.Series(out)
-
-    return _f(wkb_col)
+    return geom_udf(BinaryType(), _bounding_diagonal)(wkb_col)
 
 
 def st_nrings(wkb_col: Column) -> Column:
@@ -267,25 +242,15 @@ def st_nrings(wkb_col: Column) -> Column:
                 total += len(leaf.parts)
         return total
 
-    @F.pandas_udf(IntegerType())
-    def _f(s: pd.Series) -> pd.Series:
-        return pd.Series([_n(W.loads(b)) for b in s])
-
-    return _f(wkb_col)
+    return geom_udf(IntegerType(), _n)(wkb_col)
 
 
 def st_num_interior_rings(wkb_col: Column) -> Column:
     """Hole count of a Polygon (null for non-polygons), ST_NumInteriorRings."""
+    def _holes(g: W.Geometry):
+        return len(g.parts) - 1 if g.kind == W.POLYGON else None
 
-    @F.pandas_udf(IntegerType())
-    def _f(s: pd.Series) -> pd.Series:
-        out = []
-        for b in s:
-            g = W.loads(b)
-            out.append(len(g.parts) - 1 if g.kind == W.POLYGON else None)
-        return pd.Series(out)
-
-    return _f(wkb_col)
+    return geom_udf(IntegerType(), _holes)(wkb_col)
 
 
 # -- spheroid family -------------------------------------------------------------
@@ -367,15 +332,11 @@ def st_distance_spheroid(a_col: Column, b_col: Column) -> Column:
     passes X as latitude and Y as longitude (Spheroid.java:47-52), i.e.
     POINT(lat lon) — mirrored exactly."""
 
-    @F.pandas_udf(DoubleType())
-    def _f(sa: pd.Series, sb: pd.Series) -> pd.Series:
-        out = []
-        for ba, bb in zip(sa, sb):
-            ca, cb = _rep_coord(W.loads(ba)), _rep_coord(W.loads(bb))
-            out.append(vincenty_inverse(ca[0], ca[1], cb[0], cb[1]))
-        return pd.Series(out)
+    def _dist(a: W.Geometry, b: W.Geometry) -> float:
+        ca, cb = _rep_coord(a), _rep_coord(b)
+        return vincenty_inverse(ca[0], ca[1], cb[0], cb[1])
 
-    return _f(a_col, b_col)
+    return geom_udf(DoubleType(), _dist)(a_col, b_col)
 
 
 def _length_spheroid(g: W.Geometry) -> float:
@@ -393,12 +354,7 @@ def _length_spheroid(g: W.Geometry) -> float:
 def st_length_spheroid(wkb_col: Column) -> Column:
     """Sum of per-edge WGS84 geodesic distances (perimeter for polygons),
     ST_LengthSpheroid; same (lat=X, lon=Y) convention as the reference."""
-
-    @F.pandas_udf(DoubleType())
-    def _f(s: pd.Series) -> pd.Series:
-        return pd.Series([_length_spheroid(W.loads(b)) for b in s])
-
-    return _f(wkb_col)
+    return geom_udf(DoubleType(), _length_spheroid)(wkb_col)
 
 
 def _authalic_lat(phi: np.ndarray) -> np.ndarray:
@@ -462,11 +418,7 @@ def st_area_spheroid(wkb_col: Column) -> Column:
                 total -= _ring_area_sphere(hole)
         return total
 
-    @F.pandas_udf(DoubleType())
-    def _f(s: pd.Series) -> pd.Series:
-        return pd.Series([_area(W.loads(b)) for b in s])
-
-    return _f(wkb_col)
+    return geom_udf(DoubleType(), _area)(wkb_col)
 
 
 # -- geohash decode ---------------------------------------------------------------
@@ -504,15 +456,11 @@ def geohash_to_bbox(geohash: str, precision: int | None = None):
 def st_geom_from_geohash(gh_col: Column, precision: int | None = None) -> Column:
     """Geohash cell bbox as a Polygon (ST_GeomFromGeoHash)."""
 
-    @F.pandas_udf(BinaryType())
-    def _f(s: pd.Series) -> pd.Series:
-        out = []
-        for gh in s:
-            x0, x1, y0, y1 = geohash_to_bbox(gh, precision)
-            out.append(W.dumps(W.box(x0, y0, x1, y1)))
-        return pd.Series(out)
+    def _cell(gh: str) -> W.Geometry:
+        x0, x1, y0, y1 = geohash_to_bbox(gh, precision)
+        return W.box(x0, y0, x1, y1)
 
-    return _f(gh_col)
+    return geom_udf(BinaryType(), _cell, decode=None)(gh_col)
 
 
 # -- small accessors (ST_Dimension, ST_IsEmpty, ST_XMin..YMax, ST_Degrees) ---------
@@ -533,39 +481,27 @@ def geometry_dimension(g: W.Geometry) -> int:
 
 
 def st_dimension(wkb_col: Column) -> Column:
-    @F.pandas_udf(IntegerType())
-    def _f(s: pd.Series) -> pd.Series:
-        return pd.Series([geometry_dimension(W.loads(b)) for b in s])
-
-    return _f(wkb_col)
+    return geom_udf(IntegerType(), geometry_dimension)(wkb_col)
 
 
 def st_is_empty(wkb_col: Column) -> Column:
-    return _bool_udf(lambda g: len(g.vertices()) == 0)(wkb_col)
-
-
-def _bound_udf(idx: int):
-    @F.pandas_udf(DoubleType())
-    def _f(s: pd.Series) -> pd.Series:
-        return pd.Series([W.loads(b).bounds[idx] for b in s])
-
-    return _f
+    return geom_udf(BooleanType(), lambda g: len(g.vertices()) == 0)(wkb_col)
 
 
 def st_xmin(wkb_col: Column) -> Column:
-    return _bound_udf(0)(wkb_col)
+    return geom_udf(DoubleType(), lambda g: g.bounds[0])(wkb_col)
 
 
 def st_ymin(wkb_col: Column) -> Column:
-    return _bound_udf(1)(wkb_col)
+    return geom_udf(DoubleType(), lambda g: g.bounds[1])(wkb_col)
 
 
 def st_xmax(wkb_col: Column) -> Column:
-    return _bound_udf(2)(wkb_col)
+    return geom_udf(DoubleType(), lambda g: g.bounds[2])(wkb_col)
 
 
 def st_ymax(wkb_col: Column) -> Column:
-    return _bound_udf(3)(wkb_col)
+    return geom_udf(DoubleType(), lambda g: g.bounds[3])(wkb_col)
 
 
 def st_degrees(rad_col: Column) -> Column:
@@ -576,17 +512,11 @@ def st_degrees(rad_col: Column) -> Column:
 def st_dump_points(wkb_col: Column) -> Column:
     """array<binary> of every vertex as a Point WKB (ST_DumpPoints);
     explode() the result for the row-per-point form."""
-    from pyspark.sql.types import ArrayType
 
-    @F.pandas_udf(ArrayType(BinaryType()))
-    def _f(s: pd.Series) -> pd.Series:
-        out = []
-        for b in s:
-            v = W.loads(b).vertices()
-            out.append([W.dumps(W.point(float(x), float(y))) for x, y in v])
-        return pd.Series(out)
+    def _points(g: W.Geometry) -> list:
+        return [W.dumps(W.point(float(x), float(y))) for x, y in g.vertices()]
 
-    return _f(wkb_col)
+    return geom_udf(ArrayType(BinaryType()), _points)(wkb_col)
 
 
 # -- ST_AsEWKT / ST_AsEWKB ----------------------------------------------------------
@@ -595,30 +525,17 @@ def st_dump_points(wkb_col: Column) -> Column:
 def st_as_ewkb(wkb_col: Column) -> Column:
     """EWKB bytes: identical to the stored WKB (the serde already embeds a
     nonzero SRID as the EWKB header flag) — re-serialized for normalization."""
-
-    @F.pandas_udf(BinaryType())
-    def _f(s: pd.Series) -> pd.Series:
-        return pd.Series([W.dumps(W.loads(b)) for b in s])
-
-    return _f(wkb_col)
+    return geom_udf(BinaryType(), lambda g: g)(wkb_col)
 
 
 def st_as_ewkt(wkb_col: Column) -> Column:
     """EWKT: 'SRID=nnnn;<wkt>' when an SRID is set, plain WKT otherwise."""
-    from pyspark.sql.types import StringType
-
     from incubator_sedona_spark.functions.st import _to_wkt
 
-    @F.pandas_udf(StringType())
-    def _f(s: pd.Series) -> pd.Series:
-        out = []
-        for b in s:
-            g = W.loads(b)
-            wkt = _to_wkt(g)
-            out.append(f"SRID={g.srid};{wkt}" if g.srid else wkt)
-        return pd.Series(out)
+    def _ewkt(g: W.Geometry) -> str:
+        return f"SRID={g.srid};{_to_wkt(g)}" if g.srid else _to_wkt(g)
 
-    return _f(wkb_col)
+    return geom_udf(StringType(), _ewkt)(wkb_col)
 
 
 # -- ST_BuildArea ---------------------------------------------------------------------
@@ -670,11 +587,7 @@ def build_area_geometry(g: W.Geometry) -> W.Geometry:
 
 
 def st_build_area(wkb_col: Column) -> Column:
-    @F.pandas_udf(BinaryType())
-    def _f(s: pd.Series) -> pd.Series:
-        return pd.Series([W.dumps(build_area_geometry(W.loads(b))) for b in s])
-
-    return _f(wkb_col)
+    return geom_udf(BinaryType(), build_area_geometry)(wkb_col)
 
 
 # -- ST_SimplifyPreserveTopology ---------------------------------------------------
@@ -711,11 +624,7 @@ def st_simplify_preserve_topology(wkb_col: Column, tolerance: float) -> Column:
             return W.Geometry(W.POLYGON, rings)
         return W.Geometry(g.kind, [_simp(c) for c in g.parts])
 
-    @F.pandas_udf(BinaryType())
-    def _f(s: pd.Series) -> pd.Series:
-        return pd.Series([W.dumps(_simp(W.loads(b))) for b in s])
-
-    return _f(wkb_col)
+    return geom_udf(BinaryType(), _simp)(wkb_col)
 
 
 # -- SRID (ST_SRID / ST_SetSRID) --------------------------------------------------
@@ -727,28 +636,18 @@ def st_simplify_preserve_topology(wkb_col: Column, tolerance: float) -> Column:
 
 def st_srid(wkb_col: Column) -> Column:
     """SRID embedded in the geometry (0 when unset), ST_SRID."""
-
-    @F.pandas_udf(IntegerType())
-    def _f(s: pd.Series) -> pd.Series:
-        return pd.Series([W.loads(b).srid for b in s])
-
-    return _f(wkb_col)
+    return geom_udf(IntegerType(), lambda g: g.srid)(wkb_col)
 
 
 def st_set_srid(wkb_col: Column, srid: int) -> Column:
     """Stamp an SRID into the geometry header (no reprojection — use
     functions.crs.st_transform for that), ST_SetSRID."""
 
-    @F.pandas_udf(BinaryType())
-    def _f(s: pd.Series) -> pd.Series:
-        out = []
-        for b in s:
-            g = W.loads(b)
-            g.srid = srid
-            out.append(W.dumps(g))
-        return pd.Series(out)
+    def _stamp(g: W.Geometry) -> W.Geometry:
+        g.srid = srid
+        return g
 
-    return _f(wkb_col)
+    return geom_udf(BinaryType(), _stamp)(wkb_col)
 
 
 # -- ST_Collect / ST_OrderingEquals -------------------------------------------------
@@ -778,18 +677,13 @@ def collect_geometries(geoms: list) -> W.Geometry:
 def st_collect(wkb_array_col: Column) -> Column:
     """ST_Collect over an array<binary> of geometries (the row form; the
     aggregate form is functions.overlay.st_collect_aggr).  NULL elements are
-    dropped, like the reference expression."""
+    dropped, like the reference expression, and a NULL array collects nothing."""
 
-    @F.pandas_udf(BinaryType())
-    def _f(s: pd.Series) -> pd.Series:
-        out = []
-        for arr in s:
-            elems = [] if arr is None else list(arr)
-            geoms = [W.loads(b) for b in elems if b is not None]
-            out.append(W.dumps(collect_geometries(geoms)))
-        return pd.Series(out)
+    def _collect(arr) -> W.Geometry:
+        return collect_geometries([W.loads(b) for b in arr if b is not None])
 
-    return _f(wkb_array_col)
+    elems = F.coalesce(wkb_array_col, F.array().cast(ArrayType(BinaryType())))
+    return geom_udf(BinaryType(), _collect, decode=None)(elems)
 
 
 def st_ordering_equals(a: Column, b: Column) -> Column:
@@ -797,14 +691,4 @@ def st_ordering_equals(a: Column, b: Column) -> Column:
     in the SAME order (unlike ST_Equals, which is topological).  Both sides
     are re-serialized through the canonical serde, so byte equality is
     exactly coordinate-sequence equality."""
-
-    @F.pandas_udf("boolean")
-    def _f(sa: pd.Series, sb: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                W.dumps(W.loads(x)) == W.dumps(W.loads(y))
-                for x, y in zip(sa, sb)
-            ]
-        )
-
-    return _f(a, b)
+    return geom_udf(BooleanType(), lambda x, y: W.dumps(x) == W.dumps(y))(a, b)

@@ -10,6 +10,11 @@ geometry-shape work runs through Arrow-batched pandas UDFs over WKB.
 Unlike the reference — where every expression is CodegenFallback
 (InferredExpression.scala:42) — the native subset here participates in
 whole-stage codegen, and the UDF subset is vectorized over Arrow batches.
+
+Every UDF in this package crosses one boundary, ``functions._udf``: a plain
+per-geometry function behind ``geom_udf``, or a batch kernel behind
+``geom_batch_udf``.  Its NULL rule: a row with a NULL argument gives NULL
+(Spark's null-intolerant expressions); the wrapped function never sees it.
 """
 
 from __future__ import annotations
@@ -17,7 +22,6 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -31,6 +35,7 @@ from pyspark.sql.types import (
 )
 
 from incubator_sedona_spark.cells import Grid
+from incubator_sedona_spark.functions._udf import geom_batch_udf, geom_udf
 from incubator_sedona_spark.geom import kernel as K
 from incubator_sedona_spark.geom import wkb as W
 
@@ -75,26 +80,15 @@ __all__ = [
 def st_point(x: Column, y: Column) -> Column:
     """Point WKB from coordinate columns — vectorized numpy buffer assembly."""
 
-    @F.pandas_udf(BinaryType())
-    def _mk(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        return pd.Series(W.points_to_wkb(xs.to_numpy(np.float64), ys.to_numpy(np.float64)))
+    def points(xs, ys):
+        return W.points_to_wkb(xs.to_numpy(np.float64), ys.to_numpy(np.float64))
 
-    return _mk(x.cast("double"), y.cast("double"))
+    return geom_batch_udf(BinaryType(), points)(x.cast("double"), y.cast("double"))
 
 
 def st_polygon_from_envelope(xmin, ymin, xmax, ymax) -> Column:
-    @F.pandas_udf(BinaryType())
-    def _mk(a: pd.Series, b: pd.Series, c: pd.Series, d: pd.Series) -> pd.Series:
-        return pd.Series(
-            [W.dumps(W.box(*t)) for t in zip(a, b, c, d)]
-        )
-
-    return _mk(
-        F.lit(xmin) if not isinstance(xmin, Column) else xmin,
-        F.lit(ymin) if not isinstance(ymin, Column) else ymin,
-        F.lit(xmax) if not isinstance(xmax, Column) else xmax,
-        F.lit(ymax) if not isinstance(ymax, Column) else ymax,
-    )
+    cols = [v if isinstance(v, Column) else F.lit(v) for v in (xmin, ymin, xmax, ymax)]
+    return geom_udf(BinaryType(), W.box, decode=None)(*cols)
 
 
 def _parse_wkt(text: str) -> W.Geometry:
@@ -219,37 +213,21 @@ def _to_wkt(g: W.Geometry) -> str:
 
 
 def st_geom_from_wkt(wkt: Column) -> Column:
-    @F.pandas_udf(BinaryType())
-    def _mk(s: pd.Series) -> pd.Series:
-        return pd.Series([W.dumps(_parse_wkt(t)) for t in s])
-
-    return _mk(wkt)
+    return geom_udf(BinaryType(), _parse_wkt, decode=None)(wkt)
 
 
 def st_as_text(wkb_col: Column) -> Column:
-    @F.pandas_udf(StringType())
-    def _mk(s: pd.Series) -> pd.Series:
-        return pd.Series([_to_wkt(W.loads(b)) for b in s])
-
-    return _mk(wkb_col)
+    return geom_udf(StringType(), _to_wkt)(wkb_col)
 
 
 # -- accessors / measures --------------------------------------------------------
 
 def st_x(wkb_col: Column) -> Column:
-    @F.pandas_udf(DoubleType())
-    def _f(s: pd.Series) -> pd.Series:
-        return pd.Series(W.wkb_to_points(s)[:, 0])
-
-    return _f(wkb_col)
+    return geom_batch_udf(DoubleType(), lambda s: W.wkb_to_points(s)[:, 0])(wkb_col)
 
 
 def st_y(wkb_col: Column) -> Column:
-    @F.pandas_udf(DoubleType())
-    def _f(s: pd.Series) -> pd.Series:
-        return pd.Series(W.wkb_to_points(s)[:, 1])
-
-    return _f(wkb_col)
+    return geom_batch_udf(DoubleType(), lambda s: W.wkb_to_points(s)[:, 1])(wkb_col)
 
 
 def _shoelace(ring: np.ndarray) -> float:
@@ -257,153 +235,110 @@ def _shoelace(ring: np.ndarray) -> float:
     return 0.5 * float(np.sum(x[:-1] * y[1:] - x[1:] * y[:-1]))
 
 
-def st_area(wkb_col: Column) -> Column:
-    @F.pandas_udf(DoubleType())
-    def _f(s: pd.Series) -> pd.Series:
-        out = []
-        for b in s:
-            g = W.loads(b)
-            area = 0.0
-            for leaf in g.leaves():
-                if leaf.kind == W.POLYGON:
-                    area += abs(_shoelace(leaf.parts[0]))
-                    for hole in leaf.parts[1:]:
-                        area -= abs(_shoelace(hole))
-            out.append(area)
-        return pd.Series(out)
+def _area(g: W.Geometry) -> float:
+    area = 0.0
+    for leaf in g.leaves():
+        if leaf.kind == W.POLYGON:
+            area += abs(_shoelace(leaf.parts[0]))
+            for hole in leaf.parts[1:]:
+                area -= abs(_shoelace(hole))
+    return area
 
-    return _f(wkb_col)
+
+def st_area(wkb_col: Column) -> Column:
+    return geom_udf(DoubleType(), _area)(wkb_col)
+
+
+def _length(g: W.Geometry) -> float:
+    e = g.edges()
+    return float(np.hypot(e[:, 2] - e[:, 0], e[:, 3] - e[:, 1]).sum()) if len(e) else 0.0
 
 
 def st_length(wkb_col: Column) -> Column:
-    @F.pandas_udf(DoubleType())
-    def _f(s: pd.Series) -> pd.Series:
-        out = []
-        for b in s:
-            e = W.loads(b).edges()
-            out.append(float(np.hypot(e[:, 2] - e[:, 0], e[:, 3] - e[:, 1]).sum()) if len(e) else 0.0)
-        return pd.Series(out)
-
-    return _f(wkb_col)
+    return geom_udf(DoubleType(), _length)(wkb_col)
 
 
 def st_distance(a: Column, b: Column) -> Column:
-    @F.pandas_udf(DoubleType())
-    def _f(l: pd.Series, r: pd.Series) -> pd.Series:
-        return pd.Series(K.distance_batch(l, r))
-
-    return _f(a, b)
+    return geom_batch_udf(DoubleType(), K.distance_batch)(a, b)
 
 
 def st_npoints(wkb_col: Column) -> Column:
-    @F.pandas_udf(IntegerType())
-    def _f(s: pd.Series) -> pd.Series:
-        return pd.Series([len(W.loads(b).vertices()) for b in s], dtype="int32")
+    return geom_udf(IntegerType(), lambda g: len(g.vertices()))(wkb_col)
 
-    return _f(wkb_col)
+
+_TYPE_NAMES = {
+    W.POINT: "ST_Point",
+    W.LINESTRING: "ST_LineString",
+    W.POLYGON: "ST_Polygon",
+    W.MULTIPOINT: "ST_MultiPoint",
+    W.MULTILINESTRING: "ST_MultiLineString",
+    W.MULTIPOLYGON: "ST_MultiPolygon",
+    W.GEOMETRYCOLLECTION: "ST_GeometryCollection",
+}
 
 
 def st_geometry_type(wkb_col: Column) -> Column:
-    @F.pandas_udf(StringType())
-    def _f(s: pd.Series) -> pd.Series:
-        names = {
-            W.POINT: "ST_Point",
-            W.LINESTRING: "ST_LineString",
-            W.POLYGON: "ST_Polygon",
-            W.MULTIPOINT: "ST_MultiPoint",
-            W.MULTILINESTRING: "ST_MultiLineString",
-            W.MULTIPOLYGON: "ST_MultiPolygon",
-            W.GEOMETRYCOLLECTION: "ST_GeometryCollection",
-        }
-        return pd.Series([names[W.loads(b).kind] for b in s])
-
-    return _f(wkb_col)
+    return geom_udf(StringType(), lambda g: _TYPE_NAMES[g.kind])(wkb_col)
 
 
 def st_envelope_bbox(wkb_col: Column) -> Column:
     """array<double>(xmin, ymin, xmax, ymax) — the engine's envelope form."""
+    return geom_batch_udf(ArrayType(DoubleType()), lambda s: list(W.bounds_batch(s)))(wkb_col)
 
-    @F.pandas_udf(ArrayType(DoubleType()))
-    def _f(s: pd.Series) -> pd.Series:
-        return pd.Series(list(W.bounds_batch(s)))
 
-    return _f(wkb_col)
+def _centroid_xy(g: W.Geometry) -> np.ndarray:
+    """(cx, cy): vertex-mean for points/lines, area centroid for polygons."""
+    polys = [l for l in g.leaves() if l.kind == W.POLYGON]
+    A = Cx = Cy = 0.0
+    for p in polys:
+        # each polygon's contribution is normalized so its SHELL counts
+        # positive regardless of stored winding (WKB allows either; CW shells
+        # from shapefile-derived data must not cancel CCW shells across a
+        # MultiPolygon), and holes are forced to subtract even if stored with
+        # the shell's winding — matching JTS ST_Centroid
+        shell = p.parts[0]
+        sa = (shell[:-1, 0] * shell[1:, 1] - shell[1:, 0] * shell[:-1, 1]).sum() / 2.0
+        flip = -1.0 if sa < 0 else 1.0
+        for ri, r in enumerate(p.parts):
+            x, y = r[:-1, 0], r[:-1, 1]
+            x1, y1 = r[1:, 0], r[1:, 1]
+            cross = x * y1 - x1 * y
+            a = cross.sum() / 2.0
+            if a != 0:
+                sgn = flip
+                if ri > 0 and a * sa > 0:
+                    sgn = -flip
+                Cx += sgn * float(((x + x1) * cross).sum() / 6.0)
+                Cy += sgn * float(((y + y1) * cross).sum() / 6.0)
+                A += sgn * a
+    return np.array([Cx / A, Cy / A]) if A else g.vertices().mean(axis=0)
 
 
 def st_centroid_xy(wkb_col: Column) -> Column:
     """array<double>(cx, cy): vertex-mean for points/lines, area centroid for polygons."""
+    return geom_udf(ArrayType(DoubleType()), _centroid_xy)(wkb_col)
 
-    @F.pandas_udf(ArrayType(DoubleType()))
-    def _f(s: pd.Series) -> pd.Series:
-        out = []
-        for b in s:
-            g = W.loads(b)
-            polys = [l for l in g.leaves() if l.kind == W.POLYGON]
-            if polys:
-                A = Cx = Cy = 0.0
-                for p in polys:
-                    # each polygon's contribution is normalized so its SHELL
-                    # counts positive regardless of stored winding (WKB allows
-                    # either; CW shells from shapefile-derived data must not
-                    # cancel CCW shells across a MultiPolygon), and holes are
-                    # forced to subtract even if stored with the shell's
-                    # winding — matching JTS ST_Centroid
-                    shell = p.parts[0]
-                    sa = (
-                        shell[:-1, 0] * shell[1:, 1] - shell[1:, 0] * shell[:-1, 1]
-                    ).sum() / 2.0
-                    flip = -1.0 if sa < 0 else 1.0
-                    for ri, r in enumerate(p.parts):
-                        x, y = r[:-1, 0], r[:-1, 1]
-                        x1, y1 = r[1:, 0], r[1:, 1]
-                        cross = x * y1 - x1 * y
-                        a = cross.sum() / 2.0
-                        if a != 0:
-                            sgn = flip
-                            if ri > 0 and a * sa > 0:
-                                sgn = -flip
-                            Cx += sgn * float(((x + x1) * cross).sum() / 6.0)
-                            Cy += sgn * float(((y + y1) * cross).sum() / 6.0)
-                            A += sgn * a
-                out.append(np.array([Cx / A, Cy / A]) if A else g.vertices().mean(axis=0))
-            else:
-                out.append(g.vertices().mean(axis=0))
-        return pd.Series(out)
 
-    return _f(wkb_col)
+def _is_valid(g: W.Geometry) -> bool:
+    for leaf in g.leaves():
+        if leaf.kind != W.POLYGON:
+            continue
+        for r in leaf.parts:
+            if len(r) < 4 or not np.array_equal(r[0], r[-1]):
+                return False
+            edges = np.column_stack([r[:-1], r[1:]])
+            # proper (transversal) crossing between any two edges of the same
+            # ring = bowtie/self-intersection
+            if K.segments_intersect_any(edges, edges, proper_only=True):
+                return False
+    return True
 
 
 def st_is_valid(wkb_col: Column) -> Column:
     """Polygon validity: rings closed, >=4 points, and no ring self-intersection
     (proper crossings between non-adjacent edges — the common invalidity JTS
     rejects; full OGC validity also checks ring nesting, not needed here)."""
-    from incubator_sedona_spark.geom import kernel as K
-
-    @F.pandas_udf(BooleanType())
-    def _f(s: pd.Series) -> pd.Series:
-        out = []
-        for b in s:
-            g = W.loads(b)
-            ok = True
-            for leaf in g.leaves():
-                if leaf.kind != W.POLYGON:
-                    continue
-                for r in leaf.parts:
-                    if len(r) < 4 or not np.array_equal(r[0], r[-1]):
-                        ok = False
-                        break
-                    edges = np.column_stack([r[:-1], r[1:]])
-                    # proper (transversal) crossing between any two edges of
-                    # the same ring = bowtie/self-intersection
-                    if K.segments_intersect_any(edges, edges, proper_only=True):
-                        ok = False
-                        break
-                if not ok:
-                    break
-            out.append(ok)
-        return pd.Series(out)
-
-    return _f(wkb_col)
+    return geom_udf(BooleanType(), _is_valid)(wkb_col)
 
 
 # -- transforms ------------------------------------------------------------------
@@ -412,15 +347,11 @@ def st_buffer_bbox(wkb_col: Column, dist: float) -> Column:
     """Envelope-expanded box polygon (the join-planning form of ST_Buffer;
     exact round buffers are not needed by any reference test we replicate)."""
 
-    @F.pandas_udf(BinaryType())
-    def _f(s: pd.Series) -> pd.Series:
-        out = []
-        for b in s:
-            x0, y0, x1, y1 = W.loads(b).bounds
-            out.append(W.dumps(W.box(x0 - dist, y0 - dist, x1 + dist, y1 + dist)))
-        return pd.Series(out)
+    def _box(g: W.Geometry) -> W.Geometry:
+        x0, y0, x1, y1 = g.bounds
+        return W.box(x0 - dist, y0 - dist, x1 + dist, y1 + dist)
 
-    return _f(wkb_col)
+    return geom_udf(BinaryType(), _box)(wkb_col)
 
 
 def _map_coords(fn):
@@ -442,34 +373,21 @@ def _map_coords(fn):
 
 
 def st_translate(wkb_col: Column, dx: float, dy: float) -> Column:
-    @F.pandas_udf(BinaryType())
-    def _f(s: pd.Series) -> pd.Series:
-        tr = _map_coords(lambda c: c + np.array([dx, dy]))
-        return pd.Series([W.dumps(tr(W.loads(b))) for b in s])
-
-    return _f(wkb_col)
+    return geom_udf(BinaryType(), _map_coords(lambda c: c + np.array([dx, dy])))(wkb_col)
 
 
 def st_flip_coordinates(wkb_col: Column) -> Column:
-    @F.pandas_udf(BinaryType())
-    def _f(s: pd.Series) -> pd.Series:
-        fl = _map_coords(lambda c: c[:, ::-1].copy())
-        return pd.Series([W.dumps(fl(W.loads(b))) for b in s])
-
-    return _f(wkb_col)
+    return geom_udf(BinaryType(), _map_coords(lambda c: c[:, ::-1].copy()))(wkb_col)
 
 
 def st_convex_hull(wkb_col: Column) -> Column:
-    @F.pandas_udf(BinaryType())
-    def _f(s: pd.Series) -> pd.Series:
-        out = []
-        for b in s:
-            pts = W.loads(b).vertices()
-            hull = _convex_hull(pts)
-            out.append(W.dumps(W.polygon(hull)) if len(hull) >= 3 else b)
-        return pd.Series(out)
+    """Hull polygon; a hull of fewer than 3 points returns the input bytes."""
 
-    return _f(wkb_col)
+    def _hull(b: bytes):
+        hull = _convex_hull(W.loads(b).vertices())
+        return W.polygon(hull) if len(hull) >= 3 else b
+
+    return geom_udf(BinaryType(), _hull, decode=None)(wkb_col)
 
 
 def _convex_hull(pts: np.ndarray) -> np.ndarray:
@@ -517,30 +435,19 @@ def st_simplify(wkb_col: Column, tol: float) -> Column:
     functions.scalars.st_simplify_preserve_topology for the validity-guarded
     form)."""
 
-    def dp(coords: np.ndarray) -> np.ndarray:
-        return _dp_simplify(coords, tol)
+    def _simplify(b: bytes):
+        g = W.loads(b)
+        if g.kind == W.LINESTRING:
+            return W.linestring(_dp_simplify(g.parts, tol))
+        if g.kind == W.POLYGON:
+            rings = [(_dp_simplify(r, tol), r) for r in g.parts]
+            return W.Geometry(W.POLYGON, [r if len(r) >= 4 else orig for r, orig in rings])
+        return b  # other kinds pass through byte-identical
 
-    @F.pandas_udf(BinaryType())
-    def _f(s: pd.Series) -> pd.Series:
-        out = []
-        for b in s:
-            g = W.loads(b)
-            if g.kind == W.LINESTRING:
-                out.append(W.dumps(W.linestring(dp(g.parts))))
-            elif g.kind == W.POLYGON:
-                rings = [dp(r) for r in g.parts]
-                rings = [r if len(r) >= 4 else g.parts[i] for i, r in enumerate(rings)]
-                out.append(W.dumps(W.Geometry(W.POLYGON, rings)))
-            else:
-                out.append(b)
-        return pd.Series(out)
-
-    return _f(wkb_col)
+    return geom_udf(BinaryType(), _simplify, decode=None)(wkb_col)
 
 
 def _polygon_ring_invalid(g: W.Geometry) -> bool:
-    from incubator_sedona_spark.geom import kernel as K
-
     for leaf in g.leaves():
         if leaf.kind != W.POLYGON:
             continue
@@ -604,12 +511,7 @@ def make_valid_geometry(g: W.Geometry) -> W.Geometry:
 def st_make_valid(wkb_col: Column) -> Column:
     """ST_MakeValid: ring closure + self-intersection repair via noding and
     even-odd area rebuild (see make_valid_geometry)."""
-
-    @F.pandas_udf(BinaryType())
-    def _f(s: pd.Series) -> pd.Series:
-        return pd.Series([W.dumps(make_valid_geometry(W.loads(b))) for b in s])
-
-    return _f(wkb_col)
+    return geom_udf(BinaryType(), make_valid_geometry)(wkb_col)
 
 
 # -- spherical -------------------------------------------------------------------
@@ -631,12 +533,10 @@ def st_cell_ids(wkb_col: Column, grid: Grid) -> Column:
     common/.../Functions.java:572-585): per-coordinate cells for points,
     bbox covering rounded to one level for other shapes."""
 
-    @F.pandas_udf(ArrayType(LongType()))
-    def _f(s: pd.Series) -> pd.Series:
-        bb = W.bounds_batch(s)
-        return pd.Series(grid.cover_bbox_batch(bb))
+    def cells(s):
+        return grid.cover_bbox_batch(W.bounds_batch(s))
 
-    return _f(wkb_col)
+    return geom_batch_udf(ArrayType(LongType()), cells)(wkb_col)
 
 
 _BASE32 = "0123456789bcdefghjkmnpqrstuvwxyz"
@@ -646,45 +546,36 @@ def st_geohash(lon: Column, lat: Column, precision: int) -> Column:
     """Geohash of a point — vectorized numpy bit interleave
     (PointGeoHashEncoder.java analog)."""
 
-    @F.pandas_udf(StringType())
-    def _f(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        out = []
-        for x, y in zip(xs, ys):
-            lo, hi = (-180.0, 180.0), (-90.0, 90.0)
-            bits = []
-            even = True
-            while len(bits) < precision * 5:
-                if even:
-                    mid = (lo[0] + lo[1]) / 2
-                    bits.append(x >= mid)
-                    lo = (mid, lo[1]) if x >= mid else (lo[0], mid)
-                else:
-                    mid = (hi[0] + hi[1]) / 2
-                    bits.append(y >= mid)
-                    hi = (mid, hi[1]) if y >= mid else (hi[0], mid)
-                even = not even
-            chars = []
-            for i in range(precision):
-                v = 0
-                for b in bits[i * 5 : (i + 1) * 5]:
-                    v = (v << 1) | int(b)
-                chars.append(_BASE32[v])
-            out.append("".join(chars))
-        return pd.Series(out)
+    def _geohash(x: float, y: float) -> str:
+        lo, hi = (-180.0, 180.0), (-90.0, 90.0)
+        bits = []
+        even = True
+        while len(bits) < precision * 5:
+            if even:
+                mid = (lo[0] + lo[1]) / 2
+                bits.append(x >= mid)
+                lo = (mid, lo[1]) if x >= mid else (lo[0], mid)
+            else:
+                mid = (hi[0] + hi[1]) / 2
+                bits.append(y >= mid)
+                hi = (mid, hi[1]) if y >= mid else (hi[0], mid)
+            even = not even
+        chars = []
+        for i in range(precision):
+            v = 0
+            for b in bits[i * 5 : (i + 1) * 5]:
+                v = (v << 1) | int(b)
+            chars.append(_BASE32[v])
+        return "".join(chars)
 
-    return _f(lon.cast("double"), lat.cast("double"))
+    return geom_udf(StringType(), _geohash, decode=None)(lon.cast("double"), lat.cast("double"))
 
 
 # -- predicates as column functions ------------------------------------------------
 
 def st_predicate(name: str, a: Column, b: Column) -> Column:
     """ST_Contains/ST_Intersects/... as a boolean column (Predicates.scala:71-243)."""
-
-    @F.pandas_udf(BooleanType())
-    def _f(l: pd.Series, r: pd.Series) -> pd.Series:
-        return pd.Series(K.eval_predicate_batch(name, l, r))
-
-    return _f(a, b)
+    return geom_batch_udf(BooleanType(), lambda l, r: K.eval_predicate_batch(name, l, r))(a, b)
 
 
 # -- CRS transform (pure-numpy Web Mercator; ST_Transform's dominant use) -------
@@ -705,12 +596,7 @@ def st_transform_4326_to_3857(wkb_col: Column) -> Column:
         y = np.log(np.tan(np.pi / 4 + np.radians(np.clip(c[:, 1], -89.9999, 89.9999)) / 2)) * _R_MERC
         return np.column_stack([x, y])
 
-    @F.pandas_udf(BinaryType())
-    def _f(s: pd.Series) -> pd.Series:
-        tr = _map_coords(fwd)
-        return pd.Series([W.dumps(tr(W.loads(b))) for b in s])
-
-    return _f(wkb_col)
+    return geom_udf(BinaryType(), _map_coords(fwd))(wkb_col)
 
 
 def st_transform_3857_to_4326(wkb_col: Column) -> Column:
@@ -719,12 +605,7 @@ def st_transform_3857_to_4326(wkb_col: Column) -> Column:
         lat = np.degrees(2 * np.arctan(np.exp(c[:, 1] / _R_MERC)) - np.pi / 2)
         return np.column_stack([lon, lat])
 
-    @F.pandas_udf(BinaryType())
-    def _f(s: pd.Series) -> pd.Series:
-        tr = _map_coords(inv)
-        return pd.Series([W.dumps(tr(W.loads(b))) for b in s])
-
-    return _f(wkb_col)
+    return geom_udf(BinaryType(), _map_coords(inv))(wkb_col)
 
 
 # -- more accessors ---------------------------------------------------------------
@@ -737,11 +618,7 @@ def st_azimuth(x1: Column, y1: Column, x2: Column, y2: Column) -> Column:
 
 
 def st_num_geometries(wkb_col: Column) -> Column:
-    @F.pandas_udf(IntegerType())
-    def _f(s: pd.Series) -> pd.Series:
-        return pd.Series([len(list(W.loads(b).leaves())) for b in s], dtype="int32")
-
-    return _f(wkb_col)
+    return geom_udf(IntegerType(), lambda g: len(list(g.leaves())))(wkb_col)
 
 
 def boundary_geometry(g: W.Geometry) -> W.Geometry:
@@ -776,12 +653,7 @@ def boundary_geometry(g: W.Geometry) -> W.Geometry:
 
 def st_boundary(wkb_col: Column) -> Column:
     """ST_Boundary (full JTS getBoundary semantics)."""
-
-    @F.pandas_udf(BinaryType())
-    def _f(s: pd.Series) -> pd.Series:
-        return pd.Series([W.dumps(boundary_geometry(W.loads(b))) for b in s])
-
-    return _f(wkb_col)
+    return geom_udf(BinaryType(), boundary_geometry)(wkb_col)
 
 
 def st_centroid(wkb_col: Column) -> Column:
@@ -803,70 +675,46 @@ def st_boundary_bbox(wkb_col: Column) -> Column:
     endpoints MultiPoint; points -> empty collection.  Kept for callers that
     want the exterior-only fast form; st_boundary is the full-semantics one."""
 
-    @F.pandas_udf(BinaryType())
-    def _f(s: pd.Series) -> pd.Series:
-        out = []
-        for b in s:
-            g = W.loads(b)
-            if g.kind == W.POLYGON:
-                out.append(W.dumps(W.linestring(g.parts[0])))
-            elif g.kind == W.LINESTRING:
-                out.append(
-                    W.dumps(
-                        W.multi(W.MULTIPOINT, [W.point(*g.parts[0]), W.point(*g.parts[-1])])
-                    )
-                )
-            else:
-                out.append(W.dumps(W.multi(W.GEOMETRYCOLLECTION, [])))
-        return pd.Series(out)
+    def _boundary(g: W.Geometry) -> W.Geometry:
+        if g.kind == W.POLYGON:
+            return W.linestring(g.parts[0])
+        if g.kind == W.LINESTRING:
+            return W.multi(W.MULTIPOINT, [W.point(*g.parts[0]), W.point(*g.parts[-1])])
+        return W.multi(W.GEOMETRYCOLLECTION, [])
 
-    return _f(wkb_col)
+    return geom_udf(BinaryType(), _boundary)(wkb_col)
 
 
 def st_exterior_ring(wkb_col: Column) -> Column:
-    @F.pandas_udf(BinaryType())
-    def _f(s: pd.Series) -> pd.Series:
-        out = []
-        for b in s:
-            g = W.loads(b)
-            out.append(W.dumps(W.linestring(g.parts[0])) if g.kind == W.POLYGON else None)
-        return pd.Series(out)
+    def _ring(g: W.Geometry):
+        return W.linestring(g.parts[0]) if g.kind == W.POLYGON else None
 
-    return _f(wkb_col)
+    return geom_udf(BinaryType(), _ring)(wkb_col)
 
 
 def st_dump(wkb_col: Column) -> Column:
     """array<binary> of leaf geometries — explode() replaces the reference's
     generator expression (ST_SubDivideExplode/ST_Dump pattern)."""
-
-    @F.pandas_udf(ArrayType(BinaryType()))
-    def _f(s: pd.Series) -> pd.Series:
-        return pd.Series([[W.dumps(leaf) for leaf in W.loads(b).leaves()] for b in s])
-
-    return _f(wkb_col)
+    leaves = geom_udf(ArrayType(BinaryType()), lambda g: [W.dumps(leaf) for leaf in g.leaves()])
+    return leaves(wkb_col)
 
 
 def st_geometric_median(wkb_col: Column, tol: float = 1e-6, max_iter: int = 1000) -> Column:
     """Weiszfeld iteration over a MultiPoint (Catalog.scala:147 constants:
     tol 1e-6, 1000 iterations)."""
 
-    @F.pandas_udf(ArrayType(DoubleType()))
-    def _f(s: pd.Series) -> pd.Series:
-        out = []
-        for b in s:
-            pts = W.loads(b).vertices()
-            m = pts.mean(axis=0)
-            for _ in range(max_iter):
-                d = np.hypot(pts[:, 0] - m[0], pts[:, 1] - m[1])
-                if np.any(d < 1e-12):
-                    break
-                wgt = 1.0 / d
-                nm = (pts * wgt[:, None]).sum(axis=0) / wgt.sum()
-                if np.hypot(*(nm - m)) < tol:
-                    m = nm
-                    break
-                m = nm
-            out.append(m)
-        return pd.Series(out)
+    def _median(g: W.Geometry) -> np.ndarray:
+        pts = g.vertices()
+        m = pts.mean(axis=0)
+        for _ in range(max_iter):
+            d = np.hypot(pts[:, 0] - m[0], pts[:, 1] - m[1])
+            if np.any(d < 1e-12):
+                break
+            wgt = 1.0 / d
+            nm = (pts * wgt[:, None]).sum(axis=0) / wgt.sum()
+            if np.hypot(*(nm - m)) < tol:
+                return nm
+            m = nm
+        return m
 
-    return _f(wkb_col)
+    return geom_udf(ArrayType(DoubleType()), _median)(wkb_col)

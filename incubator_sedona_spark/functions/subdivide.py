@@ -19,10 +19,10 @@ Engine mapping:
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, functions as F
 from pyspark.sql.types import ArrayType, BinaryType
 
+from incubator_sedona_spark.functions._udf import geom_udf
 from incubator_sedona_spark.geom import clip as CL
 from incubator_sedona_spark.geom import wkb as W
 
@@ -76,13 +76,10 @@ def subdivide_geometry(g: W.Geometry, max_vertices: int) -> list[W.Geometry]:
 def st_subdivide(wkb_col: Column, max_vertices: int) -> Column:
     """array<binary> of pieces (explode for ST_SubDivideExplode)."""
 
-    @F.pandas_udf(ArrayType(BinaryType()))
-    def _f(s: pd.Series) -> pd.Series:
-        return pd.Series(
-            [[W.dumps(p) for p in subdivide_geometry(W.loads(b), max_vertices)] for b in s]
-        )
+    def _pieces(g: W.Geometry) -> list:
+        return [W.dumps(p) for p in subdivide_geometry(g, max_vertices)]
 
-    return _f(wkb_col)
+    return geom_udf(ArrayType(BinaryType()), _pieces)(wkb_col)
 
 
 def st_subdivide_explode(df, geom_col: str, max_vertices: int, out_col: str = "geom"):
@@ -122,15 +119,9 @@ def split_by_line(g: W.Geometry, p1, p2) -> list[W.Geometry]:
 def st_split(wkb_col: Column, blade_col: Column) -> Column:
     """array<binary> pieces of geom split by a single-segment line blade."""
 
-    @F.pandas_udf(ArrayType(BinaryType()))
-    def _f(gs: pd.Series, bs: pd.Series) -> pd.Series:
-        out = []
-        for gb, bb in zip(gs, bs):
-            blade = W.loads(bb)
-            if blade.kind != W.LINESTRING or len(blade.parts) != 2:
-                raise NotImplementedError("st_split supports single-segment line blades")
-            pieces = split_by_line(W.loads(gb), blade.parts[0], blade.parts[1])
-            out.append([W.dumps(p) for p in pieces])
-        return pd.Series(out)
+    def _split(g: W.Geometry, blade: W.Geometry) -> list:
+        if blade.kind != W.LINESTRING or len(blade.parts) != 2:
+            raise NotImplementedError("st_split supports single-segment line blades")
+        return [W.dumps(p) for p in split_by_line(g, blade.parts[0], blade.parts[1])]
 
-    return _f(wkb_col, blade_col)
+    return geom_udf(ArrayType(BinaryType()), _split)(wkb_col, blade_col)

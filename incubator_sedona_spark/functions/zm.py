@@ -10,19 +10,11 @@ columns the WKB serde carries.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column, functions as F
+from pyspark.sql import Column
 from pyspark.sql.types import BinaryType, BooleanType, DoubleType, IntegerType
 
+from incubator_sedona_spark.functions._udf import geom_udf
 from incubator_sedona_spark.geom import wkb as W
-
-
-def _scalar_udf(fn, rettype):
-    @F.pandas_udf(rettype)
-    def _f(s: pd.Series) -> pd.Series:
-        return pd.Series([fn(W.loads(b)) for b in s])
-
-    return _f
 
 
 def st_z(wkb_col: Column) -> Column:
@@ -33,7 +25,7 @@ def st_z(wkb_col: Column) -> Column:
             return float(g.parts[0, 2])
         return None
 
-    return _scalar_udf(_z, DoubleType())(wkb_col)
+    return geom_udf(DoubleType(), _z)(wkb_col)
 
 
 def st_m(wkb_col: Column) -> Column:
@@ -44,7 +36,7 @@ def st_m(wkb_col: Column) -> Column:
             return float(g.parts[0, 2 + int(g.has_z)])
         return None
 
-    return _scalar_udf(_m, DoubleType())(wkb_col)
+    return geom_udf(DoubleType(), _m)(wkb_col)
 
 
 def st_zmin(wkb_col: Column) -> Column:
@@ -52,7 +44,7 @@ def st_zmin(wkb_col: Column) -> Column:
         z = g.z_values()
         return float(z.min()) if len(z) else None
 
-    return _scalar_udf(_f, DoubleType())(wkb_col)
+    return geom_udf(DoubleType(), _f)(wkb_col)
 
 
 def st_zmax(wkb_col: Column) -> Column:
@@ -60,19 +52,19 @@ def st_zmax(wkb_col: Column) -> Column:
         z = g.z_values()
         return float(z.max()) if len(z) else None
 
-    return _scalar_udf(_f, DoubleType())(wkb_col)
+    return geom_udf(DoubleType(), _f)(wkb_col)
 
 
 def st_ndims(wkb_col: Column) -> Column:
-    return _scalar_udf(lambda g: g.ndims, IntegerType())(wkb_col)
+    return geom_udf(IntegerType(), lambda g: g.ndims)(wkb_col)
 
 
 def st_hasz(wkb_col: Column) -> Column:
-    return _scalar_udf(lambda g: bool(g.has_z), BooleanType())(wkb_col)
+    return geom_udf(BooleanType(), lambda g: bool(g.has_z))(wkb_col)
 
 
 def st_hasm(wkb_col: Column) -> Column:
-    return _scalar_udf(lambda g: bool(g.has_m), BooleanType())(wkb_col)
+    return geom_udf(BooleanType(), lambda g: bool(g.has_m))(wkb_col)
 
 
 def force_3d_geometry(g: W.Geometry, z: float = 0.0) -> W.Geometry:
@@ -97,25 +89,14 @@ def force_3d_geometry(g: W.Geometry, z: float = 0.0) -> W.Geometry:
 
 
 def st_force_3d(wkb_col: Column, z: float = 0.0) -> Column:
-    @F.pandas_udf(BinaryType())
-    def _f(s: pd.Series) -> pd.Series:
-        return pd.Series([W.dumps(force_3d_geometry(W.loads(b), z)) for b in s])
-
-    return _f(wkb_col)
+    return geom_udf(BinaryType(), lambda g: force_3d_geometry(g, z))(wkb_col)
 
 
 def st_3ddistance(a_col: Column, b_col: Column) -> Column:
     """ST_3DDistance for arbitrary geometry pairs (2-D inputs read as z=0):
     points, lines (exact segment-segment), and planar polygon facets — the
     JTS Distance3DOp model (round 3; was point-only)."""
-
-    @F.pandas_udf(DoubleType())
-    def _f(sa: pd.Series, sb: pd.Series) -> pd.Series:
-        return pd.Series(
-            [geom_3d_distance(W.loads(ba), W.loads(bb)) for ba, bb in zip(sa, sb)]
-        )
-
-    return _f(a_col, b_col)
+    return geom_udf(DoubleType(), geom_3d_distance)(a_col, b_col)
 
 
 def point_z(x: float, y: float, z: float, m: float | None = None) -> W.Geometry:
@@ -128,13 +109,8 @@ def point_z(x: float, y: float, z: float, m: float | None = None) -> W.Geometry:
 
 
 def st_point_z(x: Column, y: Column, z: Column) -> Column:
-    @F.pandas_udf(BinaryType())
-    def _f(xs: pd.Series, ys: pd.Series, zs: pd.Series) -> pd.Series:
-        return pd.Series(
-            [W.dumps(point_z(float(a), float(b), float(c))) for a, b, c in zip(xs, ys, zs)]
-        )
-
-    return _f(x.cast("double"), y.cast("double"), z.cast("double"))
+    cols = (x.cast("double"), y.cast("double"), z.cast("double"))
+    return geom_udf(BinaryType(), point_z, decode=None)(*cols)
 
 
 # -- general 3D distance (JTS Distance3DOp semantics) -------------------------

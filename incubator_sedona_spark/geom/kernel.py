@@ -360,6 +360,19 @@ def _parse_cached(buf: bytes, cache: dict) -> W.Geometry:
     return g
 
 
+def by_geometry(bufs, pts: np.ndarray, dtype, fn) -> np.ndarray:
+    """``fn(g, pts[rows])`` for each distinct WKB buffer ``g`` in ``bufs``:
+    rows are grouped by their repeated buffer, so each geometry is parsed once
+    and all its points go through one vectorized kernel call."""
+    out = np.zeros(len(bufs), dtype=dtype)
+    groups: dict[bytes, list[int]] = {}
+    for i, b in enumerate(bufs):
+        groups.setdefault(b, []).append(i)
+    for buf, idxs in groups.items():
+        out[idxs] = fn(W.loads(buf), pts[idxs])
+    return out
+
+
 def eval_predicate_batch(name: str, lbufs, rbufs) -> np.ndarray:
     """Evaluate ``name(left, right)`` for aligned WKB buffers, vectorized.
 
@@ -379,24 +392,12 @@ def eval_predicate_batch(name: str, lbufs, rbufs) -> np.ndarray:
     r_is_pt = all(len(b) == 21 and b[0] == 1 for b in rbufs)
 
     # fast path: one side is all points -> group by the other side
-    if r_is_pt and not l_is_pt:
-        pts = W.wkb_to_points(rbufs)
-        groups: dict[bytes, list[int]] = {}
-        for i, b in enumerate(lbufs):
-            groups.setdefault(b, []).append(i)
-        for buf, idxs in groups.items():
-            g = _parse_cached(buf, cache)
-            out[idxs] = _eval_geom_vs_points(name, g, pts[idxs], point_is_left=False)
-        return out
-    if l_is_pt and not r_is_pt:
-        pts = W.wkb_to_points(lbufs)
-        groups = {}
-        for i, b in enumerate(rbufs):
-            groups.setdefault(b, []).append(i)
-        for buf, idxs in groups.items():
-            g = _parse_cached(buf, cache)
-            out[idxs] = _eval_geom_vs_points(name, g, pts[idxs], point_is_left=True)
-        return out
+    if r_is_pt != l_is_pt:
+        geoms, pts = (lbufs, rbufs) if r_is_pt else (rbufs, lbufs)
+        return by_geometry(
+            geoms, W.wkb_to_points(pts), bool,
+            lambda g, p: _eval_geom_vs_points(name, g, p, point_is_left=l_is_pt),
+        )
     if l_is_pt and r_is_pt:
         lp, rp = W.wkb_to_points(lbufs), W.wkb_to_points(rbufs)
         same = (np.abs(lp[:, 0] - rp[:, 0]) <= _EPS) & (np.abs(lp[:, 1] - rp[:, 1]) <= _EPS)

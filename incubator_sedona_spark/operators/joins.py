@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, BooleanType, DoubleType, LongType
 
 from incubator_sedona_spark.cells import Grid, choose_level, grid_for_bounds
+from incubator_sedona_spark.functions._udf import geom_batch_udf, geom_udf
 from incubator_sedona_spark.geom import kernel as K
 from incubator_sedona_spark.geom import wkb as W
 
@@ -46,7 +47,8 @@ _BBOX_R_CONTAINS_L = {"within", "coveredby"}
 def with_bbox(df: DataFrame, geom_col: str = "wkb", prefix: str = "") -> DataFrame:
     """Attach (xmin, ymin, xmax, ymax) double columns derived from a WKB column.
 
-    One Arrow-batched pandas UDF; vectorized fast path for point batches.
+    One Arrow-batched pandas UDF; vectorized fast path for point batches.  A
+    NULL geometry gets a NULL bbox, so it covers no cell and matches nothing.
     Skipped entirely when the columns already exist (e.g. stored alongside the
     geometry in parquet — the storage-native analog of GeoParquet's bbox
     metadata, GeoParquetMetaData.scala).
@@ -55,10 +57,8 @@ def with_bbox(df: DataFrame, geom_col: str = "wkb", prefix: str = "") -> DataFra
     if all(c in df.columns for c in cols):
         return df
 
-    @F.pandas_udf(ArrayType(DoubleType()))
-    def _bbox(wkb_s: pd.Series) -> pd.Series:
-        bb = W.bounds_batch(wkb_s)
-        return pd.Series(list(bb))
+    def _bbox(wkb_s: pd.Series) -> list:
+        return list(W.bounds_batch(wkb_s))
 
     # non-deterministic marker (guide on UDF duplication): the bbox
     # prefilter downstream references these UDF-derived columns, and the
@@ -66,8 +66,8 @@ def with_bbox(df: DataFrame, geom_col: str = "wkb", prefix: str = "") -> DataFra
     # evaluating the same UDF below the filter — every geometry row then
     # pays the WKB parse twice (observed in the flagship plan).  The value
     # is deterministic; the marker only stops the optimizer from cloning it.
-    _bbox = _bbox.asNondeterministic()
-    df = df.withColumn("__iss_bb", _bbox(F.col(geom_col)))
+    bbox = geom_batch_udf(ArrayType(DoubleType()), _bbox).asNondeterministic()
+    df = df.withColumn("__iss_bb", bbox(F.col(geom_col)))
     for i, c in enumerate(cols):
         df = df.withColumn(c, F.col("__iss_bb")[i])
     return df.drop("__iss_bb")
@@ -132,14 +132,14 @@ def _explode_cells_shape(df: DataFrame, grid: Grid, geom_col: str) -> DataFrame:
     One pandas UDF on the (small, usually broadcast) polygon side; a long
     diagonal river/road covers O(length) cells, not O(area) of its bbox, so
     candidate counts stay linear.  Join safety relies on the cover being a
-    superset of intersecting cells (cells.Grid.cover_geometry contract).
+    superset of intersecting cells (cells.Grid.cover_geometry contract).  A
+    NULL geometry covers no cell.
     """
+    def _cover(g: W.Geometry) -> list:
+        return grid.cover_geometry(g)
 
-    @F.pandas_udf(ArrayType(LongType()))
-    def _cover(wkbs: pd.Series) -> pd.Series:
-        return pd.Series([grid.cover_geometry(W.loads(b)) for b in wkbs])
-
-    return df.withColumn(_CELL, F.explode(_cover(F.col(geom_col))))
+    cover = geom_udf(ArrayType(LongType()), _cover)
+    return df.withColumn(_CELL, F.explode(cover(F.col(geom_col))))
 
 
 def _bbox(prefix: str) -> list[Column]:
@@ -248,24 +248,16 @@ def _left_all_rectangles(df: DataFrame, geom_col: str) -> bool:
     """One bounded aggregate: every left geometry is a single axis-aligned
     5-point rectangle ring equal to its own bbox.  Declines (returns False)
     without scanning when the left side exceeds RECT_PROBE_MAX_ROWS — the
-    row-cap check is a limit-pushed count, not a full scan."""
+    row-cap check is a limit-pushed count, not a full scan.  NULL geometries
+    are skipped (they join nothing)."""
     if df.limit(RECT_PROBE_MAX_ROWS + 1).count() > RECT_PROBE_MAX_ROWS:
         return False
 
-    @F.pandas_udf(BooleanType())
-    def _is_rect(s: pd.Series) -> pd.Series:
-        out = []
-        for b in s:
-            g = W.loads(b)
-            ok = (
-                g.kind == W.POLYGON
-                and len(g.parts) == 1
-                and _ring_is_rectangle(g.parts[0][:, :2])
-            )
-            out.append(bool(ok))
-        return pd.Series(out)
+    def _is_rect(g: W.Geometry) -> bool:
+        return g.kind == W.POLYGON and len(g.parts) == 1 and _ring_is_rectangle(g.parts[0][:, :2])
 
-    row = df.agg(F.min(_is_rect(F.col(geom_col))).alias("all_rect")).first()
+    is_rect = geom_udf(BooleanType(), _is_rect)
+    row = df.agg(F.min(is_rect(F.col(geom_col))).alias("all_rect")).first()
     return bool(row.all_rect)
 
 
@@ -275,18 +267,10 @@ def _predicate_refine_xy_udf(predicate: str):
     @F.pandas_udf(BooleanType())
     def _refine(lw: pd.Series, rx: pd.Series, ry: pd.Series) -> pd.Series:
         pts = np.column_stack([rx.to_numpy(np.float64), ry.to_numpy(np.float64)])
-        out = np.zeros(len(lw), dtype=bool)
-        groups: dict[bytes, list[int]] = {}
-        for i, b in enumerate(lw):
-            groups.setdefault(b, []).append(i)
-        cache: dict[bytes, W.Geometry] = {}
-        for buf, idxs in groups.items():
-            g = cache.get(buf)
-            if g is None:
-                g = W.loads(buf)
-                cache[buf] = g
-            out[idxs] = K._eval_geom_vs_points(predicate, g, pts[idxs], point_is_left=False)
-        return pd.Series(out)
+        return pd.Series(K.by_geometry(
+            lw, pts, bool,
+            lambda g, p: K._eval_geom_vs_points(predicate, g, p, point_is_left=False),
+        ))
 
     return _refine
 
@@ -415,7 +399,6 @@ def _cell_join(
     pair_cols: dict | None = None,
     refine: Column | None = None,
     extras: list[Column] | None = None,
-    keep_bbox: bool = False,
 ) -> DataFrame:
     """The candidate-join pipeline behind spatial_join and distance_join
     (TraitJoinQueryExec.scala:45-143, shared the same way by RangeJoinExec
@@ -495,7 +478,7 @@ def _cell_join(
 
     # bbox drop + caller-facing names: left columns, then right ones (suffix
     # ``_r`` on collision), extras, and the row id the ``how`` finish needs
-    drop = set() if keep_bbox else {
+    drop = {
         p + c for p, src in ((lp, left), (rp, right)) for c in BBOX_COLS if c not in src.columns
     }
     lcols = [c for c in cand.columns if c.startswith(lp) and c not in drop]
@@ -528,7 +511,6 @@ def spatial_join(
     how: str = "inner",
     broadcast: str | None = None,
     refine: bool = True,
-    keep_bbox: bool = False,
     right_point_cols: tuple[str, str] | None = None,
     left_cover: str = "bbox",
     assume_same_crs: bool = False,
@@ -634,7 +616,7 @@ def spatial_join(
         left, right, lft, rgt, lp, predicate, grid, level, how, broadcast, salt,
         salt_min_rows, assume_same_crs=assume_same_crs,
         shape_geom=left_geom if left_cover == "shape" else None,
-        refine=cond, keep_bbox=keep_bbox,
+        refine=cond,
     )
 
 
@@ -758,11 +740,7 @@ def _distance_udf():
         out = np.empty(len(rw))
         cache: dict[bytes, W.Geometry] = {}
         for i, (c, b) in enumerate(zip(center, rw)):
-            g = cache.get(b)
-            if g is None:
-                g = W.loads(b)
-                cache[b] = g
-            out[i] = K.distance_pair(W.point(c[0], c[1]), g)
+            out[i] = K.distance_pair(W.point(c[0], c[1]), K._parse_cached(b, cache))
         return pd.Series(out)
 
     return _d

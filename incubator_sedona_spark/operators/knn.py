@@ -36,14 +36,7 @@ def _geom_points_dist_udf(geom_col, x_col, y_col):
     @F.pandas_udf(DoubleType())
     def _d(wkbs: pd.Series, xs: pd.Series, ys: pd.Series) -> pd.Series:
         pts = np.column_stack([xs.to_numpy(np.float64), ys.to_numpy(np.float64)])
-        out = np.empty(len(wkbs))
-        groups: dict[bytes, list[int]] = {}
-        for i, b in enumerate(wkbs):
-            groups.setdefault(b, []).append(i)
-        for buf, idxs in groups.items():
-            g = Wk.loads(buf)
-            out[idxs] = K.points_to_geometry_dist(g, pts[idxs])
-        return pd.Series(out)
+        return pd.Series(K.by_geometry(wkbs, pts, np.float64, K.points_to_geometry_dist))
 
     return _d(geom_col, x_col, y_col)
 
