@@ -1,7 +1,7 @@
 """Coordinate reference system transforms (ST_Transform).
 
 The reference delegates ST_Transform to GeoTools' full EPSG database
-(/root/reference/common/src/main/java/org/apache/sedona/common/Functions.java:184-189,
+(common/src/main/java/org/apache/sedona/common/Functions.java:184-189,
 Catalog.scala:71).  pyproj is not available in this environment, so the engine
 implements the projections that cover the overwhelming majority of real
 usage, from their published closed forms (Snyder 1987; Karney 2011
@@ -25,19 +25,27 @@ Krueger-series Transverse Mercator, accurate to sub-millimeter within a zone):
 - ``epsg:258NN``     — ETRS89 / UTM zones 28-38 north
 - ``epsg:269NN``     — NAD83 / UTM zones 1-23 north
 - ``epsg:26985``     — NAD83 / Maryland state plane (LCC 2SP, meters)
-- plus the bulk batches in crs_tables.py (~340 codes total): WGS72 UTM
+- ``epsg:26931``     — NAD83 / Alaska zone 1 (Hotine oblique Mercator B)
+- plus the bulk batches in crs_tables.py (403 codes in all): WGS72 UTM
   N+S (322NN/323NN), GDA94/GDA2020 MGA zones, French RGF93 CC42-50 and
   legacy NTF Lambert I-III (LCC 1SP + datum), ETRS89 LCC/LAEA Europe
   (3034/3035), SWEREF99 TM, TM35FIN, Poland CS92/CS2000, Irish TM,
-  California state planes 1-6 — each batch validated by definition-point
-  goldens in tests
+  California state planes 1-6, 62 SPCS83 zones — each batch validated by
+  definition-point goldens in tests
+
+How a code resolves: ``epsg:NNNN`` is looked up in one registry, ``_CRS``
+(code -> projection).  Every projection has ``forward(lon, lat)`` (WGS84
+degrees to its output units) and ``inverse(x, y)``, so a transform is
+``_CRS[dst].forward(*_CRS[src].inverse(x, y))`` with 4326 as the hub, all
+vectorized numpy over coordinate arrays.  The register_* functions write
+into the same map: the last registration of a code replaces what was
+there, built-in codes included.  Unknown codes raise ValueError — loud,
+not silently wrong.
 
 LCC 2SP and Albers follow Snyder (1987) eqs 15-1..15-11 / 14-1..14-21 on the
 per-CRS ellipsoid (GRS80 for the NAD83/RGF93 codes).  NAD83/RGF93 lon/lat is
 treated as WGS84 at the hub (datum offset < 2 m, the standard null-transform
-assumption).  Every transform routes through 4326 (src -> 4326 -> dst), all
-vectorized numpy over coordinate arrays.  Unknown EPSG codes raise
-ValueError — loud, not silently wrong.
+assumption).
 """
 
 from __future__ import annotations
@@ -46,218 +54,18 @@ import numpy as np
 from pyspark.sql import Column
 from pyspark.sql.types import BinaryType
 
+from incubator_sedona_spark.functions import crs_tables as _crs_tables
 from incubator_sedona_spark.functions._udf import geom_udf
 from incubator_sedona_spark.geom import wkb as W
-
-# WGS84
-_A = 6378137.0
-_F = 1.0 / 298.257223563
-_E = np.sqrt(_F * (2.0 - _F))
-_N = _F / (2.0 - _F)
-
-# Krueger series coefficients (order n^4)
-_n = _N
-_A_BAR = _A / (1 + _n) * (1 + _n**2 / 4 + _n**4 / 64)
-_ALPHA = (
-    _n / 2 - 2 * _n**2 / 3 + 5 * _n**3 / 16 + 41 * _n**4 / 180,
-    13 * _n**2 / 48 - 3 * _n**3 / 5 + 557 * _n**4 / 1440,
-    61 * _n**3 / 240 - 103 * _n**4 / 140,
-    49561 * _n**4 / 161280,
-)
-_BETA = (
-    _n / 2 - 2 * _n**2 / 3 + 37 * _n**3 / 96 - _n**4 / 360,
-    _n**2 / 48 + _n**3 / 15 - 437 * _n**4 / 1440,
-    17 * _n**3 / 480 - 37 * _n**4 / 840,
-    4397 * _n**4 / 161280,
-)
-_DELTA = (
-    2 * _n - 2 * _n**2 / 3 - 2 * _n**3 + 116 * _n**4 / 45,
-    7 * _n**2 / 3 - 8 * _n**3 / 5 - 227 * _n**4 / 45,
-    56 * _n**3 / 15 - 136 * _n**4 / 35,
-    4279 * _n**4 / 630,
-)
-
-_K0_UTM = 0.9996
-_FE_UTM = 500000.0
-_FN_SOUTH = 10000000.0
-_R_MERC = 6378137.0  # spherical web mercator radius
-
-
-def tm_forward(lon_deg, lat_deg, lon0_deg: float, k0: float, fe: float, fn: float):
-    """Transverse Mercator forward (Krueger series), vectorized."""
-    lam = np.radians(np.asarray(lon_deg, dtype=np.float64) - lon0_deg)
-    phi = np.radians(np.asarray(lat_deg, dtype=np.float64))
-    s = np.sin(phi)
-    t = np.sinh(np.arctanh(s) - _E * np.arctanh(_E * s))
-    xi_p = np.arctan2(t, np.cos(lam))
-    eta_p = np.arcsinh(np.sin(lam) / np.sqrt(t * t + np.cos(lam) ** 2))
-    xi = xi_p.copy()
-    eta = eta_p.copy()
-    for j, a in enumerate(_ALPHA, start=1):
-        xi += a * np.sin(2 * j * xi_p) * np.cosh(2 * j * eta_p)
-        eta += a * np.cos(2 * j * xi_p) * np.sinh(2 * j * eta_p)
-    return fe + k0 * _A_BAR * eta, fn + k0 * _A_BAR * xi
-
-
-def tm_inverse(x, y, lon0_deg: float, k0: float, fe: float, fn: float):
-    """Transverse Mercator inverse (Krueger series), vectorized."""
-    xi = (np.asarray(y, dtype=np.float64) - fn) / (k0 * _A_BAR)
-    eta = (np.asarray(x, dtype=np.float64) - fe) / (k0 * _A_BAR)
-    xi_p = xi.copy()
-    eta_p = eta.copy()
-    for j, b in enumerate(_BETA, start=1):
-        xi_p -= b * np.sin(2 * j * xi) * np.cosh(2 * j * eta)
-        eta_p -= b * np.cos(2 * j * xi) * np.sinh(2 * j * eta)
-    chi = np.arcsin(np.sin(xi_p) / np.cosh(eta_p))
-    phi = chi.copy()
-    for j, d in enumerate(_DELTA, start=1):
-        phi += d * np.sin(2 * j * chi)
-    lam = np.arctan2(np.sinh(eta_p), np.cos(xi_p))
-    return lon0_deg + np.degrees(lam), np.degrees(phi)
-
-
-def merc_forward(lon_deg, lat_deg):
-    x = np.radians(np.asarray(lon_deg, dtype=np.float64)) * _R_MERC
-    y = np.log(np.tan(np.pi / 4 + np.radians(np.asarray(lat_deg, dtype=np.float64)) / 2)) * _R_MERC
-    return x, y
-
-
-def merc_inverse(x, y):
-    lon = np.degrees(np.asarray(x, dtype=np.float64) / _R_MERC)
-    lat = np.degrees(2 * np.arctan(np.exp(np.asarray(y, dtype=np.float64) / _R_MERC)) - np.pi / 2)
-    return lon, lat
 
 
 def utm_zone_lon0(zone: int) -> float:
     return (zone - 1) * 6.0 - 180.0 + 3.0
 
 
-# -- Lambert conformal conic (2SP) and Albers equal-area (Snyder 1987) ----------
-
-_GRS80_A = 6378137.0
-_GRS80_E = np.sqrt(1.0 - (6356752.314140356 / 6378137.0) ** 2)
-
-
-class ConicCRS:
-    """Parameters of a conic projection (LCC or Albers).
-
-    2SP when lat1 != lat2; passing lat1 == lat2 selects the 1SP limit
-    (n = sin(lat1)) with the published scale factor ``k0`` — the EPSG
-    "Lambert Conic Conformal (1SP)" method (9801), e.g. the French legacy
-    Lambert zones.  ``datum``/``unit`` mirror TMCRS (Helmert shift from
-    WGS84; meters per output unit)."""
-
-    __slots__ = ("kind", "a", "e", "lat1", "lat2", "lat0", "lon0", "fe", "fn",
-                 "n", "big_f", "rho0", "big_c", "k0", "unit", "datum")
-
-    def __init__(self, kind, lat1, lat2, lat0, lon0, fe, fn, a=_GRS80_A, e=_GRS80_E,
-                 k0=1.0, unit=1.0, datum=None):
-        self.kind, self.a, self.e = kind, a, e
-        self.lat1, self.lat2, self.lat0, self.lon0 = lat1, lat2, lat0, lon0
-        self.fe, self.fn = fe, fn
-        self.k0, self.unit, self.datum = k0, unit, datum
-        p1, p2, p0 = map(np.radians, (lat1, lat2, lat0))
-        ak = self.a * self.k0
-        if kind == "lcc":
-            m1, m2 = self._m(p1), self._m(p2)
-            t1, t2, t0 = self._t(p1), self._t(p2), self._t(p0)
-            if lat1 == lat2:  # 1SP limit (Snyder 15-17 with k0)
-                self.n = np.sin(p1)
-            else:
-                self.n = (np.log(m1) - np.log(m2)) / (np.log(t1) - np.log(t2))
-            self.big_f = m1 / (self.n * t1**self.n)
-            self.rho0 = ak * self.big_f * t0**self.n
-            self.big_c = None
-        else:  # albers
-            m1, m2 = self._m(p1), self._m(p2)
-            q1, q2, q0 = self._q(p1), self._q(p2), self._q(p0)
-            if lat1 == lat2:
-                self.n = np.sin(p1)
-            else:
-                self.n = (m1**2 - m2**2) / (q2 - q1)
-            self.big_c = m1**2 + self.n * q1
-            self.rho0 = ak * np.sqrt(self.big_c - self.n * q0) / self.n
-            self.big_f = None
-
-    def _m(self, phi):
-        return np.cos(phi) / np.sqrt(1 - (self.e * np.sin(phi)) ** 2)
-
-    def _t(self, phi):
-        es = self.e * np.sin(phi)
-        return np.tan(np.pi / 4 - phi / 2) / ((1 - es) / (1 + es)) ** (self.e / 2)
-
-    def _q(self, phi):
-        s = np.sin(phi)
-        es = self.e * s
-        return (1 - self.e**2) * (
-            s / (1 - es**2) - np.log((1 - es) / (1 + es)) / (2 * self.e)
-        )
-
-    # forward/inverse take degree arrays, return output units (and vice versa)
-    def forward(self, lon_deg, lat_deg):
-        if self.datum is not None:
-            lon_deg, lat_deg = self.datum.from_wgs84(lon_deg, lat_deg)
-        lam = np.radians(np.asarray(lon_deg, np.float64) - self.lon0)
-        phi = np.radians(np.asarray(lat_deg, np.float64))
-        theta = self.n * lam
-        ak = self.a * self.k0
-        if self.kind == "lcc":
-            rho = ak * self.big_f * self._t(phi) ** self.n
-        else:
-            rho = ak * np.sqrt(self.big_c - self.n * self._q(phi)) / self.n
-        return (
-            (self.fe + rho * np.sin(theta)) / self.unit,
-            (self.fn + self.rho0 - rho * np.cos(theta)) / self.unit,
-        )
-
-    def inverse(self, x, y):
-        dx = np.asarray(x, np.float64) * self.unit - self.fe
-        dy = self.rho0 - (np.asarray(y, np.float64) * self.unit - self.fn)
-        sgn = np.sign(self.n) or 1.0
-        rho = sgn * np.sqrt(dx * dx + dy * dy)
-        theta = np.arctan2(sgn * dx, sgn * dy)
-        lon = self.lon0 + np.degrees(theta / self.n)
-        ak = self.a * self.k0
-        if self.kind == "lcc":
-            tp = (rho / (ak * self.big_f)) ** (1.0 / self.n)
-            phi = np.pi / 2 - 2 * np.arctan(tp)
-            for _ in range(8):
-                es = self.e * np.sin(phi)
-                phi = np.pi / 2 - 2 * np.arctan(tp * ((1 - es) / (1 + es)) ** (self.e / 2))
-        else:
-            q = (self.big_c - (rho * self.n / ak) ** 2) / self.n
-            phi = np.arcsin(np.clip(q / 2.0, -1.0, 1.0))
-            e2 = self.e**2
-            for _ in range(10):  # Snyder eq 3-16
-                s = np.sin(phi)
-                es = self.e * s
-                phi = phi + (1 - es**2) ** 2 / (2 * np.cos(phi) * (1 - e2)) * (
-                    q / (1 - e2) - s / (1 - es**2) + np.log((1 - es) / (1 + es)) / (2 * self.e)
-                )
-        lat = np.degrees(phi)
-        if self.datum is not None:
-            lon, lat = self.datum.to_wgs84(lon, lat)
-        return lon, lat
-
-
-# Registry of conic CRSs: (kind, lat1, lat2, lat0, lon0, FE, FN) — EPSG
-# parameter sets; all on GRS80.
-_CONIC = {
-    2154: ConicCRS("lcc", 44.0, 49.0, 46.5, 3.0, 700000.0, 6600000.0),
-    3347: ConicCRS("lcc", 49.0, 77.0, 63.390675, -91.866667, 6200000.0, 3000000.0),
-    5070: ConicCRS("albers", 29.5, 45.5, 23.0, -96.0, 0.0, 0.0),
-    3310: ConicCRS("albers", 34.0, 40.5, 0.0, -120.0, 0.0, -4000000.0),
-    # NAD83 state-plane (meter-based codes), LCC 2SP — EPSG parameter sets
-    26985: ConicCRS("lcc", 38.3, 39.45, 37.666666666666664, -77.0, 400000.0, 0.0),  # Maryland
-}
-
-
-# -- general Transverse Mercator (per-ellipsoid Krueger series + datum shift) ---
-
-
 class Ellipsoid:
-    """Krueger-series constants for an arbitrary ellipsoid (same order-n^4
-    series as the module-level WGS84 constants above)."""
+    """An ellipsoid's eccentricity and its order-n^4 Krueger-series
+    constants for the Transverse Mercator."""
 
     __slots__ = ("a", "f", "e", "n", "a_bar", "alpha", "beta", "delta")
 
@@ -290,6 +98,68 @@ class Ellipsoid:
 _ELL_WGS84 = Ellipsoid(6378137.0, 1.0 / 298.257223563)
 _ELL_GRS80 = Ellipsoid(6378137.0, 1.0 / 298.257222101)
 _ELL_AIRY = Ellipsoid(6377563.396, 1.0 / 299.3249646)
+
+ELLIPSOIDS = {
+    "WGS84": _ELL_WGS84,
+    "GRS80": _ELL_GRS80,
+    "airy1830": _ELL_AIRY,
+    "intl1924": Ellipsoid(6378388.0, 1.0 / 297.0),
+    "clarke1866": Ellipsoid(6378206.4, 1.0 / 294.978698214),
+    "bessel1841": Ellipsoid(6377397.155, 1.0 / 299.1528128),
+    "WGS72": Ellipsoid(6378135.0, 1.0 / 298.26),
+    "clarke1880ign": Ellipsoid(6378249.2, 1.0 / 293.4660212936269),
+}
+
+# GRS80 eccentricity from the semi-minor axis: the built-in conic and LAEA
+# codes use it.  It differs from _ELL_GRS80.e by 2.8e-17, so it stays apart
+# to keep those codes' results unchanged.
+_GRS80_E = np.sqrt(1.0 - (6356752.314140356 / 6378137.0) ** 2)
+
+
+# -- Snyder (1987) ellipsoid functions, shared by every projection -------------
+
+
+def _msfn(phi, e):
+    """m = cos(phi) / sqrt(1 - e^2 sin^2(phi)) (Snyder eq 14-15)."""
+    return np.cos(phi) / np.sqrt(1 - (e * np.sin(phi)) ** 2)
+
+
+def _tsfn(phi, e):
+    """t = tan(pi/4 - phi/2) / ((1 - e sin phi) / (1 + e sin phi))^(e/2)
+    (Snyder eq 15-9)."""
+    es = e * np.sin(phi)
+    return np.tan(np.pi / 4 - phi / 2) / ((1 - es) / (1 + es)) ** (e / 2)
+
+
+def _qsfn(phi, e):
+    """Authalic q (Snyder eq 3-12)."""
+    s = np.sin(phi)
+    es = e * s
+    return (1 - e**2) * (
+        s / (1 - es**2) - np.log((1 - es) / (1 + es)) / (2 * e)
+    )
+
+
+def _phi_from_ts(ts, e):
+    """Latitude from t by fixed-point iteration (Snyder eq 7-9)."""
+    phi = np.pi / 2 - 2 * np.arctan(ts)
+    for _ in range(8):
+        es = e * np.sin(phi)
+        phi = np.pi / 2 - 2 * np.arctan(ts * ((1 - es) / (1 + es)) ** (e / 2))
+    return phi
+
+
+def _phi_from_q(q, e):
+    """Latitude from authalic q by Newton iteration (Snyder eq 3-16)."""
+    phi = np.arcsin(np.clip(q / 2.0, -1.0, 1.0))
+    e2 = e**2
+    for _ in range(10):
+        s = np.sin(phi)
+        es = e * s
+        phi = phi + (1 - es**2) ** 2 / (2 * np.cos(phi) * (1 - e2)) * (
+            q / (1 - e2) - s / (1 - es**2) + np.log((1 - es) / (1 + es)) / (2 * e)
+        )
+    return phi
 
 
 class Helmert:
@@ -421,7 +291,136 @@ class GridShift:
         return e_out, n_out
 
 
-class TMCRS:
+class _Projection:
+    """One registry entry.  ``forward(lon, lat)`` maps WGS84 degrees to
+    output units and ``inverse(x, y)`` maps them back.  A subclass supplies
+    ``_fwd``/``_inv`` between lon/lat on its own datum and meters; the
+    Helmert ``datum`` from WGS84, the projected-space ``grid_shift`` and the
+    output ``unit`` (meters per unit) wrap them here, in that order."""
+
+    __slots__ = ()
+    datum = None
+    grid_shift = None
+    unit = 1.0
+
+    def forward(self, lon_deg, lat_deg):
+        if self.datum is not None:
+            lon_deg, lat_deg = self.datum.from_wgs84(lon_deg, lat_deg)
+        x, y = self._fwd(lon_deg, lat_deg)
+        if self.grid_shift is not None:
+            x, y = self.grid_shift.apply(x, y)
+        return x / self.unit, y / self.unit
+
+    def inverse(self, x, y):
+        x = np.asarray(x, np.float64) * self.unit
+        y = np.asarray(y, np.float64) * self.unit
+        if self.grid_shift is not None:
+            x, y = self.grid_shift.unapply(x, y)
+        lon, lat = self._inv(x, y)
+        if self.datum is not None:
+            lon, lat = self.datum.to_wgs84(lon, lat)
+        return lon, lat
+
+
+class _Geographic(_Projection):
+    """epsg:4326, the hub: lon/lat pass through."""
+
+    __slots__ = ()
+
+    def forward(self, lon_deg, lat_deg):
+        return lon_deg, lat_deg
+
+    def inverse(self, x, y):
+        return np.asarray(x, dtype=np.float64), np.asarray(y, dtype=np.float64)
+
+
+_R_MERC = 6378137.0  # spherical web mercator radius
+
+
+class _WebMercator(_Projection):
+    """epsg:3857, spherical Web Mercator."""
+
+    __slots__ = ()
+
+    def _fwd(self, lon_deg, lat_deg):
+        x = np.radians(np.asarray(lon_deg, dtype=np.float64)) * _R_MERC
+        y = np.log(np.tan(np.pi / 4 + np.radians(np.asarray(lat_deg, dtype=np.float64)) / 2)) * _R_MERC
+        return x, y
+
+    def _inv(self, x, y):
+        return np.degrees(x / _R_MERC), np.degrees(2 * np.arctan(np.exp(y / _R_MERC)) - np.pi / 2)
+
+
+# -- Lambert conformal conic (2SP) and Albers equal-area (Snyder 1987) ----------
+
+
+class ConicCRS(_Projection):
+    """Parameters of a conic projection (LCC or Albers).
+
+    2SP when lat1 != lat2; passing lat1 == lat2 selects the 1SP limit
+    (n = sin(lat1)) with the published scale factor ``k0`` — the EPSG
+    "Lambert Conic Conformal (1SP)" method (9801), e.g. the French legacy
+    Lambert zones.  ``datum``/``unit`` mirror TMCRS (Helmert shift from
+    WGS84; meters per output unit)."""
+
+    __slots__ = ("kind", "a", "e", "lat1", "lat2", "lat0", "lon0", "fe", "fn",
+                 "n", "big_f", "rho0", "big_c", "k0", "unit", "datum")
+
+    def __init__(self, kind, lat1, lat2, lat0, lon0, fe, fn, a=_ELL_GRS80.a, e=_GRS80_E,
+                 k0=1.0, unit=1.0, datum=None):
+        self.kind, self.a, self.e = kind, a, e
+        self.lat1, self.lat2, self.lat0, self.lon0 = lat1, lat2, lat0, lon0
+        self.fe, self.fn = fe, fn
+        self.k0, self.unit, self.datum = k0, unit, datum
+        p1, p2, p0 = map(np.radians, (lat1, lat2, lat0))
+        ak = self.a * self.k0
+        m1, m2 = _msfn(p1, e), _msfn(p2, e)
+        if kind == "lcc":
+            t1, t2, t0 = _tsfn(p1, e), _tsfn(p2, e), _tsfn(p0, e)
+            if lat1 == lat2:  # 1SP limit (Snyder 15-17 with k0)
+                self.n = np.sin(p1)
+            else:
+                self.n = (np.log(m1) - np.log(m2)) / (np.log(t1) - np.log(t2))
+            self.big_f = m1 / (self.n * t1**self.n)
+            self.rho0 = ak * self.big_f * t0**self.n
+            self.big_c = None
+        else:  # albers
+            q1, q2, q0 = _qsfn(p1, e), _qsfn(p2, e), _qsfn(p0, e)
+            if lat1 == lat2:
+                self.n = np.sin(p1)
+            else:
+                self.n = (m1**2 - m2**2) / (q2 - q1)
+            self.big_c = m1**2 + self.n * q1
+            self.rho0 = ak * np.sqrt(self.big_c - self.n * q0) / self.n
+            self.big_f = None
+
+    def _fwd(self, lon_deg, lat_deg):
+        lam = np.radians(np.asarray(lon_deg, np.float64) - self.lon0)
+        phi = np.radians(np.asarray(lat_deg, np.float64))
+        theta = self.n * lam
+        ak = self.a * self.k0
+        if self.kind == "lcc":
+            rho = ak * self.big_f * _tsfn(phi, self.e) ** self.n
+        else:
+            rho = ak * np.sqrt(self.big_c - self.n * _qsfn(phi, self.e)) / self.n
+        return self.fe + rho * np.sin(theta), self.fn + self.rho0 - rho * np.cos(theta)
+
+    def _inv(self, x, y):
+        dx = x - self.fe
+        dy = self.rho0 - (y - self.fn)
+        sgn = np.sign(self.n) or 1.0
+        rho = sgn * np.sqrt(dx * dx + dy * dy)
+        theta = np.arctan2(sgn * dx, sgn * dy)
+        lon = self.lon0 + np.degrees(theta / self.n)
+        ak = self.a * self.k0
+        if self.kind == "lcc":
+            phi = _phi_from_ts((rho / (ak * self.big_f)) ** (1.0 / self.n), self.e)
+        else:
+            phi = _phi_from_q((self.big_c - (rho * self.n / ak) ** 2) / self.n, self.e)
+        return lon, np.degrees(phi)
+
+
+class TMCRS(_Projection):
     """General Transverse Mercator CRS: per-ellipsoid Krueger series,
     latitude-of-origin offset, optional Helmert datum, optional output unit,
     optional projected-space GridShift (the OSTN15 pipeline: when set, the
@@ -439,7 +438,9 @@ class TMCRS:
     def __init__(self, ell, lat0, lon0, k0, fe, fn, unit=1.0, datum=None,
                  grid_shift=None):
         self.ell, self.lat0, self.lon0, self.k0 = ell, lat0, lon0, k0
-        self.fe, self.fn, self.unit, self.datum = fe, fn, unit, datum
+        self.fe, self.fn, self.unit = fe, fn, unit
+        # a grid correction replaces the Helmert path
+        self.datum = datum if grid_shift is None else None
         self.grid_shift = grid_shift
         self._y0 = self._tm_fwd(np.array([lon0]), np.array([lat0]))[1][0]
 
@@ -458,10 +459,14 @@ class TMCRS:
             eta += a * np.cos(2 * j * xi_p) * np.sinh(2 * j * eta_p)
         return self.k0 * ell.a_bar * eta, self.k0 * ell.a_bar * xi
 
-    def _tm_inv(self, x, y):
+    def _fwd(self, lon_deg, lat_deg):
+        x, y = self._tm_fwd(lon_deg, lat_deg)
+        return self.fe + x, self.fn + (y - self._y0)
+
+    def _inv(self, x, y):
         ell = self.ell
-        xi = np.asarray(y, np.float64) / (self.k0 * ell.a_bar)
-        eta = np.asarray(x, np.float64) / (self.k0 * ell.a_bar)
+        xi = (y - self.fn + self._y0) / (self.k0 * ell.a_bar)
+        eta = (x - self.fe) / (self.k0 * ell.a_bar)
         xi_p = xi.copy()
         eta_p = eta.copy()
         for j, b in enumerate(ell.beta, start=1):
@@ -474,57 +479,8 @@ class TMCRS:
         lam = np.arctan2(np.sinh(eta_p), np.cos(xi_p))
         return self.lon0 + np.degrees(lam), np.degrees(phi)
 
-    def forward(self, lon_deg, lat_deg):
-        if self.grid_shift is not None:
-            # OSTN15 pipeline: project the hub coordinates directly, then
-            # apply the grid correction on the projected plane
-            x, y = self._tm_fwd(lon_deg, lat_deg)
-            e = self.fe + x
-            n = self.fn + (y - self._y0)
-            e, n = self.grid_shift.apply(e, n)
-            return e / self.unit, n / self.unit
-        if self.datum is not None:
-            lon_deg, lat_deg = self.datum.from_wgs84(lon_deg, lat_deg)
-        x, y = self._tm_fwd(lon_deg, lat_deg)
-        return (
-            (self.fe + x) / self.unit,
-            (self.fn + (y - self._y0)) / self.unit,
-        )
 
-    def inverse(self, x, y):
-        if self.grid_shift is not None:
-            e, n = self.grid_shift.unapply(
-                np.asarray(x, np.float64) * self.unit,
-                np.asarray(y, np.float64) * self.unit,
-            )
-            return self._tm_inv(e - self.fe, n - self.fn + self._y0)
-        xm = np.asarray(x, np.float64) * self.unit - self.fe
-        ym = np.asarray(y, np.float64) * self.unit - self.fn + self._y0
-        lon, lat = self._tm_inv(xm, ym)
-        if self.datum is not None:
-            lon, lat = self.datum.to_wgs84(lon, lat)
-        return lon, lat
-
-
-_TM = {
-    # OSGB36 / British National Grid (Airy 1830 + published Helmert, ~2 m
-    # vs the OSTN15 grid shift — documented approximation, not silent)
-    27700: TMCRS(_ELL_AIRY, 49.0, -2.0, 0.9996012717, 400000.0, -100000.0,
-                 datum=_OSGB36),
-    # NZGD2000 / New Zealand Transverse Mercator (GRS80, null datum)
-    2193: TMCRS(_ELL_GRS80, 0.0, 173.0, 0.9996, 1600000.0, 10000000.0),
-}
-# ETRS89 / UTM zones 28N-38N (25828-25838) and NAD83 / UTM zones 1N-23N
-# (26901-26923): standard UTM on GRS80, null datum to WGS84 (<0.1 mm ellipsoid
-# delta; the ETRS89/NAD83 plate-fixed drift vs WGS84 is a documented ~0.5-1 m
-# epoch effect, the standard null-transform assumption also used for 2154/5070)
-for _z in range(28, 39):
-    _TM[25800 + _z] = TMCRS(_ELL_GRS80, 0.0, utm_zone_lon0(_z), _K0_UTM, _FE_UTM, 0.0)
-for _z in range(1, 24):
-    _TM[26900 + _z] = TMCRS(_ELL_GRS80, 0.0, utm_zone_lon0(_z), _K0_UTM, _FE_UTM, 0.0)
-
-
-class PolarCRS:
+class PolarCRS(_Projection):
     """Polar stereographic (Snyder 1987 p.160-162, ellipsoidal).
 
     Variant B (EPSG 9829): parameterized by the standard parallel lat_ts.
@@ -535,48 +491,37 @@ class PolarCRS:
     __slots__ = ("south", "lon0", "fe", "fn", "a", "e", "rho_scale")
 
     def __init__(self, lat_ts=None, k0=None, lon0=0.0, fe=0.0, fn=0.0,
-                 south=False, a=_A, e=_E):
+                 south=False, a=_ELL_WGS84.a, e=_ELL_WGS84.e):
         self.south, self.lon0, self.fe, self.fn, self.a, self.e = (
             south, lon0, fe, fn, a, e)
         if lat_ts is not None:  # variant B: rho = a * mc/tc * t
             pc = np.radians(abs(lat_ts))
-            mc = np.cos(pc) / np.sqrt(1 - (e * np.sin(pc)) ** 2)
-            es = e * np.sin(pc)
-            tc = np.tan(np.pi / 4 - pc / 2) / ((1 - es) / (1 + es)) ** (e / 2)
-            self.rho_scale = a * mc / tc
+            self.rho_scale = a * _msfn(pc, e) / _tsfn(pc, e)
         else:  # variant A: rho = 2 a k0 t / sqrt((1+e)^(1+e) (1-e)^(1-e))
             self.rho_scale = (
                 2.0 * a * k0 / np.sqrt((1 + e) ** (1 + e) * (1 - e) ** (1 - e))
             )
 
-    def _t(self, phi):
-        es = self.e * np.sin(phi)
-        return np.tan(np.pi / 4 - phi / 2) / ((1 - es) / (1 + es)) ** (self.e / 2)
-
-    def forward(self, lon_deg, lat_deg):
+    def _fwd(self, lon_deg, lat_deg):
         lon = np.asarray(lon_deg, np.float64)
         lat = np.asarray(lat_deg, np.float64)
         phi = np.radians(-lat if self.south else lat)
         lam = np.radians((-lon if self.south else lon) - (-self.lon0 if self.south else self.lon0))
-        rho = self.rho_scale * self._t(phi)
+        rho = self.rho_scale * _tsfn(phi, self.e)
         x = rho * np.sin(lam)
         y = -rho * np.cos(lam)
         if self.south:
             x, y = -x, -y
         return self.fe + x, self.fn + y
 
-    def inverse(self, x, y):
-        dx = np.asarray(x, np.float64) - self.fe
-        dy = np.asarray(y, np.float64) - self.fn
+    def _inv(self, x, y):
+        dx = x - self.fe
+        dy = y - self.fn
         if self.south:
             dx, dy = -dx, -dy
         rho = np.sqrt(dx * dx + dy * dy)
         lam = np.arctan2(dx, -dy)
-        t = rho / self.rho_scale
-        phi = np.pi / 2 - 2 * np.arctan(t)
-        for _ in range(8):
-            es = self.e * np.sin(phi)
-            phi = np.pi / 2 - 2 * np.arctan(t * ((1 - es) / (1 + es)) ** (self.e / 2))
+        phi = _phi_from_ts(rho / self.rho_scale, self.e)
         lon = np.degrees(lam) + (-self.lon0 if self.south else self.lon0)
         lat = np.degrees(phi)
         if self.south:
@@ -585,34 +530,26 @@ class PolarCRS:
         return lon, lat
 
 
-class LAEACRS:
+class LAEACRS(_Projection):
     """Lambert azimuthal equal-area, ellipsoidal oblique aspect (Snyder 1987
     eqs 3-11/3-12, 24-2..24-16; EPSG method 9820) — EPSG 3035 ETRS89 / LAEA
     Europe is the EU's standard statistical grid."""
 
     __slots__ = ("a", "e", "lat0", "lon0", "fe", "fn", "qp", "beta0", "rq", "d")
 
-    def __init__(self, lat0, lon0, fe, fn, a=_GRS80_A, e=_GRS80_E):
+    def __init__(self, lat0, lon0, fe, fn, a=_ELL_GRS80.a, e=_GRS80_E):
         self.a, self.e = a, e
         self.lat0, self.lon0, self.fe, self.fn = lat0, lon0, fe, fn
         p0 = np.radians(lat0)
-        self.qp = self._q(np.pi / 2)
-        self.beta0 = np.arcsin(self._q(p0) / self.qp)
+        self.qp = _qsfn(np.pi / 2, e)
+        self.beta0 = np.arcsin(_qsfn(p0, e) / self.qp)
         self.rq = a * np.sqrt(self.qp / 2.0)
-        m0 = np.cos(p0) / np.sqrt(1 - (e * np.sin(p0)) ** 2)
-        self.d = a * m0 / (self.rq * np.cos(self.beta0))
+        self.d = a * _msfn(p0, e) / (self.rq * np.cos(self.beta0))
 
-    def _q(self, phi):
-        s = np.sin(phi)
-        es = self.e * s
-        return (1 - self.e**2) * (
-            s / (1 - es**2) - np.log((1 - es) / (1 + es)) / (2 * self.e)
-        )
-
-    def forward(self, lon_deg, lat_deg):
+    def _fwd(self, lon_deg, lat_deg):
         lam = np.radians(np.asarray(lon_deg, np.float64) - self.lon0)
         phi = np.radians(np.asarray(lat_deg, np.float64))
-        beta = np.arcsin(np.clip(self._q(phi) / self.qp, -1.0, 1.0))
+        beta = np.arcsin(np.clip(_qsfn(phi, self.e) / self.qp, -1.0, 1.0))
         b = self.rq * np.sqrt(
             2.0
             / (1 + np.sin(self.beta0) * np.sin(beta)
@@ -625,9 +562,9 @@ class LAEACRS:
         )
         return self.fe + x, self.fn + y
 
-    def inverse(self, x, y):
-        xs = (np.asarray(x, np.float64) - self.fe) / self.d
-        ys = (np.asarray(y, np.float64) - self.fn) * self.d
+    def _inv(self, x, y):
+        xs = (x - self.fe) / self.d
+        ys = (y - self.fn) * self.d
         rho = np.sqrt(xs * xs + ys * ys)
         ce = 2.0 * np.arcsin(np.clip(rho / (2.0 * self.rq), -1.0, 1.0))
         with np.errstate(invalid="ignore", divide="ignore"):
@@ -642,33 +579,10 @@ class LAEACRS:
             )
         q = np.where(rho == 0.0, self.qp * np.sin(np.radians(self.lat0)), q)
         lam = np.where(rho == 0.0, 0.0, lam)
-        phi = np.arcsin(np.clip(q / 2.0, -1.0, 1.0))
-        e2 = self.e**2
-        for _ in range(10):  # Snyder eq 3-16
-            s = np.sin(phi)
-            es = self.e * s
-            phi = phi + (1 - es**2) ** 2 / (2 * np.cos(phi) * (1 - e2)) * (
-                q / (1 - e2) - s / (1 - es**2) + np.log((1 - es) / (1 + es)) / (2 * self.e)
-            )
-        return self.lon0 + np.degrees(lam), np.degrees(phi)
+        return self.lon0 + np.degrees(lam), np.degrees(_phi_from_q(q, self.e))
 
 
-_LAEA: dict[int, LAEACRS] = {
-    # ETRS89-extended / LAEA Europe (EPSG 3035)
-    3035: LAEACRS(52.0, 10.0, 4321000.0, 3210000.0),
-}
-
-
-_POLAR = {
-    3031: PolarCRS(lat_ts=-71.0, lon0=0.0, south=True),    # WGS84 Antarctic PS
-    3413: PolarCRS(lat_ts=70.0, lon0=-45.0),               # NSIDC Arctic PS
-    3995: PolarCRS(lat_ts=71.0, lon0=0.0),                 # Arctic PS
-    5041: PolarCRS(k0=0.994, lon0=0.0, fe=2000000.0, fn=2000000.0),        # UPS N
-    5042: PolarCRS(k0=0.994, lon0=0.0, fe=2000000.0, fn=2000000.0, south=True),  # UPS S
-}
-
-
-class OMCRS:
+class OMCRS(_Projection):
     """Hotine Oblique Mercator, variant B (EPSG method 9815; Snyder 1987
     p.66-75) — the SPCS83 Alaska zone 1 / RSO Borneo formula family, the
     one conic/cylindrical family the registry previously lacked.
@@ -701,31 +615,21 @@ class OMCRS:
         self._sphic = 1.0 if latc >= 0 else -1.0
         B = np.sqrt(1.0 + e2 * cphic**4 / (1.0 - e2))
         A = a * B * kc * np.sqrt(1.0 - e2) / (1.0 - e2 * sphic**2)
-        t0 = np.tan(np.pi / 4 - phic / 2) / (
-            (1 - e * sphic) / (1 + e * sphic)
-        ) ** (e / 2)
         D = B * np.sqrt(1.0 - e2) / (cphic * np.sqrt(1.0 - e2 * sphic**2))
         D2 = max(D * D, 1.0)
         F = D + np.sqrt(D2 - 1.0) * self._sphic
-        self.H = F * t0**B
+        self.H = F * _tsfn(phic, e)**B
         G = (F - 1.0 / F) / 2.0
         self.gam0 = np.arcsin(np.sin(alc) / D)
         self.lam0 = np.radians(lonc) - np.arcsin(G * np.tan(self.gam0)) / B
         self.uc = (A / B) * np.arctan2(np.sqrt(D2 - 1.0), np.cos(alc)) * self._sphic
         self.B, self.A = B, A
 
-    def _t(self, phi):
-        e = self.ell.e
-        s = np.sin(phi)
-        return np.tan(np.pi / 4 - phi / 2) / ((1 - e * s) / (1 + e * s)) ** (e / 2)
-
-    def forward(self, lon_deg, lat_deg):
-        if self.datum is not None:
-            lon_deg, lat_deg = self.datum.from_wgs84(lon_deg, lat_deg)
+    def _fwd(self, lon_deg, lat_deg):
         B, A = self.B, self.A
         phi = np.radians(np.asarray(lat_deg, np.float64))
         lam = np.radians(np.asarray(lon_deg, np.float64))
-        Q = self.H / self._t(phi) ** B
+        Q = self.H / _tsfn(phi, self.ell.e) ** B
         S = (Q - 1.0 / Q) / 2.0
         T = (Q + 1.0 / Q) / 2.0
         dl = B * (lam - self.lam0)
@@ -742,11 +646,11 @@ class OMCRS:
             u * np.cos(gc) - v * np.sin(gc) + self.fn,
         )
 
-    def inverse(self, x, y):
+    def _inv(self, x, y):
         B, A = self.B, self.A
         gc = np.radians(self.gammac)
-        dx = np.asarray(x, np.float64) - self.fe
-        dy = np.asarray(y, np.float64) - self.fn
+        dx = x - self.fe
+        dy = y - self.fn
         vp = dx * np.cos(gc) - dy * np.sin(gc)
         up = dy * np.cos(gc) + dx * np.sin(gc) + abs(self.uc) * self._sphic
         Qp = np.exp(-B * vp / A)
@@ -768,13 +672,34 @@ class OMCRS:
         lam = self.lam0 - np.arctan2(
             Sp * np.cos(self.gam0) - Vp * np.sin(self.gam0), np.cos(B * up / A)
         ) / B
-        lon, lat = np.degrees(lam), np.degrees(phi)
-        if self.datum is not None:
-            lon, lat = self.datum.to_wgs84(lon, lat)
-        return lon, lat
+        return np.degrees(lam), np.degrees(phi)
 
 
-_OM: dict[int, OMCRS] = {
+# -- the registry: one code -> projection map ------------------------------------
+
+_CRS: dict[int, _Projection] = {
+    4326: _Geographic(),
+    3857: _WebMercator(),
+    # conic (kind, lat1, lat2, lat0, lon0, FE, FN) — EPSG parameter sets on GRS80
+    2154: ConicCRS("lcc", 44.0, 49.0, 46.5, 3.0, 700000.0, 6600000.0),
+    3347: ConicCRS("lcc", 49.0, 77.0, 63.390675, -91.866667, 6200000.0, 3000000.0),
+    5070: ConicCRS("albers", 29.5, 45.5, 23.0, -96.0, 0.0, 0.0),
+    3310: ConicCRS("albers", 34.0, 40.5, 0.0, -120.0, 0.0, -4000000.0),
+    # NAD83 / Maryland state plane (meters), LCC 2SP
+    26985: ConicCRS("lcc", 38.3, 39.45, 37.666666666666664, -77.0, 400000.0, 0.0),
+    3031: PolarCRS(lat_ts=-71.0, lon0=0.0, south=True),    # WGS84 Antarctic PS
+    3413: PolarCRS(lat_ts=70.0, lon0=-45.0),               # NSIDC Arctic PS
+    3995: PolarCRS(lat_ts=71.0, lon0=0.0),                 # Arctic PS
+    5041: PolarCRS(k0=0.994, lon0=0.0, fe=2000000.0, fn=2000000.0),        # UPS N
+    5042: PolarCRS(k0=0.994, lon0=0.0, fe=2000000.0, fn=2000000.0, south=True),  # UPS S
+    # OSGB36 / British National Grid (Airy 1830 + published Helmert, ~2 m
+    # vs the OSTN15 grid shift — documented approximation, not silent)
+    27700: TMCRS(_ELL_AIRY, 49.0, -2.0, 0.9996012717, 400000.0, -100000.0,
+                 datum=_OSGB36),
+    # NZGD2000 / New Zealand Transverse Mercator (GRS80, null datum)
+    2193: TMCRS(_ELL_GRS80, 0.0, 173.0, 0.9996, 1600000.0, 10000000.0),
+    # ETRS89-extended / LAEA Europe
+    3035: LAEACRS(52.0, 10.0, 4321000.0, 3210000.0),
     # NAD83 / Alaska zone 1 (SPCS83; the zone the LCC/TM state-plane batch
     # could not cover).  Azimuth/rectified angle are EPSG's published DMS
     # (= arctan(-3/4), the Panhandle's design line).
@@ -785,40 +710,22 @@ _OM: dict[int, OMCRS] = {
         0.9999, 5000000.0, -5000000.0,
     ),
 }
+# WGS84 / UTM zones 1-60 north (326NN) and south (327NN)
+for _z in range(1, 61):
+    _CRS[32600 + _z] = TMCRS(_ELL_WGS84, 0.0, utm_zone_lon0(_z), 0.9996, 500000.0, 0.0)
+    _CRS[32700 + _z] = TMCRS(_ELL_WGS84, 0.0, utm_zone_lon0(_z), 0.9996, 500000.0, 10000000.0)
+# ETRS89 / UTM zones 28N-38N (25828-25838) and NAD83 / UTM zones 1N-23N
+# (26901-26923): standard UTM on GRS80, null datum to WGS84 (<0.1 mm ellipsoid
+# delta; the ETRS89/NAD83 plate-fixed drift vs WGS84 is a documented ~0.5-1 m
+# epoch effect, the standard null-transform assumption also used for 2154/5070)
+for _z in range(28, 39):
+    _CRS[25800 + _z] = TMCRS(_ELL_GRS80, 0.0, utm_zone_lon0(_z), 0.9996, 500000.0, 0.0)
+for _z in range(1, 24):
+    _CRS[26900 + _z] = TMCRS(_ELL_GRS80, 0.0, utm_zone_lon0(_z), 0.9996, 500000.0, 0.0)
 
 
-def register_om_crs(
-    code: int,
-    lat_c: float,
-    lon_c: float,
-    alpha_c: float,
-    gamma_c: float,
-    k_c: float,
-    false_easting: float,
-    false_northing: float,
-    ellipsoid: str = "GRS80",
-    helmert: tuple | None = None,
-) -> None:
-    """Register a Hotine Oblique Mercator (variant B) CRS at runtime —
-    see register_tm_crs."""
-    ell = ELLIPSOIDS[ellipsoid]
-    datum = Helmert(*helmert, ell) if helmert is not None else None
-    _OM[int(code)] = OMCRS(
-        ell, lat_c, lon_c, alpha_c, gamma_c, k_c,
-        false_easting, false_northing, datum=datum,
-    )
-
-
-# -- user-extensible registry --------------------------------------------------
-
-ELLIPSOIDS = {
-    "WGS84": _ELL_WGS84,
-    "GRS80": _ELL_GRS80,
-    "airy1830": _ELL_AIRY,
-    "intl1924": Ellipsoid(6378388.0, 1.0 / 297.0),
-    "clarke1866": Ellipsoid(6378206.4, 1.0 / 294.978698214),
-    "bessel1841": Ellipsoid(6377397.155, 1.0 / 299.1528128),
-}
+def _helmert(helmert: tuple | None, ell: Ellipsoid) -> Helmert | None:
+    return Helmert(*helmert, ell) if helmert is not None else None
 
 
 def register_tm_crs(
@@ -845,12 +752,15 @@ def register_tm_crs(
     GridShift with a national correction-grid extract (e.g. OSTN15 for
     27700); when set it REPLACES the Helmert path — project the hub
     coordinates, then add the interpolated (dE, dN).
+
+    Every register_* call writes the one code -> projection registry: the
+    last registration of a code wins, whatever family held it before and
+    built-in codes (4326, 3857, UTM, ...) included.
     """
     ell = ELLIPSOIDS[ellipsoid]
-    datum = Helmert(*helmert, ell) if helmert is not None else None
-    _TM[int(code)] = TMCRS(
+    _CRS[int(code)] = TMCRS(
         ell, lat0, lon0, k0, false_easting, false_northing, unit=unit,
-        datum=datum, grid_shift=grid_shift,
+        datum=_helmert(helmert, ell), grid_shift=grid_shift,
     )
 
 
@@ -874,79 +784,51 @@ def register_conic_crs(
     if kind not in ("lcc", "albers"):
         raise ValueError(f"kind must be 'lcc' or 'albers', got {kind!r}")
     ell = ELLIPSOIDS[ellipsoid]
-    datum = Helmert(*helmert, ell) if helmert is not None else None
-    _CONIC[int(code)] = ConicCRS(
+    _CRS[int(code)] = ConicCRS(
         kind, lat1, lat2, lat0, lon0, false_easting, false_northing,
-        a=ell.a, e=ell.e, k0=k0, unit=unit, datum=datum,
+        a=ell.a, e=ell.e, k0=k0, unit=unit, datum=_helmert(helmert, ell),
     )
 
 
-def _parse(crs: str):
+def register_om_crs(
+    code: int,
+    lat_c: float,
+    lon_c: float,
+    alpha_c: float,
+    gamma_c: float,
+    k_c: float,
+    false_easting: float,
+    false_northing: float,
+    ellipsoid: str = "GRS80",
+    helmert: tuple | None = None,
+) -> None:
+    """Register a Hotine Oblique Mercator (variant B) CRS at runtime —
+    see register_tm_crs."""
+    ell = ELLIPSOIDS[ellipsoid]
+    _CRS[int(code)] = OMCRS(
+        ell, lat_c, lon_c, alpha_c, gamma_c, k_c,
+        false_easting, false_northing, datum=_helmert(helmert, ell),
+    )
+
+
+def _lookup(crs: str) -> _Projection:
     c = crs.lower().replace(" ", "")
     if not c.startswith("epsg:"):
         raise ValueError(f"unsupported CRS {crs!r} (use epsg:NNNN)")
-    code = int(c[5:])
-    if code == 4326:
-        return ("geo",)
-    if code == 3857:
-        return ("merc",)
-    if 32601 <= code <= 32660:
-        return ("utm", code - 32600, 0.0)
-    if 32701 <= code <= 32760:
-        return ("utm", code - 32700, _FN_SOUTH)
-    if code in _CONIC:
-        return ("conic", code)
-    if code in _POLAR:
-        return ("polar", code)
-    if code in _TM:
-        return ("tm", code)
-    if code in _LAEA:
-        return ("laea", code)
-    if code in _OM:
-        return ("om", code)
-    raise ValueError(
-        f"unsupported CRS {crs!r} (supported: 4326, 3857, UTM 326NN/327NN, "
-        f"conic {sorted(_CONIC)}, polar {sorted(_POLAR)}, "
-        f"laea {sorted(_LAEA)}, om {sorted(_OM)}, tm-grid {sorted(_TM)}; "
-        "any other code is one register_tm_crs/register_conic_crs/"
-        "register_om_crs call with its published EPSG parameters)"
-    )
+    try:
+        return _CRS[int(c[5:])]
+    except KeyError:
+        raise ValueError(
+            f"unsupported CRS {crs!r} ({len(_CRS)} EPSG codes registered; any "
+            "other code is one register_tm_crs/register_conic_crs/"
+            "register_om_crs call with its published EPSG parameters)"
+        ) from None
 
 
 def transform_xy(x, y, src: str, dst: str):
     """Transform coordinate arrays src -> dst (through 4326 as hub)."""
-    s, d = _parse(src), _parse(dst)
-    if s[0] == "geo":
-        lon, lat = np.asarray(x, dtype=np.float64), np.asarray(y, dtype=np.float64)
-    elif s[0] == "merc":
-        lon, lat = merc_inverse(x, y)
-    elif s[0] == "conic":
-        lon, lat = _CONIC[s[1]].inverse(x, y)
-    elif s[0] == "polar":
-        lon, lat = _POLAR[s[1]].inverse(x, y)
-    elif s[0] == "tm":
-        lon, lat = _TM[s[1]].inverse(x, y)
-    elif s[0] == "laea":
-        lon, lat = _LAEA[s[1]].inverse(x, y)
-    elif s[0] == "om":
-        lon, lat = _OM[s[1]].inverse(x, y)
-    else:
-        lon, lat = tm_inverse(x, y, utm_zone_lon0(s[1]), _K0_UTM, _FE_UTM, s[2])
-    if d[0] == "geo":
-        return lon, lat
-    if d[0] == "merc":
-        return merc_forward(lon, lat)
-    if d[0] == "conic":
-        return _CONIC[d[1]].forward(lon, lat)
-    if d[0] == "polar":
-        return _POLAR[d[1]].forward(lon, lat)
-    if d[0] == "tm":
-        return _TM[d[1]].forward(lon, lat)
-    if d[0] == "laea":
-        return _LAEA[d[1]].forward(lon, lat)
-    if d[0] == "om":
-        return _OM[d[1]].forward(lon, lat)
-    return tm_forward(lon, lat, utm_zone_lon0(d[1]), _K0_UTM, _FE_UTM, d[2])
+    s, d = _lookup(src), _lookup(dst)
+    return d.forward(*s.inverse(x, y))
 
 
 def _transform_geometry(g: W.Geometry, src: str, dst: str) -> W.Geometry:
@@ -965,11 +847,9 @@ def st_transform(wkb_col: Column, src: str, dst: str) -> Column:
     """ST_Transform(geom, src, dst) — WKB in, WKB out (Functions.java:184-189).
 
     One Arrow-batched pandas UDF; all coordinate math is vectorized numpy."""
-    _parse(src), _parse(dst)  # validate eagerly on the driver
+    _lookup(src), _lookup(dst)  # validate eagerly on the driver
     return geom_udf(BinaryType(), lambda g: _transform_geometry(g, src, dst))(wkb_col)
 
 
 # -- bulk EPSG batches (published parameter sets; see crs_tables.py) -----------
-from incubator_sedona_spark.functions import crs_tables as _crs_tables  # noqa: E402
-
-_crs_tables.load_builtin_batches(register_tm_crs, register_conic_crs, ELLIPSOIDS)
+_crs_tables.load_builtin_batches(register_tm_crs, register_conic_crs)

@@ -33,8 +33,8 @@ Batches (all parameters from the public EPSG registry):
   lands on (FE, FN); the LCC point scale factor is 1 exactly AT the
   registered standard parallels, < 1 between and > 1 outside (so lat1/
   lat2 really are the standard parallels); TM meridian scale == k0.
-  States not listed (incl. Alaska zone 1's oblique Mercator, a formula
-  family this registry does not implement) register with one call.
+  States not listed register with one call; Alaska zone 1 (oblique
+  Mercator, 26931) is built into crs.py.
 - NTF (Paris) / Lambert carto zones I-III (27571-27573): the legacy French
   1SP Lambert zones on Clarke 1880 IGN with the published NTF<->WGS84
   translation (-168, -60, +320 from NTF); longitude of origin expressed
@@ -59,14 +59,8 @@ def _utm_lon0(zone: int) -> float:
     return zone * 6.0 - 183.0
 
 
-def load_builtin_batches(register_tm_crs, register_conic_crs, ellipsoids) -> None:
+def load_builtin_batches(register_tm_crs, register_conic_crs) -> None:
     """Populate the registry; called once from crs.py module init."""
-    if "WGS72" not in ellipsoids:
-        from incubator_sedona_spark.functions.crs import Ellipsoid
-
-        ellipsoids["WGS72"] = Ellipsoid(6378135.0, 1.0 / 298.26)
-        ellipsoids["clarke1880ign"] = Ellipsoid(6378249.2, 1.0 / 293.4660212936269)
-
     # -- WGS72 / UTM 1N-60N + 1S-60S ------------------------------------------
     for z in range(1, 61):
         register_tm_crs(32200 + z, 0.0, _utm_lon0(z), 0.9996, 500000.0, 0.0,
@@ -89,7 +83,7 @@ def load_builtin_batches(register_tm_crs, register_conic_crs, ellipsoids) -> Non
 
     # -- ETRS89 Europe-wide grids ---------------------------------------------
     register_conic_crs(3034, "lcc", 35.0, 65.0, 52.0, 10.0, 4000000.0, 2800000.0)
-    # 3035 (LAEA) ships in crs._LAEA: different formula family
+    # 3035 (LAEA) ships in crs.py: different formula family
 
     # -- national TM grids -----------------------------------------------------
     register_tm_crs(3006, 0.0, 15.0, 0.9996, 500000.0, 0.0)      # SWEREF99 TM

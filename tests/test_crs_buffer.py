@@ -26,18 +26,18 @@ def _meridian_arc(lat_deg: float) -> float:
 
 
 def test_tm_central_meridian_anchors():
-    x, y = C.tm_forward(3.0, 0.0, 3.0, 0.9996, 500000.0, 0.0)
+    x, y = C.TMCRS(C._ELL_WGS84, 0.0, 3.0, 0.9996, 500000.0, 0.0).forward(3.0, 0.0)
     assert x == pytest.approx(500000.0, abs=1e-6)
     assert y == pytest.approx(0.0, abs=1e-6)
     # northing on the CM = k0 * meridian arc length (independent integration)
     for lat in (15.0, 45.0, 70.0):
-        _, y = C.tm_forward(3.0, lat, 3.0, 0.9996, 500000.0, 0.0)
+        _, y = C.TMCRS(C._ELL_WGS84, 0.0, 3.0, 0.9996, 500000.0, 0.0).forward(3.0, lat)
         assert y == pytest.approx(0.9996 * _meridian_arc(lat), abs=1e-4), lat
 
 
 def test_tm_scale_at_cm():
-    x1, y1 = C.tm_forward(3.0, 0.0, 3.0, 0.9996, 0.0, 0.0)
-    x2, y2 = C.tm_forward(3.0, 1e-5, 3.0, 0.9996, 0.0, 0.0)
+    x1, y1 = C.TMCRS(C._ELL_WGS84, 0.0, 3.0, 0.9996, 0.0, 0.0).forward(3.0, 0.0)
+    x2, y2 = C.TMCRS(C._ELL_WGS84, 0.0, 3.0, 0.9996, 0.0, 0.0).forward(3.0, 1e-5)
     geodesic = np.radians(1e-5) * _A * (1 - _E2)  # meridian radius at equator
     assert (y2 - y1) / geodesic == pytest.approx(0.9996, abs=1e-9)
 

@@ -382,108 +382,6 @@ class TestKnnJoinGeometries:
         assert len(got) == 40
 
 
-class TestCRSWidening:
-    """Round-4 EPSG additions: 27700/2193/258NN/269NN/26985."""
-
-    def test_osgb_tm_worked_example(self):
-        """OS 'A guide to coordinate systems in Great Britain' worked example
-        (OSGB36 geodetic -> grid, no datum shift): validates the Airy-1830
-        Krueger series + latitude-of-origin handling to < 2 mm."""
-        from incubator_sedona_spark.functions.crs import _TM
-
-        tm = _TM[27700]
-        lat = 52 + 39 / 60 + 27.2531 / 3600
-        lon = 1 + 43 / 60 + 4.5177 / 3600
-        x, y = tm._tm_fwd(np.array([lon]), np.array([lat]))
-        assert abs(400000.0 + x[0] - 651409.903) < 2e-3
-        assert abs(-100000.0 + (y[0] - tm._y0) - 313177.270) < 2e-3
-
-    def test_definition_points(self):
-        from incubator_sedona_spark.functions.crs import transform_xy
-
-        cases = [
-            # (code, lon0, lat0, FE, FN) — natural/false origin maps to the
-            # false easting/northing by definition (datum-free codes)
-            ("epsg:2193", 173.0, 0.0, 1600000.0, 10000000.0),
-            ("epsg:25832", 9.0, 0.0, 500000.0, 0.0),
-            ("epsg:25838", 45.0, 0.0, 500000.0, 0.0),
-            ("epsg:26918", -75.0, 0.0, 500000.0, 0.0),
-            ("epsg:26985", -77.0, 37.666666666666664, 400000.0, 0.0),
-        ]
-        for code, lon, lat, fe, fn in cases:
-            x, y = transform_xy(np.array([lon]), np.array([lat]), "epsg:4326", code)
-            assert abs(x[0] - fe) < 1e-6, code
-            assert abs(y[0] - fn) < 1e-6, code
-
-    def test_roundtrips(self):
-        from incubator_sedona_spark.functions.crs import transform_xy
-
-        rng = np.random.RandomState(4)
-        for code, lon_c, lat_c in [
-            ("epsg:27700", -2.0, 53.0),
-            ("epsg:2193", 173.0, -41.0),
-            ("epsg:25833", 15.0, 52.0),
-            ("epsg:26910", -123.0, 45.0),
-            ("epsg:26985", -77.0, 39.0),
-        ]:
-            lon = lon_c + rng.uniform(-2, 2, 50)
-            lat = lat_c + rng.uniform(-2, 2, 50)
-            x, y = transform_xy(lon, lat, "epsg:4326", code)
-            lon2, lat2 = transform_xy(x, y, code, "epsg:4326")
-            assert np.abs(lon2 - lon).max() < 1e-7, code
-            assert np.abs(lat2 - lat).max() < 1e-7, code
-
-    def test_register_custom_crs(self):
-        """Runtime CRS registration (register_tm_crs / register_conic_crs):
-        definition-point goldens, exact agreement with an equivalent
-        built-in code, and ftUS unit scaling with a clean roundtrip."""
-        from incubator_sedona_spark.functions.crs import (
-            register_conic_crs,
-            register_tm_crs,
-            transform_xy,
-        )
-
-        # a made-up private code with OSGB-like TM parameters: definition
-        # point must land on (FE, FN)
-        register_tm_crs(
-            909001, lat0=49.0, lon0=-2.0, k0=0.9996012717,
-            false_easting=400000.0, false_northing=-100000.0,
-            ellipsoid="airy1830",
-        )
-        x, y = transform_xy(np.array([-2.0]), np.array([49.0]), "epsg:4326", "epsg:909001")
-        assert abs(x[0] - 400000.0) < 1e-6 and abs(y[0] + 100000.0) < 1e-6
-
-        # conic registration: Maryland parameters under a private code must
-        # reproduce the built-in 26985 exactly
-        register_conic_crs(
-            909002, "lcc", 38.3, 39.45, 37.666666666666664, -77.0,
-            400000.0, 0.0,
-        )
-        lon = np.array([-76.5, -77.3])
-        lat = np.array([39.0, 38.5])
-        x1, y1 = transform_xy(lon, lat, "epsg:4326", "epsg:909002")
-        x2, y2 = transform_xy(lon, lat, "epsg:4326", "epsg:26985")
-        assert np.allclose(x1, x2, atol=1e-9) and np.allclose(y1, y2, atol=1e-9)
-
-        # unit scaling: same TM in US survey feet
-        register_tm_crs(
-            909003, lat0=49.0, lon0=-2.0, k0=0.9996012717,
-            false_easting=400000.0, false_northing=-100000.0,
-            ellipsoid="airy1830", unit=0.3048006096012192,
-        )
-        xf, yf = transform_xy(np.array([-2.0]), np.array([49.0]), "epsg:4326", "epsg:909003")
-        assert abs(xf[0] - 400000.0 / 0.3048006096012192) < 1e-5
-        # roundtrip through the ftUS form
-        lon2, lat2 = transform_xy(xf, yf, "epsg:909003", "epsg:4326")
-        assert abs(lon2[0] + 2.0) < 1e-9 and abs(lat2[0] - 49.0) < 1e-9
-
-    def test_unknown_code_still_raises(self):
-        from incubator_sedona_spark.functions.crs import transform_xy
-
-        with pytest.raises(ValueError, match="unsupported CRS"):
-            transform_xy(np.array([0.0]), np.array([0.0]), "epsg:4326", "epsg:29999")
-
-
 class TestSnapRounding:
     """Round-4 overlay snap-rounding fallback (probe-hazard detection)."""
 

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from incubator_sedona_spark.functions import scalars as S
 from incubator_sedona_spark.functions import crs as CRS
-from incubator_sedona_spark.functions.crs import _CONIC, transform_xy
+from incubator_sedona_spark.functions.crs import _CRS, _msfn, _qsfn, transform_xy
 from incubator_sedona_spark.geom import wkb as W
 
 
@@ -196,7 +196,7 @@ def test_conic_definition_points():
         5070: (-96.0, 23.0, 0.0, 0.0),
         3310: (-120.0, 0.0, 0.0, -4000000.0),
     }.items():
-        x, y = _CONIC[code].forward(np.array([lon0]), np.array([lat0]))
+        x, y = _CRS[code].forward(np.array([lon0]), np.array([lat0]))
         assert abs(x[0] - fe) < 1e-6 and abs(y[0] - fn) < 1e-6
 
 
@@ -211,18 +211,18 @@ def test_conic_roundtrip_and_paris_golden():
 
 
 def test_lcc_scale_one_on_standard_parallels():
-    c = _CONIC[2154]
+    c = _CRS[2154]
     for latp in (44.0, 49.0):
         eps = 1e-6
         x1, y1 = c.forward(np.array([2.0]), np.array([latp]))
         x2, y2 = c.forward(np.array([2.0 + eps]), np.array([latp]))
-        ground = np.radians(eps) * c._m(np.radians(latp)) * c.a
+        ground = np.radians(eps) * _msfn(np.radians(latp), c.e) * c.a
         k = float(np.hypot(x2 - x1, y2 - y1) / ground)
         assert k == pytest.approx(1.0, abs=1e-6)
 
 
 def test_albers_is_equal_area():
-    c = _CONIC[5070]
+    c = _CRS[5070]
     for lo_, la_ in ((-100.0, 30.0), (-80.0, 45.0)):
         eps = 1e-6
         x0, y0 = c.forward(np.array([lo_]), np.array([la_]))
@@ -609,7 +609,7 @@ class TestBulkEpsgBatches:
         # through the registered Helmert and expect (FE, FN) exactly
         for code, lat0, fn in [(27571, 49.5, 1200000.0), (27572, 46.8, 2200000.0),
                                (27573, 44.1, 3200000.0)]:
-            c = CRS._CONIC[code]
+            c = CRS._CRS[code]
             lon_w, lat_w = c.datum.to_wgs84(np.array([c.lon0]), np.array([lat0]))
             x, y = c.forward(lon_w, lat_w)
             assert abs(float(x[0]) - 600000.0) < 1e-3, code
@@ -645,10 +645,10 @@ class TestBulkEpsgBatches:
             dt.extend(np.linspace(lats[i], lats[i + 1], 400, endpoint=False))
         x, y = CRS.transform_xy(np.array(dl), np.array(dt), "epsg:4326", "epsg:3035")
         planar = 0.5 * abs(np.sum(x * np.roll(y, -1) - np.roll(x, -1) * y))
-        c = CRS._LAEA[3035]
+        c = CRS._CRS[3035]
         truth = (
             c.a**2 * np.radians(1.0)
-            * (c._q(np.radians(51.0)) - c._q(np.radians(50.0))) / 2.0
+            * (_qsfn(np.radians(51.0), c.e) - _qsfn(np.radians(50.0), c.e)) / 2.0
         )
         assert abs(planar - truth) / truth < 1e-4, (planar, truth)
 
@@ -672,8 +672,104 @@ class TestBulkEpsgBatches:
             assert err < 1e-8, (code, err)
 
     def test_unknown_code_still_loud(self):
-        with pytest.raises(ValueError, match="unsupported CRS"):
-            CRS.transform_xy(np.array([0.0]), np.array([0.0]), "epsg:4326", "epsg:9999")
+        # 29999 sits beside the registered 2xxxx national grids; 9999 is no code
+        for code in (9999, 29999):
+            with pytest.raises(ValueError, match="unsupported CRS"):
+                CRS.transform_xy(np.array([0.0]), np.array([0.0]), "epsg:4326", f"epsg:{code}")
+
+
+class TestCRSWidening:
+    """Round-4 EPSG additions: 27700/2193/258NN/269NN/26985."""
+
+    def test_osgb_tm_worked_example(self):
+        """OS 'A guide to coordinate systems in Great Britain' worked example
+        (OSGB36 geodetic -> grid, no datum shift): validates the Airy-1830
+        Krueger series + latitude-of-origin handling to < 2 mm."""
+        tm = _CRS[27700]
+        lat = 52 + 39 / 60 + 27.2531 / 3600
+        lon = 1 + 43 / 60 + 4.5177 / 3600
+        x, y = tm._tm_fwd(np.array([lon]), np.array([lat]))
+        assert abs(400000.0 + x[0] - 651409.903) < 2e-3
+        assert abs(-100000.0 + (y[0] - tm._y0) - 313177.270) < 2e-3
+
+    def test_definition_points(self):
+        from incubator_sedona_spark.functions.crs import transform_xy
+
+        cases = [
+            # (code, lon0, lat0, FE, FN) — natural/false origin maps to the
+            # false easting/northing by definition (datum-free codes)
+            ("epsg:2193", 173.0, 0.0, 1600000.0, 10000000.0),
+            ("epsg:25832", 9.0, 0.0, 500000.0, 0.0),
+            ("epsg:25838", 45.0, 0.0, 500000.0, 0.0),
+            ("epsg:26918", -75.0, 0.0, 500000.0, 0.0),
+            ("epsg:26985", -77.0, 37.666666666666664, 400000.0, 0.0),
+        ]
+        for code, lon, lat, fe, fn in cases:
+            x, y = transform_xy(np.array([lon]), np.array([lat]), "epsg:4326", code)
+            assert abs(x[0] - fe) < 1e-6, code
+            assert abs(y[0] - fn) < 1e-6, code
+
+    def test_roundtrips(self):
+        from incubator_sedona_spark.functions.crs import transform_xy
+
+        rng = np.random.RandomState(4)
+        for code, lon_c, lat_c in [
+            ("epsg:27700", -2.0, 53.0),
+            ("epsg:2193", 173.0, -41.0),
+            ("epsg:25833", 15.0, 52.0),
+            ("epsg:26910", -123.0, 45.0),
+            ("epsg:26985", -77.0, 39.0),
+        ]:
+            lon = lon_c + rng.uniform(-2, 2, 50)
+            lat = lat_c + rng.uniform(-2, 2, 50)
+            x, y = transform_xy(lon, lat, "epsg:4326", code)
+            lon2, lat2 = transform_xy(x, y, code, "epsg:4326")
+            assert np.abs(lon2 - lon).max() < 1e-7, code
+            assert np.abs(lat2 - lat).max() < 1e-7, code
+
+    def test_register_custom_crs(self):
+        """Runtime CRS registration (register_tm_crs / register_conic_crs):
+        definition-point goldens, exact agreement with an equivalent
+        built-in code, and ftUS unit scaling with a clean roundtrip."""
+        from incubator_sedona_spark.functions.crs import (
+            register_conic_crs,
+            register_tm_crs,
+            transform_xy,
+        )
+
+        # a made-up private code with OSGB-like TM parameters: definition
+        # point must land on (FE, FN)
+        register_tm_crs(
+            909001, lat0=49.0, lon0=-2.0, k0=0.9996012717,
+            false_easting=400000.0, false_northing=-100000.0,
+            ellipsoid="airy1830",
+        )
+        x, y = transform_xy(np.array([-2.0]), np.array([49.0]), "epsg:4326", "epsg:909001")
+        assert abs(x[0] - 400000.0) < 1e-6 and abs(y[0] + 100000.0) < 1e-6
+
+        # conic registration: Maryland parameters under a private code must
+        # reproduce the built-in 26985 exactly
+        register_conic_crs(
+            909002, "lcc", 38.3, 39.45, 37.666666666666664, -77.0,
+            400000.0, 0.0,
+        )
+        lon = np.array([-76.5, -77.3])
+        lat = np.array([39.0, 38.5])
+        x1, y1 = transform_xy(lon, lat, "epsg:4326", "epsg:909002")
+        x2, y2 = transform_xy(lon, lat, "epsg:4326", "epsg:26985")
+        assert np.allclose(x1, x2, atol=1e-9) and np.allclose(y1, y2, atol=1e-9)
+
+        # unit scaling: same TM in US survey feet
+        register_tm_crs(
+            909003, lat0=49.0, lon0=-2.0, k0=0.9996012717,
+            false_easting=400000.0, false_northing=-100000.0,
+            ellipsoid="airy1830", unit=0.3048006096012192,
+        )
+        xf, yf = transform_xy(np.array([-2.0]), np.array([49.0]), "epsg:4326", "epsg:909003")
+        assert abs(xf[0] - 400000.0 / 0.3048006096012192) < 1e-5
+        # roundtrip through the ftUS form
+        lon2, lat2 = transform_xy(xf, yf, "epsg:909003", "epsg:4326")
+        assert abs(lon2[0] + 2.0) < 1e-9 and abs(lat2[0] - 49.0) < 1e-9
 
 
 class TestGridShift:
@@ -753,7 +849,7 @@ class TestGridShift:
             lon2, lat2 = CRS.transform_xy(eg, ng, "epsg:909090", "epsg:4326")
             assert np.max(np.abs(lon2 - lon) + np.abs(lat2 - lat)) < 1e-8
         finally:
-            CRS._TM.pop(909090, None)
+            CRS._CRS.pop(909090, None)
 
 
 # -- round 5: SPCS83 state-plane batch (crs_tables._SP_LCC/_SP_TM) --------------
@@ -930,4 +1026,67 @@ class TestObliqueMercator:
             lon, lat = CRS.transform_xy(x, y, "epsg:909815", "epsg:4326")
             assert abs(lon[0] - 115.5) < 1e-9 and abs(lat[0] - 4.5) < 1e-9
         finally:
-            CRS._OM.pop(909815, None)
+            CRS._CRS.pop(909815, None)
+
+
+class TestRegistry:
+    """One code -> projection map: every registered code round-trips, and a
+    registration always replaces whatever held its code before."""
+
+    @staticmethod
+    def _sample(p, rng, n=200):
+        """+-2 deg lon / +-4 deg lat around the projection's origin; polar
+        codes take 60-89 deg on their own pole's side, southern TM grids
+        (UTM south, MGA) the southern hemisphere."""
+        if isinstance(p, CRS.PolarCRS):
+            lat = rng.uniform(60.0, 89.0, n) * (-1.0 if p.south else 1.0)
+            return p.lon0 + rng.uniform(-2, 2, n), lat
+        if isinstance(p, CRS.OMCRS):
+            lon0, lat0 = p.lonc, p.latc
+        else:
+            lon0, lat0 = getattr(p, "lon0", 0.0), getattr(p, "lat0", 0.0)
+        lat = lat0 + rng.uniform(-4, 4, n)
+        if isinstance(p, CRS.TMCRS) and p.fn == 10000000.0:
+            lat = -np.abs(lat)
+        return lon0 + rng.uniform(-2, 2, n), lat
+
+    def test_every_code_round_trips(self):
+        rng = np.random.default_rng(8)
+        worst = {}
+        for code in sorted(_CRS):
+            lon, lat = self._sample(_CRS[code], rng)
+            x, y = transform_xy(lon, lat, "epsg:4326", f"epsg:{code}")
+            lon2, lat2 = transform_xy(x, y, f"epsg:{code}", "epsg:4326")
+            worst[code] = float(np.max(np.abs(lon2 - lon) + np.abs(lat2 - lat)))
+        assert len(worst) >= 403
+        bad = {c: e for c, e in worst.items() if not e < 1e-7}
+        assert not bad, bad
+
+    def test_registration_replaces_any_family(self):
+        """A TM over a WGS84 UTM code, a conic over 3857 and a TM over a
+        built-in conic code each change what transform_xy returns: the
+        answer equals the same parameters registered under a fresh code."""
+        lon, lat = np.array([2.5, 3.5]), np.array([46.0, 47.0])
+        replaced = {
+            32631: lambda c: CRS.register_tm_crs(c, 0.0, 3.0, 0.9996, 400000.0, 0.0),
+            3857: lambda c: CRS.register_conic_crs(
+                c, "lcc", 44.0, 49.0, 46.5, 3.0, 700000.0, 6600000.0),
+            2154: lambda c: CRS.register_tm_crs(c, 46.5, 3.0, 1.0, 700000.0, 6600000.0),
+        }
+        before = {c: transform_xy(lon, lat, "epsg:4326", f"epsg:{c}") for c in replaced}
+        saved = {c: _CRS[c] for c in replaced}
+        try:
+            for i, (code, register) in enumerate(replaced.items()):
+                register(909200 + i)
+                register(code)
+                want = transform_xy(lon, lat, "epsg:4326", f"epsg:{909200 + i}")
+                got = transform_xy(lon, lat, "epsg:4326", f"epsg:{code}")
+                np.testing.assert_array_equal(got, want)
+                assert not np.allclose(got, before[code]), code
+        finally:
+            _CRS.update(saved)
+            for i in range(len(replaced)):
+                _CRS.pop(909200 + i, None)
+        for code in replaced:
+            np.testing.assert_array_equal(
+                transform_xy(lon, lat, "epsg:4326", f"epsg:{code}"), before[code])
