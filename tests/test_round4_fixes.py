@@ -435,6 +435,16 @@ class TestSnapRounding:
         assert C.overlay_rings(a, b, "intersection") == []
 
 
+class TestCRSWidening:
+    """The EPSG widening keeps unknown codes loud."""
+
+    def test_unknown_code_still_raises(self):
+        from incubator_sedona_spark.functions.crs import transform_xy
+
+        with pytest.raises(ValueError, match="unsupported CRS"):
+            transform_xy(np.array([0.0]), np.array([0.0]), "epsg:4326", "epsg:29999")
+
+
 class TestDedupReleaseHook:
     def test_release_cached(self, spark):
         from incubator_sedona_spark.pipeline import dedup as DD
