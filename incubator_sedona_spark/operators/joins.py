@@ -575,12 +575,15 @@ def spatial_join(
         # bounded limit-count decides; a genuinely big left side pays one
         # cheap limit-pushed job and keeps the shuffle plan.  The confirmed-
         # small side is then MATERIALIZED with an eager localCheckpoint: a
-        # createDataFrame relation is pickled Python slices that a Python
-        # runner re-evaluates on EVERY job over its lineage (the probe, the
-        # bbox stage and the broadcast build each paid a full re-evaluation
-        # — and coalescing such a relation is poison, serializing all slice
-        # evaluations into one task, measured 12-14 s for a 200-row zones
-        # table).  The checkpoint cuts the lineage — downstream plans read
+        # createDataFrame relation built from a Python list is pickled Python
+        # slices that the RDD Python runner re-evaluates on EVERY job over its
+        # lineage (the probe, the bbox stage and the broadcast build each
+        # paid a full re-evaluation — and coalescing such a relation is
+        # poison, serializing all slice evaluations into one task, measured
+        # 12-14 s for a 200-row zones table).  An Arrow-built relation (a
+        # pyarrow Table, or a pandas frame with Arrow on) is JVM-side batches
+        # and pays none of that, but is just as stat-less.  The checkpoint
+        # cuts the lineage — downstream plans read
         # the materialized rows, keeping any construction UDFs out of the
         # join plan — and the coalesce above it shrinks the pandas-UDF
         # stages (bbox, rectangle probe) to a handful of Arrow tasks

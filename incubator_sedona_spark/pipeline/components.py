@@ -42,6 +42,7 @@ Scale notes:
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 
@@ -107,18 +108,25 @@ def _driver_union_find(
         r = find(x)
         if r not in label or x < label[r]:
             label[r] = x
-    mapping = [(x, label[r]) for x in parent if (r := find(x)) in label]
-    schema = f"{node_col} long, {out_col} long"
-    mapped = spark.createDataFrame(mapping, schema)
+    mapping = {x: label[r] for x in parent if (r := find(x)) in label}
+
+    def frame(xs):
+        # an Arrow table: exact int64 ids, and no pickled-row Python runner
+        return spark.createDataFrame(pa.table({
+            node_col: pa.array(xs, pa.int64()),
+            out_col: pa.array([mapping[x] for x in xs], pa.int64()),
+        }), f"{node_col} long, {out_col} long")
+
+    mapped = frame(list(mapping))
     if nodes is None:
         return mapped
     out = universe.join(F.broadcast(mapped), node_col, "left").select(
         F.col(node_col),
         F.coalesce(F.col(out_col), F.col(node_col)).alias(out_col),
     )
-    outside = [m for m in mapping if m[0] not in members]
+    outside = [x for x in mapping if x not in members]
     if outside:
-        out = out.unionByName(spark.createDataFrame(outside, schema))
+        out = out.unionByName(frame(outside))
     return out
 
 

@@ -45,6 +45,7 @@ from itertools import combinations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import ArrayType, LongType
 
@@ -923,7 +924,9 @@ def embedding_cosine_pairs_exact(
         inp.mapInPandas(_scan_against(p), schema=schema) for p in block_dirs
     ]
     if not scans:  # n == 0: no pairs by definition
-        return spark.createDataFrame([], schema=schema)
+        # zero-row Arrow table; Spark casts its null-typed columns to ``schema``
+        empty = pa.table({c: pa.nulls(0) for c in ("id_a", "id_b", "cosine")})
+        return spark.createDataFrame(empty, schema=schema)
     out = scans[0]
     for s in scans[1:]:
         out = out.unionAll(s)

@@ -25,6 +25,7 @@ import json
 import os
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from incubator_sedona_spark.geom import wkb as W
@@ -66,7 +67,7 @@ def write_geoparquet(
     df.write.mode("overwrite").parquet(path)
     spark = df.sparkSession
     files = _part_files(path)
-    fdf = spark.createDataFrame([(f,) for f in files], "path string")
+    fdf = spark.createDataFrame(pa.table({"path": files}), "path string")
 
     def _rewrite(batches):
         import pyarrow.parquet as pq

@@ -653,23 +653,27 @@ def read_geotiff_table(spark, path: str, drop_invalid: bool = False):
 
 def write_geotiff_table(df, out_dir: str, raster_col: str = "raster",
                         name_col: str = "path", dtype: str = "float32") -> int:
-    """GeoTiff sink: one .tif file per row, written executor-side via
-    foreachPartition (the reference's dropbox-style per-record image sink).
-    Returns the number of files written."""
+    """GeoTiff sink: one .tif file per row, encoded and written executor-side
+    by one ``mapInPandas`` (the reference's dropbox-style per-record image
+    sink).  Returns the number of distinct files this call wrote; rows that
+    share a file name write one file, and files already in ``out_dir`` are
+    not counted."""
     import os
 
     os.makedirs(out_dir, exist_ok=True)
-    tif = df.select(
-        F.col(name_col).alias("__name"), rs_as_geotiff(F.col(raster_col), dtype=dtype).alias("__tif")
-    )
+    rasters = df.select(F.col(name_col).alias("__name"), F.col(raster_col).alias("__r"))
 
-    def _write(rows):
-        for r in rows:
-            base = os.path.basename(str(r["__name"])) or "raster"
-            if not base.endswith(".tif"):
-                base = base.rsplit(".", 1)[0] + ".tif" if "." in base else base + ".tif"
-            with open(os.path.join(out_dir, base), "wb") as f:
-                f.write(bytes(r["__tif"]))
+    def _write(batches):
+        for pdf in batches:
+            names = []
+            for name, r in zip(pdf["__name"], _frame_to_rasters(pdf)):
+                base = os.path.basename(str(name)) or "raster"
+                if not base.endswith(".tif"):
+                    base = base.rsplit(".", 1)[0] + ".tif" if "." in base else base + ".tif"
+                with open(os.path.join(out_dir, base), "wb") as f:
+                    f.write(encode_geotiff(r, dtype=dtype))
+                names.append(base)
+            yield pd.DataFrame({"name": names}, dtype=object)
 
-    tif.foreachPartition(_write)
-    return len([n for n in os.listdir(out_dir) if n.endswith(".tif")])
+    written = rasters.select("__name", "__r.*").mapInPandas(_write, schema="name string")
+    return written.distinct().count()

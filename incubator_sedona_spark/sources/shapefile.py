@@ -33,6 +33,7 @@ from typing import Iterator, Optional
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     BinaryType,
@@ -389,7 +390,8 @@ def read_shapefile(
                 ]
                 yield pd.DataFrame(data, columns=[f.name for f in fields] + ["wkb"])
 
+    shp, dbf, shx = zip(*triples)
     files_df = spark.createDataFrame(
-        [(s, d, x) for s, d, x in triples], "shp string, dbf string, shx string"
+        pa.table({"shp": shp, "dbf": dbf, "shx": shx}), "shp string, dbf string, shx string"
     ).repartition(len(triples))
     return files_df.mapInPandas(_parse, schema=schema)

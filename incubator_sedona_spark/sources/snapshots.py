@@ -42,6 +42,7 @@ import os
 import time
 import uuid
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -115,11 +116,11 @@ def _collect_file_stats(spark: SparkSession, files: list[str]) -> list[dict]:
     """Per-file row counts + min/max column stats from footers, executor-side.
 
     One task per file; only footers are read (no data pages).  Returns JSON
-    rows the commit embeds in the manifest.
+    rows the commit embeds in the manifest, in the order of ``files``.
     """
     if not files:
         return []
-    fdf = spark.createDataFrame([(f,) for f in files], "path string")
+    fdf = spark.createDataFrame(pa.table({"path": files}), "path string")
 
     def _stats(batches):
         import pandas as pd
@@ -177,7 +178,8 @@ def _collect_file_stats(spark: SparkSession, files: list[str]) -> list[dict]:
         .mapInPandas(_stats, schema="stat string")
         .collect()
     )
-    return [json.loads(r["stat"]) for r in rows]
+    by_path = {st["path"]: st for st in (json.loads(r["stat"]) for r in rows)}
+    return [by_path[f] for f in files]
 
 
 class SnapshotTable:

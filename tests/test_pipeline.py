@@ -241,6 +241,12 @@ def test_embedding_exact_sharded_matches_single_block(spark, embs, tmp_path):
         ).collect()
     }
     assert single == sharded and len(single) > 0
+    # no rows: an empty result with the same (id_a, id_b, cosine) schema
+    for id_type in ("bigint", "int"):
+        empty = embs.select(F.col("vec_id").cast(id_type), "embedding").limit(0)
+        out = D.embedding_cosine_pairs_exact(empty, scratch_dir=str(tmp_path / f"e_{id_type}"))
+        assert out.schema.simpleString() == f"struct<id_a:{id_type},id_b:{id_type},cosine:double>"
+        assert all(f.nullable for f in out.schema) and out.count() == 0
 
 
 def test_no_row_data_collect_in_package():
@@ -421,6 +427,26 @@ def test_connected_components_paths_agree_on_outside_and_null_endpoints(spark):
     expected = {1: 1, 100: 1, 2: 1, 0: 0, 3: 0, 200: 200, 201: 200, 7: 7, 300: 300}
     assert run() == expected
     assert run(driver_edge_cap=0) == expected
+
+    # ids at the int64 extremes and 2^53 + 1 (no float round trip: it would
+    # merge 2^53 + 1 with 2^53)
+    lo, mid, hi = -(2**63), 2**53 + 1, 2**63 - 1
+    edges = spark.createDataFrame([(lo, mid), (hi, mid), (2**53, 5)], "id_a long, id_b long")
+    nodes = spark.createDataFrame([(n,) for n in [mid, hi, 2**53, 6]], "id long")
+    expected = {lo: mid, mid: mid, hi: mid, 2**53: 2**53, 5: 2**53, 6: 6}
+    assert run(nodes=nodes) == expected
+    assert run(nodes=nodes, driver_edge_cap=0) == expected
+    expected = {lo: lo, mid: lo, hi: lo, 2**53: 5, 5: 5}
+    assert run() == expected
+    assert run(driver_edge_cap=0) == expected
+
+    # empty mappings: no endpoint shares a component with a universe node,
+    # and an edge set of NULL endpoints only
+    edges = spark.createDataFrame([(200, 201)], "id_a long, id_b long")
+    nodes = spark.createDataFrame([(1,), (2,)], "id long")
+    assert run(nodes=nodes) == run(nodes=nodes, driver_edge_cap=0) == {1: 1, 2: 2}
+    edges = spark.createDataFrame([(None, None)], "id_a long, id_b long")
+    assert run() == run(driver_edge_cap=0) == {}
 
 
 def test_connected_components_vs_union_find_on_dup_pairs(spark, docs):

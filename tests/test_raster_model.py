@@ -334,6 +334,25 @@ def test_geotiff_df_source_roundtrip(spark, tmp_path):
     assert back["bands"][0] == rs[1]["bands"][0]
 
 
+def test_write_geotiff_table_counts_only_the_files_it_wrote(spark, tmp_path):
+    """A reused directory's old .tif files are not counted, and two rows
+    naming one file count once."""
+    import os
+
+    out = tmp_path / "reused"
+    out.mkdir()
+    for k in range(3):
+        (out / f"old{k}.tif").write_bytes(b"old")
+    rasters = spark.range(3).select(
+        F.format_string("r%d.tif", F.least(F.col("id"), F.lit(1))).alias("path"),
+        R.rs_make_empty_raster(1, 4, 3, 0.0, 0.0, pixel_size=1.0).alias("raster"),
+    )
+    assert RC.write_geotiff_table(rasters, str(out)) == 2
+    assert sorted(os.listdir(out)) == ["old0.tif", "old1.tif", "old2.tif", "r0.tif", "r1.tif"]
+    back = RC.decode_geotiff((out / "r0.tif").read_bytes())
+    assert (back["width"], back["height"], back["bands"]) == (4, 3, [[0.0] * 12])
+
+
 def test_geotiff_df_source_drop_invalid(spark, tmp_path):
     import os
 

@@ -95,6 +95,21 @@ def test_manifest_minmax_pruning_skips_files(spark, tmp_path):
         t.read(spark, prune={"id": (10**9, 10**9 + 1)})
 
 
+def test_manifest_lists_files_in_path_order(spark, tmp_path):
+    """The manifest lists a commit's data files in sorted path order, the
+    order the write returns them in, not the order their stats tasks
+    finished; each file's stats stay its own."""
+    t = SnapshotTable(str(tmp_path / "t_order"))
+    t.append(_batch(spark, 0, 1200).repartitionByRange(12, "id"))
+    stats = t.file_stats()
+    paths = [f["path"] for f in stats]
+    assert len(paths) == 12 and paths == sorted(paths)
+    for f in stats:
+        assert f["rows"] == spark.read.parquet(f["path"]).count()
+        lo, hi = spark.read.parquet(f["path"]).agg(F.min("id"), F.max("id")).first()
+        assert (f["min"]["id"], f["max"]["id"]) == (lo, hi)
+
+
 def test_string_stats_prune(spark, tmp_path):
     loc = str(tmp_path / "t4")
     t = SnapshotTable(loc)
