@@ -206,8 +206,12 @@ class SnapshotTable:
         # have clobbered the winner's manifest (its own becomes unreferenced
         # metadata, listed by orphan_files)
         manifest_name = f"manifest-{n}-{uuid.uuid4().hex[:8]}.json"
+        stats = _collect_file_stats(spark, new_files)
+        for st in stats:
+            # relative to the table: a copied table reads its own files
+            st["path"] = os.path.relpath(st["path"], self.location)
         with open(os.path.join(meta_dir, manifest_name), "w") as f:
-            json.dump({"files": _collect_file_stats(spark, new_files)}, f)
+            json.dump({"files": stats}, f)
 
         if operation == "append" and prev["snapshots"]:
             manifests = prev["snapshots"][-1]["manifests"] + [manifest_name]
@@ -300,13 +304,18 @@ class SnapshotTable:
             return eligible[-1]
         return snaps[-1]
 
+    def _manifest(self, name: str) -> list[dict]:
+        """A manifest's file rows, each path resolved against the table
+        location.  Manifests store paths relative to the table; an entry
+        written before that (an absolute path) resolves to itself."""
+        with open(os.path.join(_metadata_dir(self.location), name)) as f:
+            files = json.load(f)["files"]
+        for e in files:
+            e["path"] = os.path.join(self.location, e["path"])
+        return files
+
     def _files(self, snap: dict) -> list[dict]:
-        meta_dir = _metadata_dir(self.location)
-        out: list[dict] = []
-        for mname in snap["manifests"]:
-            with open(os.path.join(meta_dir, mname)) as f:
-                out.extend(json.load(f)["files"])
-        return out
+        return [e for mname in snap["manifests"] for e in self._manifest(mname)]
 
     def read(
         self,
@@ -390,8 +399,7 @@ class SnapshotTable:
         meta_dir = _metadata_dir(self.location)
         freed: list[str] = []
         for mname in sorted(drop_manifests):
-            with open(os.path.join(meta_dir, mname)) as f:
-                freed.extend(e["path"] for e in json.load(f)["files"])
+            freed.extend(e["path"] for e in self._manifest(mname))
 
         n = _current_version(self.location) + 1
         meta = {"format_version": 2, "snapshots": retained,
@@ -437,16 +445,14 @@ class SnapshotTable:
                     for s in _load_version(self.location, v)["snapshots"]:
                         reachable.update(s["manifests"])
         for name in reachable:
-            mp = os.path.join(meta_dir, name)
-            if not os.path.exists(mp):
+            if not os.path.exists(os.path.join(meta_dir, name)):
                 continue  # manifest removed by expire_snapshots(delete=True)
-            with open(mp) as f:
-                referenced.update(e["path"] for e in json.load(f)["files"])
+            referenced.update(os.path.abspath(e["path"]) for e in self._manifest(name))
         data_dir = os.path.join(self.location, "data")
         orphans = []
         for root, _dirs, names in os.walk(data_dir):
             for name in names:
                 p = os.path.join(root, name)
-                if name.endswith(".parquet") and p not in referenced:
+                if name.endswith(".parquet") and os.path.abspath(p) not in referenced:
                     orphans.append(p)
         return sorted(orphans)

@@ -256,12 +256,123 @@ def test_semi_anti_outer(spark):
     assert outer.count() == anti.count() + spatial_join(zones, pts, "contains", grid=GRID).count()
 
 
-def test_broadcast_matches_partitioned(spark):
-    zones = _zones_df(spark)
-    pts = _points_df(spark, 2.5, 2.5)
-    a = spatial_join(zones, pts, "contains", grid=GRID).count()
-    b = spatial_join(zones, pts, "contains", grid=GRID, broadcast="left").count()
-    assert a == b == 400
+# -- broadcast index probe vs the shuffled cell path ---------------------------
+
+_ID_EDGES = (-(2**63), 2**63 - 1)
+
+
+def _hazard_polys(spark, id_name, shift):
+    """Polygons (plus one line and one point) carrying the join hazards:
+    long ids at both int64 limits, a duplicate and a NULL id; a NULL
+    geometry; one concave polygon covering most of the grid; squares
+    sharing edges and vertices with a neighbour; geometries outside GRID."""
+    s = shift
+    geoms = [W.box(x + s, y + s, x + s + 5, y + s + 5) for x in range(0, 80, 20) for y in range(0, 80, 20)]
+    geoms += [
+        W.box(5 + s, 0, 10 + s, 5),  # shares an edge with the first square
+        W.box(5, 5, 8, 8),  # shares a vertex with it
+        W.box(21, 21, 24, 24),  # inside a square
+        W.polygon([(2, 2), (90, 2), (90, 10), (10, 10), (10, 90), (2, 90)]),  # many cells
+        W.box(120 + s, 120, 130 + s, 130),
+        W.box(-20, -20 + s, -10, -10 + s),
+        W.linestring([(0, 50 + s), (100, 50 + s)]),
+        W.point(20, 20),
+    ]
+    ids = list(range(len(geoms)))
+    ids[0], ids[1], ids[2], ids[3] = _ID_EDGES[0], _ID_EDGES[1], 7, 7
+    rows = [(i, bytearray(W.dumps(g))) for i, g in zip(ids, geoms)]
+    rows += [(None, bytearray(W.dumps(W.box(40, 40, 45, 45)))), (99, None)]
+    return spark.createDataFrame(rows, f"{id_name} long, wkb binary")
+
+
+def _hazard_points(spark):
+    """Lattice points on the squares' vertices and edges, points outside
+    GRID, and NULL rows, as coordinates and as WKB."""
+    xy = [(float(x), float(y)) for x in range(0, 100, 5) for y in range(0, 100, 5)]
+    xy += [(2.5, 2.5), (-15.0, -15.0), (125.0, 125.0), (150.0, 5.0)]
+    rows = [(i, x, y, bytearray(W.dumps(W.point(x, y)))) for i, (x, y) in enumerate(xy)]
+    rows[0] = (_ID_EDGES[0],) + rows[0][1:]
+    rows[1] = (_ID_EDGES[1],) + rows[1][1:]
+    rows += [(None, 1.0, 1.0, bytearray(W.dumps(W.point(1.0, 1.0)))), (5, None, None, None)]
+    return spark.createDataFrame(rows, "qid long, x double, y double, wkb binary")
+
+
+_HOWS = ("inner", "left_semi", "left_anti", "left_outer", "right_outer", "existence")
+_POLY_PREDICATES = tuple(p for p in K.PREDICATES if p != "disjoint")
+
+# (left, right, predicate, how, index side, extra spatial_join kwargs)
+_PARITY_CASES = (
+    [("zones", "points", "contains", "inner", "left", {})]
+    + [("polys", "polys_b", p, "inner", "right", {}) for p in _POLY_PREDICATES]
+    + [("polys", "polys_b", "intersects", h, ("left", "right")[i % 2], {}) for i, h in enumerate(_HOWS)]
+    + [("polys", "points_wkb", p, "inner", "left", {}) for p in ("contains", "covers", "touches")]
+    + [("points_wkb", "polys", p, h, "right", {}) for p, h in (("within", "left_anti"), ("coveredby", "right_outer"))]
+    + [("polys", "points_xy", p, h, "left", {"right_point_cols": ("x", "y")})
+       for p, h in (("contains", "inner"), ("intersects", "existence"), ("touches", "left_outer"),
+                    ("covers", "right_outer"))]
+    + [("polys", "points_xy", "contains", h, "left",
+        {"right_point_cols": ("x", "y"), "left_cover": "shape"}) for h in ("inner", "left_semi")]
+    + [("polys", "polys_b", "intersects", "inner", "right", {"grid": None}),
+       ("polys", "points_xy", "covers", "left_outer", "left", {"right_point_cols": ("x", "y"), "grid": None})]
+    + [("empty", "polys_b", "intersects", "left_outer", "left", {}),
+       ("polys", "empty", "intersects", "right_outer", "left", {}),
+       ("empty", "polys_b", "intersects", "inner", "right", {})]
+)
+
+
+@pytest.fixture(scope="module")
+def parity_sides(spark):
+    pts = _hazard_points(spark)
+    polys = _hazard_polys(spark, "aid", 0)
+    sides = {
+        "zones": _zones_df(spark),
+        "points": _points_df(spark, 2.5, 2.5),
+        "polys": polys,
+        "polys_b": _hazard_polys(spark, "bid", 3),
+        "points_xy": pts.drop("wkb"),
+        "points_wkb": pts.drop("x", "y"),
+        "empty": polys.where(F.lit(False)),
+    }
+    # cached and counted, every side has optimizer statistics, so the
+    # stat-less limit-count rule never picks the probe for the baseline
+    sides = {k: df.persist() for k, df in sides.items()}
+    for df in sides.values():
+        df.count()
+    yield sides
+    for df in sides.values():
+        df.unpersist()
+
+
+@pytest.mark.parametrize(
+    "lname, rname, pred, how, side, kw",
+    _PARITY_CASES,
+    ids=[f"{c[0]}-{c[1]}-{c[2]}-{c[3]}-{c[4]}" + ("-shape" if "left_cover" in c[5] else "")
+         + ("-inferred_grid" if "grid" in c[5] else "") for c in _PARITY_CASES],
+)
+def test_broadcast_matches_partitioned(spark, parity_sides, lname, rname, pred, how, side, kw):
+    """The broadcast index probe (a hinted side) returns the rows, column
+    names and types of the shuffled cell join (auto-broadcast off), for
+    every join form, predicate, index side and hazard.  Outside geometries
+    clamp to the border cells of either plan's grid, given or inferred (the
+    probe infers it from the index side alone)."""
+    left, right = parity_sides[lname], parity_sides[rname]
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "-1")
+    try:
+        kw = {"grid": GRID, **kw}  # grid=None: each plan infers its own grid
+        cell = spatial_join(left, right, pred, how=how, **kw)
+        probe = spatial_join(left, right, pred, how=how, broadcast=side, **kw)
+        plans = [df._jdf.queryExecution().executedPlan().toString() for df in (cell, probe)]
+        assert "MapInPandas" not in plans[0] and "MapInPandas" in plans[1]
+        key = lambda r: tuple((v is None, str(v)) for v in r)  # noqa: E731
+        want, got = sorted(cell.collect(), key=key), sorted(probe.collect(), key=key)
+    finally:
+        spark.conf.set(conf, old)
+    assert probe.columns == cell.columns and probe.dtypes == cell.dtypes
+    assert got == want
+    if (lname, rname) == ("zones", "points"):
+        assert len(got) == 400
 
 
 def test_range_query(spark):
@@ -366,6 +477,29 @@ def test_rectangle_fast_path_matches_kernel_refine(spark):
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
+def test_broadcast_keeps_values_pandas_would_change(spark):
+    """Columns the index probe carries through pandas come back exact: a
+    long and an array of longs next to a NULL (2^53 + 1 would round in
+    float64).  A column pandas cannot carry unchanged (a long inside a
+    struct, a timestamp past 2262) keeps the hinted join on the cell path."""
+    import datetime
+
+    big = 2**53 + 1
+    box = bytearray(W.dumps(W.box(0, 0, 2, 2)))
+    left = spark.createDataFrame(
+        [(big, [big, None], (big,), datetime.datetime(3000, 1, 1), box),
+         (None, None, (None,), None, box)],
+        "id long, arr array<long>, st struct<a:long>, ts timestamp, wkb binary",
+    ).coalesce(1)
+    right = spark.createDataFrame([(1, box)], "rid long, wkb binary")
+    for cols, probe in ((["id", "arr"], True), (["id", "st"], False), (["id", "ts"], False)):
+        side = left.select(*cols, "wkb")
+        j = spatial_join(side, right, "intersects", grid=GRID, broadcast="right")
+        assert ("MapInPandas" in j._jdf.queryExecution().executedPlan().toString()) == probe
+        key = lambda r: str(r)  # noqa: E731
+        assert sorted(j.select(*cols).collect(), key=key) == sorted(side.select(*cols).collect(), key=key)
+
+
 # -- plan shape: Python nodes and exchanges per join form --------------------------
 
 def _xy_df(spark, seed, id_name):
@@ -388,9 +522,10 @@ def _plan_shape_join(spark, form):
             pts, _xy_df(spark, 2, "qid"), 2.0, grid=GRID,
             left_point_cols=("x", "y"), right_point_cols=("x", "y"),
         )
-    if form == "wkb_polygons":
+    if form in ("wkb_polygons", "broadcast_wkb_polygons"):
         return spatial_join(
-            _squares_df(spark, 0, 0, 5), _squares_df(spark, 3, 3, 5), "intersects", grid=GRID
+            _squares_df(spark, 0, 0, 5), _squares_df(spark, 3, 3, 5), "intersects", grid=GRID,
+            broadcast="right" if form == "broadcast_wkb_polygons" else None,
         )
     # concave (L-shaped) zones: the kernel refine runs, not the rectangle path
     ells = [
@@ -405,19 +540,32 @@ def _plan_shape_join(spark, form):
     )
 
 
+# forms planned as the broadcast index probe: one mapInPandas, no exchange
+_MAP_IN_PANDAS = {"broadcast_wkb_polygons": 1, "concave_pip": 1}
+
+
 @pytest.mark.parametrize(
     "form, python_nodes, exchanges",
     [
         ("rect_window_points", 1, 1),  # zones' bbox UDF; broadcast build
         ("point_distance", 0, 2),  # zero-UDF; shuffled both sides
-        ("wkb_polygons", 3, 2),  # bbox UDF per side + refine UDF
-        ("concave_pip", 2, 1),  # zones' bbox UDF + point refine UDF
+        ("wkb_polygons", 3, 2),  # stat-less sides: the shuffled cell path
+        ("broadcast_wkb_polygons", 0, 0),  # hinted: the index probe
+        ("concave_pip", 0, 0),  # stat-less small zones: the index probe
     ],
 )
 def test_join_plan_shape(spark, form, python_nodes, exchanges):
-    """Pins how many Python-UDF nodes and exchanges each join form plans, so
-    a refactor cannot silently clone a UDF or add a shuffle."""
+    """Pins how many Python-UDF nodes, mapInPandas nodes and exchanges each
+    join form plans, so a refactor cannot silently clone a UDF, add a Python
+    runner to a stage or add a shuffle."""
     plan = _plan_shape_join(spark, form)._jdf.queryExecution().executedPlan().toString()
-    nodes = [re.match(r"[\s:|+-]*(\w+)", ln).group(1) for ln in plan.splitlines() if ln.strip()]
+    nodes = []
+    for ln in filter(str.strip, plan.splitlines()):
+        # "*(2) Project": a codegen stage id precedes the node in a plan
+        # that AQE does not wrap (no exchange)
+        m = re.match(r"[\s:|+*()\d-]*(\w+)", ln)
+        assert m, f"unparsed plan line {ln!r} in\n{plan}"
+        nodes.append(m.group(1))
     assert sum(n in ("ArrowEvalPython", "BatchEvalPython") for n in nodes) == python_nodes, plan
+    assert nodes.count("MapInPandas") == _MAP_IN_PANDAS.get(form, 0), plan
     assert sum(n.endswith("Exchange") for n in nodes) == exchanges, plan

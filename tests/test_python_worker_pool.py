@@ -24,7 +24,7 @@ import pyarrow as pa
 from pyspark.sql import functions as F
 
 from incubator_sedona_spark.geom import wkb as W
-from incubator_sedona_spark.operators import raster as R
+from incubator_sedona_spark.operators import joins, raster as R
 from incubator_sedona_spark.pipeline import components, dedup
 from incubator_sedona_spark.session import get_spark
 from incubator_sedona_spark.sources import datagen, geoparquet, iceberg, raster_codecs, shapefile
@@ -72,6 +72,29 @@ vecs = spark.range(0).select(F.col("id").alias("vec_id"),
 assert dedup.embedding_cosine_pairs_exact(
     vecs, scratch_dir=os.path.join(out, "gemm")).count() == 0
 
+# broadcast spatial joins whose refine runs the kernel: one index probe per
+# task (before, the stream stage held a bbox runner and a refine runner)
+def polys(n, off, step):
+    return spark.createDataFrame(pa.table({
+        "id": pa.array(range(n), pa.int64()),
+        "wkb": pa.array([W.dumps(W.box(i * step + off, off, i * step + off + 3, off + 3))
+                         for i in range(n)], pa.binary()),
+    }))
+
+
+assert joins.spatial_join(polys(40, 0, 2), polys(40, 1, 2), "intersects",
+                          broadcast="right").count() == 156
+ells = spark.createDataFrame(pa.table({
+    "zid": pa.array(range(4), pa.int64()),
+    "wkb": pa.array([W.dumps(W.polygon([(x, 0), (x + 8, 0), (x + 8, 3), (x + 3, 3), (x + 3, 8),
+                                        (x, 8)])) for x in range(0, 40, 10)], pa.binary()),
+}))
+pts = spark.createDataFrame(pa.table({"pid": pa.array(range(400), pa.int64()),
+                                      "x": pa.array([i % 40 + 0.5 for i in range(400)]),
+                                      "y": pa.array([i // 40 + 0.5 for i in range(400)])}))
+assert joins.spatial_join(ells, pts, "contains", right_point_cols=("x", "y"),
+                          left_rect=False, broadcast="left").count() == 4 * 8 * 3 + 4 * 3 * 5
+
 rows = processes()
 daemons = [r for r in rows if r["role"] == "daemon"]
 workers = [r for r in rows if r["role"].startswith("worker")]
@@ -82,10 +105,12 @@ spark.stop()
 
 def test_one_python_worker_pool(tmp_path):
     """Snapshot append, union-find dedup, GeoParquet write, shapefile read,
-    GeoTIFF sink and the zero-row exact cosine result, in a fresh session:
-    the JVM forks exactly one ``pyspark.daemon``, with no more live workers
-    than task slots.  Before these paths used Arrow, the first append forked
-    a second daemon."""
+    GeoTIFF sink, the zero-row exact cosine result and two broadcast spatial
+    joins with a kernel refine, in a fresh session: the JVM forks exactly
+    one ``pyspark.daemon``, with no more live workers than task slots.
+    Before these paths used Arrow, the first append forked a second daemon;
+    before the broadcast join was one index probe, its stream stage held two
+    Python runners per task."""
     job = tmp_path / "job.py"
     job.write_text(_JOB)
     work = tmp_path / "out"

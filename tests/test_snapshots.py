@@ -320,3 +320,27 @@ def test_snapshot_log_refuses_plain_parquet_location(spark, tmp_path):
         write_image_table(
             spark.createDataFrame(rows, schema), loc, snapshot_log=True
         )
+
+
+def test_copied_table_reads_and_frees_only_its_own_files(spark, tmp_path):
+    """Manifests store data-file paths relative to the table, so a copied
+    table reads its own files, lists none of them as orphans, and expiring
+    its snapshots deletes only files under the copy."""
+    import shutil
+
+    src, dst = str(tmp_path / "orig"), str(tmp_path / "copy")
+    t = SnapshotTable(src)
+    t.append(_batch(spark, 0, 10).coalesce(1))
+    t.append(_batch(spark, 10, 20).coalesce(1))
+    shutil.copytree(src, dst)
+    c = SnapshotTable(dst)
+
+    assert all(f["path"].startswith(dst + os.sep) for f in c.file_stats())
+    assert c.read(spark).count() == 20
+    assert c.orphan_files() == []
+
+    c.overwrite(_batch(spark, 100, 103).coalesce(1))
+    freed = c.expire_snapshots(keep_last=1, delete=True)
+    assert len(freed) == 2 and all(p.startswith(dst + os.sep) for p in freed)
+    assert c.read(spark).count() == 3
+    assert t.read(spark).count() == 20  # the original keeps every file
