@@ -21,7 +21,7 @@ BroadcastIndexJoinExec.scala:43-289), in two plans:
 - the broadcast index probe (BroadcastIndexJoinExec analog): when the refine
   needs the Python kernel and one side is small enough to broadcast, the
   driver collects that side once into a sorted cell index and ONE
-  ``mapInPandas`` streams the other side through it, covering, probing,
+  ``mapInArrow`` streams the other side through it, covering, probing,
   prefiltering and refining each Arrow batch in the same Python call.  Each
   task then holds one Python runner instead of two (a bbox UDF plus a
   refine UDF in the same stage), and the plan has no exchange.
@@ -34,12 +34,10 @@ from typing import Iterable
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType, BinaryType, BooleanType, ByteType, DateType, DecimalType, DoubleType, FloatType,
-    IntegerType, LongType, MapType, ShortType, StringType, StructType,
-)
+from pyspark.sql.types import ArrayType, BooleanType, DoubleType, LongType, StructField, StructType
 
 from incubator_sedona_spark.cells import Grid, choose_level, grid_for_bounds
 from incubator_sedona_spark.functions._udf import geom_batch_udf, geom_udf
@@ -577,66 +575,6 @@ def _probe_cells(grid: Grid, keys: np.ndarray, bb: np.ndarray) -> tuple[np.ndarr
     return row[grp], entry
 
 
-# column types pandas carries unchanged, NULLs included (a date as an object)
-_PANDAS_EXACT = (
-    StringType, BinaryType, BooleanType, ByteType, ShortType, IntegerType,
-    FloatType, DoubleType, DecimalType, DateType,
-)
-
-
-def _no_long_inside(t) -> bool:
-    if isinstance(t, ArrayType):
-        return _no_long_inside(t.elementType)
-    if isinstance(t, MapType):
-        return _no_long_inside(t.keyType) and _no_long_inside(t.valueType)
-    if isinstance(t, StructType):
-        return all(_no_long_inside(f.dataType) for f in t)
-    return isinstance(t, _PANDAS_EXACT)
-
-
-def _crosses_pandas(t) -> bool:
-    """Whether the probe carries a column of type ``t`` through pandas
-    unchanged.  A long, or an array of longs, travels split in two
-    (:func:`_encode_cols`); a long nested deeper turns into float64 next to
-    a NULL, a timestamp past 2262 overflows pandas' nanoseconds, and some
-    types Arrow does not carry.  A side with such a column keeps the cell
-    join."""
-    if isinstance(t, ArrayType) and isinstance(t.elementType, LongType):
-        return True
-    return isinstance(t, LongType) or _no_long_inside(t)
-
-
-def _encode_cols(df: DataFrame, tag: str) -> tuple[list[Column], list[Column]]:
-    """Expressions that carry ``df``'s columns through pandas under the
-    positional names ``tag0, tag1, ...``, and the ones that restore them.
-
-    A long column, or an array of longs, travels as two 32-bit halves:
-    pandas turns longs next to a NULL into float64, exact only to 2^53."""
-    def hi(v):
-        return F.shiftright(v, 32)
-
-    def lo(v):
-        return v.bitwiseAND(0xFFFFFFFF)
-
-    def join(h, l):
-        return F.shiftleft(h, 32).bitwiseOR(l)
-
-    enc, dec = [], []
-    for i, f in enumerate(df.schema.fields):
-        c, name, t = F.col(f.name), f"{tag}{i}", f.dataType
-        h, l = F.col(name + "h"), F.col(name + "l")
-        if isinstance(t, LongType):
-            enc += [hi(c).alias(name + "h"), lo(c).alias(name + "l")]
-            dec.append(join(h, l))
-        elif isinstance(t, ArrayType) and isinstance(t.elementType, LongType):
-            enc += [F.transform(c, hi).alias(name + "h"), F.transform(c, lo).alias(name + "l")]
-            dec.append(F.zip_with(h, l, join))
-        else:
-            enc.append(c.alias(name))
-            dec.append(F.col(name))
-    return enc, dec
-
-
 def _probe_join(
     left: DataFrame,
     right: DataFrame,
@@ -653,7 +591,7 @@ def _probe_join(
 ) -> DataFrame:
     """Broadcast index join (BroadcastIndexJoinExec.scala:43-289 analog):
     the ``index`` side is collected once and built into a flat cell index on
-    the driver; one ``mapInPandas`` over the other (stream) side probes it.
+    the driver; one ``mapInArrow`` over the other (stream) side probes it.
 
     Build: NULL geometries dropped, bboxes from ``W.bounds_batch``, cells
     from the bbox cover (or ``cover_geometry`` for ``shape_cover``), stored
@@ -665,8 +603,11 @@ def _probe_join(
     replaces the reference-point dedup), the bbox prefilter, then the kernel
     refine.  Coordinate points are grouped by index geometry, each parsed
     once per task; WKB pairs go through ``K.eval_predicate_batch``, which
-    parses each geometry once per batch.  The result is the inner pairs with
-    the cell join's names and types; the ``how`` finish is shared.
+    parses each geometry once per batch.  Both sides' rows stay Arrow from
+    collect to output (``take`` on the index and on each stream batch), so
+    every column type comes back exactly as it went in.  The result is the
+    inner pairs with the cell join's names and types; the ``how`` finish is
+    shared.
     """
     _check_srid_columns(left, right, assume_same_crs)
     left_cols, right_cols = list(left.columns), list(right.columns)
@@ -674,16 +615,17 @@ def _probe_join(
     idx_df, stream = (left, right) if index == "left" else (right, left)
     idx_geom, stream_geom = (left_geom, right_geom) if index == "left" else (right_geom, left_geom)
 
-    # build: the index side's rows, as pandas, in Spark's own conversion
-    idx_enc, idx_dec = _encode_cols(idx_df, "__i")
-    idx_sel = idx_df.select(idx_enc)
-    ipdf = idx_sel.toPandas()
-    ig = f"__i{idx_df.columns.index(idx_geom)}"
-    ipdf = ipdf[ipdf[ig].notna()]
-    iwkb = np.array([bytes(b) for b in ipdf[ig]], dtype=object)
+    # build: the index side's rows as one Arrow batch, finite geometries only
+    itab = idx_df.toArrow()
+    ig = idx_df.columns.index(idx_geom)
+    itab = itab.filter(itab.column(ig).is_valid())
+    iwkb = itab.column(ig).to_numpy(zero_copy_only=False)
     ibb = W.bounds_batch(iwkb)
     finite = np.isfinite(ibb).all(axis=1)
-    ipdf, iwkb, ibb = ipdf[finite].reset_index(drop=True), iwkb[finite], ibb[finite]
+    itab, iwkb, ibb = itab.filter(finite), iwkb[finite], ibb[finite]
+    ibatch = pa.RecordBatch.from_arrays(
+        [c.combine_chunks() for c in itab.columns], names=itab.column_names
+    )
     if grid is None:
         # infer_grid's rule over the index bboxes alone
         bb = ibb if len(ibb) else np.array([[0.0, 0.0, 1.0, 1.0]])
@@ -702,29 +644,40 @@ def _probe_join(
     keys, kpos = cells[order], rows[order]
 
     # probe: the stream side's columns, plus double coordinates for a point side
-    stream_enc, stream_dec = _encode_cols(stream, "__s")
+    n_stream = len(stream.columns)
     coords = right_point_cols is not None
+    src = stream
     if coords:
-        stream_enc += [F.col(c).cast("double").alias(n) for c, n in zip(right_point_cols, ("__x", "__y"))]
-    src = stream.select(stream_enc)
-    scols = [c for c in src.columns if c not in ("__x", "__y")]
-    sg = None if coords else f"__s{stream.columns.index(stream_geom)}"
-    n_idx = max(len(ipdf), 1)
+        xy = zip(right_point_cols, ("__x", "__y"))
+        src = stream.select("*", *(F.col(c).cast("double").alias(n) for c, n in xy))
+    sg = None if coords else stream.columns.index(stream_geom)
+    n_idx = max(ibatch.num_rows, 1)
 
     def lr(idx, strm):
         """``(index, stream)`` parts in left, right order."""
         return (idx, strm) if index == "left" else (strm, idx)
 
+    # positional names: the two sides may share column names
+    out_fields = [
+        f"__{tag}{i}"
+        for tag, n in lr(("i", len(idx_df.columns)), ("s", n_stream))
+        for i in range(n)
+    ]
+
     def _probe(batches):
+        # the index geometries from the shipped batch, not a second copy
+        iwkb = ibatch.column(ig).to_numpy(zero_copy_only=False)
         geoms: dict[int, W.Geometry] = {}  # index position -> parsed, for the task
-        for pdf in batches:
+        for batch in batches:
             if coords:
-                sbb = pdf[["__x", "__y", "__x", "__y"]].to_numpy(np.float64)
+                x, y = (batch.column(n_stream + k).to_numpy(zero_copy_only=False) for k in (0, 1))
+                sbb = np.column_stack([x, y, x, y])
                 valid = np.flatnonzero(np.isfinite(sbb).all(axis=1))
                 sbb = sbb[valid]
             else:
-                valid = np.flatnonzero(pdf[sg].notna().to_numpy())
-                swkb = pdf[sg].to_numpy()[valid]
+                col = batch.column(sg)
+                valid = np.flatnonzero(col.is_valid().to_numpy(zero_copy_only=False))
+                swkb = col.to_numpy(zero_copy_only=False)[valid]
                 sbb = W.bounds_batch(swkb)
                 fin = np.isfinite(sbb).all(axis=1)
                 valid, swkb, sbb = valid[fin], swkb[fin], sbb[fin]
@@ -748,15 +701,16 @@ def _probe_join(
                 hit = K.eval_predicate_batch(predicate, *lr(iwkb[ipos], swkb[srow]))
             srow, ipos = valid[srow[hit]], ipos[hit]
             if len(srow):
-                s_part = pdf[scols].iloc[srow].reset_index(drop=True)
-                i_part = ipdf.iloc[ipos].reset_index(drop=True)
-                yield pd.concat(lr(i_part, s_part), axis=1)
+                lcols, rcols = lr(ibatch.take(ipos).columns, batch.take(srow).columns[:n_stream])
+                yield pa.RecordBatch.from_arrays(lcols + rcols, names=out_fields)
 
-    schema = StructType([f for part in lr(idx_sel.schema, src.select(scols).schema) for f in part])
-    dec = [d for part in lr(idx_dec, stream_dec) for d in part]
+    fields = [f for part in lr(idx_df.schema.fields, stream.schema.fields) for f in part]
+    schema = StructType([StructField(n, f.dataType, f.nullable) for n, f in zip(out_fields, fields)])
     lnames = set(left_cols)
     names = list(left.columns) + [c + "_r" if c in lnames else c for c in right.columns]
-    inner = src.mapInPandas(_probe, schema).select([d.alias(n) for d, n in zip(dec, names)])
+    inner = src.mapInArrow(_probe, schema).select(
+        [F.col(f).alias(n) for f, n in zip(out_fields, names)]
+    )
     if how == "inner":
         return inner
     if how == "right_outer":
@@ -793,12 +747,15 @@ def spatial_join(
     ``broadcast``: "left"/"right" names the side to broadcast.  When the
     refine needs the Python kernel (WKB x WKB, or non-rectangle polygons x
     coordinate points) and neither side streams, the broadcast side becomes
-    a driver-built cell index that one ``mapInPandas`` over the other side
+    a driver-built cell index that one ``mapInArrow`` over the other side
     probes (BroadcastIndexJoinExec analog, see :func:`_probe_join`).  The
     side is the hinted one, else a stat-less small left side (one bounded
     count, below), else the side Catalyst itself would broadcast: optimizer
     size at most ``spark.sql.autoBroadcastJoinThreshold``, the smaller one,
     the right one on a tie.  A coordinate-point side is never the index.
+    The index side is read once, when ``spatial_join`` is called: the
+    returned DataFrame keeps probing those rows, so re-running it after the
+    index side's source changes does not see the change.
     Every other join (no broadcast side, a rectangle or no refine,
     streaming) is the cell equi-join, where the hint is a Catalyst broadcast
     hint on that exploded side.  ``how``: inner, left_semi, left_anti,
@@ -870,9 +827,7 @@ def spatial_join(
     )
     if refine and not rect and not streaming:
         index = broadcast or _auto_index_side(left, right, right_point_cols)
-        if (index == "left" or (index == "right" and right_point_cols is None)) and all(
-            _crosses_pandas(f.dataType) for f in (*left.schema, *right.schema)
-        ):
+        if index == "left" or (index == "right" and right_point_cols is None):
             return _probe_join(
                 left, right, index, predicate, left_geom, right_geom, grid, level, how,
                 right_point_cols, left_cover == "shape", assume_same_crs,

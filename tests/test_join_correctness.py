@@ -261,11 +261,17 @@ def test_semi_anti_outer(spark):
 _ID_EDGES = (-(2**63), 2**63 - 1)
 
 
+def _attr(i):
+    """An attribute double: NaN on every third row, NULL on every seventh."""
+    return None if i % 7 == 6 else float("nan") if i % 3 == 0 else i / 4
+
+
 def _hazard_polys(spark, id_name, shift):
     """Polygons (plus one line and one point) carrying the join hazards:
     long ids at both int64 limits, a duplicate and a NULL id; a NULL
     geometry; one concave polygon covering most of the grid; squares
-    sharing edges and vertices with a neighbour; geometries outside GRID."""
+    sharing edges and vertices with a neighbour; geometries outside GRID;
+    NaN and NULL attribute doubles."""
     s = shift
     geoms = [W.box(x + s, y + s, x + s + 5, y + s + 5) for x in range(0, 80, 20) for y in range(0, 80, 20)]
     geoms += [
@@ -280,21 +286,23 @@ def _hazard_polys(spark, id_name, shift):
     ]
     ids = list(range(len(geoms)))
     ids[0], ids[1], ids[2], ids[3] = _ID_EDGES[0], _ID_EDGES[1], 7, 7
-    rows = [(i, bytearray(W.dumps(g))) for i, g in zip(ids, geoms)]
-    rows += [(None, bytearray(W.dumps(W.box(40, 40, 45, 45)))), (99, None)]
-    return spark.createDataFrame(rows, f"{id_name} long, wkb binary")
+    rows = [(i, _attr(k), bytearray(W.dumps(g))) for k, (i, g) in enumerate(zip(ids, geoms))]
+    rows += [(None, float("nan"), bytearray(W.dumps(W.box(40, 40, 45, 45)))), (99, 1.0, None)]
+    return spark.createDataFrame(rows, f"{id_name} long, val double, wkb binary")
 
 
 def _hazard_points(spark):
     """Lattice points on the squares' vertices and edges, points outside
-    GRID, and NULL rows, as coordinates and as WKB."""
+    GRID, and NULL rows, as coordinates and as WKB, with NaN and NULL
+    attribute doubles."""
     xy = [(float(x), float(y)) for x in range(0, 100, 5) for y in range(0, 100, 5)]
     xy += [(2.5, 2.5), (-15.0, -15.0), (125.0, 125.0), (150.0, 5.0)]
-    rows = [(i, x, y, bytearray(W.dumps(W.point(x, y)))) for i, (x, y) in enumerate(xy)]
+    rows = [(i, x, y, _attr(i), bytearray(W.dumps(W.point(x, y)))) for i, (x, y) in enumerate(xy)]
     rows[0] = (_ID_EDGES[0],) + rows[0][1:]
     rows[1] = (_ID_EDGES[1],) + rows[1][1:]
-    rows += [(None, 1.0, 1.0, bytearray(W.dumps(W.point(1.0, 1.0)))), (5, None, None, None)]
-    return spark.createDataFrame(rows, "qid long, x double, y double, wkb binary")
+    rows += [(None, 1.0, 1.0, float("nan"), bytearray(W.dumps(W.point(1.0, 1.0)))),
+             (5, None, None, None, None)]
+    return spark.createDataFrame(rows, "qid long, x double, y double, val double, wkb binary")
 
 
 _HOWS = ("inner", "left_semi", "left_anti", "left_outer", "right_outer", "existence")
@@ -352,7 +360,8 @@ def parity_sides(spark):
 def test_broadcast_matches_partitioned(spark, parity_sides, lname, rname, pred, how, side, kw):
     """The broadcast index probe (a hinted side) returns the rows, column
     names and types of the shuffled cell join (auto-broadcast off), for
-    every join form, predicate, index side and hazard.  Outside geometries
+    every join form, predicate, index side and hazard (NaN attributes stay
+    NaN, not NULL, on either side).  Outside geometries
     clamp to the border cells of either plan's grid, given or inferred (the
     probe infers it from the index side alone)."""
     left, right = parity_sides[lname], parity_sides[rname]
@@ -364,9 +373,10 @@ def test_broadcast_matches_partitioned(spark, parity_sides, lname, rname, pred, 
         cell = spatial_join(left, right, pred, how=how, **kw)
         probe = spatial_join(left, right, pred, how=how, broadcast=side, **kw)
         plans = [df._jdf.queryExecution().executedPlan().toString() for df in (cell, probe)]
-        assert "MapInPandas" not in plans[0] and "MapInPandas" in plans[1]
+        assert "MapInArrow" not in plans[0] and "MapInArrow" in plans[1]
+        # str keeps NULL and NaN apart and compares NaN equal to NaN
         key = lambda r: tuple((v is None, str(v)) for v in r)  # noqa: E731
-        want, got = sorted(cell.collect(), key=key), sorted(probe.collect(), key=key)
+        want, got = sorted(map(key, cell.collect())), sorted(map(key, probe.collect()))
     finally:
         spark.conf.set(conf, old)
     assert probe.columns == cell.columns and probe.dtypes == cell.dtypes
@@ -477,27 +487,34 @@ def test_rectangle_fast_path_matches_kernel_refine(spark):
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
-def test_broadcast_keeps_values_pandas_would_change(spark):
-    """Columns the index probe carries through pandas come back exact: a
-    long and an array of longs next to a NULL (2^53 + 1 would round in
-    float64).  A column pandas cannot carry unchanged (a long inside a
-    struct, a timestamp past 2262) keeps the hinted join on the cell path."""
+def test_broadcast_probe_keeps_values_exact(spark):
+    """The index probe carries every column type as Arrow, so values come
+    back exactly on either side: a NaN double stays NaN (not NULL) next to a
+    NULL, longs past 2^53 stay exact alone, in an array, a struct and a map,
+    and a timestamp past 2262, a decimal and a date round-trip."""
     import datetime
+    import decimal
+    import math
 
     big = 2**53 + 1
     box = bytearray(W.dumps(W.box(0, 0, 2, 2)))
-    left = spark.createDataFrame(
-        [(big, [big, None], (big,), datetime.datetime(3000, 1, 1), box),
-         (None, None, (None,), None, box)],
-        "id long, arr array<long>, st struct<a:long>, ts timestamp, wkb binary",
+    side = spark.createDataFrame(
+        [(big, float("nan"), [big, None], (big,), {"k": big}, datetime.datetime(3000, 1, 1),
+          decimal.Decimal("1.25"), datetime.date(2999, 1, 2), box),
+         (None, None, None, (None,), None, None, None, None, box)],
+        "id long, d double, arr array<long>, st struct<a:long>, m map<string,long>, "
+        "ts timestamp, dec decimal(10,2), dt date, wkb binary",
     ).coalesce(1)
-    right = spark.createDataFrame([(1, box)], "rid long, wkb binary")
-    for cols, probe in ((["id", "arr"], True), (["id", "st"], False), (["id", "ts"], False)):
-        side = left.select(*cols, "wkb")
-        j = spatial_join(side, right, "intersects", grid=GRID, broadcast="right")
-        assert ("MapInPandas" in j._jdf.queryExecution().executedPlan().toString()) == probe
-        key = lambda r: str(r)  # noqa: E731
-        assert sorted(j.select(*cols).collect(), key=key) == sorted(side.select(*cols).collect(), key=key)
+    other = spark.createDataFrame([(1, float("nan"), box)], "rid long, d double, wkb binary")
+    cols = [c for c in side.columns if c != "wkb"]
+    for index in ("left", "right"):
+        j = spatial_join(side, other, "intersects", grid=GRID, broadcast=index)
+        assert "MapInArrow" in j._jdf.queryExecution().executedPlan().toString()
+        got = sorted(j.select(*cols, "d_r").collect(), key=str)
+        want = sorted(side.select(*cols).collect(), key=str)
+        # NaN != NaN, so compare reprs, which also keep NaN and NULL apart
+        assert [str(r[:-1]) for r in got] == [str(tuple(r)) for r in want]
+        assert all(math.isnan(r.d_r) for r in got)
 
 
 # -- plan shape: Python nodes and exchanges per join form --------------------------
@@ -540,8 +557,8 @@ def _plan_shape_join(spark, form):
     )
 
 
-# forms planned as the broadcast index probe: one mapInPandas, no exchange
-_MAP_IN_PANDAS = {"broadcast_wkb_polygons": 1, "concave_pip": 1}
+# forms planned as the broadcast index probe: one mapInArrow, no exchange
+_MAP_IN_ARROW = {"broadcast_wkb_polygons": 1, "concave_pip": 1}
 
 
 @pytest.mark.parametrize(
@@ -555,7 +572,7 @@ _MAP_IN_PANDAS = {"broadcast_wkb_polygons": 1, "concave_pip": 1}
     ],
 )
 def test_join_plan_shape(spark, form, python_nodes, exchanges):
-    """Pins how many Python-UDF nodes, mapInPandas nodes and exchanges each
+    """Pins how many Python-UDF nodes, mapInArrow nodes and exchanges each
     join form plans, so a refactor cannot silently clone a UDF, add a Python
     runner to a stage or add a shuffle."""
     plan = _plan_shape_join(spark, form)._jdf.queryExecution().executedPlan().toString()
@@ -567,5 +584,5 @@ def test_join_plan_shape(spark, form, python_nodes, exchanges):
         assert m, f"unparsed plan line {ln!r} in\n{plan}"
         nodes.append(m.group(1))
     assert sum(n in ("ArrowEvalPython", "BatchEvalPython") for n in nodes) == python_nodes, plan
-    assert nodes.count("MapInPandas") == _MAP_IN_PANDAS.get(form, 0), plan
+    assert nodes.count("MapInArrow") == _MAP_IN_ARROW.get(form, 0), plan
     assert sum(n.endswith("Exchange") for n in nodes) == exchanges, plan
