@@ -527,15 +527,21 @@ def _plan_size(df: DataFrame) -> int | None:
         return None
 
 
+def _broadcast_size(df: DataFrame) -> int | None:
+    """The optimizer's size of ``df`` when Catalyst would broadcast it: at most
+    the session's ``spark.sql.autoBroadcastJoinThreshold`` (-1 turns it off)."""
+    limit = df.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    est = _plan_size(df)
+    return est if est is not None and est <= limit else None
+
+
 def _auto_index_side(left: DataFrame, right: DataFrame, right_point_cols) -> str | None:
-    """The side Catalyst would broadcast: sizeInBytes at most the session's
-    ``spark.sql.autoBroadcastJoinThreshold`` (-1 turns it off).  The smaller
-    qualifying side wins, the right one on a tie (BuildRight); a side given
-    by coordinate columns is never the index."""
-    limit = left.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    """The side Catalyst would broadcast (:func:`_broadcast_size`).  The
+    smaller qualifying side wins, the right one on a tie (BuildRight); a side
+    given by coordinate columns is never the index."""
     sides = {"left": left} if right_point_cols is not None else {"left": left, "right": right}
-    sizes = {side: _plan_size(df) for side, df in sides.items()}
-    sizes = {side: est for side, est in sizes.items() if est is not None and est <= limit}
+    sizes = {side: _broadcast_size(df) for side, df in sides.items()}
+    sizes = {side: est for side, est in sizes.items() if est is not None}
     return min(sizes, key=lambda side: (sizes[side], side == "left")) if sizes else None
 
 
@@ -563,14 +569,20 @@ def _bbox_cells(grid: Grid, bb: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return row[grp], grid.pack(ix[grp], iy)
 
 
-def _probe_cells(grid: Grid, keys: np.ndarray, bb: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """(row, entry) for every index entry in a cell each bbox covers.  Keys
-    pack (ix, iy) in that order, so one grid column of a bbox is one key
-    range: one pair of ``searchsorted`` calls per column, not per cell."""
-    ix0, iy0, ix1, iy1 = _bbox_range(grid, bb)
+def _key_ranges(grid: Grid, keys: np.ndarray, ix0, iy0, ix1, iy1):
+    """(row, lo, hi): the index entries ``keys[lo:hi]`` in one grid column of
+    each cell rectangle [ix0, ix1] x [iy0, iy1].  Keys pack (ix, iy) in that
+    order, so one column of a rectangle is one key range: one pair of
+    ``searchsorted`` calls per column, not per cell."""
     row, ix = _expand(ix0, ix1 - ix0 + 1)
     lo = np.searchsorted(keys, grid.pack(ix, iy0[row]), "left")
     hi = np.searchsorted(keys, grid.pack(ix, iy1[row]), "right")
+    return row, lo, hi
+
+
+def _probe_cells(grid: Grid, keys: np.ndarray, bb: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(row, entry) for every index entry in a cell each bbox covers."""
+    row, lo, hi = _key_ranges(grid, keys, *_bbox_range(grid, bb))
     grp, entry = _expand(lo, hi - lo)
     return row[grp], entry
 

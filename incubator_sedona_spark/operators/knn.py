@@ -9,23 +9,36 @@
 - ``knn_join``: absent from this reference snapshot (it only has single-query
   kNN); built here by grid cell-ring expansion with a guaranteed-distance
   termination bound: after searching all cells within Chebyshev ring R of a
-  point's own cell, any unseen candidate is farther than the point's distance
-  to the searched-region border, so a point whose k-th neighbor is closer than
-  that bound is provably complete.
+  point's own cell, any unseen candidate is at least the point's distance to
+  the searched-region border away, so a point whose k-th neighbor is closer
+  than that bound is provably complete.  Two plans run it:
+
+  - the broadcast probe (:func:`_knn_probe`, the BroadcastIndexJoinExec
+    shape of ``joins._probe_join``): when the right side of a point kNN is
+    small enough to broadcast, the driver builds a sorted cell index of it
+    once and ONE ``mapInArrow`` over the left side expands each point's
+    ring in numpy until it is complete — one stage, no exchange;
+  - the ring schedule: a fixed [R0, 8*R0, cross] sequence of native
+    equi-join + window top-k rounds, for right sides above the broadcast
+    threshold, WKB right geometries and streaming.
 """
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType
+from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
 from incubator_sedona_spark.cells import Grid
 from incubator_sedona_spark.geom import kernel as K
 from incubator_sedona_spark.geom import wkb as Wk
-from incubator_sedona_spark.operators.joins import with_bbox
+from incubator_sedona_spark.operators.joins import _broadcast_size, _expand, _key_ranges, with_bbox
 
 
 def _geom_points_dist_udf(geom_col, x_col, y_col):
@@ -77,6 +90,170 @@ def knn_query(
     return out.orderBy(*order).limit(k)
 
 
+def _finite(x: str, y: str) -> Column:
+    """Both coordinates non-NULL and finite (NaN compares above +inf)."""
+    inf = F.lit(float("inf"))
+    return (F.abs(F.col(x)) < inf) & (F.abs(F.col(y)) < inf)
+
+
+def _knn_grid(minx, miny, maxx, maxy, n_right: int, k: int) -> Grid:
+    """The auto grid over the given bounds: a level at which a cell holds
+    ~2k right points, so ring R=1 already holds >= k with high probability
+    and the candidate fan-in stays O(k), not O(density)."""
+    cells = max(1.0, n_right / max(float(2 * k), 1.0))
+    level = int(min(12, max(2, round(math.log(cells, 4)))))
+    pad = 1e-9 + 1e-6 * max(maxx - minx, maxy - miny, 1.0)
+    return Grid(float(minx), float(miny), float(maxx) + pad, float(maxy) + pad, level)
+
+
+def _first_ring(grid: Grid, n_right: int, k: int) -> int:
+    """The smallest R whose (2R+1)^2-cell square is expected to hold >= 2k
+    right points, in [1, n]."""
+    density = max(n_right / float(grid.n * grid.n), 1e-12)
+    r0 = int(np.ceil((np.sqrt(2.0 * k / density) - 1.0) / 2.0))
+    return max(1, min(r0, grid.n))
+
+
+def _doubles(col: pa.Array) -> np.ndarray:
+    """A numeric Arrow column as float64, the way Spark casts it."""
+    return col.cast(pa.float64(), safe=False).to_numpy(zero_copy_only=False)
+
+
+def _ascending_rank(col: pa.Array) -> np.ndarray:
+    """Each value's position in Spark's ascending order: NULL first, NaN
+    after every number (Arrow alone would put NaN with the NULLs)."""
+    keys = {"nan": pc.is_nan(col), "v": col} if pa.types.is_floating(col.type) else {"v": col}
+    order = pc.sort_indices(
+        pa.table(keys), sort_keys=[(k, "ascending") for k in keys], null_placement="at_start"
+    ).to_numpy()
+    rank = np.empty(len(order), np.int64)
+    rank[order] = np.arange(len(order))
+    return rank
+
+
+# candidate pairs one probe round holds at once: ~50 B of numpy temporaries
+# each, so ~50 MB per task even when every point of a batch falls back to
+# scanning the whole index (points far outside the right side's extent)
+_ROUND_PAIRS = 1 << 20
+
+
+def _knn_probe(
+    left: DataFrame,
+    right: DataFrame,
+    k: int,
+    grid: Grid | None,
+    left_id: str,
+    left_x: str,
+    left_y: str,
+    right_x: str,
+    right_y: str,
+    dist_col: str,
+    rank_col: str,
+    tiebreak: str | None,
+) -> DataFrame:
+    """Broadcast kNN join: the reference's per-partition heap over a local
+    index (KNNQuery.java:51-73) in the BroadcastIndexJoinExec shape.
+
+    Both sides hold finite coordinates only (``knn_join`` filters them).
+
+    Build: the right side is collected once (``toArrow``) and stored as
+    sorted packed cell keys with their row positions (``joins._probe_join``'s
+    layout).  Without a ``grid`` the grid is sized from the right
+    coordinates alone, by the ring path's level rule, so no aggregate job
+    runs.  The tiebreak becomes one ascending rank per right row, in Spark's
+    order.
+
+    Probe: one ``mapInArrow`` over (``left_id``, x, y).  Per Arrow batch,
+    the pending points probe their (2R+1)^2-cell squares (one key range per
+    grid column), rank candidates by (distance, tiebreak rank) and finish
+    when they hold k candidates whose k-th distance is strictly below the
+    square's border distance (a side clipped at the grid edge is infinitely
+    far: nothing lies beyond it), or the square covers the grid.  The others
+    grow their ring — to the k-th distance when they have k candidates, else
+    double — and go again.  Both sides' rows stay Arrow (``take``), so the
+    output has the ring path's names, order and types.
+    """
+    rtab = right.toArrow()
+    rbatch = pa.RecordBatch.from_arrays(
+        [c.combine_chunks() for c in rtab.columns], names=rtab.column_names
+    )
+    rx, ry = (_doubles(rbatch.column(c)) for c in (right_x, right_y))
+    if tiebreak is None:
+        tb = np.zeros(len(rx), np.int64)
+    elif tiebreak in rbatch.schema.names:
+        tb = _ascending_rank(rbatch.column(tiebreak))
+    else:
+        raise ValueError(f"tiebreak {tiebreak!r} is not a right-side column")
+    if grid is None:
+        bb = (rx.min(), ry.min(), rx.max(), ry.max()) if len(rx) else (0.0, 0.0, 1.0, 1.0)
+        grid = _knn_grid(*bb, len(rx), k)
+    cells = grid.point_cells(rx, ry)
+    kpos = np.argsort(cells, kind="stable")
+    keys = cells[kpos]
+    r0, n = _first_ring(grid, len(rx), k), grid.n
+
+    def _border(p, lo, hi, lo_edge, cw):
+        """Distance from coordinates ``p`` to the searched cells [lo, hi]
+        along one axis: infinite on a side clipped at the grid edge."""
+        near = np.where(lo == 0, np.inf, p - (lo_edge + lo * cw))
+        far = np.where(hi == n - 1, np.inf, lo_edge + (hi + 1) * cw - p)
+        return np.minimum(near, far)
+
+    def _probe(batches):
+        for batch in batches:
+            lx, ly = _doubles(batch.column(1)), _doubles(batch.column(2))
+            ix, iy = grid.cell_index(lx, ly)
+            reach = np.full(len(lx), r0, np.int64)
+            pend = np.arange(len(lx))
+            found = []  # (point, right position, distance, rank) of finished points
+            while len(pend):
+                r = reach[pend]
+                x0, x1 = np.maximum(ix[pend] - r, 0), np.minimum(ix[pend] + r, n - 1)
+                y0, y1 = np.maximum(iy[pend] - r, 0), np.minimum(iy[pend] + r, n - 1)
+                grp, lo, hi = _key_ranges(grid, keys, x0, y0, x1, y1)
+                per = np.bincount(grp, hi - lo, len(pend))
+                part = ((np.cumsum(per) - per) // _ROUND_PAIRS)[grp]
+                kth = np.full(len(pend), np.inf)
+                top = []
+                for c in np.unique(part):
+                    at = part == c
+                    g, entry = _expand(lo[at], (hi - lo)[at])
+                    p, e = grp[at][g], kpos[entry]
+                    d = np.sqrt((lx[pend[p]] - rx[e]) ** 2 + (ly[pend[p]] - ry[e]) ** 2)
+                    o = np.lexsort((tb[e], d, p))
+                    p, e, d = p[o], e[o], d[o]
+                    rank = np.arange(len(p)) - np.searchsorted(p, p)
+                    kth[p[rank == k - 1]] = d[rank == k - 1]
+                    keep = rank < k
+                    top.append((p[keep], e[keep], d[keep], rank[keep]))
+                border = np.minimum(
+                    _border(lx[pend], x0, x1, grid.minx, grid.cw),
+                    _border(ly[pend], y0, y1, grid.miny, grid.ch),
+                )
+                done = (kth < border) | (border == np.inf)
+                for p, e, d, rank in top:
+                    at = done[p]
+                    found.append((pend[p[at]], e[at], d[at], rank[at]))
+                need = np.floor(np.where(np.isfinite(kth), kth, 0.0) / min(grid.cw, grid.ch)) + 1
+                reach[pend] = np.minimum(np.maximum(2 * r, need), n - 1)
+                pend = pend[~done]
+            if found:
+                q, e, d, rank = (np.concatenate(a) for a in zip(*found))
+                cols = batch.take(pa.array(q)).columns + rbatch.take(pa.array(e)).columns
+                cols += [pa.array(d, pa.float64()), pa.array(rank + 1, pa.int32())]
+                yield pa.RecordBatch.from_arrays(cols, names=out_fields)
+
+    src = left.select(F.col(left_id), F.col(left_x).alias("__lx"), F.col(left_y).alias("__ly"))
+    fields = src.schema.fields + right.schema.fields
+    fields += [StructField(dist_col, DoubleType()), StructField(rank_col, IntegerType())]
+    out_fields = [f"__c{i}" for i in range(len(fields))]
+    schema = StructType([StructField(c, f.dataType, f.nullable) for c, f in zip(out_fields, fields)])
+    names = [left_id, left_x + "_l", left_y + "_l", *right.columns, dist_col, rank_col]
+    return src.mapInArrow(_probe, schema).select(
+        [F.col(c).alias(n) for c, n in zip(out_fields, names)]
+    )
+
+
 def knn_join(
     left: DataFrame,
     right: DataFrame,
@@ -94,13 +271,31 @@ def knn_join(
 ) -> DataFrame:
     """For every left point, its k nearest right rows.
 
-    Iterative cell-ring expansion over a fixed schedule: the (2R+1)^2 cell
-    square for R = R0, then 8*R0, then a cross join of the remaining points
-    (see the schedule below); a left point finishes when its k-th candidate
-    distance <= its distance to the searched-region border (provably no closer
-    point outside).  Each round is one native equi-join + window top-k; at
-    cluster scale the expensive first ring resolves the dense majority and the
-    tail rounds touch few rows (AQE coalesces them).
+    Output: ``left_id``, ``<left_x>_l``, ``<left_y>_l``, the right columns,
+    ``dist_col`` (double) and ``rank_col`` (int, 1..k by distance, then
+    ``tiebreak`` ascending with NULL first; ``tiebreak`` names a right
+    column).  ``left_id`` should be unique: the ring path ranks per id.  A
+    row with a NULL or non-finite coordinate on either side takes no part
+    (no output row for such a left point; never a neighbour), the way
+    ``spatial_join`` drops NULL geometries.
+
+    Which plan runs: a point kNN (``right_geom`` None) whose sides do not
+    stream and whose right side Catalyst would broadcast (optimizer size at
+    most ``spark.sql.autoBroadcastJoinThreshold``, the rule
+    ``spatial_join`` uses for its index side) is ONE ``mapInArrow`` probe of
+    a driver-built cell index of the right side (:func:`_knn_probe`): one
+    collect, no aggregate, no exchange.  The right side is then read once,
+    when ``knn_join`` is called: the returned DataFrame keeps probing those
+    rows, so re-running it after the right side's source changes does not
+    see the change.  Every other kNN join runs the ring schedule below.
+
+    Ring schedule: the (2R+1)^2 cell square for R = R0, then 8*R0, then a
+    cross join of the remaining points; a left point finishes when its k-th
+    candidate distance < its distance to the searched-region border (an
+    unseen point may lie exactly on the border, so equality is not enough).
+    Each round is one native equi-join + window top-k; at cluster scale the
+    expensive first ring resolves the dense majority and the tail rounds
+    touch few rows (AQE coalesces them).
 
     ``right_geom``: name of a WKB column on the right side — the right rows
     may then be ARBITRARY geometries (reference-parity with the single-query
@@ -116,21 +311,28 @@ def knn_join(
     non-empty rectangle — and only the row at the rectangle's min corner
     survives.  A pure filter: no per-round dropDuplicates shuffle, and no
     synthetic row id to keep stable (round-4 ADVICE).  Default (None): both
-    sides are points via x/y columns, fully native plan.
+    sides are points via x/y columns.
 
-    ``grid=None`` sizes the index to the data (one cheap min/max+count agg
-    per side): the level is chosen so a cell holds ~2k right points, which
-    keeps the first ring's candidate count near the information-theoretic
-    floor instead of exploding with density.  A FIXED level degrades as the
-    right side grows (at 10x density a level-5 ring-1 square held ~1300
-    candidates per left point for k=3); sizing from an aggregate statistic
-    — not a driver sample — is the same scale-safe pattern spatial_join
-    uses (joins.infer_grid).
+    ``grid=None`` sizes the index to the data: the level is chosen so a
+    cell holds ~2k right points, which keeps the first ring's candidate
+    count near the information-theoretic floor instead of exploding with
+    density.  A FIXED level degrades as the right side grows (at 10x
+    density a level-5 ring-1 square held ~1300 candidates per left point
+    for k=3).  The probe reads the bounds and count from the collected right
+    side; the ring path from one min/max+count aggregate statistic — not a
+    driver sample — the same scale-safe pattern spatial_join uses
+    (joins.infer_grid).
     """
+    left = left.where(_finite(left_x, left_y))
+    if right_geom is None:
+        right = right.where(_finite(right_x, right_y))
+        if not (left.isStreaming or right.isStreaming) and _broadcast_size(right) is not None:
+            return _knn_probe(
+                left, right, k, grid, left_id, left_x, left_y, right_x, right_y,
+                dist_col, rank_col, tiebreak,
+            )
     n_right: int | None = None  # reused from the auto-grid agg when available
     if grid is None:
-        import math
-
         # ONE fused min/max/count job over the union of both sides (was two
         # .first() jobs — round-5 VERDICT item 4: knn_join's wall time was
         # dominated by fixed per-query job count, not data size).  The right
@@ -158,15 +360,8 @@ def knn_join(
         ).first()
         if bb[0] is None:  # both sides empty: any grid is fine
             bb = (0.0, 0.0, 1.0, 1.0, bb[4] or 0)
-        minx, miny, maxx, maxy = bb[0], bb[1], bb[2], bb[3]
-        n_r = bb[4] or 0
-        n_right = int(n_r)
-        # ~2k right rows per cell: ring R=1 already holds >= k with high
-        # probability and the candidate fan-in stays O(k), not O(density)
-        cells = max(1.0, n_r / max(float(2 * k), 1.0))
-        level = int(min(12, max(2, round(math.log(cells, 4)))))
-        pad = 1e-9 + 1e-6 * max(maxx - minx, maxy - miny, 1.0)
-        grid = Grid(float(minx), float(miny), float(maxx) + pad, float(maxy) + pad, level)
+        n_right = int(bb[4] or 0)
+        grid = _knn_grid(bb[0], bb[1], bb[2], bb[3], n_right, k)
     lp = left.select(
         F.col(left_id),
         F.col(left_x).alias("__lx"),
@@ -206,16 +401,13 @@ def knn_join(
         )
         rp_cross = rp.drop("__cell")
 
-    # adaptive initial ring: smallest R whose (2R+1)^2-cell square is expected
-    # to hold >= 2k right points (one cheap count job; on a real table this is
+    # adaptive initial ring (one cheap count job; on a real table this is
     # parquet-metadata fast — and with an auto grid the sizing agg already
-    # carried the count, so no second pass).  Round schedule: [R0, 8*R0, full]
-    # - bounded work, stragglers only in later rounds.
+    # carried the count, so no second pass).  Round schedule: [R0, 8*R0,
+    # full] - bounded work, stragglers only in later rounds.
     if n_right is None:
         n_right = right.count()
-    density = max(n_right / float(n * n), 1e-12)
-    r0 = int(np.ceil((np.sqrt(2.0 * k / density) - 1.0) / 2.0))
-    r0 = max(1, min(r0, n))
+    r0 = _first_ring(grid, n_right, k)
     # Ring schedule.  A clipped ring R >= n-1 reaches every cell from any cell,
     # so it IS full coverage and may be final.  Any smaller ring must be
     # followed by more rounds (a ring < n-1 only searches a clipped square —
@@ -319,7 +511,9 @@ def knn_join(
                     F.least(F.col("__ly") - rymin, rymax - F.col("__ly"))
                 ),
             )
-            # a left id is done iff it has k candidates AND its kth dist <= bound
+            # a left id is done iff it has k candidates AND its kth dist < bound:
+            # a right point exactly on the border sits in the next half-open
+            # cell and has not been seen, so a tie with it must go on
             done_ids = (
                 topk.withColumn("__bound", bound)
                 .groupBy(left_id)
@@ -328,7 +522,7 @@ def knn_join(
                     F.max(dist_col).alias("__kth"),
                     F.min("__bound").alias("__b"),
                 )
-                .where((F.col("__cnt") == k) & (F.col("__kth") <= F.col("__b")))
+                .where((F.col("__cnt") == k) & (F.col("__kth") < F.col("__b")))
                 .select(left_id)
             )
             done_rows = topk.join(done_ids, left_id, "left_semi")

@@ -55,6 +55,12 @@ _PINNED: list = []
 
 
 def _pin(df: DataFrame) -> DataFrame:
+    """Persist ``df`` and register it for :func:`release_cached`.  A plan the
+    cache manager already holds (the same query pinned by an earlier call)
+    is returned as is: persisting it again only logs a warning and would
+    grow the registry on every repeated call."""
+    if df.storageLevel.useMemory or df.storageLevel.useDisk:
+        return df
     df = df.persist()
     _PINNED.append(df)
     return df

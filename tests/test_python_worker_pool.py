@@ -24,7 +24,7 @@ import pyarrow as pa
 from pyspark.sql import functions as F
 
 from incubator_sedona_spark.geom import wkb as W
-from incubator_sedona_spark.operators import joins, raster as R
+from incubator_sedona_spark.operators import joins, knn, raster as R
 from incubator_sedona_spark.pipeline import components, dedup
 from incubator_sedona_spark.session import get_spark
 from incubator_sedona_spark.sources import datagen, geoparquet, iceberg, raster_codecs, shapefile
@@ -95,6 +95,12 @@ pts = spark.createDataFrame(pa.table({"pid": pa.array(range(400), pa.int64()),
 assert joins.spatial_join(ells, pts, "contains", right_point_cols=("x", "y"),
                           left_rect=False, broadcast="left").count() == 4 * 8 * 3 + 4 * 3 * 5
 
+# a kNN join over a broadcast right side: one probe per task, no ring rounds
+probes = spark.createDataFrame(pa.table({"lid": pa.array(range(50), pa.int64()),
+                                         "x": pa.array([i * 0.8 for i in range(50)]),
+                                         "y": pa.array([i * 0.2 for i in range(50)])}))
+assert knn.knn_join(probes, pts, 3, None, left_id="lid", tiebreak="pid").count() == 150
+
 rows = processes()
 daemons = [r for r in rows if r["role"] == "daemon"]
 workers = [r for r in rows if r["role"].startswith("worker")]
@@ -105,8 +111,9 @@ spark.stop()
 
 def test_one_python_worker_pool(tmp_path):
     """Snapshot append, union-find dedup, GeoParquet write, shapefile read,
-    GeoTIFF sink, the zero-row exact cosine result and two broadcast spatial
-    joins with a kernel refine, in a fresh session: the JVM forks exactly
+    GeoTIFF sink, the zero-row exact cosine result, two broadcast spatial
+    joins with a kernel refine and a broadcast kNN join, in a fresh session:
+    the JVM forks exactly
     one ``pyspark.daemon``, with no more live workers than task slots.
     Before these paths used Arrow, the first append forked a second daemon;
     before the broadcast join was one index probe, its stream stage held two

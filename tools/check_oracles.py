@@ -4,6 +4,7 @@ names, and order-insensitive values."""
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -11,7 +12,8 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, wherever it is
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from incubator_sedona_spark.session import get_spark  # noqa: E402
 import __spark_entry__ as E  # noqa: E402
