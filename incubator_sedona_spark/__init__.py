@@ -7,7 +7,7 @@ pandas/Arrow UDFs.  No JVM extensions, no per-row Python, no RDDs.
 
 Design blueprint: SURVEY.md (reference semantics cited per module as file:line
 into /root/reference).  The geometry kernel is pure numpy (WKB serde +
-ray-casting predicates); shapely is used opportunistically when importable.
+ray-casting predicates), with no optional third-party fallback.
 """
 
 __version__ = "0.1.0"

@@ -274,10 +274,10 @@ def knn_join(
     Output: ``left_id``, ``<left_x>_l``, ``<left_y>_l``, the right columns,
     ``dist_col`` (double) and ``rank_col`` (int, 1..k by distance, then
     ``tiebreak`` ascending with NULL first; ``tiebreak`` names a right
-    column).  ``left_id`` should be unique: the ring path ranks per id.  A
-    row with a NULL or non-finite coordinate on either side takes no part
-    (no output row for such a left point; never a neighbour), the way
-    ``spatial_join`` drops NULL geometries.
+    column).  Each left row gets its own k rows, also when two rows share
+    a ``left_id``.  A row with a NULL or non-finite coordinate on either
+    side takes no part (no output row for such a left point; never a
+    neighbour), the way ``spatial_join`` drops NULL geometries.
 
     Which plan runs: a point kNN (``right_geom`` None) whose sides do not
     stream and whose right side Catalyst would broadcast (optimizer size at
@@ -362,10 +362,13 @@ def knn_join(
             bb = (0.0, 0.0, 1.0, 1.0, bb[4] or 0)
         n_right = int(bb[4] or 0)
         grid = _knn_grid(bb[0], bb[1], bb[2], bb[3], n_right, k)
+    # the rounds rank, finish and retire by row, not by left_id (which may
+    # repeat); the id is stable because every round reads the pinned lp
     lp = left.select(
         F.col(left_id),
         F.col(left_x).alias("__lx"),
         F.col(left_y).alias("__ly"),
+        F.monotonically_increasing_id().alias("__lrow"),
     )
     n = grid.n
     ixc, iyc = grid.cell_index_col(F.col("__lx"), F.col("__ly"))
@@ -486,7 +489,7 @@ def knn_join(
                 ),
             )
         order = [F.col(dist_col).asc()] + ([F.col(tiebreak).asc()] if tiebreak else [])
-        w = Window.partitionBy(left_id).orderBy(*order)
+        w = Window.partitionBy("__lrow").orderBy(*order)
         topk = _pin(  # reused for done-id detection AND result emission
             cand.withColumn(rank_col, F.row_number().over(w))
             .where(F.col(rank_col) <= k)
@@ -511,24 +514,24 @@ def knn_join(
                     F.least(F.col("__ly") - rymin, rymax - F.col("__ly"))
                 ),
             )
-            # a left id is done iff it has k candidates AND its kth dist < bound:
+            # a left row is done iff it has k candidates AND its kth dist < bound:
             # a right point exactly on the border sits in the next half-open
             # cell and has not been seen, so a tie with it must go on
             done_ids = (
                 topk.withColumn("__bound", bound)
-                .groupBy(left_id)
+                .groupBy("__lrow")
                 .agg(
                     F.count("*").alias("__cnt"),
                     F.max(dist_col).alias("__kth"),
                     F.min("__bound").alias("__b"),
                 )
                 .where((F.col("__cnt") == k) & (F.col("__kth") < F.col("__b")))
-                .select(left_id)
+                .select("__lrow")
             )
-            done_rows = topk.join(done_ids, left_id, "left_semi")
-            pending_next = _pin(pending.join(done_ids, left_id, "left_anti"))
+            done_rows = topk.join(done_ids, "__lrow", "left_semi")
+            pending_next = _pin(pending.join(done_ids, "__lrow", "left_anti"))
 
-        done_rows = done_rows.drop("__cell", "__ix", "__iy", "__gx0", "__gy0")
+        done_rows = done_rows.drop("__cell", "__ix", "__iy", "__gx0", "__gy0", "__lrow")
         results = done_rows if results is None else results.unionByName(done_rows)
         if pending_next is None:
             break

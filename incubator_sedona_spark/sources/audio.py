@@ -8,8 +8,8 @@ The WAV codec is real — RIFF/WAVE/fmt/data chunks, PCM 16-bit, mono or
 multi-channel, any sample rate — written against the public RIFF spec (no
 deps; the format is simple enough that gating it would be dishonest).
 FLAC decodes natively through the real pure-numpy codec in
-sources/flac.py (lossless — bit-exact vs the WAV twin, CRC+MD5 verified);
-MP3/OGG stay gated behind soundfile/pydub when installed, else a loud
+sources/flac.py (lossless — bit-exact vs the WAV twin, CRC+MD5 verified).
+One native decoder per format: MP3/OGG have none and raise a loud
 NotImplementedError.
 
 Feature extraction (duration / RMS / peak / zero-crossing rate / windowed
@@ -27,12 +27,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-try:  # optional: compressed-format fallback
-    import soundfile as _soundfile
-except Exception:  # pragma: no cover
-    _soundfile = None
-
 
 # -- WAV codec (RIFF PCM, public spec) ----------------------------------------
 
@@ -68,14 +62,9 @@ def decode_wav(buf: bytes) -> tuple[np.ndarray, int]:
             if bps > 16:
                 samples = samples >> (bps - 16)
             return samples.astype(np.int16), sr
-        if _soundfile is not None:
-            import io
-
-            data, sr = _soundfile.read(io.BytesIO(bytes(buf)), dtype="int16")
-            return np.atleast_2d(data.T).T, sr
         raise NotImplementedError(
-            "not a RIFF/WAVE or FLAC stream and soundfile is not installed "
-            "(MP3/OGG need soundfile/pydub)"
+            f"not a RIFF/WAVE or FLAC stream (starts {bytes(buf[:4])!r}); "
+            "MP3/OGG are not decoded"
         )
     pos, end = 12, len(buf)
     ch = sr = bits = None

@@ -223,7 +223,7 @@ def decode_avi(buf: bytes, frame_indices: list[int] | None = None) -> np.ndarray
     if meta["codec"] not in _MJPEG_CODECS:
         raise NotImplementedError(
             f"AVI codec {meta['codec']!r}: only Motion-JPEG decodes natively "
-            "(H.264/VP9 need PyAV/OpenCV, not installed here)"
+            "(H.264/VP9 are not decoded)"
         )
     want = list(range(meta["n_frames"])) if frame_indices is None else list(frame_indices)
     out = np.empty((len(want), meta["height"], meta["width"], 3), dtype=np.uint8)

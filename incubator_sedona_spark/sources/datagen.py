@@ -12,6 +12,7 @@ import os
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from incubator_sedona_spark.geom import wkb as W
@@ -110,44 +111,49 @@ def gen_images_pdf_for_ids(idx: np.ndarray) -> pd.DataFrame:
 
 
 def zones_df(spark: SparkSession) -> DataFrame:
-    """F2 zone polygons: 10x10 grid, duplicated a:/b: 5x5 windows."""
-    rows = []
-    for x in range(0, 100, 10):
-        for y in range(0, 100, 10):
-            for tag in ("a", "b"):
-                g = W.box(x, y, x + 5, y + 5)
-                rows.append(
-                    (f"{tag}:{x}:{y}", bytearray(W.dumps(g)), float(x), float(y), float(x + 5), float(y + 5))
-                )
+    """F2 zone polygons: 10x10 grid, duplicated a:/b: 5x5 windows.
+
+    Arrow-built, like every driver-built table in the package: a local
+    relation with optimizer statistics, and no RDD Python runner."""
+    cells = [(x, y, tag) for x in range(0, 100, 10) for y in range(0, 100, 10) for tag in "ab"]
     return spark.createDataFrame(
-        rows, "zone_id string, wkb binary, xmin double, ymin double, xmax double, ymax double"
+        pa.table({
+            "zone_id": [f"{tag}:{x}:{y}" for x, y, tag in cells],
+            "wkb": pa.array([W.dumps(W.box(x, y, x + 5, y + 5)) for x, y, _ in cells], pa.binary()),
+            "xmin": pa.array([x for x, _, _ in cells], pa.float64()),
+            "ymin": pa.array([y for _, y, _ in cells], pa.float64()),
+            "xmax": pa.array([x + 5 for x, _, _ in cells], pa.float64()),
+            "ymax": pa.array([y + 5 for _, y, _ in cells], pa.float64()),
+        }),
+        "zone_id string, wkb binary, xmin double, ymin double, xmax double, ymax double",
     )
 
 
 def rasters_df(spark: SparkSession, width: int = 16, height: int = 16) -> DataFrame:
-    """F7 raster tiles: 10x10 grid of footprint polygons + seeded band data."""
+    """F7 raster tiles: 10x10 grid of footprint polygons + seeded band data
+    (Arrow-built, as ``zones_df``)."""
     rng = np.random.default_rng(42)
-    rows = []
-    for i in range(10):
-        for j in range(10):
-            fp = W.box(10 * i, 10 * j, 10 * (i + 1), 10 * (j + 1))
-            data = rng.uniform(0, 255, width * height).tolist()
-            rows.append(
-                (
-                    f"t_{i}_{j}",
-                    bytearray(W.dumps(fp)),
-                    1,
-                    width,
-                    height,
-                    data,
-                    float(10 * i),
-                    float(10 * j),
-                    float(10 * (i + 1)),
-                    float(10 * (j + 1)),
-                )
-            )
+    ij = [(i, j) for i in range(10) for j in range(10)]
+    n = len(ij)
     return spark.createDataFrame(
-        rows,
+        pa.table({
+            "tile_id": [f"t_{i}_{j}" for i, j in ij],
+            "footprint_wkb": pa.array(
+                [W.dumps(W.box(10 * i, 10 * j, 10 * (i + 1), 10 * (j + 1))) for i, j in ij],
+                pa.binary(),
+            ),
+            "nBands": pa.array([1] * n, pa.int32()),
+            "width": pa.array([width] * n, pa.int32()),
+            "height": pa.array([height] * n, pa.int32()),
+            # one seeded draw per tile, in tile order: the fixture's values
+            "data": pa.array(
+                [rng.uniform(0, 255, width * height) for _ in ij], pa.list_(pa.float64())
+            ),
+            "xmin": pa.array([10.0 * i for i, _ in ij], pa.float64()),
+            "ymin": pa.array([10.0 * j for _, j in ij], pa.float64()),
+            "xmax": pa.array([10.0 * (i + 1) for i, _ in ij], pa.float64()),
+            "ymax": pa.array([10.0 * (j + 1) for _, j in ij], pa.float64()),
+        }),
         "tile_id string, footprint_wkb binary, nBands int, width int, height int, "
         "data array<double>, xmin double, ymin double, xmax double, ymax double",
     )

@@ -6,19 +6,21 @@ phash int64)`` — the Spark-side analog of the reference's GeoTiff image struct
 (/root/reference/sql/common/.../io/raster/GeotiffSchema.scala:43-56), with the
 pixel payload as an opaque binary column instead of array<double>.
 
-Codecs, in order of preference per format:
+One native decoder per format, so decoded pixels (and every pHash built on
+them) do not depend on what the host has installed:
 
 - ``PNG``  : REAL decoder/encoder implemented here from the PNG spec (zlib
   inflate + scanline filters 0-4, bit depth 8, gray/RGB/RGBA) — no external
   dependency; cross-checked in tests against the JVM's javax.imageio.
-  PIL is used instead when installed (faster C path).
 - ``JPEG`` : REAL baseline (SOF0/1) + progressive (SOF2) decoder
   implemented here from ITU-T T.81 (sources/jpeg.py: Huffman entropy decode,
   spectral-selection/successive-approximation scan accumulation, dequant,
   vectorized float IDCT, fancy chroma upsample, YCbCr->RGB) — no external
   dependency; cross-checked in tests against the JVM's javax.imageio.
-  PIL preferred when installed; arithmetic/CMYK streams raise loudly.
-- ``TIFF`` : tifffile or PIL when installed; NotImplementedError otherwise.
+  Arithmetic-coded and CMYK streams raise loudly.
+- ``BMP`` / ``GIF`` : sources/bmp.py and sources/gif.py.
+- ``TIFF`` : sources/raster_codecs.decode_geotiff (raw, Deflate, LZW,
+  PackBits); other compressions raise NotImplementedError.
 - ``ISSI`` : the deterministic stand-in codec used by the synthetic corpus:
   ``png`` tag = zlib raw RGB (lossless), ``jpeg`` tag = 4-level uniform
   quantization then zlib (error <= 2/channel, PSNR >= 42 dB > the 40 dB bar
@@ -40,13 +42,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-try:  # real codecs if the environment has them
-    from PIL import Image  # noqa: F401
-
-    _HAS_PIL = True
-except ImportError:
-    _HAS_PIL = False
 
 _MAGIC = b"ISSI"
 _JPEG_Q = 4  # quantization step; max abs error 2 -> PSNR ~ 42-48 dB
@@ -81,74 +76,35 @@ def decode_image(buf: bytes) -> np.ndarray:
             return (raw.astype(np.int32) * _JPEG_Q + _JPEG_Q // 2).clip(0, 255).astype(np.uint8)
         return raw.copy()
     if head == _PNG_SIG:
-        if _HAS_PIL:
-            import io
-
-            return np.asarray(Image.open(io.BytesIO(bytes(buf))).convert("RGB"))
         return decode_png(buf)
     if head[:2] == b"\xff\xd8":  # JPEG SOI
-        if _HAS_PIL:
-            import io
-
-            return np.asarray(Image.open(io.BytesIO(bytes(buf))).convert("RGB"))
-        # real pure-numpy decoder (T.81 sequential + progressive DCT);
-        # arithmetic/CMYK streams still raise loudly inside
+        # T.81 sequential + progressive DCT; arithmetic/CMYK raise inside
         from incubator_sedona_spark.sources.jpeg import decode_jpeg
 
         return decode_jpeg(buf)
     if head[:2] == b"BM":
-        if _HAS_PIL:
-            import io
-
-            return np.asarray(Image.open(io.BytesIO(bytes(buf))).convert("RGB"))
         from incubator_sedona_spark.sources.bmp import decode_bmp
 
         return decode_bmp(buf)
     if head[:6] in (b"GIF87a", b"GIF89a"):
-        if _HAS_PIL:
-            import io
-
-            return np.asarray(Image.open(io.BytesIO(bytes(buf))).convert("RGB"))
-        # real pure-numpy decoder (LZW + interlace + frame compositing)
+        # LZW + interlace + frame compositing
         from incubator_sedona_spark.sources.gif import decode_gif
 
         return decode_gif(buf)
     if head[:4] in (b"II*\x00", b"MM\x00*"):  # TIFF (incl. GeoTiff payloads)
-        try:
-            import io
+        # classic TIFF, raw/Deflate/LZW/PackBits; other compressions raise
+        from incubator_sedona_spark.sources.raster_codecs import decode_geotiff
 
-            import tifffile
-
-            arr = tifffile.imread(io.BytesIO(bytes(buf)))
-            arr = np.atleast_3d(np.asarray(arr))
-            if arr.shape[2] == 1:
-                arr = np.repeat(arr, 3, axis=2)
-            return np.ascontiguousarray(arr[:, :, :3]).astype(np.uint8)
-        except ImportError:
-            if _HAS_PIL:
-                import io
-
-                return np.asarray(Image.open(io.BytesIO(bytes(buf))).convert("RGB"))
-            # native classic-TIFF parser (uncompressed strips; loud on
-            # compressed inputs) — sources/raster_codecs.decode_geotiff
-            from incubator_sedona_spark.sources.raster_codecs import decode_geotiff
-
-            d = decode_geotiff(bytes(buf))
-            h, w = d["height"], d["width"]
-            arr = np.stack(
-                [np.asarray(b, dtype=np.float64).reshape(h, w) for b in d["bands"]],
-                axis=2,
-            )
-            if arr.shape[2] == 1:
-                arr = np.repeat(arr, 3, axis=2)
-            return np.clip(arr[:, :, :3], 0, 255).astype(np.uint8)
-    if _HAS_PIL:
-        import io
-
-        return np.asarray(Image.open(io.BytesIO(bytes(buf))).convert("RGB"))
-    raise NotImplementedError(
-        f"unrecognized image signature {head[:4]!r} and PIL is not installed"
-    )
+        d = decode_geotiff(bytes(buf))
+        h, w = d["height"], d["width"]
+        arr = np.stack(
+            [np.asarray(b, dtype=np.float64).reshape(h, w) for b in d["bands"]],
+            axis=2,
+        )
+        if arr.shape[2] == 1:
+            arr = np.repeat(arr, 3, axis=2)
+        return np.clip(arr[:, :, :3], 0, 255).astype(np.uint8)
+    raise NotImplementedError(f"unrecognized image signature {head[:4]!r}")
 
 
 # -- real PNG codec (spec-complete for 8-bit gray/RGB/RGBA, no interlace) -------
@@ -183,7 +139,8 @@ def decode_png(buf: bytes, keep_alpha: bool = False) -> np.ndarray:
             if depth != 8 or ctype not in (0, 2, 6) or interlace != 0:
                 raise NotImplementedError(
                     f"PNG variant not supported (depth={depth}, color={ctype}, "
-                    f"interlace={interlace}); install PIL for full coverage"
+                    f"interlace={interlace}): only 8-bit gray/RGB/RGBA, "
+                    "non-interlaced PNG is decoded"
                 )
         elif typ == b"IDAT":
             idat += data

@@ -14,9 +14,8 @@ progressive (SOF2) per T.81 Annex G — spectral selection + successive
 approximation, interleaved/non-interleaved DC scans, DC/AC refinement
 scans, EOB runs, restart intervals, inter-scan table redefinition.
 Arithmetic coding, 12-bit precision, hierarchical, CMYK/YCCK, and
-multi-scan *sequential* streams raise NotImplementedError LOUDLY — PIL
-remains the preferred path when installed (sources/images.decode_image
-dispatches).
+multi-scan *sequential* streams raise NotImplementedError LOUDLY.  This is
+the one JPEG decoder (sources/images.decode_image dispatches here).
 
 This is the decode stage the reference reaches through Java ImageIO
 (sql/common/.../io/raster/GeotiffSchema.scala:121-200); tests cross-check
@@ -239,8 +238,8 @@ def decode_jpeg(buf: bytes) -> np.ndarray:
                 # 4-component streams are Adobe CMYK/YCCK; silently dropping K
                 # and treating 0..2 as YCbCr gives wrong colors, so fail loud
                 raise NotImplementedError(
-                    f"JPEG with {nc} components (CMYK/YCCK) unsupported by the "
-                    "baseline decoder; install PIL for full coverage"
+                    f"JPEG with {nc} components (CMYK/YCCK) is not supported; "
+                    "only 1- or 3-component streams decode"
                 )
             comps = []
             for c in range(nc):
@@ -250,8 +249,8 @@ def decode_jpeg(buf: bytes) -> np.ndarray:
         elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
             raise NotImplementedError(
                 f"JPEG SOF marker 0xFF{marker:02X} (lossless/arithmetic/"
-                "hierarchical) not supported by this decoder; "
-                "install PIL for full coverage"
+                "hierarchical) is not supported; only baseline (SOF0/1) "
+                "and progressive (SOF2) decode"
             )
         elif marker == 0xDA:  # SOS
             if frame is None:
@@ -260,8 +259,8 @@ def decode_jpeg(buf: bytes) -> np.ndarray:
                 # Adobe transform=0 marks the 3 components as literal RGB;
                 # running the YCbCr conversion on them corrupts every pixel
                 raise NotImplementedError(
-                    "JPEG APP14 transform=0 (RGB-encoded components) "
-                    "unsupported by the baseline decoder; install PIL"
+                    "JPEG APP14 transform=0 (RGB-encoded components) is not "
+                    "supported; only YCbCr or gray streams decode"
                 )
             ns = seg[0]
             scan = []

@@ -17,8 +17,9 @@ reads cover what RS_AsGeoTiff-style writers emit.  Round 3: Deflate
 encode/decode, plus LZW, PackBits and horizontal-differencing predictor
 DECODE — all from the public TIFF 6.0 spec, cross-checked pixel-exact
 against javax.imageio's LZW/PackBits/Deflate writers.  Tiled layout decodes
-natively too (JVM tiled-writer cross-check); JPEG-in-TIFF falls back to tifffile/PIL when
-installed, else raise loudly — NEVER a silent wrong answer.
+natively too (JVM tiled-writer cross-check).  This is the one TIFF decoder
+(``images.decode_image`` routes TIFF here as well); JPEG-in-TIFF and every
+other compression raise loudly — NEVER a silent wrong answer.
 
 All functions operate on the raster STRUCT column documented in
 operators/raster.py (RASTER_SCHEMA).
@@ -27,7 +28,6 @@ operators/raster.py (RASTER_SCHEMA).
 from __future__ import annotations
 
 import base64
-import io
 import struct as _struct
 
 import numpy as np
@@ -37,12 +37,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, StringType
 
 from incubator_sedona_spark.operators.raster import RASTER_SCHEMA
-
-try:  # optional accelerators / fallbacks for compressed inputs
-    import tifffile as _tifffile  # noqa: SLF001
-except Exception:  # pragma: no cover - absent in this container
-    _tifffile = None
-
 
 # -- ArcInfo ASCII Grid --------------------------------------------------------
 
@@ -154,8 +148,7 @@ def decode_geotiff(buf: bytes) -> dict:
     (PlanarConfiguration=2, plane-major strips/tiles) interleave, any
     uint/int/float sample width; ModelPixelScale + ModelTiepoint +
     GeoKeyDirectory (geographic 2048 / projected 3072 key) georeference.
-    Other variants fall back to tifffile when installed, else raise
-    NotImplementedError loudly."""
+    Other variants raise NotImplementedError loudly."""
     if len(buf) < 8 or buf[:2] not in (b"II", b"MM"):
         raise ValueError("not a TIFF byte stream")
     bo = "<" if buf[:2] == b"II" else ">"
@@ -187,12 +180,9 @@ def decode_geotiff(buf: bytes) -> dict:
 
     compression = int(tags.get(_T_COMPRESSION, [1])[0])
     if compression not in (1, 5, 8, 32773, 32946):
-        if _tifffile is not None:
-            arr = _tifffile.imread(io.BytesIO(buf))
-            return _array_to_raster_dict(arr, tags)
         raise NotImplementedError(
-            f"TIFF compression {compression} needs tifffile/PIL (not installed); "
-            "raw/Deflate/LZW/PackBits decode natively"
+            f"TIFF compression {compression} is not supported; "
+            "only raw/Deflate/LZW/PackBits decode"
         )
     if _T_WIDTH not in tags or _T_HEIGHT not in tags:
         raise ValueError("TIFF missing dimensions")
@@ -529,7 +519,7 @@ def rs_as_arc_grid(raster_col: Column, band: int = 1) -> Column:
 
 def rs_from_geotiff(bin_col: Column) -> Column:
     """RS_FromGeoTiff: GeoTIFF bytes -> raster struct (native classic-TIFF
-    parser; compressed inputs need tifffile)."""
+    parser; compressions other than raw/Deflate/LZW/PackBits raise)."""
 
     @F.pandas_udf(RASTER_SCHEMA)
     def _f(s: pd.Series) -> pd.DataFrame:

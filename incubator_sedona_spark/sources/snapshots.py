@@ -19,15 +19,16 @@ parquet (see iceberg.py docstring):
   create (``os.link`` — fails, never overwrites, if a concurrent writer got
   there first: the HadoopTableOperations rename-commit protocol).
 - **time travel**: ``read(snapshot_id=...)`` / ``read(as_of_timestamp=...)``.
-- **manifest-level min/max pruning**: per-file column stats are collected
-  from parquet FOOTERS on the executors at commit time (one task per file,
-  no data pages — same pattern as ``geoparquet.py``); ``read(prune=...)``
-  drops whole files before Spark ever lists a directory.
+- **manifest-level min/max pruning**: per-file column stats are read from
+  the new files' parquet FOOTERS on the driver at commit time (metadata
+  only, no data pages, no Spark job); ``read(prune=...)`` drops whole files
+  before Spark ever lists a directory.
 
-Scale shape: driver-side state is O(files) paths+stats per commit — the same
-asymptotics as Iceberg's own manifest lists; data file I/O (stats collection)
-is executor-side.  Appends never rewrite old snapshots, so a 100-TB table
-pays only the metadata of its new files per commit.
+Scale shape: driver-side state and work are O(files) per commit — one
+footer read per new file (under a millisecond for a local file), the same
+asymptotics as Iceberg's own manifest lists.  The data itself is written by
+the executors.  Appends never rewrite old snapshots, so a 100-TB table pays
+only the metadata of its new files per commit.
 
 Reference semantics target: Sedona reads Iceberg/GeoParquet through ordinary
 Spark sources (`/root/reference/docs/tutorial/sql.md` storage section); the
@@ -43,6 +44,7 @@ import time
 import uuid
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -112,74 +114,73 @@ def _write_hint(location: str, n: int) -> None:
     os.replace(tmp, _hint_path(location))
 
 
-def _collect_file_stats(spark: SparkSession, files: list[str]) -> list[dict]:
-    """Per-file row counts + min/max column stats from footers, executor-side.
+def _commit_version(location: str, n: int, meta: dict, retry: str) -> None:
+    """Commit version ``n``: write a temp file, then ``os.link`` it to
+    ``v<n>.json`` — an atomic create-if-absent that fails with EEXIST if a
+    concurrent writer committed ``n`` first (never overwrites) — then move
+    the hint.  ``retry`` names what the loser should retry."""
+    tmp = _version_path(location, n) + f".tmp-{uuid.uuid4().hex}"
+    with open(tmp, "w") as f:
+        json.dump(meta, f)
+    try:
+        os.link(tmp, _version_path(location, n))
+    except FileExistsError:
+        raise CommitConflictError(
+            f"version {n} at {location} was committed concurrently; {retry}"
+        ) from None
+    finally:
+        os.unlink(tmp)
+    _write_hint(location, n)
 
-    One task per file; only footers are read (no data pages).  Returns JSON
-    rows the commit embeds in the manifest, in the order of ``files``.
-    """
-    if not files:
-        return []
-    fdf = spark.createDataFrame(pa.table({"path": files}), "path string")
 
-    def _stats(batches):
-        import pandas as pd
-        import pyarrow.parquet as pq
+def _bounds(st) -> tuple | None:
+    """(min, max) of one column chunk's footer statistics, or None when it
+    has none usable: no stats, raw binary, a bound pyarrow cannot read (a
+    decimal) or bytes that are not UTF-8."""
+    if st is None or not st.has_min_max:
+        return None
+    if st.physical_type == "BYTE_ARRAY" and str(st.logical_type).lower().startswith("none"):
+        return None
+    try:
+        lo, hi = st.min, st.max
+        return (lo.decode(), hi.decode()) if isinstance(lo, bytes) else (lo, hi)
+    except (pa.ArrowNotImplementedError, UnicodeDecodeError):
+        return None
 
-        for pdf in batches:
-            out = []
-            for fp in pdf["path"]:
-                md = pq.ParquetFile(fp).metadata
-                # per-column (mins, maxs) across row groups; a column keeps a
-                # range only if EVERY group has stats for it (conservative)
-                ranges: dict[str, list] = {}
-                dropped: set[str] = set()
-                for rg in range(md.num_row_groups):
-                    g = md.row_group(rg)
-                    for ci in range(g.num_columns):
-                        col = g.column(ci)
-                        name = col.path_in_schema
-                        if "." in name or name in dropped:
-                            continue  # nested leaf / already disqualified
-                        st = col.statistics
-                        raw_binary = (
-                            st is not None
-                            and st.physical_type == "BYTE_ARRAY"
-                            and str(st.logical_type).lower().startswith("none")
-                        )
-                        if st is None or not st.has_min_max or raw_binary:
-                            dropped.add(name)
-                            ranges.pop(name, None)
-                            continue
-                        lo, hi = st.min, st.max
-                        if isinstance(lo, bytes):
-                            try:
-                                lo, hi = lo.decode(), hi.decode()
-                            except Exception:
-                                dropped.add(name)
-                                ranges.pop(name, None)
-                                continue
-                        cur = ranges.get(name)
-                        if cur is None:
-                            ranges[name] = [lo, hi]
-                        else:
-                            cur[0], cur[1] = min(cur[0], lo), max(cur[1], hi)
-                out.append(json.dumps({
-                    "path": fp,
-                    "rows": md.num_rows,
-                    "bytes": os.path.getsize(fp),
-                    "min": {k: v[0] for k, v in ranges.items()},
-                    "max": {k: v[1] for k, v in ranges.items()},
-                }, default=str))
-            yield pd.DataFrame({"stat": out})
 
-    rows = (
-        fdf.repartition(max(len(files), 1))
-        .mapInPandas(_stats, schema="stat string")
-        .collect()
-    )
-    by_path = {st["path"]: st for st in (json.loads(r["stat"]) for r in rows)}
-    return [by_path[f] for f in files]
+def _file_stats(fp: str) -> dict:
+    """Row count + per-column min/max of one parquet file, read from its
+    footer (no data pages).  Values go through the same JSON round trip the
+    manifest does, so a date bound comes back as its string."""
+    md = pq.ParquetFile(fp).metadata
+    # per-column (mins, maxs) across row groups; a column keeps a range only
+    # if EVERY group has stats for it (conservative)
+    ranges: dict[str, list] = {}
+    dropped: set[str] = set()
+    for rg in range(md.num_row_groups):
+        g = md.row_group(rg)
+        for ci in range(g.num_columns):
+            col = g.column(ci)
+            name = col.path_in_schema
+            if "." in name or name in dropped:
+                continue  # nested leaf / already disqualified
+            b = _bounds(col.statistics)
+            if b is None:
+                dropped.add(name)
+                ranges.pop(name, None)
+                continue
+            cur = ranges.get(name)
+            if cur is None:
+                ranges[name] = list(b)
+            else:
+                cur[0], cur[1] = min(cur[0], b[0]), max(cur[1], b[1])
+    return json.loads(json.dumps({
+        "path": fp,
+        "rows": md.num_rows,
+        "bytes": os.path.getsize(fp),
+        "min": {k: v[0] for k, v in ranges.items()},
+        "max": {k: v[1] for k, v in ranges.items()},
+    }, default=str))
 
 
 class SnapshotTable:
@@ -194,7 +195,7 @@ class SnapshotTable:
 
     # ---------- write path ----------
 
-    def _commit(self, spark: SparkSession, operation: str, new_files: list[str],
+    def _commit(self, operation: str, new_files: list[str],
                 properties: dict | None = None) -> int:
         meta_dir = _metadata_dir(self.location)
         os.makedirs(meta_dir, exist_ok=True)
@@ -206,7 +207,7 @@ class SnapshotTable:
         # have clobbered the winner's manifest (its own becomes unreferenced
         # metadata, listed by orphan_files)
         manifest_name = f"manifest-{n}-{uuid.uuid4().hex[:8]}.json"
-        stats = _collect_file_stats(spark, new_files)
+        stats = [_file_stats(fp) for fp in new_files]
         for st in stats:
             # relative to the table: a copied table reads its own files
             st["path"] = os.path.relpath(st["path"], self.location)
@@ -232,21 +233,7 @@ class SnapshotTable:
         meta = {"format_version": 2, "snapshots": prev["snapshots"] + [snap],
                 "current_snapshot_id": n}
 
-        tmp = _version_path(self.location, n) + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        try:
-            # atomic create-if-absent: link() fails with EEXIST if a
-            # concurrent writer committed vN first (never overwrites)
-            os.link(tmp, _version_path(self.location, n))
-        except FileExistsError:
-            raise CommitConflictError(
-                f"version {n} at {self.location} was committed concurrently; "
-                f"re-read the table and retry the append"
-            ) from None
-        finally:
-            os.unlink(tmp)
-        _write_hint(self.location, n)
+        _commit_version(self.location, n, meta, "re-read the table and retry the append")
         return n
 
     def _write_data(self, df: DataFrame, snap_hint: int) -> list[str]:
@@ -264,14 +251,14 @@ class SnapshotTable:
         """Commit a new snapshot adding ``df``'s rows. Returns snapshot id."""
         hint = (_current_version(self.location) if has_snapshot_log(self.location) else 0) + 1
         files = self._write_data(df, hint)
-        return self._commit(df.sparkSession, "append", files, properties)
+        return self._commit("append", files, properties)
 
     def overwrite(self, df: DataFrame, properties: dict | None = None) -> int:
         """Commit a new snapshot replacing the table contents (old snapshots
         stay readable — nothing is deleted)."""
         hint = (_current_version(self.location) if has_snapshot_log(self.location) else 0) + 1
         files = self._write_data(df, hint)
-        return self._commit(df.sparkSession, "overwrite", files, properties)
+        return self._commit("overwrite", files, properties)
 
     # ---------- read path ----------
 
@@ -404,19 +391,7 @@ class SnapshotTable:
         n = _current_version(self.location) + 1
         meta = {"format_version": 2, "snapshots": retained,
                 "current_snapshot_id": retained[-1]["snapshot_id"]}
-        tmp = _version_path(self.location, n) + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        try:
-            os.link(tmp, _version_path(self.location, n))
-        except FileExistsError:
-            raise CommitConflictError(
-                f"version {n} at {self.location} was committed concurrently; "
-                f"retry expire_snapshots"
-            ) from None
-        finally:
-            os.unlink(tmp)
-        _write_hint(self.location, n)
+        _commit_version(self.location, n, meta, "retry expire_snapshots")
 
         if delete:
             for p in freed:

@@ -1,16 +1,16 @@
 """Video modality: frame-sampling plumbing with a deterministic container.
 
-Real video codecs (H.264/VP9 via PyAV or OpenCV) are NOT installed in this
-environment; per the brief, the decode step for real containers is a
+There is no H.264/VP9 decoder: the decode step for such containers is a
 clearly-marked NotImplementedError while the Spark-side plumbing — schema,
 partitioning, UDF signatures, batch shape — is real and tested.
 
 To make the plumbing testable end-to-end without external deps, the module
 defines RAWV, a deterministic toy container (magic + width/height/fps/
 frame count + zlib-compressed RGB frames).  ``decode_video`` dispatches on
-the signature: RAWV decodes natively; anything else tries PyAV/OpenCV when
-importable and raises loudly otherwise.  Swapping in a real codec changes
-ONE function — every Spark operator downstream is already real.
+the signature, one native decoder per format: RAWV, AVI/Motion-JPEG
+(sources/avi.py) and animated GIF (sources/gif.py); anything else raises
+loudly.  Adding a real codec changes ONE function — every Spark operator
+downstream is already real.
 """
 
 from __future__ import annotations
@@ -22,11 +22,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-
-try:  # pragma: no cover - not installed here
-    import av as _av
-except Exception:
-    _av = None
 
 _RAWV_MAGIC = b"RAWV"
 
@@ -76,7 +71,7 @@ def probe_video(buf: bytes) -> dict:
 def decode_video(buf: bytes, frame_indices: list[int] | None = None) -> np.ndarray:
     """(k, h, w, 3) uint8 frames.  RAWV and AVI/Motion-JPEG decode natively
     (random access via the container index — only requested frames are
-    ever decompressed); other codecs need PyAV/OpenCV (loud gate)."""
+    ever decompressed), and so do animated GIFs; other containers raise."""
     buf = bytes(buf)
     if buf[:4] == b"RIFF" and buf[8:12] == b"AVI ":
         from incubator_sedona_spark.sources.avi import decode_avi
@@ -103,11 +98,9 @@ def decode_video(buf: bytes, frame_indices: list[int] | None = None) -> np.ndarr
             raw = zlib.decompress(buf[offs[i] : offs[i + 1]])
             out[k] = np.frombuffer(raw, dtype=np.uint8).reshape(h, w, 3)
         return out
-    if _av is not None:  # pragma: no cover
-        raise NotImplementedError("PyAV path not wired yet (codec present)")
     raise NotImplementedError(
-        "real video containers need PyAV/OpenCV, neither installed here; "
-        "RAWV streams decode natively"
+        f"unsupported video container {buf[:4]!r}; "
+        "RAWV, AVI/Motion-JPEG and GIF decode natively"
     )
 
 

@@ -97,6 +97,16 @@ def test_planted_images_spatial_join(spark):
     assert got.count() == 200  # 100 planted points x 2 duplicate windows
 
 
+@pytest.mark.parametrize("make", [DG.zones_df, DG.rasters_df])
+def test_datagen_fixtures_are_arrow_built(spark, make):
+    """The zone and raster fixtures are local relations (Arrow-built), so
+    they carry optimizer statistics and run no RDD Python runner."""
+    df = make(spark)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    assert df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() < 2**63 - 1
+
+
 # -- raster band algebra --------------------------------------------------------
 
 def test_band_algebra_native(spark):

@@ -99,8 +99,6 @@ def test_jpeg_grayscale(spark):
 
 
 def test_jpeg_dispatched_from_decode_image(spark):
-    if IM._HAS_PIL:
-        pytest.skip("PIL present: decode_image dispatches to PIL, not our decoder")
     pix = _smooth(24, 24, seed=1)
     jpeg, jvm_pix = _jvm_jpeg_roundtrip(spark, pix)
     ours = IM.decode_image(jpeg)
@@ -189,8 +187,6 @@ def test_jpeg_progressive_tiny(spark):
 
 
 def test_jpeg_progressive_dispatched_from_decode_image(spark):
-    if IM._HAS_PIL:
-        pytest.skip("PIL present: decode_image dispatches to PIL")
     pix = _smooth(24, 24, seed=2)
     jpeg, jvm_pix = _jvm_progressive_roundtrip(spark, pix)
     assert IM.psnr(IM.decode_image(jpeg), jvm_pix) >= 40.0

@@ -153,6 +153,11 @@ def _case(name):
         lid, rid = list(range(30)), list(range(150))
         lid[:2], rid[:2], rid[-2:] = _ID_EDGES, _ID_EDGES, [_ID_EDGES[1] - 1, _ID_EDGES[0] + 1]
         return {"lid": lid, **_uniform(rng, 30)}, {"rid": rid, **_uniform(rng, 150)}, 4, None, tie, None
+    if name == "duplicate_left_id":
+        # two left rows share an id: each still gets its own k neighbours
+        return ({"lid": [7, 7], "x": [1.0, 90.0], "y": [1.0, 90.0]},
+                {"rid": [1, 2, 3, 4], "x": [0.0, 2.0, 89.0, 91.0], "y": [0.0, 2.0, 89.0, 91.0]},
+                2, None, tie, None)
     right = {"rid": range(441), **_lattice(21)}
     left = {"lid": range(40), **{k: rng.integers(0, 20, 40) + 0.5 for k in "xy"}}
     if name == "tiebreak_long":
@@ -170,7 +175,7 @@ def _case(name):
 
 _PARITY = ("uniform", "lattice_ties", "k_above_right", "left_outside_right", "given_grid",
            "hot_cell", "empty_left", "empty_right", "null_coordinates", "id_limits",
-           "tiebreak_long", "tiebreak_string", "tiebreak_null")
+           "tiebreak_long", "tiebreak_string", "tiebreak_null", "duplicate_left_id")
 
 
 @pytest.mark.parametrize("name", _PARITY)
@@ -178,7 +183,8 @@ def test_knn_probe_matches_ring(spark, name):
     """The broadcast probe returns the ring schedule's rows — exact
     ``knn_dist``, ranks and right rows — with its column names and types,
     over ties, sparse and hot right sides, outside points, NULL and
-    non-finite coordinates, int64-limit ids and every tiebreak type."""
+    non-finite coordinates, int64-limit ids, a repeated left id and every
+    tiebreak type."""
     lcols, rcols, k, grid, kw, cols = _case(name)
     left, right = _table(spark, **lcols), _table(spark, **rcols)
     ring, want = _run_knn(spark, "ring", left, right, k, grid, **kw)

@@ -3,8 +3,7 @@
 Non-circular verification: the JVM's javax.imageio (always present — Spark
 runs on Java 17) encodes/decodes PNGs independently of our implementation;
 pixels must match exactly in both directions.  Filters 1-4 are exercised via
-hand-filtered scanlines.  PIL roundtrip runs only when PIL exists (skipped,
-not faked, when absent — this container has no PIL).
+hand-filtered scanlines.
 """
 
 import struct
@@ -143,27 +142,11 @@ def test_png_cross_check_jvm_imageio(spark):
             assert rgb == ((r << 16) | (g << 8) | b)
 
 
-@pytest.mark.skipif(not IM._HAS_PIL, reason="PIL not installed in this container")
-def test_png_roundtrip_via_pil():
-    """When PIL exists, decode_image prefers it; verify parity with a real
-    PNG byte buffer."""
-    import io
-
-    from PIL import Image
-
-    pix = _pixels(8, 8, seed=7)
-    bio = io.BytesIO()
-    Image.fromarray(pix).save(bio, format="PNG")
-    assert np.array_equal(IM.decode_image(bio.getvalue()), pix)
-
-
 def test_jpeg_dispatch_without_pil():
     """Round 4: real JPEG bytes now dispatch to the native baseline decoder
     (sources/jpeg.py) instead of a blanket NotImplementedError; truncated
     garbage still fails loudly (ValueError), and progressive streams keep
     the NotImplementedError gate (tested in test_jpeg_codec)."""
-    if IM._HAS_PIL:
-        pytest.skip("PIL present: real JPEG decode available")
     with pytest.raises(ValueError):
         IM.decode_image(b"\xff\xd8\xff\xe0" + b"\x00" * 32)
 

@@ -423,15 +423,13 @@ def test_st_ordering_equals(spark):
 
 
 def test_tiff_decode_image_native_fallback():
-    """decode_image falls back to the native classic-TIFF parser when
-    tifffile/PIL are absent (the state of this container)."""
+    """decode_image reads TIFF through the native classic-TIFF parser
+    (raster_codecs.decode_geotiff), its one TIFF decoder."""
     import numpy as np
 
     from incubator_sedona_spark.sources import raster_codecs as RC
-    from incubator_sedona_spark.sources.images import _HAS_PIL, decode_image
+    from incubator_sedona_spark.sources.images import decode_image
 
-    if _HAS_PIL:
-        pytest.skip("PIL present; fallback path not reachable")
     pix = (np.arange(24, dtype=np.float64) * 10 % 256).reshape(2, 4, 3)
     r = {
         "bands": [pix[:, :, c].ravel().tolist() for c in range(3)],

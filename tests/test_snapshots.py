@@ -344,3 +344,32 @@ def test_copied_table_reads_and_frees_only_its_own_files(spark, tmp_path):
     assert len(freed) == 2 and all(p.startswith(dst + os.sep) for p in freed)
     assert c.read(spark).count() == 3
     assert t.read(spark).count() == 20  # the original keeps every file
+
+
+def test_commit_reads_footers_without_a_spark_job(spark, tmp_path):
+    """A commit reads the new files' footers on the driver: after the data
+    write, recording the snapshot starts no Spark job."""
+    t = SnapshotTable(str(tmp_path / "t9"))
+    files = t._write_data(_batch(spark, 0, 40), 1)
+    sc = spark.sparkContext
+    sc.setJobGroup("snapshot-commit", "commit only")
+    try:
+        assert t._commit("append", files) == 1
+    finally:
+        sc.setJobGroup("", "")
+    assert list(sc.statusTracker().getJobIdsForGroup("snapshot-commit")) == []
+    assert [f["rows"] for f in t.file_stats()] == [
+        spark.read.parquet(f).count() for f in files
+    ]
+
+
+def test_decimal_column_commits_without_a_range(spark, tmp_path):
+    """pyarrow cannot read a decimal column's footer min/max; the column
+    keeps no range (pruning keeps every file) instead of failing the
+    commit."""
+    t = SnapshotTable(str(tmp_path / "t10"))
+    df = _batch(spark, 0, 30).withColumn("dec", (F.col("val") / 7).cast("decimal(10,4)"))
+    t.append(df)
+    stats = t.file_stats()
+    assert all("dec" not in f["min"] and "id" in f["min"] for f in stats)
+    assert t.read(spark, prune={"dec": (0, 1)}).count() == 30

@@ -138,3 +138,33 @@ def test_image_table_schema_guard(spark, tmp_path):
     if not IB.iceberg_available(spark):
         with _pytest.raises(NotImplementedError):
             IB.read_image_table(spark, str(tmp_path / "x.parquet"), snapshot_id=1)
+
+
+_OPTIONAL_CODECS = {"PIL", "tifffile", "soundfile", "av", "cv2", "pydub"}
+
+
+def test_no_optional_codec_imports():
+    """Each format has one native decoder: no package module imports an
+    optional codec, whose output would depend on what the host has
+    installed (nested and guarded imports count too)."""
+    import ast
+    import pathlib
+
+    import incubator_sedona_spark
+
+    root = pathlib.Path(incubator_sedona_spark.__file__).parent
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom) and node.level == 0:
+                names = [node.module or ""]
+            else:
+                continue
+            found += [
+                f"{path.relative_to(root)}:{node.lineno} {n}"
+                for n in names
+                if n.split(".")[0] in _OPTIONAL_CODECS
+            ]
+    assert not found, found
