@@ -240,7 +240,9 @@ def q_distance_join_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         5.0,
         grid=GRID_PTS,
         left_point_cols=("x", "y"),
-        right_point_cols=("x", "y"),  # both sides points: fully native, no UDF
+        # both sides points: the broadcast probe (a side is small enough),
+        # else a fully native cell join with no UDF
+        right_point_cols=("x", "y"),
     )
     return j.select("c_custkey", "s_suppkey")
 

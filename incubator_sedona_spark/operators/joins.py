@@ -18,13 +18,18 @@ BroadcastIndexJoinExec.scala:43-289), in two plans:
   analog, StandardQuadTree.java:445-466), so point joins are duplicate-free
   with no dedup pass (GeomUtils.java:330-332).
 
-- the broadcast index probe (BroadcastIndexJoinExec analog): when the refine
-  needs the Python kernel and one side is small enough to broadcast, the
-  driver collects that side once into a sorted cell index and ONE
-  ``mapInArrow`` streams the other side through it, covering, probing,
-  prefiltering and refining each Arrow batch in the same Python call.  Each
-  task then holds one Python runner instead of two (a bbox UDF plus a
-  refine UDF in the same stage), and the plan has no exchange.
+- the broadcast index probe (BroadcastIndexJoinExec analog, :func:`_probe_join`):
+  when one side is small enough to broadcast, the driver collects that
+  side once, at call time, into a sorted cell index and ONE ``mapInArrow``
+  streams the other side through it, covering, probing, prefiltering and
+  refining each Arrow batch in the same Python call.  Each task then holds
+  one Python runner instead of two (a bbox UDF plus a refine UDF in the
+  same stage), and the plan has no exchange.  ``spatial_join`` takes it
+  when its refine needs the Python kernel; ``distance_join`` whenever the
+  distance is planar (not geography or circle mode) and the radius is a
+  finite number or a left column, because its cell join costs a shuffle of
+  both sides and, with WKB sides, a second runner too.  ``salt`` splits
+  shuffle keys, so it does not apply to the probe.
 """
 
 from __future__ import annotations
@@ -535,11 +540,11 @@ def _broadcast_size(df: DataFrame) -> int | None:
     return est if est is not None and est <= limit else None
 
 
-def _auto_index_side(left: DataFrame, right: DataFrame, right_point_cols) -> str | None:
+def _auto_index_side(left: DataFrame, right: DataFrame, right_indexable: bool = True) -> str | None:
     """The side Catalyst would broadcast (:func:`_broadcast_size`).  The
-    smaller qualifying side wins, the right one on a tie (BuildRight); a side
-    given by coordinate columns is never the index."""
-    sides = {"left": left} if right_point_cols is not None else {"left": left, "right": right}
+    smaller qualifying side wins, the right one on a tie (BuildRight); the
+    right side is a candidate only when ``right_indexable``."""
+    sides = {"left": left, "right": right} if right_indexable else {"left": left}
     sizes = {side: _broadcast_size(df) for side, df in sides.items()}
     sizes = {side: est for side, est in sizes.items() if est is not None}
     return min(sizes, key=lambda side: (sizes[side], side == "left")) if sizes else None
@@ -587,33 +592,105 @@ def _probe_cells(grid: Grid, keys: np.ndarray, bb: np.ndarray) -> tuple[np.ndarr
     return row[grp], entry
 
 
+def _probe_source(df: DataFrame, point_cols, radius) -> DataFrame:
+    """``df`` with the probe's double inputs appended after its own columns:
+    ``__x``, ``__y`` for a coordinate side, ``__rad`` for a radius column."""
+    extra = [F.col(c).cast("double").alias(n) for c, n in zip(point_cols or (), ("__x", "__y"))]
+    if isinstance(radius, str):
+        extra.append(F.col(radius).cast("double").alias("__rad"))
+    return df.select("*", *extra) if extra else df
+
+
+def _probe_rows(batch: pa.RecordBatch, n: int, geom: int | None, radius):
+    """``(rows, bb, box, wkb, rad)`` for the rows of ``batch`` that can match.
+
+    ``n`` is the side's own column count (:func:`_probe_source` columns
+    follow it) and ``geom`` its WKB column, None for a coordinate side.
+    ``box`` is the bbox the cover and prefilter use: ``bb`` itself, or for
+    the left side of a distance join ``bb`` expanded by the radius
+    (``radius``: a number, or a column name for the ``__rad`` column).
+    Rows with a NULL geometry, a non-finite box or a negative radius are
+    dropped.  With a finite radius none of them matches in the cell join
+    either: a non-finite coordinate gives an infinite or NaN distance.
+    """
+    if geom is None:
+        x, y = (batch.column(n + k).to_numpy(zero_copy_only=False) for k in (0, 1))
+        rows, wkb, bb = np.arange(batch.num_rows), None, np.column_stack([x, y, x, y])
+    else:
+        col = batch.column(geom)
+        rows = np.flatnonzero(col.is_valid().to_numpy(zero_copy_only=False))
+        wkb = col.to_numpy(zero_copy_only=False)[rows]
+        bb = W.bounds_batch(wkb)
+    rad, box = None, bb
+    if radius is not None:
+        rad = (
+            batch.column(batch.num_columns - 1).to_numpy(zero_copy_only=False)[rows]
+            if isinstance(radius, str) else np.full(len(rows), float(radius))
+        )
+        box = np.column_stack([bb[:, 0] - rad, bb[:, 1] - rad, bb[:, 2] + rad, bb[:, 3] + rad])
+    ok = np.isfinite(box).all(axis=1) & (box[:, 0] <= box[:, 2]) & (box[:, 1] <= box[:, 3])
+    return (
+        rows[ok], bb[ok], box[ok], None if wkb is None else wkb[ok], None if rad is None else rad[ok]
+    )
+
+
+def _pair_distance(lbb: np.ndarray, rbb: np.ndarray, lwkb, rwkb) -> np.ndarray:
+    """distance_join's cell-join distance, pair by pair.  Point pairs (both
+    bboxes degenerate) get ``sqrt(dx**2 + dy**2)`` on the bbox corners:
+    bit-identical to Catalyst's ``sqrt(pow(dx, 2) + pow(dy, 2))``, because
+    Spark's ``Pow`` is ``StrictMath.pow`` and fdlibm returns ``x*x`` for
+    ``y == 2``.  Other pairs go through ``K.distance_batch``, as the cell
+    join's UDF does; a coordinate side (``wkb`` None) passes its points as
+    WKB."""
+    d = np.sqrt((lbb[:, 0] - rbb[:, 0]) ** 2 + (lbb[:, 1] - rbb[:, 1]) ** 2)
+    point = (lbb[:, 0] == lbb[:, 2]) & (lbb[:, 1] == lbb[:, 3])
+    point &= (rbb[:, 0] == rbb[:, 2]) & (rbb[:, 1] == rbb[:, 3])
+    other = np.flatnonzero(~point)
+    if len(other):
+        d[other] = K.distance_batch(*(
+            W.points_to_wkb(bb[other, 0], bb[other, 1]) if wkb is None else wkb[other]
+            for wkb, bb in ((lwkb, lbb), (rwkb, rbb))
+        ))
+    return d
+
+
 def _probe_join(
     left: DataFrame,
     right: DataFrame,
     index: str,
-    predicate: str,
     left_geom: str,
     right_geom: str,
     grid: Grid | None,
     level: int | None,
     how: str,
-    right_point_cols: tuple[str, str] | None,
-    shape_cover: bool,
-    assume_same_crs: bool,
+    predicate: str = "intersects",
+    left_point_cols: tuple[str, str] | None = None,
+    right_point_cols: tuple[str, str] | None = None,
+    shape_cover: bool = False,
+    assume_same_crs: bool = False,
+    radius: float | str | None = None,
+    include_boundary: bool = True,
+    emit_distance: str | None = None,
 ) -> DataFrame:
     """Broadcast index join (BroadcastIndexJoinExec.scala:43-289 analog):
     the ``index`` side is collected once and built into a flat cell index on
     the driver; one ``mapInArrow`` over the other (stream) side probes it.
+    It runs ``spatial_join``'s ``predicate`` or, with a ``radius``,
+    ``distance_join``: the left side's bboxes are expanded by the radius
+    (a number or a left column), whichever side is the left one.
 
-    Build: NULL geometries dropped, bboxes from ``W.bounds_batch``, cells
-    from the bbox cover (or ``cover_geometry`` for ``shape_cover``), stored
-    as sorted packed cell keys with their row positions.  Without a ``grid``
-    the grid is sized from the index bboxes alone, so no aggregate job runs.
+    Build: rows that cannot match dropped (:func:`_probe_rows`), bboxes
+    from ``W.bounds_batch`` or the coordinate columns, cells from the bbox
+    cover (or ``cover_geometry`` for ``shape_cover``), stored as sorted
+    packed cell keys with their row positions.  Without a ``grid`` the grid
+    is sized from the index boxes alone, so no aggregate job runs.
 
-    Probe, per Arrow batch: stream bboxes (WKB or coordinate columns), one
-    key range per covered grid column, unique (stream, index) pairs (this
-    replaces the reference-point dedup), the bbox prefilter, then the kernel
-    refine.  Coordinate points are grouped by index geometry, each parsed
+    Probe, per Arrow batch: stream boxes, one key range per covered grid
+    column, unique (stream, index) pairs (this replaces the reference-point
+    dedup), the bbox prefilter, then the refine: the kernel predicate, or
+    :func:`_pair_distance` against the radius (``<=``, or ``<`` without
+    ``include_boundary``), optionally emitted as ``emit_distance``.  For a
+    predicate, coordinate points are grouped by index geometry, each parsed
     once per task; WKB pairs go through ``K.eval_predicate_batch``, which
     parses each geometry once per batch.  Both sides' rows stay Arrow from
     collect to output (``take`` on the index and on each stream batch), so
@@ -624,45 +701,41 @@ def _probe_join(
     _check_srid_columns(left, right, assume_same_crs)
     left_cols, right_cols = list(left.columns), list(right.columns)
     left, right = _with_row_id(left, right, how)
-    idx_df, stream = (left, right) if index == "left" else (right, left)
-    idx_geom, stream_geom = (left_geom, right_geom) if index == "left" else (right_geom, left_geom)
+    sides = {
+        "left": (left, left_geom, left_point_cols, radius),
+        "right": (right, right_geom, right_point_cols, None),
+    }
+    (idx_df, i_geom, i_xy, i_rad), (stream, s_geom, s_xy, s_rad) = (
+        sides[index], sides["right" if index == "left" else "left"]
+    )
+    n_i, n_s = len(idx_df.columns), len(stream.columns)
+    ig = None if i_xy else idx_df.columns.index(i_geom)
+    sg = None if s_xy else stream.columns.index(s_geom)
 
-    # build: the index side's rows as one Arrow batch, finite geometries only
-    itab = idx_df.toArrow()
-    ig = idx_df.columns.index(idx_geom)
-    itab = itab.filter(itab.column(ig).is_valid())
-    iwkb = itab.column(ig).to_numpy(zero_copy_only=False)
-    ibb = W.bounds_batch(iwkb)
-    finite = np.isfinite(ibb).all(axis=1)
-    itab, iwkb, ibb = itab.filter(finite), iwkb[finite], ibb[finite]
+    # build: the index side's rows as one Arrow batch, matchable rows only
+    itab = _probe_source(idx_df, i_xy, i_rad).toArrow()
     ibatch = pa.RecordBatch.from_arrays(
         [c.combine_chunks() for c in itab.columns], names=itab.column_names
     )
+    irows, ibb, ibox, _, irad = _probe_rows(ibatch, n_i, ig, i_rad)
+    ibatch = ibatch.take(pa.array(irows, pa.int64()))
     if grid is None:
-        # infer_grid's rule over the index bboxes alone
-        bb = ibb if len(ibb) else np.array([[0.0, 0.0, 1.0, 1.0]])
+        # infer_grid's rule over the index boxes alone
+        bb = ibox if len(ibox) else np.array([[0.0, 0.0, 1.0, 1.0]])
         (x0, y0), (x1, y1) = bb[:, :2].min(axis=0), bb[:, 2:].max(axis=0)
         if level is None:
             ext = max((bb[:, 2] - bb[:, 0]).mean(), (bb[:, 3] - bb[:, 1]).mean())
             level = choose_level(float(ext), float(max(x1 - x0, y1 - y0)))
         grid = grid_for_bounds(float(x0), float(y0), float(x1), float(y1), level)
     if shape_cover:
+        iwkb = ibatch.column(ig).to_numpy(zero_copy_only=False)
         covers = [grid.cover_geometry(W.loads(b)) for b in iwkb]
         rows = np.repeat(np.arange(len(covers)), [len(c) for c in covers])
         cells = np.concatenate(covers) if covers else np.empty(0, np.int64)
     else:
-        rows, cells = _bbox_cells(grid, ibb)
+        rows, cells = _bbox_cells(grid, ibox)
     order = np.argsort(cells, kind="stable")
     keys, kpos = cells[order], rows[order]
-
-    # probe: the stream side's columns, plus double coordinates for a point side
-    n_stream = len(stream.columns)
-    coords = right_point_cols is not None
-    src = stream
-    if coords:
-        xy = zip(right_point_cols, ("__x", "__y"))
-        src = stream.select("*", *(F.col(c).cast("double").alias(n) for c, n in xy))
-    sg = None if coords else stream.columns.index(stream_geom)
     n_idx = max(ibatch.num_rows, 1)
 
     def lr(idx, strm):
@@ -670,36 +743,32 @@ def _probe_join(
         return (idx, strm) if index == "left" else (strm, idx)
 
     # positional names: the two sides may share column names
-    out_fields = [
-        f"__{tag}{i}"
-        for tag, n in lr(("i", len(idx_df.columns)), ("s", n_stream))
-        for i in range(n)
-    ]
+    out_fields = [f"__{tag}{i}" for tag, n in lr(("i", n_i), ("s", n_s)) for i in range(n)]
+    out_fields += ["__dist"] if emit_distance else []
 
     def _probe(batches):
         # the index geometries from the shipped batch, not a second copy
-        iwkb = ibatch.column(ig).to_numpy(zero_copy_only=False)
+        iwkb = None if ig is None else ibatch.column(ig).to_numpy(zero_copy_only=False)
         geoms: dict[int, W.Geometry] = {}  # index position -> parsed, for the task
         for batch in batches:
-            if coords:
-                x, y = (batch.column(n_stream + k).to_numpy(zero_copy_only=False) for k in (0, 1))
-                sbb = np.column_stack([x, y, x, y])
-                valid = np.flatnonzero(np.isfinite(sbb).all(axis=1))
-                sbb = sbb[valid]
-            else:
-                col = batch.column(sg)
-                valid = np.flatnonzero(col.is_valid().to_numpy(zero_copy_only=False))
-                swkb = col.to_numpy(zero_copy_only=False)[valid]
-                sbb = W.bounds_batch(swkb)
-                fin = np.isfinite(sbb).all(axis=1)
-                valid, swkb, sbb = valid[fin], swkb[fin], sbb[fin]
-            row, entry = _probe_cells(grid, keys, sbb)
+            valid, sbb, sbox, swkb, srad = _probe_rows(batch, n_s, sg, s_rad)
+            row, entry = _probe_cells(grid, keys, sbox)
             pair = np.unique(row * n_idx + kpos[entry])
             srow, ipos = pair // n_idx, pair % n_idx
-            lbb, rbb = lr(ibb[ipos], sbb[srow])
-            keep = _bbox_prefilter(predicate, list(lbb.T), list(rbb.T))
+            lbox, rbox = lr(ibox[ipos], sbox[srow])
+            keep = _bbox_prefilter(predicate, list(lbox.T), list(rbox.T))
             srow, ipos = srow[keep], ipos[keep]
-            if coords:
+            extra = []
+            if radius is not None:
+                d = _pair_distance(
+                    *lr(ibb[ipos], sbb[srow]),
+                    *lr(None if iwkb is None else iwkb[ipos], None if swkb is None else swkb[srow]),
+                )
+                rad = irad[ipos] if index == "left" else srad[srow]
+                hit = d <= rad if include_boundary else d < rad
+                if emit_distance:
+                    extra = [pa.array(d[hit], pa.float64())]
+            elif s_xy:
                 pts = sbb[srow, :2]
                 hit = np.zeros(len(srow), dtype=bool)
                 order = np.argsort(ipos, kind="stable")
@@ -713,14 +782,16 @@ def _probe_join(
                 hit = K.eval_predicate_batch(predicate, *lr(iwkb[ipos], swkb[srow]))
             srow, ipos = valid[srow[hit]], ipos[hit]
             if len(srow):
-                lcols, rcols = lr(ibatch.take(ipos).columns, batch.take(srow).columns[:n_stream])
-                yield pa.RecordBatch.from_arrays(lcols + rcols, names=out_fields)
+                lcols, rcols = lr(ibatch.take(ipos).columns[:n_i], batch.take(srow).columns[:n_s])
+                yield pa.RecordBatch.from_arrays(lcols + rcols + extra, names=out_fields)
 
     fields = [f for part in lr(idx_df.schema.fields, stream.schema.fields) for f in part]
+    fields += [StructField(emit_distance, DoubleType())] if emit_distance else []
     schema = StructType([StructField(n, f.dataType, f.nullable) for n, f in zip(out_fields, fields)])
     lnames = set(left_cols)
     names = list(left.columns) + [c + "_r" if c in lnames else c for c in right.columns]
-    inner = src.mapInArrow(_probe, schema).select(
+    names += [emit_distance] if emit_distance else []
+    inner = _probe_source(stream, s_xy, s_rad).mapInArrow(_probe, schema).select(
         [F.col(f).alias(n) for f, n in zip(out_fields, names)]
     )
     if how == "inner":
@@ -838,11 +909,12 @@ def spatial_join(
         left_rect if isinstance(left_rect, bool) else _left_all_rectangles(left, left_geom)
     )
     if refine and not rect and not streaming:
-        index = broadcast or _auto_index_side(left, right, right_point_cols)
+        index = broadcast or _auto_index_side(left, right, right_point_cols is None)
         if index == "left" or (index == "right" and right_point_cols is None):
             return _probe_join(
-                left, right, index, predicate, left_geom, right_geom, grid, level, how,
-                right_point_cols, left_cover == "shape", assume_same_crs,
+                left, right, index, left_geom, right_geom, grid, level, how, predicate,
+                right_point_cols=right_point_cols, shape_cover=left_cover == "shape",
+                assume_same_crs=assume_same_crs,
             )
 
     lp, rp = "l_", "r_"
@@ -888,11 +960,29 @@ def distance_join(
 
     DistanceJoinExec analog (DistanceJoinExec.scala:50-84): the LEFT side's
     envelope is expanded by the radius (TraitJoinQueryBase.scala:51-66) and
-    fed to the same candidate-join pipeline as :func:`spatial_join` (an
-    ``intersects`` cell join); the refine is a vectorized distance
-    computation.  ``how``, ``broadcast``, ``salt``/``salt_min_rows`` (fixed
-    salt factor 8) and the ``srid`` mismatch guard behave as in
-    :func:`spatial_join`.
+    fed to the same two plans as :func:`spatial_join` (an ``intersects``
+    join); the refine is a vectorized distance computation.  ``radius`` is
+    a number, a left column name or a Column.
+
+    Which plan runs: the broadcast index probe (:func:`_probe_join`, the
+    reference's BroadcastIndexJoinExec with expanded envelopes) when
+    ``mode="distance"``, ``geography`` is off, the radius is a finite
+    number or a left column name, neither side streams and one side is
+    broadcast: the ``broadcast`` hint, else the side Catalyst itself would
+    broadcast (optimizer size at most
+    ``spark.sql.autoBroadcastJoinThreshold``, the smaller one, the right
+    one on a tie).  Unlike in :func:`spatial_join`, a coordinate-point side
+    may be the index.  One ``mapInArrow`` then covers, probes and refines
+    each batch, with no exchange and no second Python runner; rows and
+    ``emit_distance`` values are the cell join's, bit for bit.  The index
+    side is read once, when ``distance_join`` is called: the returned
+    DataFrame keeps probing those rows.  On the probe a row whose radius is
+    NULL, NaN, infinite or negative matches nothing.  Every other join
+    (geography, circle mode, a Column radius, no broadcast side, streaming)
+    is the cell equi-join, where the hint is a Catalyst broadcast hint.
+    ``how``, ``salt``/``salt_min_rows`` (fixed salt factor 8, cell join
+    only: the probe has no shuffle keys to split) and the ``srid`` mismatch
+    guard behave as in :func:`spatial_join`.
 
     ``mode="circle"`` reproduces the reference's CircleRDD semantics exactly
     (Circle.java:76-81): distance measured from the bbox *center* of the left
@@ -901,11 +991,24 @@ def distance_join(
     ST_Distance-based SQL computes.  For point-point inputs the two coincide
     and the refine is pure Catalyst arithmetic (no UDF at all).
     """
+    literal = isinstance(radius, (int, float))
+    if (
+        mode == "distance" and not geography and not (left.isStreaming or right.isStreaming)
+        and (isinstance(radius, str) or (literal and math.isfinite(radius)))
+    ):
+        index = broadcast or _auto_index_side(left, right)
+        if index is not None:
+            return _probe_join(
+                left, right, index, left_geom, right_geom, grid, level, how,
+                left_point_cols=left_point_cols, right_point_cols=right_point_cols,
+                radius=radius, include_boundary=include_boundary, emit_distance=emit_distance,
+            )
+
     lp, rp = "l_", "r_"
     lft = _side(left, left_geom, left_point_cols, lp)
     rgt = _side(right, right_geom, right_point_cols, rp)
     lb, rb = dict(zip(BBOX_COLS, _bbox(lp))), dict(zip(BBOX_COLS, _bbox(rp)))
-    rad = F.lit(float(radius)) if isinstance(radius, (int, float)) else (
+    rad = F.lit(float(radius)) if literal else (
         F.col(lp + radius) if isinstance(radius, str) else radius
     )
     meter_rad = rad

@@ -1,15 +1,21 @@
 """The dedup family's shared candidate-pair pipeline: plan shape per operator,
-and the count-vector bound's behaviour at its lane limits."""
+the count-vector bound's behaviour at its lane limits, and the size of the
+largest method Spark generates for it."""
 
+import os
 import random
 import re
 import string
+import subprocess
+import sys
 
 import pytest
 from pyspark.sql import functions as F
 
 from incubator_sedona_spark.pipeline import dedup as D
 from incubator_sedona_spark.pipeline.setjoin import exact_jaccard_self_join
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _texts(n=24, seed=3):
@@ -122,3 +128,48 @@ def test_exact_jaccard_keeps_pairs_past_the_lane_guard(spark):
     got = exact_jaccard_self_join(df, threshold=0.9).collect()
     assert [(r.id_a, r.id_b) for r in got] == [(0, 1)]
     assert got[0].jaccard == pytest.approx(D.exact_shingle_jaccard(base, edited, 5), abs=1e-9)
+
+
+_JIT_JOB = r"""
+import random
+
+from incubator_sedona_spark.pipeline import dedup as D
+from incubator_sedona_spark.pipeline.setjoin import exact_jaccard_self_join
+from incubator_sedona_spark.session import get_spark
+
+spark = get_spark(master="local[2]", shuffle_partitions=2)
+metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+rng = random.Random(3)
+words = ["w%d" % i for i in range(40)]
+base = [" ".join(rng.choice(words) for _ in range(30)) for _ in range(20)]
+docs = spark.createDataFrame(
+    [(i, base[i % 20] + (" x%d" % i if i >= 20 else "")) for i in range(40)],
+    "doc_id long, text string")
+assert exact_jaccard_self_join(docs, threshold=0.6).count() == 20
+assert D.minhash_lsh_dup_pairs(docs, threshold=0.6, verify="exact").count() == 20
+print("MAX_METHOD_BYTES", metrics.METRIC_GENERATED_METHOD_BYTECODE_SIZE().getSnapshot().getMax())
+spark.stop()
+"""
+
+def test_generated_methods_stay_under_the_jit_limit(tmp_path):
+    """The largest method Spark generates for PPJoin and exact minhash stays
+    under HotSpot's 8,000-byte huge-method limit; past it the stage runs
+    interpreted, ~40x slower, with the same rows.  A fresh session, so the
+    histogram holds only these two operators' code.  Headroom is thin: with
+    these 40 documents on ``local[2]`` the largest method was 7,724 bytes
+    for PPJoin, in its verify stage (the broadcast join of candidate pairs
+    with the right-hand sets and the ``array_intersect`` Jaccard), and 7,380
+    bytes for minhash, in its band-key stage (32 ``xxhash64`` band keys over
+    the pinned 96-column signature table).  Widening either, for example
+    ``_CV_LONGS = 12``, fails this test."""
+    job = tmp_path / "job.py"
+    job.write_text(_JIT_JOB)
+    env = dict(os.environ, SPARK_DRIVER_MEMORY="1g",
+               PYTHONPATH=os.pathsep.join(filter(None, [REPO, os.environ.get("PYTHONPATH")])))
+    res = subprocess.run([sys.executable, str(job)], cwd=str(tmp_path), env=env,
+                         capture_output=True, text=True, timeout=600)
+    assert res.returncode == 0, res.stderr[-3000:]
+    size = int(next(s for s in res.stdout.splitlines() if s.startswith("MAX_METHOD_BYTES")).split()[1])
+    # HotSpot does not JIT-compile a method of more than 8,000 bytecode
+    # bytes (DontCompileHugeMethods is on by default)
+    assert 0 < size < 8000, size

@@ -11,6 +11,7 @@
 import re
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -517,6 +518,145 @@ def test_broadcast_probe_keeps_values_exact(spark):
         assert all(math.isnan(r.d_r) for r in got)
 
 
+# -- broadcast distance probe vs the shuffled cell path ------------------------
+
+DGRID = Grid(0.0, 0.0, 40.01, 40.01, 3)
+
+
+def _arrow_side(spark, cols):
+    """An Arrow-built side (it carries optimizer statistics) from
+    ``{name: (arrow type, values)}``."""
+    return spark.createDataFrame(pa.table({k: pa.array(v, t) for k, (t, v) in cols.items()}))
+
+
+def _distance_points(spark, id_name, shift, null_wkb=True):
+    """Points on a 5-step lattice (every neighbour at exactly r = 5; with
+    ``shift`` (3, 4) a 3-4-5 triangle to each left point), coincident
+    points, NULL, NaN and +-inf coordinates, points outside DGRID, ids at
+    -2^63, 2^53+1 and 2^63-1 plus a duplicate and a NULL, a NaN and NULL
+    attribute double, a radius column holding NULL, 0 and negative values,
+    and a WKB column (with a NULL on a finite point if ``null_wkb``)."""
+    sx, sy = shift
+    xy = [(float(x + sx), float(y + sy)) for x in range(0, 40, 5) for y in range(0, 40, 5)]
+    xy += [(10.0, 10.0), (10.0, 10.0), (-30.0, -30.0), (80.0, 10.0), (-27.0, -26.0),
+           (None, None), (float("nan"), 5.0), (5.0, float("inf")), (float("-inf"), 0.0)]
+    n = len(xy)
+    ids = list(range(n))
+    ids[0], ids[1], ids[2], ids[3], ids[4] = -(2**63), 2**53 + 1, 2**63 - 1, 7, None
+    rad = [5.0 if i % 4 else 2.5 for i in range(n)]
+    rad[5], rad[6], rad[7], rad[8] = None, 0.0, -1.0, 7.5
+    wkb = [None if x is None else W.dumps(W.point(x, y)) for x, y in xy]
+    if null_wkb:
+        wkb[9] = None
+    return _arrow_side(spark, {
+        id_name: (pa.int64(), ids),
+        "x": (pa.float64(), [p[0] for p in xy]),
+        "y": (pa.float64(), [p[1] for p in xy]),
+        "val": (pa.float64(), [_attr(i) for i in range(n)]),
+        "rad": (pa.float64(), rad),
+        "wkb": (pa.binary(), wkb),
+    })
+
+
+def _distance_polys(spark):
+    """Boxes, an L-shaped polygon, a line, a polygon outside DGRID and a
+    NULL geometry, with NaN and NULL attribute doubles."""
+    geoms = [W.box(x, y, x + 3, y + 2) for x in range(0, 40, 9) for y in range(0, 40, 11)]
+    geoms += [W.polygon([(1, 1), (30, 1), (30, 4), (4, 4), (4, 30), (1, 30)]),
+              W.linestring([(0, 20), (40, 21)]), W.box(60, 60, 70, 70), None]
+    n = len(geoms)
+    return _arrow_side(spark, {
+        "gid": (pa.int64(), list(range(n))),
+        "val": (pa.float64(), [_attr(i) for i in range(n)]),
+        "wkb": (pa.binary(), [None if g is None else W.dumps(g) for g in geoms]),
+    })
+
+
+_XY = {"left_point_cols": ("x", "y"), "right_point_cols": ("x", "y")}
+
+# (case id, left, right, radius, how, index side or "auto", extra kwargs)
+_DISTANCE_CASES = (
+    [(f"xy-r5-boundary_{b}", "pts", "pts_b", 5.0, "inner", "right", {**_XY, "include_boundary": b})
+     for b in (True, False)]
+    + [(f"xy-coincident_r0-boundary_{b}", "pts", "pts_c", 0.0, "inner", "left",
+        {**_XY, "include_boundary": b}) for b in (True, False)]
+    + [(f"xy-column_radius-{side}", "pts", "pts_b", "rad", "inner", side, _XY)
+       for side in ("left", "right")]
+    + [("xy-column_radius-exclusive", "pts", "pts_c", "rad", "inner", "left",
+        {**_XY, "include_boundary": False})]
+    + [(f"xy-{h}-{('left', 'right')[i % 2]}", "pts", "pts_b", 5.0, h, ("left", "right")[i % 2], _XY)
+       for i, h in enumerate(_HOWS)]
+    + [("xy-auto_side", "pts", "pts_b", 5.0, "inner", "auto", _XY)]
+    + [(f"xy-inferred_grid-{side}", "pts", "pts_b", 5.0, "inner", side, {**_XY, "grid": None})
+       for side in ("left", "right")]
+    + [("wkb_points-r5", "pts", "pts_b", 5.0, "inner", "right", {})]
+    + [(f"polys_x_points-{h}-{side}", "polys", "pts", 2.0, h, side, {})
+       for h, side in (("inner", "left"), ("inner", "right"), ("existence", "left"),
+                       ("right_outer", "right"))]
+    + [("points_x_polys-column_radius", "pts", "polys", "rad", "left_outer", "right", {}),
+       ("polys_x_xy-inferred_grid", "polys", "pts_xy", 1.5, "inner", "left",
+        {"right_point_cols": ("x", "y"), "grid": None})]
+    + [("empty_index", "pts", "empty", 5.0, "inner", "right", _XY),
+       ("empty_stream", "pts", "empty", 5.0, "right_outer", "left", _XY),
+       ("empty_index-left_outer", "empty", "pts_b", 5.0, "left_outer", "left", _XY)]
+)
+
+
+@pytest.fixture(scope="module")
+def distance_sides(spark):
+    pts = _distance_points(spark, "aid", (0, 0))
+    return {
+        "pts": pts,
+        "pts_b": _distance_points(spark, "bid", (3, 4)),
+        "pts_c": _distance_points(spark, "cid", (0, 0)),
+        # the cell join reads a coordinate side's WKB column for its pairs
+        # with a polygon, so that column must hold the same points
+        "pts_xy": _distance_points(spark, "cid", (0, 0), null_wkb=False),
+        "polys": _distance_polys(spark),
+        "empty": pts.where(F.lit(False)),
+    }
+
+
+@pytest.mark.parametrize(
+    "lname, rname, radius, how, side, kw",
+    [c[1:] for c in _DISTANCE_CASES],
+    ids=[c[0] for c in _DISTANCE_CASES],
+)
+def test_distance_probe_matches_cell_join(spark, distance_sides, lname, rname, radius, how, side, kw):
+    """The broadcast distance probe (a hinted side, or the side Catalyst
+    would broadcast) returns the rows, names, types and exact
+    ``emit_distance`` values of the shuffled cell join (auto-broadcast
+    off): exact-boundary pairs under ``<=`` and ``<``, coincident points at
+    r = 0, a radius column with NULL, 0 and negative values, NULL, NaN and
+    infinite coordinates, NULL WKB, int64-limit and duplicate ids, points
+    outside the grid, WKB polygons against points, empty sides, every
+    ``how`` and either index side."""
+    left, right = distance_sides[lname], distance_sides[rname]
+    kw = {"grid": DGRID, "how": how, **kw}
+    if how in ("inner", "left_outer", "right_outer"):
+        kw["emit_distance"] = "dist"
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "-1")
+    try:
+        cell = distance_join(left, right, radius, **kw)
+        cell_rows = cell.collect()
+    finally:
+        spark.conf.set(conf, old)
+    probe = distance_join(left, right, radius, broadcast=None if side == "auto" else side, **kw)
+    plans = [df._jdf.queryExecution().executedPlan().toString() for df in (cell, probe)]
+    assert "MapInArrow" not in plans[0] and "MapInArrow" in plans[1]
+    # str keeps NULL and NaN apart, compares NaN equal to NaN and spells
+    # every double exactly
+    key = lambda r: tuple((v is None, str(v)) for v in r)  # noqa: E731
+    want, got = sorted(map(key, cell_rows)), sorted(map(key, probe.collect()))
+    assert probe.columns == cell.columns and probe.dtypes == cell.dtypes
+    assert got == want
+    # d < 0 holds for no pair: that case is empty on both plans
+    if "empty" not in (lname, rname) and how == "inner" and (radius or kw.get("include_boundary", True)):
+        assert got, "a parity case with no pairs shows nothing"
+
+
 # -- plan shape: Python nodes and exchanges per join form --------------------------
 
 def _xy_df(spark, seed, id_name):
@@ -534,10 +674,11 @@ def _plan_shape_join(spark, form):
             _zones_df(spark), pts, "contains", grid=GRID, right_point_cols=("x", "y"),
             left_rect=True,
         )
-    if form == "point_distance":
+    if form in ("point_distance", "broadcast_point_distance"):
         return distance_join(
             pts, _xy_df(spark, 2, "qid"), 2.0, grid=GRID,
             left_point_cols=("x", "y"), right_point_cols=("x", "y"),
+            broadcast="right" if form == "broadcast_point_distance" else None,
         )
     if form in ("wkb_polygons", "broadcast_wkb_polygons"):
         return spatial_join(
@@ -558,14 +699,15 @@ def _plan_shape_join(spark, form):
 
 
 # forms planned as the broadcast index probe: one mapInArrow, no exchange
-_MAP_IN_ARROW = {"broadcast_wkb_polygons": 1, "concave_pip": 1}
+_MAP_IN_ARROW = {"broadcast_wkb_polygons": 1, "concave_pip": 1, "broadcast_point_distance": 1}
 
 
 @pytest.mark.parametrize(
     "form, python_nodes, exchanges",
     [
         ("rect_window_points", 1, 1),  # zones' bbox UDF; broadcast build
-        ("point_distance", 0, 2),  # zero-UDF; shuffled both sides
+        ("point_distance", 0, 2),  # stat-less sides: zero-UDF, shuffled both sides
+        ("broadcast_point_distance", 0, 0),  # hinted: the index probe
         ("wkb_polygons", 3, 2),  # stat-less sides: the shuffled cell path
         ("broadcast_wkb_polygons", 0, 0),  # hinted: the index probe
         ("concave_pip", 0, 0),  # stat-less small zones: the index probe

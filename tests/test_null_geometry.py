@@ -21,7 +21,7 @@ from incubator_sedona_spark.functions import st as S
 from incubator_sedona_spark.functions import subdivide as SUB
 from incubator_sedona_spark.functions import zm as ZM
 from incubator_sedona_spark.geom import wkb as W
-from incubator_sedona_spark.operators.joins import range_query, spatial_join
+from incubator_sedona_spark.operators.joins import distance_join, range_query, spatial_join
 
 POLY = W.polygon([(0, 0), (4, 0), (4, 4), (0, 4), (0, 0)], [[(1, 1), (1, 2), (2, 2), (2, 1), (1, 1)]])
 POLY2 = W.box(2, 2, 6, 6)
@@ -286,10 +286,31 @@ def _join(spark, how, point_cols, **kw):
         ("existence", {(1, True), (2, True), (3, False)}),
         ("right_outer", {(1, 10), (2, 11), (None, 12), (None, 13)}),
         ("range_query", {10}),
+    ]
+    + [
+        (f"distance_{how}-{plan}", want)
+        for how, want in (
+            ("inner", {(1, 10), (2, 11)}),
+            ("left_outer", {(1, 10), (2, 11), (3, None)}),
+            ("right_outer", {(1, 10), (2, 11), (None, 12), (None, 13)}),
+            ("existence", {(1, True), (2, True), (3, False)}),
+        )
+        for plan in ("cell", "probe")
     ],
 )
 def test_join_null_geometry(spark, form, expected):
-    if form == "range_query":
+    if form.startswith("distance_"):
+        # list-built sides carry no statistics: the cell join unless hinted
+        how, plan = form[len("distance_"):].split("-")
+        out = distance_join(_zones(spark), _points(spark), 1.0, "wkb", "pwkb", how=how,
+                            broadcast="left" if plan == "probe" else None)
+        probed = "MapInArrow" in out._jdf.queryExecution().executedPlan().toString()
+        assert probed == (plan == "probe")
+        if how == "existence":
+            got = {(r.zid, r.exists) for r in out.collect()}
+        else:
+            got = {(r.zid, r.pid) for r in out.collect()}
+    elif form == "range_query":
         out = range_query(_points(spark), W.dumps(W.box(0, 0, 10, 10)), "within", "pwkb")
         got = {r.pid for r in out.collect()}
     elif form == "left_anti":

@@ -95,6 +95,11 @@ pts = spark.createDataFrame(pa.table({"pid": pa.array(range(400), pa.int64()),
 assert joins.spatial_join(ells, pts, "contains", right_point_cols=("x", "y"),
                           left_rect=False, broadcast="left").count() == 4 * 8 * 3 + 4 * 3 * 5
 
+# a distance join of WKB polygons over a broadcast right side: one probe per
+# task (the cell join's stream stage held a bbox runner and a distance runner)
+assert joins.distance_join(polys(40, 0, 2), polys(40, 1, 2), 2.0,
+                           broadcast="right").count() == 231
+
 # a kNN join over a broadcast right side: one probe per task, no ring rounds
 probes = spark.createDataFrame(pa.table({"lid": pa.array(range(50), pa.int64()),
                                          "x": pa.array([i * 0.8 for i in range(50)]),
@@ -112,7 +117,8 @@ spark.stop()
 def test_one_python_worker_pool(tmp_path):
     """Snapshot append, union-find dedup, GeoParquet write, shapefile read,
     GeoTIFF sink, the zero-row exact cosine result, two broadcast spatial
-    joins with a kernel refine and a broadcast kNN join, in a fresh session:
+    joins with a kernel refine, a broadcast WKB distance join and a
+    broadcast kNN join, in a fresh session:
     the JVM forks exactly
     one ``pyspark.daemon``, with no more live workers than task slots.
     Before these paths used Arrow, the first append forked a second daemon;

@@ -160,23 +160,29 @@ class TestSaltedJoin:
         from incubator_sedona_spark.operators.joins import distance_join
 
         rng = np.random.RandomState(13)
+        # list-built sides carry no optimizer statistics, so both calls take
+        # the cell join (where salt applies), not the broadcast probe
+        xa, ya = rng.uniform(0, 40, 100), rng.uniform(0, 40, 100)
         a = spark.createDataFrame(
-            pd.DataFrame(
-                {"ka": np.arange(100), "x": rng.uniform(0, 40, 100), "y": rng.uniform(0, 40, 100)}
-            )
+            [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(xa, ya))],
+            "ka long, x double, y double",
         )
         # the RIGHT side carries the planted hot cell (hot-cell detection
         # pre-aggregates the probe/right side)
         xb = np.concatenate([rng.uniform(0, 40, 150), rng.uniform(10.1, 10.9, 150)])
         yb = np.concatenate([rng.uniform(0, 40, 150), rng.uniform(10.1, 10.9, 150)])
-        b = spark.createDataFrame(pd.DataFrame({"kb": np.arange(300), "x": xb, "y": yb}))
+        b = spark.createDataFrame(
+            [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(xb, yb))],
+            "kb long, x double, y double",
+        )
         kwargs = dict(
             left_point_cols=("x", "y"), right_point_cols=("x", "y"),
         )
         base = distance_join(a, b, 2.0, **kwargs).select("ka", "kb").toPandas()
-        salted = distance_join(
-            a, b, 2.0, salt=True, salt_min_rows=50, **kwargs
-        ).select("ka", "kb").toPandas()
+        salted_df = distance_join(a, b, 2.0, salt=True, salt_min_rows=50, **kwargs)
+        plan = salted_df._jdf.queryExecution().executedPlan().toString()
+        assert "MapInArrow" not in plan
+        salted = salted_df.select("ka", "kb").toPandas()
         key = lambda df: sorted(map(tuple, df.itertuples(index=False)))
         assert key(salted) == key(base)
         assert len(base) > 0
