@@ -360,16 +360,18 @@ def _parse_cached(buf: bytes, cache: dict) -> W.Geometry:
     return g
 
 
-def by_geometry(bufs, pts: np.ndarray, dtype, fn) -> np.ndarray:
+def by_geometry(bufs, pts: np.ndarray, dtype, fn, cache: dict | None = None) -> np.ndarray:
     """``fn(g, pts[rows])`` for each distinct WKB buffer ``g`` in ``bufs``:
     rows are grouped by their repeated buffer, so each geometry is parsed once
-    and all its points go through one vectorized kernel call."""
+    and all its points go through one vectorized kernel call.  ``cache``
+    (buffer -> Geometry) keeps the parsed geometries across calls."""
+    cache = {} if cache is None else cache
     out = np.zeros(len(bufs), dtype=dtype)
     groups: dict[bytes, list[int]] = {}
     for i, b in enumerate(bufs):
         groups.setdefault(b, []).append(i)
     for buf, idxs in groups.items():
-        out[idxs] = fn(W.loads(buf), pts[idxs])
+        out[idxs] = fn(_parse_cached(buf, cache), pts[idxs])
     return out
 
 

@@ -26,10 +26,15 @@ BroadcastIndexJoinExec.scala:43-289), in two plans:
   one Python runner instead of two (a bbox UDF plus a refine UDF in the
   same stage), and the plan has no exchange.  ``spatial_join`` takes it
   when its refine needs the Python kernel; ``distance_join`` whenever the
-  distance is planar (not geography or circle mode) and the radius is a
-  finite number or a left column, because its cell join costs a shuffle of
-  both sides and, with WKB sides, a second runner too.  ``salt`` splits
-  shuffle keys, so it does not apply to the probe.
+  distance is planar (not geography or circle mode), because its cell join
+  costs a shuffle of both sides and, with WKB sides, a second runner too.
+  ``salt`` splits shuffle keys, so it does not apply to the probe.
+
+Both plans share each join rule.  The refines (``K.eval_predicate_batch``,
+:func:`_points_refine`, :func:`_pair_distance`) are called by the probe on
+each Arrow batch and by the cell join through ``functions._udf``'s
+``geom_batch_udf``, which owns the NULL rule; which rows can match is one
+box test (:func:`_box_ok`).  Neither plan declares a pandas UDF of its own.
 """
 
 from __future__ import annotations
@@ -178,12 +183,25 @@ def _bbox_prefilter(predicate: str, l: list, r: list) -> Column:
     return (lx0 <= rx1) & (rx0 <= lx1) & (ly0 <= ry1) & (ry0 <= ly1)
 
 
-def _predicate_refine_udf(predicate: str):
-    @F.pandas_udf(BooleanType())
-    def _refine(lw: pd.Series, rw: pd.Series) -> pd.Series:
-        return pd.Series(K.eval_predicate_batch(predicate, lw, rw))
+def _box_ok(box: list):
+    """The rule for which rows can match, on both plans: the row's (xmin,
+    ymin, xmax, ymax) box (for a distance join's left side, the
+    radius-expanded one) is finite and ordered.  Over numpy arrays or
+    Columns, like :func:`_bbox_prefilter`: in Spark a NaN compares above
+    +inf and a NULL fails the filter, so each comparison rejects them."""
+    x0, y0, x1, y1 = box
+    inf = float("inf")
+    return (x0 > -inf) & (x0 <= x1) & (x1 < inf) & (y0 > -inf) & (y0 <= y1) & (y1 < inf)
 
-    return _refine
+
+def _points_refine(predicate: str, geoms, pts: np.ndarray, cache: dict | None = None) -> np.ndarray:
+    """``predicate(geometry, point)`` for aligned WKB ``geoms`` and (n, 2)
+    coordinate ``pts``: each distinct geometry is parsed once (into
+    ``cache``, when given) and all its points go through one kernel call."""
+    return K.by_geometry(
+        geoms, pts, bool,
+        lambda g, p: K._eval_geom_vs_points(predicate, g, p, point_is_left=False), cache,
+    )
 
 
 def _rect_refine_xy(predicate: str, lp: str, rx: Column, ry: Column) -> Column:
@@ -274,20 +292,6 @@ def _left_all_rectangles(df: DataFrame, geom_col: str) -> bool:
     is_rect = geom_udf(BooleanType(), _is_rect)
     row = df.agg(F.min(is_rect(F.col(geom_col))).alias("all_rect")).first()
     return bool(row.all_rect)
-
-
-def _predicate_refine_xy_udf(predicate: str):
-    """Refine against raw point coordinates — skips WKB for the point side."""
-
-    @F.pandas_udf(BooleanType())
-    def _refine(lw: pd.Series, rx: pd.Series, ry: pd.Series) -> pd.Series:
-        pts = np.column_stack([rx.to_numpy(np.float64), ry.to_numpy(np.float64)])
-        return pd.Series(K.by_geometry(
-            lw, pts, bool,
-            lambda g, p: K._eval_geom_vs_points(predicate, g, p, point_is_left=False),
-        ))
-
-    return _refine
 
 
 def _dedup_filter(grid: Grid, lp: str, rp: str) -> Column:
@@ -441,7 +445,9 @@ def _cell_join(
     ``l_`` itself, or distance_join's radius-expanded envelope.  In order:
     CRS guard, grid inference, row-id persist, cell explode (``shape_geom``:
     shape-following left cover), salting, broadcast hint, cell equi-join +
-    bbox prefilter + reference-point dedup, ``pair_cols`` added to the
+    the box rule on both boxes (:func:`_box_ok`; ``lft`` itself keeps every
+    row, so the ``how`` finish returns the dropped ones unmatched) + bbox
+    prefilter + reference-point dedup, ``pair_cols`` added to the
     candidates, the ``refine`` filter, bbox drop and caller-facing names
     (``extras`` appended), ``how`` finish.
     """
@@ -489,7 +495,9 @@ def _cell_join(
     elif broadcast == "right":
         re = F.broadcast(re)
 
-    cand = le.join(re, join_keys).where(_bbox_prefilter(predicate, _bbox(box), _bbox(rp)))
+    cand = le.join(re, join_keys).where(
+        _box_ok(_bbox(box)) & _box_ok(_bbox(rp)) & _bbox_prefilter(predicate, _bbox(box), _bbox(rp))
+    )
     cand = cand.where(_dedup_filter(grid, box, rp))
     for name, expr in (pair_cols or {}).items():
         cand = cand.withColumn(name, expr)
@@ -609,9 +617,10 @@ def _probe_rows(batch: pa.RecordBatch, n: int, geom: int | None, radius):
     ``box`` is the bbox the cover and prefilter use: ``bb`` itself, or for
     the left side of a distance join ``bb`` expanded by the radius
     (``radius``: a number, or a column name for the ``__rad`` column).
-    Rows with a NULL geometry, a non-finite box or a negative radius are
-    dropped.  With a finite radius none of them matches in the cell join
-    either: a non-finite coordinate gives an infinite or NaN distance.
+    Rows with a NULL geometry or a box that fails :func:`_box_ok` (a
+    non-finite coordinate; a NULL, NaN, infinite or, for a point, negative
+    radius) are dropped; the cell join applies the same rule in its
+    candidate filter.
     """
     if geom is None:
         x, y = (batch.column(n + k).to_numpy(zero_copy_only=False) for k in (0, 1))
@@ -628,10 +637,36 @@ def _probe_rows(batch: pa.RecordBatch, n: int, geom: int | None, radius):
             if isinstance(radius, str) else np.full(len(rows), float(radius))
         )
         box = np.column_stack([bb[:, 0] - rad, bb[:, 1] - rad, bb[:, 2] + rad, bb[:, 3] + rad])
-    ok = np.isfinite(box).all(axis=1) & (box[:, 0] <= box[:, 2]) & (box[:, 1] <= box[:, 3])
+    ok = _box_ok(list(box.T))
     return (
         rows[ok], bb[ok], box[ok], None if wkb is None else wkb[ok], None if rad is None else rad[ok]
     )
+
+
+def _collect_batch(df: DataFrame) -> pa.RecordBatch:
+    """An index side's rows, collected once (``toArrow``), as one Arrow batch."""
+    tab = df.toArrow()
+    return pa.RecordBatch.from_arrays([c.combine_chunks() for c in tab.columns], names=tab.column_names)
+
+
+def _sorted_keys(cells: np.ndarray, rows: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """The probe index: packed cell keys ascending, each with its row position."""
+    order = np.argsort(cells, kind="stable")
+    return cells[order], rows[order]
+
+
+def _arrow_stage(src: DataFrame, fn, fields: list, names: list[str]) -> DataFrame:
+    """``src.mapInArrow`` over ``fn``, which yields lists of Arrow columns
+    typed as ``fields``.  The stage's columns are positional (the two sides
+    may share names); one ``select`` restores ``names``."""
+    pos = [f"__c{i}" for i in range(len(fields))]
+    schema = StructType([StructField(p, f.dataType, f.nullable) for p, f in zip(pos, fields)])
+
+    def _batches(batches):
+        for cols in fn(batches):
+            yield pa.RecordBatch.from_arrays(cols, names=pos)
+
+    return src.mapInArrow(_batches, schema).select([F.col(p).alias(n) for p, n in zip(pos, names)])
 
 
 def _pair_distance(lbb: np.ndarray, rbb: np.ndarray, lwkb, rwkb) -> np.ndarray:
@@ -639,9 +674,10 @@ def _pair_distance(lbb: np.ndarray, rbb: np.ndarray, lwkb, rwkb) -> np.ndarray:
     bboxes degenerate) get ``sqrt(dx**2 + dy**2)`` on the bbox corners:
     bit-identical to Catalyst's ``sqrt(pow(dx, 2) + pow(dy, 2))``, because
     Spark's ``Pow`` is ``StrictMath.pow`` and fdlibm returns ``x*x`` for
-    ``y == 2``.  Other pairs go through ``K.distance_batch``, as the cell
-    join's UDF does; a coordinate side (``wkb`` None) passes its points as
-    WKB."""
+    ``y == 2``.  Other pairs go through ``K.distance_batch``; a
+    coordinate side (``wkb`` None) passes its points as WKB.  Both plans
+    call it: the probe per batch, the cell join through
+    :func:`_distance_col`."""
     d = np.sqrt((lbb[:, 0] - rbb[:, 0]) ** 2 + (lbb[:, 1] - rbb[:, 1]) ** 2)
     point = (lbb[:, 0] == lbb[:, 2]) & (lbb[:, 1] == lbb[:, 3])
     point &= (rbb[:, 0] == rbb[:, 2]) & (rbb[:, 1] == rbb[:, 3])
@@ -690,9 +726,11 @@ def _probe_join(
     dedup), the bbox prefilter, then the refine: the kernel predicate, or
     :func:`_pair_distance` against the radius (``<=``, or ``<`` without
     ``include_boundary``), optionally emitted as ``emit_distance``.  For a
-    predicate, coordinate points are grouped by index geometry, each parsed
-    once per task; WKB pairs go through ``K.eval_predicate_batch``, which
-    parses each geometry once per batch.  Both sides' rows stay Arrow from
+    predicate, coordinate points go through :func:`_points_refine` with a
+    cache for the task, so each index geometry is parsed once per task; WKB
+    pairs go through ``K.eval_predicate_batch``, which parses each geometry
+    once per batch.  The cell join calls the same functions through
+    ``geom_batch_udf``.  Both sides' rows stay Arrow from
     collect to output (``take`` on the index and on each stream batch), so
     every column type comes back exactly as it went in.  The result is the
     inner pairs with the cell join's names and types; the ``how`` finish is
@@ -713,10 +751,7 @@ def _probe_join(
     sg = None if s_xy else stream.columns.index(s_geom)
 
     # build: the index side's rows as one Arrow batch, matchable rows only
-    itab = _probe_source(idx_df, i_xy, i_rad).toArrow()
-    ibatch = pa.RecordBatch.from_arrays(
-        [c.combine_chunks() for c in itab.columns], names=itab.column_names
-    )
+    ibatch = _collect_batch(_probe_source(idx_df, i_xy, i_rad))
     irows, ibb, ibox, _, irad = _probe_rows(ibatch, n_i, ig, i_rad)
     ibatch = ibatch.take(pa.array(irows, pa.int64()))
     if grid is None:
@@ -734,22 +769,17 @@ def _probe_join(
         cells = np.concatenate(covers) if covers else np.empty(0, np.int64)
     else:
         rows, cells = _bbox_cells(grid, ibox)
-    order = np.argsort(cells, kind="stable")
-    keys, kpos = cells[order], rows[order]
+    keys, kpos = _sorted_keys(cells, rows)
     n_idx = max(ibatch.num_rows, 1)
 
     def lr(idx, strm):
         """``(index, stream)`` parts in left, right order."""
         return (idx, strm) if index == "left" else (strm, idx)
 
-    # positional names: the two sides may share column names
-    out_fields = [f"__{tag}{i}" for tag, n in lr(("i", n_i), ("s", n_s)) for i in range(n)]
-    out_fields += ["__dist"] if emit_distance else []
-
     def _probe(batches):
         # the index geometries from the shipped batch, not a second copy
         iwkb = None if ig is None else ibatch.column(ig).to_numpy(zero_copy_only=False)
-        geoms: dict[int, W.Geometry] = {}  # index position -> parsed, for the task
+        cache: dict[bytes, W.Geometry] = {}  # index geometries parsed, for the task
         for batch in batches:
             valid, sbb, sbox, swkb, srad = _probe_rows(batch, n_s, sg, s_rad)
             row, entry = _probe_cells(grid, keys, sbox)
@@ -769,31 +799,20 @@ def _probe_join(
                 if emit_distance:
                     extra = [pa.array(d[hit], pa.float64())]
             elif s_xy:
-                pts = sbb[srow, :2]
-                hit = np.zeros(len(srow), dtype=bool)
-                order = np.argsort(ipos, kind="stable")
-                uniq, first = np.unique(ipos[order], return_index=True)
-                for p, at in zip(uniq, np.split(order, first[1:])):
-                    g = geoms.get(p)
-                    if g is None:
-                        g = geoms[p] = W.loads(iwkb[p])
-                    hit[at] = K._eval_geom_vs_points(predicate, g, pts[at], point_is_left=False)
+                hit = _points_refine(predicate, iwkb[ipos], sbb[srow, :2], cache)
             else:
                 hit = K.eval_predicate_batch(predicate, *lr(iwkb[ipos], swkb[srow]))
             srow, ipos = valid[srow[hit]], ipos[hit]
             if len(srow):
                 lcols, rcols = lr(ibatch.take(ipos).columns[:n_i], batch.take(srow).columns[:n_s])
-                yield pa.RecordBatch.from_arrays(lcols + rcols + extra, names=out_fields)
+                yield lcols + rcols + extra
 
     fields = [f for part in lr(idx_df.schema.fields, stream.schema.fields) for f in part]
     fields += [StructField(emit_distance, DoubleType())] if emit_distance else []
-    schema = StructType([StructField(n, f.dataType, f.nullable) for n, f in zip(out_fields, fields)])
     lnames = set(left_cols)
     names = list(left.columns) + [c + "_r" if c in lnames else c for c in right.columns]
     names += [emit_distance] if emit_distance else []
-    inner = _probe_source(stream, s_xy, s_rad).mapInArrow(_probe, schema).select(
-        [F.col(f).alias(n) for f, n in zip(out_fields, names)]
-    )
+    inner = _arrow_stage(_probe_source(stream, s_xy, s_rad), _probe, fields, names)
     if how == "inner":
         return inner
     if how == "right_outer":
@@ -925,10 +944,19 @@ def spatial_join(
         rx, ry = (F.col(rp + c) for c in right_point_cols)
         cond = _rect_refine_xy(predicate, lp, rx, ry)
     elif refine and right_point_cols is None:
-        cond = _predicate_refine_udf(predicate)(F.col(lp + left_geom), F.col(rp + right_geom))
+        def predicate_refine(lw, rw):
+            return K.eval_predicate_batch(predicate, lw, rw)
+
+        cond = geom_batch_udf(BooleanType(), predicate_refine)(
+            F.col(lp + left_geom), F.col(rp + right_geom)
+        )
     elif refine:
+        def points_refine(lw, rx, ry):
+            pts = np.column_stack([rx.to_numpy(np.float64), ry.to_numpy(np.float64)])
+            return _points_refine(predicate, lw, pts)
+
         rx, ry = (F.col(rp + c) for c in right_point_cols)
-        cond = _predicate_refine_xy_udf(predicate)(F.col(lp + left_geom), rx, ry)
+        cond = geom_batch_udf(BooleanType(), points_refine)(F.col(lp + left_geom), rx, ry)
     return _cell_join(
         left, right, lft, rgt, lp, predicate, grid, level, how, broadcast, salt,
         salt_min_rows, assume_same_crs=assume_same_crs,
@@ -940,7 +968,7 @@ def spatial_join(
 def distance_join(
     left: DataFrame,
     right: DataFrame,
-    radius: float | Column | str,
+    radius: float | str,
     left_geom: str = "wkb",
     right_geom: str = "wkb",
     grid: Grid | None = None,
@@ -962,24 +990,28 @@ def distance_join(
     envelope is expanded by the radius (TraitJoinQueryBase.scala:51-66) and
     fed to the same two plans as :func:`spatial_join` (an ``intersects``
     join); the refine is a vectorized distance computation.  ``radius`` is
-    a number, a left column name or a Column.
+    a number or a left column name; a Column raises ``TypeError`` (add it
+    with ``left.withColumn(name, expr)`` and pass the name).
 
     Which plan runs: the broadcast index probe (:func:`_probe_join`, the
     reference's BroadcastIndexJoinExec with expanded envelopes) when
-    ``mode="distance"``, ``geography`` is off, the radius is a finite
-    number or a left column name, neither side streams and one side is
-    broadcast: the ``broadcast`` hint, else the side Catalyst itself would
-    broadcast (optimizer size at most
+    ``mode="distance"``, ``geography`` is off, neither side streams and one
+    side is broadcast: the ``broadcast`` hint, else the side Catalyst
+    itself would broadcast (optimizer size at most
     ``spark.sql.autoBroadcastJoinThreshold``, the smaller one, the right
     one on a tie).  Unlike in :func:`spatial_join`, a coordinate-point side
     may be the index.  One ``mapInArrow`` then covers, probes and refines
     each batch, with no exchange and no second Python runner; rows and
     ``emit_distance`` values are the cell join's, bit for bit.  The index
     side is read once, when ``distance_join`` is called: the returned
-    DataFrame keeps probing those rows.  On the probe a row whose radius is
-    NULL, NaN, infinite or negative matches nothing.  Every other join
-    (geography, circle mode, a Column radius, no broadcast side, streaming)
-    is the cell equi-join, where the hint is a Catalyst broadcast hint.
+    DataFrame keeps probing those rows.  Every other join (geography,
+    circle mode, no broadcast side, streaming) is the cell equi-join, where
+    the hint is a Catalyst broadcast hint; its non-point pairs go through
+    the probe's :func:`_pair_distance`, and a coordinate side passes its
+    coordinates, so its WKB column is never read.  On both plans a row
+    whose radius is NULL, NaN, infinite or negative matches nothing (its
+    expanded box fails :func:`_box_ok`, or no distance is that small) and
+    comes back unmatched in the outer forms.
     ``how``, ``salt``/``salt_min_rows`` (fixed salt factor 8, cell join
     only: the probe has no shuffle keys to split) and the ``srid`` mismatch
     guard behave as in :func:`spatial_join`.
@@ -991,11 +1023,12 @@ def distance_join(
     ST_Distance-based SQL computes.  For point-point inputs the two coincide
     and the refine is pure Catalyst arithmetic (no UDF at all).
     """
-    literal = isinstance(radius, (int, float))
-    if (
-        mode == "distance" and not geography and not (left.isStreaming or right.isStreaming)
-        and (isinstance(radius, str) or (literal and math.isfinite(radius)))
-    ):
+    if isinstance(radius, Column):
+        raise TypeError(
+            "distance_join's radius is a number or a left column name; add a computed "
+            "radius with left.withColumn(name, expr) and pass the name"
+        )
+    if mode == "distance" and not geography and not (left.isStreaming or right.isStreaming):
         index = broadcast or _auto_index_side(left, right)
         if index is not None:
             return _probe_join(
@@ -1008,9 +1041,7 @@ def distance_join(
     lft = _side(left, left_geom, left_point_cols, lp)
     rgt = _side(right, right_geom, right_point_cols, rp)
     lb, rb = dict(zip(BBOX_COLS, _bbox(lp))), dict(zip(BBOX_COLS, _bbox(rp)))
-    rad = F.lit(float(radius)) if literal else (
-        F.col(lp + radius) if isinstance(radius, str) else radius
-    )
+    rad = F.col(lp + radius) if isinstance(radius, str) else F.lit(float(radius))
     meter_rad = rad
     lon_scale = F.lit(1.0)
     if geography:
@@ -1041,14 +1072,10 @@ def distance_join(
     for c, e in zip(BBOX_COLS, expanded):
         lft = lft.withColumn("e_" + c, e)
 
+    rgeom = None if right_point_cols else F.col(rp + right_geom)
     if mode == "circle":
-        # distance from left bbox center; exact & native when right is a point
-        native_dist = F.sqrt(F.pow(cx - rb["xmin"], 2) + F.pow(cy - rb["ymin"], 2))
-        dist = F.when(_is_point(rp), native_dist).otherwise(
-            _distance_udf()(
-                F.array(cx, cy).cast(ArrayType(DoubleType())), F.col(rp + right_geom)
-            )
-        )
+        # distance from the left bbox centre, a point box
+        dist = _distance_col([cx, cy, cx, cy], _bbox(rp), None, rgeom)
     elif geography:
         # haversine meters, pure Catalyst (Haversine.java analog, R=6371008)
         rl1, rl2 = F.radians(lb["ymin"]), F.radians(rb["ymin"])
@@ -1057,12 +1084,8 @@ def distance_join(
         hav = F.pow(F.sin(dlat / 2), 2) + F.cos(rl1) * F.cos(rl2) * F.pow(F.sin(dlon / 2), 2)
         dist = F.lit(2.0 * 6371008.0) * F.asin(F.sqrt(hav))
     else:
-        dist = F.sqrt(F.pow(lb["xmin"] - rb["xmin"], 2) + F.pow(lb["ymin"] - rb["ymin"], 2))
-        if left_point_cols is None or right_point_cols is None:
-            # coordinate points on both sides keep the zero-UDF plan
-            dist = F.when(_is_point(lp) & _is_point(rp), dist).otherwise(
-                _distance_pair_udf()(F.col(lp + left_geom), F.col(rp + right_geom))
-            )
+        lgeom = None if left_point_cols else F.col(lp + left_geom)
+        dist = _distance_col(_bbox(lp), _bbox(rp), lgeom, rgeom)
     pair_cols = {"__iss_dist": dist}
     if geography:
         pair_cols["__iss_rad"] = meter_rad
@@ -1074,24 +1097,23 @@ def distance_join(
     )
 
 
-def _distance_pair_udf():
-    @F.pandas_udf(DoubleType())
-    def _d(lw: pd.Series, rw: pd.Series) -> pd.Series:
-        return pd.Series(K.distance_batch(lw, rw))
+def _distance_col(lbox: list[Column], rbox: list[Column], lwkb: Column | None, rwkb: Column | None):
+    """:func:`_pair_distance` as the cell join's pair column.  Two coordinate
+    sides (both WKB Columns None) keep Catalyst's ``sqrt(pow(dx, 2) +
+    pow(dy, 2))`` and no UDF; otherwise one ``geom_batch_udf`` over both
+    boxes and the WKB side(s)."""
+    if lwkb is None and rwkb is None:
+        return F.sqrt(F.pow(lbox[0] - rbox[0], 2) + F.pow(lbox[1] - rbox[1], 2))
 
-    return _d
+    has_wkb = (lwkb is not None, rwkb is not None)  # the UDF must not capture Columns
 
+    def pair_distance(*cols):
+        lbb, rbb = (np.column_stack([c.to_numpy(np.float64) for c in cols[i:i + 4]]) for i in (0, 4))
+        wkb = iter(c.to_numpy() for c in cols[8:])
+        return _pair_distance(lbb, rbb, *(next(wkb) if h else None for h in has_wkb))
 
-def _distance_udf():
-    @F.pandas_udf(DoubleType())
-    def _d(center: pd.Series, rw: pd.Series) -> pd.Series:
-        out = np.empty(len(rw))
-        cache: dict[bytes, W.Geometry] = {}
-        for i, (c, b) in enumerate(zip(center, rw)):
-            out[i] = K.distance_pair(W.point(c[0], c[1]), K._parse_cached(b, cache))
-        return pd.Series(out)
-
-    return _d
+    geoms = [g for g in (lwkb, rwkb) if g is not None]
+    return geom_batch_udf(DoubleType(), pair_distance)(*lbox, *rbox, *geoms)
 
 
 def range_query(
@@ -1113,12 +1135,9 @@ def range_query(
     window = [float(v) for v in W.loads(window_wkb).bounds]
     out = with_bbox(df, geom_col).where(_bbox_prefilter(pred, _bbox(""), window))
 
-    @F.pandas_udf(BooleanType())
-    def _refine(wkb_s: pd.Series) -> pd.Series:
+    def window_refine(wkb_s):
         win = [window_wkb] * len(wkb_s)
-        if invert_args:
-            return pd.Series(K.eval_predicate_batch(predicate, win, wkb_s))
-        return pd.Series(K.eval_predicate_batch(predicate, wkb_s, win))
+        return K.eval_predicate_batch(predicate, *((win, wkb_s) if invert_args else (wkb_s, win)))
 
-    out = out.where(_refine(F.col(geom_col)))
+    out = out.where(geom_batch_udf(BooleanType(), window_refine)(F.col(geom_col)))
     return out.select(df.columns)

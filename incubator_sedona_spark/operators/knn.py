@@ -28,30 +28,27 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
+from pyspark.sql.types import DoubleType, IntegerType, StructField
 
 from incubator_sedona_spark.cells import Grid
+from incubator_sedona_spark.functions._udf import geom_batch_udf
 from incubator_sedona_spark.geom import kernel as K
 from incubator_sedona_spark.geom import wkb as Wk
-from incubator_sedona_spark.operators.joins import _broadcast_size, _expand, _key_ranges, with_bbox
+from incubator_sedona_spark.operators.joins import (
+    _arrow_stage, _broadcast_size, _collect_batch, _expand, _key_ranges, _sorted_keys, with_bbox,
+)
 
 
-def _geom_points_dist_udf(geom_col, x_col, y_col):
+def _points_dist(wkbs, xs, ys) -> np.ndarray:
     """Point-to-geometry distance, grouped by the repeated geometry buffer so
     each distinct geometry is parsed once and its candidate points scored in
     one vectorized kernel call."""
-
-    @F.pandas_udf(DoubleType())
-    def _d(wkbs: pd.Series, xs: pd.Series, ys: pd.Series) -> pd.Series:
-        pts = np.column_stack([xs.to_numpy(np.float64), ys.to_numpy(np.float64)])
-        return pd.Series(K.by_geometry(wkbs, pts, np.float64, K.points_to_geometry_dist))
-
-    return _d(geom_col, x_col, y_col)
+    pts = np.column_stack([xs.to_numpy(np.float64), ys.to_numpy(np.float64)])
+    return K.by_geometry(wkbs, pts, np.float64, K.points_to_geometry_dist)
 
 
 def knn_query(
@@ -67,20 +64,24 @@ def knn_query(
 ) -> DataFrame:
     """k nearest rows to the query point, distance-ascending.
 
-    For WKB inputs the distance uses the geometry's bbox-derived point when the
-    geometry is a point (the common case); non-point geometry distance goes
-    through the vectorized kernel in operators.joins.
+    With ``x_col``/``y_col`` the distance is native Catalyst arithmetic; for
+    WKB inputs it goes through the kernel (``K.distance_batch``) behind the
+    NULL-safe ``geom_batch_udf``.  A row with a NULL or non-finite
+    coordinate, a NULL geometry or (WKB) a non-finite distance takes no
+    part, as in :func:`knn_join`: it is dropped before ranking, so it is
+    never ranked first (Spark orders NULL first ascending) and never fails
+    the query.
     """
     if x_col is None:
+        qb = Wk.dumps(Wk.point(qx, qy))
 
-        @F.pandas_udf(DoubleType())
-        def _dist(wkbs: pd.Series) -> pd.Series:
-            qb = [Wk.dumps(Wk.point(qx, qy))] * len(wkbs)
-            return pd.Series(K.distance_batch(wkbs, qb))
+        def query_distance(wkbs):
+            return K.distance_batch(wkbs, [qb] * len(wkbs))
 
-        out = df.withColumn(dist_col, _dist(F.col(geom_col)))
+        out = df.withColumn(dist_col, geom_batch_udf(DoubleType(), query_distance)(F.col(geom_col)))
+        out = out.where(F.abs(F.col(dist_col)) < F.lit(float("inf")))
     else:
-        out = df.withColumn(
+        out = df.where(_finite(x_col, y_col)).withColumn(
             dist_col,
             F.sqrt(
                 F.pow(F.col(x_col) - F.lit(qx), 2) + F.pow(F.col(y_col) - F.lit(qy), 2)
@@ -173,10 +174,7 @@ def _knn_probe(
     double — and go again.  Both sides' rows stay Arrow (``take``), so the
     output has the ring path's names, order and types.
     """
-    rtab = right.toArrow()
-    rbatch = pa.RecordBatch.from_arrays(
-        [c.combine_chunks() for c in rtab.columns], names=rtab.column_names
-    )
+    rbatch = _collect_batch(right)
     rx, ry = (_doubles(rbatch.column(c)) for c in (right_x, right_y))
     if tiebreak is None:
         tb = np.zeros(len(rx), np.int64)
@@ -187,9 +185,7 @@ def _knn_probe(
     if grid is None:
         bb = (rx.min(), ry.min(), rx.max(), ry.max()) if len(rx) else (0.0, 0.0, 1.0, 1.0)
         grid = _knn_grid(*bb, len(rx), k)
-    cells = grid.point_cells(rx, ry)
-    kpos = np.argsort(cells, kind="stable")
-    keys = cells[kpos]
+    keys, kpos = _sorted_keys(grid.point_cells(rx, ry), np.arange(len(rx)))
     r0, n = _first_ring(grid, len(rx), k), grid.n
 
     def _border(p, lo, hi, lo_edge, cw):
@@ -240,18 +236,13 @@ def _knn_probe(
             if found:
                 q, e, d, rank = (np.concatenate(a) for a in zip(*found))
                 cols = batch.take(pa.array(q)).columns + rbatch.take(pa.array(e)).columns
-                cols += [pa.array(d, pa.float64()), pa.array(rank + 1, pa.int32())]
-                yield pa.RecordBatch.from_arrays(cols, names=out_fields)
+                yield cols + [pa.array(d, pa.float64()), pa.array(rank + 1, pa.int32())]
 
     src = left.select(F.col(left_id), F.col(left_x).alias("__lx"), F.col(left_y).alias("__ly"))
     fields = src.schema.fields + right.schema.fields
     fields += [StructField(dist_col, DoubleType()), StructField(rank_col, IntegerType())]
-    out_fields = [f"__c{i}" for i in range(len(fields))]
-    schema = StructType([StructField(c, f.dataType, f.nullable) for c, f in zip(out_fields, fields)])
     names = [left_id, left_x + "_l", left_y + "_l", *right.columns, dist_col, rank_col]
-    return src.mapInArrow(_probe, schema).select(
-        [F.col(c).alias(n) for c, n in zip(out_fields, names)]
-    )
+    return _arrow_stage(src, _probe, fields, names)
 
 
 def knn_join(
@@ -476,7 +467,7 @@ def knn_join(
                 cand = cand.where((ccx == own_x) & (ccy == own_y))
             cand = cand.withColumn(
                 dist_col,
-                _geom_points_dist_udf(
+                geom_batch_udf(DoubleType(), _points_dist)(
                     F.col(right_geom), F.col("__lx"), F.col("__ly")
                 ),
             )

@@ -432,6 +432,19 @@ def test_distance_join_column_radius(spark):
     assert got == {(0, 0)}  # 5 <= 5 matches; 1 > 0.5 does not
 
 
+def test_distance_join_rejects_column_radius(spark):
+    """A Column radius never resolved on the cell join (its left columns
+    are prefixed there), so it is refused with the way to pass one."""
+    left = spark.createDataFrame([(0, 0.0, 0.0, 1.0)], "lid int, x double, y double, r double")
+    right = spark.createDataFrame([(0, 0.5, 0.0)], "rid int, x double, y double")
+    xy = {"left_point_cols": ("x", "y"), "right_point_cols": ("x", "y")}
+    with pytest.raises(TypeError, match=r"left\.withColumn\(name, expr\)"):
+        distance_join(left, right, F.col("r"), grid=GRID, **xy)
+    with pytest.raises(TypeError, match="left column name"):
+        distance_join(left, right, F.col("r") * 2, grid=GRID, **xy)
+    assert distance_join(left.withColumn("r2", F.col("r") * 2), right, "r2", grid=GRID, **xy).count() == 1
+
+
 def test_rectangle_fast_path_matches_kernel_refine(spark):
     """The native rectangle refine must agree with the pandas-UDF kernel
     refine on every predicate for a point set stressing corners, edges,
@@ -529,13 +542,15 @@ def _arrow_side(spark, cols):
     return spark.createDataFrame(pa.table({k: pa.array(v, t) for k, (t, v) in cols.items()}))
 
 
-def _distance_points(spark, id_name, shift, null_wkb=True):
+def _distance_points(spark, id_name, shift, null_wkb=True, nonfinite_radius=False):
     """Points on a 5-step lattice (every neighbour at exactly r = 5; with
     ``shift`` (3, 4) a 3-4-5 triangle to each left point), coincident
     points, NULL, NaN and +-inf coordinates, points outside DGRID, ids at
     -2^63, 2^53+1 and 2^63-1 plus a duplicate and a NULL, a NaN and NULL
-    attribute double, a radius column holding NULL, 0 and negative values,
-    and a WKB column (with a NULL on a finite point if ``null_wkb``)."""
+    attribute double, a radius column holding NULL, 0 and negative values
+    (and, with ``nonfinite_radius``, NaN, +inf, -inf, -1.0 and NULL on
+    five finite lattice points), and a WKB column (with a NULL on a finite
+    point if ``null_wkb``)."""
     sx, sy = shift
     xy = [(float(x + sx), float(y + sy)) for x in range(0, 40, 5) for y in range(0, 40, 5)]
     xy += [(10.0, 10.0), (10.0, 10.0), (-30.0, -30.0), (80.0, 10.0), (-27.0, -26.0),
@@ -545,6 +560,8 @@ def _distance_points(spark, id_name, shift, null_wkb=True):
     ids[0], ids[1], ids[2], ids[3], ids[4] = -(2**63), 2**53 + 1, 2**63 - 1, 7, None
     rad = [5.0 if i % 4 else 2.5 for i in range(n)]
     rad[5], rad[6], rad[7], rad[8] = None, 0.0, -1.0, 7.5
+    if nonfinite_radius:
+        rad[10:15] = [float("nan"), float("inf"), float("-inf"), -1.0, None]
     wkb = [None if x is None else W.dumps(W.point(x, y)) for x, y in xy]
     if null_wkb:
         wkb[9] = None
@@ -599,6 +616,15 @@ _DISTANCE_CASES = (
     + [("empty_index", "pts", "empty", 5.0, "inner", "right", _XY),
        ("empty_stream", "pts", "empty", 5.0, "right_outer", "left", _XY),
        ("empty_index-left_outer", "empty", "pts_b", 5.0, "left_outer", "left", _XY)]
+    # a coordinate side's pairs with a polygon use its coordinates: its WKB
+    # column (NULL on a finite point here) is never read
+    + [("polys_x_xy-null_wkb", "polys", "pts", 1.5, "inner", "left", {"right_point_cols": ("x", "y")})]
+    # one rule on both plans: a NULL, NaN, infinite or negative radius
+    # matches nothing, and such a row comes back unmatched in an outer form
+    + [(f"xy-nonfinite_radius-{side}", "pts_nf", "pts_b", "rad", "inner", side, _XY)
+       for side in ("left", "right")]
+    + [(f"xy-literal_{name}_radius", "pts", "pts_b", float(name), "left_outer", "right", _XY)
+       for name in ("nan", "inf")]
 )
 
 
@@ -609,9 +635,10 @@ def distance_sides(spark):
         "pts": pts,
         "pts_b": _distance_points(spark, "bid", (3, 4)),
         "pts_c": _distance_points(spark, "cid", (0, 0)),
-        # the cell join reads a coordinate side's WKB column for its pairs
-        # with a polygon, so that column must hold the same points
+        # a coordinate side whose WKB column holds its points ("pts" has a
+        # NULL WKB on a finite point; neither plan reads it)
         "pts_xy": _distance_points(spark, "cid", (0, 0), null_wkb=False),
+        "pts_nf": _distance_points(spark, "aid", (0, 0), nonfinite_radius=True),
         "polys": _distance_polys(spark),
         "empty": pts.where(F.lit(False)),
     }
@@ -628,9 +655,11 @@ def test_distance_probe_matches_cell_join(spark, distance_sides, lname, rname, r
     ``emit_distance`` values of the shuffled cell join (auto-broadcast
     off): exact-boundary pairs under ``<=`` and ``<``, coincident points at
     r = 0, a radius column with NULL, 0 and negative values, NULL, NaN and
-    infinite coordinates, NULL WKB, int64-limit and duplicate ids, points
-    outside the grid, WKB polygons against points, empty sides, every
-    ``how`` and either index side."""
+    infinite coordinates, NULL WKB (also on a coordinate side, whose
+    coordinates define its points), NaN, infinite and negative radii in a
+    column or as a literal, int64-limit and duplicate ids, points outside
+    the grid, WKB polygons against points, empty sides, every ``how`` and
+    either index side."""
     left, right = distance_sides[lname], distance_sides[rname]
     kw = {"grid": DGRID, "how": how, **kw}
     if how in ("inner", "left_outer", "right_outer"):
@@ -655,6 +684,33 @@ def test_distance_probe_matches_cell_join(spark, distance_sides, lname, rname, r
     # d < 0 holds for no pair: that case is empty on both plans
     if "empty" not in (lname, rname) and how == "inner" and (radius or kw.get("include_boundary", True)):
         assert got, "a parity case with no pairs shows nothing"
+
+
+def test_join_operators_declare_no_pandas_udf():
+    """The join operators run their refines through ``functions._udf``'s
+    NULL-safe boundary (``geom_batch_udf``) and the probes' ``mapInArrow``:
+    neither module declares a ``pandas_udf`` of its own."""
+    import ast
+    import pathlib
+
+    import incubator_sedona_spark.operators as ops
+
+    found = []
+    for name in ("joins.py", "knn.py"):
+        tree = ast.parse((pathlib.Path(ops.__file__).parent / name).read_text(), name)
+        decorated = {  # decorator line -> the function it declares
+            d.lineno: f.name
+            for f in ast.walk(tree) if isinstance(f, (ast.FunctionDef, ast.AsyncFunctionDef))
+            for d in f.decorator_list
+        }
+        found += sorted({
+            f"{name}:{n.lineno} {decorated.get(n.lineno, '')}".rstrip()
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Attribute) and n.attr == "pandas_udf"
+            or isinstance(n, ast.Name) and n.id == "pandas_udf"
+            or isinstance(n, ast.alias) and n.name == "pandas_udf"
+        })
+    assert not found, found
 
 
 # -- plan shape: Python nodes and exchanges per join form --------------------------

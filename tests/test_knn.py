@@ -36,6 +36,24 @@ def test_knn_query_wkb_path(spark):
     assert [r.pid for r in got] == [0, 1]
 
 
+@pytest.mark.parametrize("form", ["xy", "wkb"])
+def test_knn_query_skips_null_and_nonfinite_rows(spark, form):
+    """A NULL geometry or a NULL or non-finite coordinate takes no part: it
+    is neither ranked first (Spark orders NULL first ascending) nor fails
+    the WKB distance, even when k exceeds the rows that can rank."""
+    xy = [(0.0, 0.0), (None, None), (1.0, 1.0), (float("nan"), 0.0), (float("inf"), 0.0)]
+    if form == "xy":
+        df = spark.createDataFrame(
+            [(i + 1, x, y) for i, (x, y) in enumerate(xy)], "pid int, x double, y double"
+        )
+        got = knn_query(df, 0.0, 0.0, 3, x_col="x", y_col="y")
+    else:
+        rows = [(i + 1, None if x is None else bytearray(W.dumps(W.point(x, y))))
+                for i, (x, y) in enumerate(xy)]
+        got = knn_query(spark.createDataFrame(rows, "pid int, wkb binary"), 0.0, 0.0, 3)
+    assert [(r.pid, r.dist) for r in got.collect()] == [(1, 0.0), (3, 2.0 ** 0.5)]
+
+
 def test_knn_join_matches_bruteforce(spark):
     rng = np.random.default_rng(5)
     lx, ly = rng.uniform(0, 100, 60), rng.uniform(0, 100, 60)
