@@ -540,12 +540,16 @@ def _plan_size(df: DataFrame) -> int | None:
         return None
 
 
+def _broadcast_limit(df: DataFrame) -> int:
+    """The session's ``spark.sql.autoBroadcastJoinThreshold`` in bytes (-1: off)."""
+    return df.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+
+
 def _broadcast_size(df: DataFrame) -> int | None:
     """The optimizer's size of ``df`` when Catalyst would broadcast it: at most
-    the session's ``spark.sql.autoBroadcastJoinThreshold`` (-1 turns it off)."""
-    limit = df.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    :func:`_broadcast_limit`."""
     est = _plan_size(df)
-    return est if est is not None and est <= limit else None
+    return est if est is not None and est <= _broadcast_limit(df) else None
 
 
 def _auto_index_side(left: DataFrame, right: DataFrame, right_indexable: bool = True) -> str | None:
@@ -1019,6 +1023,8 @@ def distance_join(
     ``mode="circle"`` reproduces the reference's CircleRDD semantics exactly
     (Circle.java:76-81): distance measured from the bbox *center* of the left
     geometry with the radius clamped to at least the half-diagonal of its bbox.
+    The clamp leaves the rule above as it is: a NULL, NaN, infinite or
+    negative radius matches nothing.
     ``mode="distance"`` (default) is true geometry-to-geometry distance — what
     ST_Distance-based SQL computes.  For point-point inputs the two coincide
     and the refine is pure Catalyst arithmetic (no UDF at all).
@@ -1063,7 +1069,9 @@ def distance_join(
         half_diag = F.sqrt(
             F.pow(lb["xmax"] - lb["xmin"], 2) + F.pow(lb["ymax"] - lb["ymin"], 2)
         ) / 2.0
-        rad = F.greatest(rad, half_diag)
+        # greatest() skips NULL: the clamp applies to a usable radius only,
+        # so a NULL or negative one stays unusable and matches nothing
+        rad = F.when(rad >= 0, F.greatest(rad, half_diag))
         lo_x, lo_y, hi_x, hi_y = cx, cy, cx, cy
     else:
         lo_x, lo_y, hi_x, hi_y = lb["xmin"], lb["ymin"], lb["xmax"], lb["ymax"]

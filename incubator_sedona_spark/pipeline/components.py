@@ -73,14 +73,13 @@ def _check_id_types(df: DataFrame, cols: tuple[str, ...]) -> None:
 
 
 def _driver_union_find(
-    e: DataFrame, nodes: DataFrame | None, node_col: str, out_col: str
+    spark, edges: pa.Table, nodes: DataFrame | None, node_col: str, out_col: str
 ) -> DataFrame:
-    """Bounded small-graph path: union-find over a collected edge list (the
-    caller has already counted it against the cap), then one broadcast join
-    labeling the universe.  Output is the iterative loop's fixed point: each
-    component is labeled by its min universe id, and edge endpoints outside
-    ``nodes`` are emitted only when their component holds a universe node."""
-    spark = e.sparkSession
+    """Bounded small-graph path: union-find over the collected (u, v) edge
+    list, then one broadcast join labeling the universe.  Output is the
+    iterative loop's fixed point: each component is labeled by its min
+    universe id, and edge endpoints outside ``nodes`` are emitted only when
+    their component holds a universe node."""
     parent: dict = {}
 
     def find(x):
@@ -91,7 +90,7 @@ def _driver_union_find(
             parent[x], x = root, parent[x]
         return root
 
-    for u, v in e.collect():
+    for u, v in zip(edges.column("u").to_pylist(), edges.column("v").to_pylist()):
         parent.setdefault(u, u)
         parent.setdefault(v, v)
         ru, rv = find(u), find(v)
@@ -101,8 +100,10 @@ def _driver_union_find(
         members = parent  # every endpoint is a node
     else:
         universe = nodes.select(F.col(node_col).cast("long").alias(node_col)).distinct()
-        ends = e.select(F.col("u").alias(node_col)).union(e.select(F.col("v").alias(node_col)))
-        members = {r[0] for r in universe.join(ends, node_col, "left_semi").collect()}
+        ends = spark.createDataFrame(pa.table({node_col: pa.array(list(parent), pa.int64())}))
+        members = (
+            {r[0] for r in universe.join(ends, node_col, "left_semi").collect()} if parent else set()
+        )
     label: dict = {}
     for x in members:
         r = find(x)
@@ -152,32 +153,30 @@ def connected_components(
     dropped otherwise.  A component's label is its min universe id.  A NULL
     endpoint links nothing: the edge keeps only its other endpoint.
 
-    Small graphs (at most ``driver_edge_cap`` edges after the one
-    materializing count below — dedup pair graphs are tiny relative to the
-    corpus) take a driver union-find fast path: the iterative loop costs
-    several scheduled rounds of joins regardless of size, ~1.5 s/round of
-    pure orchestration on an idle graph, while a capped edge list is one
-    bounded collect (same pattern as the kNN straggler finisher and the ANN
-    sampling collect) plus one broadcast join.  Pass ``driver_edge_cap=0``
-    to force the distributed loop.
+    Small graphs (at most ``driver_edge_cap`` edges — dedup pair graphs
+    are tiny relative to the corpus) take a driver union-find fast path: the
+    iterative loop costs several scheduled rounds of joins regardless of
+    size, ~1.5 s/round of pure orchestration on an idle graph, while a
+    capped edge list is one bounded collect (``limit(driver_edge_cap +
+    1).toArrow()``, which also tells the two paths apart) plus one
+    broadcast join.  Pass ``driver_edge_cap=0`` to force the distributed
+    loop on any non-empty graph.
     """
     _check_id_types(edges, (src, dst))
     if nodes is not None:
         _check_id_types(nodes, (node_col,))
     u, v = F.col(src).cast("long"), F.col(dst).cast("long")
-    e = (
-        edges.select(F.coalesce(u, v).alias("u"), F.coalesce(v, u).alias("v"))
-        .where(F.col("u").isNotNull())
-        .persist()
+    e = edges.select(F.coalesce(u, v).alias("u"), F.coalesce(v, u).alias("v")).where(
+        F.col("u").isNotNull()
     )
-    n_edges = e.count()  # materialize ONCE: read again below, and edge
-    # generation (e.g. a PPJoin) is usually the most expensive input here
+    # one bounded collect both decides the path and, for a small graph, is
+    # its edge list: edge generation (e.g. a PPJoin) runs once either way
+    small = e.limit(driver_edge_cap + 1).toArrow()
+    if small.num_rows <= driver_edge_cap:
+        return _driver_union_find(edges.sparkSession, small, nodes, node_col, out_col)
 
-    if n_edges <= driver_edge_cap:
-        out = _driver_union_find(e, nodes, node_col, out_col)
-        e.unpersist()
-        return out
-
+    # the loop reads the edges every round
+    e = e.persist()
     sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).persist()
 
     if nodes is not None:

@@ -9,6 +9,7 @@ import string
 import subprocess
 import sys
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -132,12 +133,14 @@ def test_exact_jaccard_keeps_pairs_past_the_lane_guard(spark):
 
 _JIT_JOB = r"""
 import random
+import sys
 
 from incubator_sedona_spark.pipeline import dedup as D
 from incubator_sedona_spark.pipeline.setjoin import exact_jaccard_self_join
 from incubator_sedona_spark.session import get_spark
 
 spark = get_spark(master="local[2]", shuffle_partitions=2)
+spark.conf.set("spark.sql.adaptive.enabled", sys.argv[1])
 metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
 rng = random.Random(3)
 words = ["w%d" % i for i in range(40)]
@@ -145,31 +148,113 @@ base = [" ".join(rng.choice(words) for _ in range(30)) for _ in range(20)]
 docs = spark.createDataFrame(
     [(i, base[i % 20] + (" x%d" % i if i >= 20 else "")) for i in range(40)],
     "doc_id long, text string")
-assert exact_jaccard_self_join(docs, threshold=0.6).count() == 20
+pairs = exact_jaccard_self_join(docs, threshold=0.6)
+# list-built docs carry no statistics, so PPJoin keeps its Catalyst plan
+assert "MapInArrow" not in pairs._jdf.queryExecution().executedPlan().toString()
+assert pairs.count() == 20
 assert D.minhash_lsh_dup_pairs(docs, threshold=0.6, verify="exact").count() == 20
 print("MAX_METHOD_BYTES", metrics.METRIC_GENERATED_METHOD_BYTECODE_SIZE().getSnapshot().getMax())
 spark.stop()
 """
 
 def test_generated_methods_stay_under_the_jit_limit(tmp_path):
-    """The largest method Spark generates for PPJoin and exact minhash stays
-    under HotSpot's 8,000-byte huge-method limit; past it the stage runs
-    interpreted, ~40x slower, with the same rows.  A fresh session, so the
-    histogram holds only these two operators' code.  Headroom is thin: with
-    these 40 documents on ``local[2]`` the largest method was 7,724 bytes
-    for PPJoin, in its verify stage (the broadcast join of candidate pairs
-    with the right-hand sets and the ``array_intersect`` Jaccard), and 7,380
-    bytes for minhash, in its band-key stage (32 ``xxhash64`` band keys over
-    the pinned 96-column signature table).  Widening either, for example
-    ``_CV_LONGS = 12``, fails this test."""
+    """The largest method Spark generates for PPJoin's Catalyst plan and
+    exact minhash stays under HotSpot's 8,000-byte huge-method limit; past
+    it the stage runs interpreted, ~40x slower, with the same rows.  A fresh
+    session per AQE setting, so the histogram holds only these two
+    operators' code.  With these 40 documents on ``local[2]`` and AQE off,
+    PPJoin's prefix-join stage (the broadcast prefix join with the
+    count-vector bound in its condition, through the verify joins) peaked
+    at 7,974 bytes while the counts were nullable and 6,067 bytes with NOT
+    NULL counts; minhash's band-key stage (32 ``xxhash64`` band keys over
+    the pinned 96-column signature table) is 7,380 bytes.  Widening either,
+    for example ``_CV_LONGS = 12``, fails this test."""
     job = tmp_path / "job.py"
     job.write_text(_JIT_JOB)
     env = dict(os.environ, SPARK_DRIVER_MEMORY="1g",
                PYTHONPATH=os.pathsep.join(filter(None, [REPO, os.environ.get("PYTHONPATH")])))
-    res = subprocess.run([sys.executable, str(job)], cwd=str(tmp_path), env=env,
-                         capture_output=True, text=True, timeout=600)
-    assert res.returncode == 0, res.stderr[-3000:]
-    size = int(next(s for s in res.stdout.splitlines() if s.startswith("MAX_METHOD_BYTES")).split()[1])
-    # HotSpot does not JIT-compile a method of more than 8,000 bytecode
-    # bytes (DontCompileHugeMethods is on by default)
-    assert 0 < size < 8000, size
+    for aqe in ("true", "false"):
+        res = subprocess.run([sys.executable, str(job), aqe], cwd=str(tmp_path), env=env,
+                             capture_output=True, text=True, timeout=600)
+        assert res.returncode == 0, res.stderr[-3000:]
+        line = next(s for s in res.stdout.splitlines() if s.startswith("MAX_METHOD_BYTES"))
+        # HotSpot does not JIT-compile a method of more than 8,000 bytecode
+        # bytes (DontCompileHugeMethods is on by default)
+        assert 0 < int(line.split()[1]) < 8000, (aqe, line)
+
+
+def _ppjoin_docs(rows, id_type=pa.int64()):
+    return pa.table({"doc_id": pa.array([r[0] for r in rows], id_type),
+                     "text": pa.array([r[1] for r in rows], pa.string())})
+
+
+def _flood():
+    return [(i, "the same boilerplate line %d" % (i % 3)) for i in range(60)]
+
+
+def _long_pair():
+    rng = random.Random(5)
+    base = "".join(rng.choice(string.ascii_lowercase) for _ in range(36000))
+    edited = "".join("#" if i % 3600 == 0 else c for i, c in enumerate(base))
+    return [(0, base), (1, edited), (2, "an unrelated short document")]
+
+
+_PPJOIN_CASES = {
+    # (docs, threshold, shingle_k, prefix bound: None keeps the module's)
+    "empty": (_ppjoin_docs([]), 0.7, 5, None),
+    "null_empty_short": (_ppjoin_docs(
+        [(0, None), (1, ""), (2, None), (3, ""), (4, "abc"), (5, "abc"), (6, "abcd"),
+         (7, "a short one"), (8, "a short one!"), (9, "x")]), 0.5, 5, None),
+    "duplicates": (_ppjoin_docs(
+        [(0, "one two three four five"), (1, "one two three four five"),
+         (2, "one two three four five"), (3, "one two three four six"),
+         (3, "seven eight nine"), (4, "seven eight nine"), (5, "one two three four five")]),
+        0.6, 3, None),
+    "id_limits": (_ppjoin_docs(
+        [(-(1 << 63), "near duplicate text number one"), ((1 << 53) + 1, "near duplicate text number one!"),
+         ((1 << 63) - 1, "near duplicate text number one?"), (None, "near duplicate text number one"),
+         (7, None), (None, None), (8, ""), (9, "something else entirely")]), 0.5, 5, None),
+    "int32_ids": (_ppjoin_docs([(i, t) for i, t in _texts(40)], pa.int32()), 0.6, 5, None),
+    "long_sets": (_ppjoin_docs(_long_pair()), 0.9, 5, None),
+    # |{a,b,c}| / |{a,b,c,d,e}| is 3/5: a Jaccard exactly at the threshold
+    "exact_threshold": (_ppjoin_docs(
+        [(0, "abcd"), (1, "abce"), (2, "abcf"), (3, "xyz"), (4, "xyzw")]), 0.6, 1, None),
+    "flood_over_bound": (_ppjoin_docs(_flood()), 0.8, 5, 100),
+}
+
+
+@pytest.mark.parametrize("case", list(_PPJOIN_CASES))
+def test_arrow_ppjoin_matches_catalyst(spark, monkeypatch, case):
+    """The broadcast PPJoin (Arrow-built docs) against the Catalyst plan
+    (auto-broadcast off): sorted rows with exact ``jaccard`` doubles, names
+    and dtypes, and the plan each ran.  ``flood_over_bound`` lowers the
+    prefix-join bound below its corpus's prefix pairs (60 documents in 3
+    groups of identical texts), so both runs take the Catalyst plan."""
+    from incubator_sedona_spark.pipeline import setjoin
+
+    table, threshold, k, bound = _PPJOIN_CASES[case]
+    if bound is not None:
+        monkeypatch.setattr(setjoin, "_PROBE_PREFIX_PAIRS", bound)
+    docs = spark.createDataFrame(table)
+
+    def run():
+        out = exact_jaccard_self_join(docs, threshold=threshold, shingle_k=k)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        return sorted(tuple(r) for r in out.collect()), out.dtypes, "MapInArrow" in plan
+
+    try:
+        probe = run()
+        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            catalyst = run()
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    finally:
+        D.release_cached()
+    assert probe[2] is (bound is None)
+    assert catalyst[2] is False
+    assert probe[0] == catalyst[0]
+    assert probe[1] == catalyst[1]
+    if case == "exact_threshold":
+        assert (0, 1, 0.6) in probe[0]

@@ -244,6 +244,26 @@ def test_circle_mode_clamps_radius(spark):
     assert distance_join(left, right, 0.1, grid=grid, mode="distance").count() == 0
 
 
+def test_circle_mode_unusable_radius_matches_nothing(spark):
+    """The clamp applies to a usable radius only: a NULL, negative, NaN or
+    infinite radius matches nothing in circle mode, as in distance mode, and
+    the row comes back unmatched in ``left_outer``."""
+    left = spark.createDataFrame(
+        [(i, 1.0, 1.0, r) for i, r in enumerate([None, -5.0, float("nan"), float("inf"), 0.5])],
+        "lid int, x double, y double, rad double",
+    ).withColumn("wkb", F.lit(bytearray(W.dumps(W.point(1.0, 1.0)))))
+    right = spark.createDataFrame([(0, 1.0, 1.0)], "rid int, x double, y double")
+    grid = Grid(-1.0, -1.0, 6.01, 6.01, 3)
+    for mode in ("circle", "distance"):
+        inner = distance_join(left, right, "rad", grid=grid, mode=mode,
+                              left_point_cols=("x", "y"), right_point_cols=("x", "y"))
+        assert sorted(r.lid for r in inner.collect()) == [4], mode
+        outer = distance_join(left, right, "rad", grid=grid, mode=mode, how="left_outer",
+                              left_point_cols=("x", "y"), right_point_cols=("x", "y"))
+        assert sorted((r.lid, r.rid) for r in outer.collect()) == [
+            (0, None), (1, None), (2, None), (3, None), (4, 0)], mode
+
+
 # -- join types / broadcast -----------------------------------------------------
 
 def test_semi_anti_outer(spark):
